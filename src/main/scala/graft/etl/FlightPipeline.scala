@@ -11,13 +11,25 @@ import graft.quality.{Completeness, Timeliness, Uniqueness, Validity}
   * dedup 249–294, SQL timestamp derivation 260–291, validity 314–352,
   * timeliness 364–401, persist 419–437).
   *
-  * Differences from the reference, by design (SURVEY §4):
-  *   - the post-drop and post-dedup tables are persisted — the
-  *     reference rescans the CSV for every check (10 full passes in the
-  *     validity block alone); caching changes no semantics and is the
-  *     single biggest win at scale;
-  *   - validity runs as ONE aggregation pass (Validity.report), not 10
-  *     filter+count jobs.
+  * Differences from the reference, by design (SURVEY §4): the reference
+  * rescans the CSV for every check — the completeness census, the dup
+  * census, the dedup and each validity rule's filter+count. `run`
+  * computes each stage of the data once:
+  *   - one CSV decode: the raw scan is persisted, and the single
+  *     count(*) + per-column non-null aggregation that fills the cache
+  *     also gives `totalRows` and the all-null drop list;
+  *   - one all-column shuffle: groupBy(all kept columns) with a copy
+  *     count is both the dedup (one row per group) and the exact-dup
+  *     census (groups with more than one copy); time derivation runs on
+  *     it and the result is persisted;
+  *   - one global pass over that cache: the row count after dedup, the
+  *     exact-dup census, every validity rule's failure count and the
+  *     min/max day that bounds the calendar-gap check.
+  * The compound-key census and the daily series for the gap join stay
+  * keyed shuffles of their own. None of this changes a result:
+  * FlightPipelineSpec checks the Report against the unfused library
+  * calls (Completeness.dropAllNull, Uniqueness.exactDupGroups/dropDups,
+  * Validity.report, the two-argument Timeliness.calendarGaps).
   */
 object FlightPipeline {
 
@@ -112,42 +124,62 @@ object FlightPipeline {
     gapDays: Seq[java.sql.Date],
     cleaned: DataFrame)
 
-  def run(spark: SparkSession, path: String, asOfYear: Int): Report = {
-    val raw = load(spark, path)
-    // Census → drop-all-null (driver-level adaptivity, SURVEY §3 E1).
-    val (dropped, kept) = Completeness.dropAllNull(raw)
-    // The timestamp derivation and the compound key read these columns;
-    // if the census dropped one (e.g. a file of only cancelled flights
-    // has all-null DepTime) re-add it as a typed null column — the data
-    // was all null anyway, so derived values are identical and nothing
-    // crashes downstream.
-    val required = Seq("Year", "Month", "DayofMonth", "DepTime",
-      "FlightNum", "Origin", "UniqueCarrier")
-    val derivable = required.foldLeft(kept) { (df, c) =>
+  /** The pipeline re-adds these as typed null columns when the census
+    * drops them: the timestamp derivation and the compound key read
+    * them (e.g. a file of only cancelled flights has all-null DepTime).
+    * The data was all null anyway, so derived values are identical and
+    * nothing crashes downstream. */
+  private val requiredColumns: Seq[String] = Seq("Year", "Month", "DayofMonth", "DepTime",
+    "FlightNum", "Origin", "UniqueCarrier")
+
+  /** `kept` plus any missing [[requiredColumns]], typed from the
+    * authoritative schema (never restated here), appended in order. */
+  def withRequiredColumns(kept: DataFrame): DataFrame =
+    requiredColumns.foldLeft(kept) { (df, c) =>
       if (df.columns.contains(c)) df
-      // Type comes from the authoritative schema, never restated here.
       else df.withColumn(c, lit(null).cast(FlightSchema.schema(c).dataType))
     }
-    val cached = derivable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totalRows = cached.count()
-    val exactDups = Uniqueness.exactDupGroups(cached).first().getLong(0)
-    val deduped = deriveTimestamps(Uniqueness.dropDups(cached))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowsAfterDedup = deduped.count()
-    // Everything downstream reads `deduped` (now materialized) — the
-    // pre-dedup cache has no further consumers; don't pin it.
-    cached.unpersist()
-    val compoundDups = Uniqueness.compoundDupGroups(deduped, compoundKey)
-      .agg(count(lit(1))).first().getLong(0)
+
+  /** The copy count the dedup aggregation carries next to each row;
+    * the flight schema has no such column. */
+  private val copies = "__copies"
+
+  def run(spark: SparkSession, path: String, asOfYear: Int): Report = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // One CSV decode: the census fills the raw cache and yields the row
+    // count and the drop list (Completeness.dropAllNull's rule: zero
+    // non-null values). Everything after it reads the cache.
+    val raw = load(spark, path).persist(level)
+    val census = raw.agg(count(lit(1)),
+      raw.columns.toSeq.map(c => count(col(c))): _*).first()
+    val totalRows = census.getLong(0)
+    val dropped = raw.columns.toSeq.zipWithIndex.collect {
+      case (c, i) if census.getLong(i + 1) == 0L => c
+    }
+    val kept = withRequiredColumns(if (dropped.isEmpty) raw else raw.drop(dropped: _*))
+    // One all-column shuffle: a group is a deduped row, its size says
+    // whether that row had exact duplicates.
+    val deduped = deriveTimestamps(kept.groupBy(kept.columns.toSeq.map(col): _*)
+      .agg(count(lit(1)).as(copies))).persist(level)
+    // One global pass over the deduped cache (which it fills).
     val applicableRules = referenceRulesWithColumns(asOfYear).collect {
       case (rule, column) if !dropped.contains(column) => rule
     }
-    val validity = Validity.report(deduped, applicableRules)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val day = col("DepTime_Date").cast("date")
+    val global = deduped.agg(count(lit(1)).as("rows"),
+      Seq(count(when(col(copies) > 1, lit(1))).as("dup_groups"),
+        min(day).as("lo"), max(day).as("hi"))
+        ++ Validity.failureCounts(applicableRules): _*).first()
+    // Everything downstream reads `deduped`; don't pin the raw scan.
+    raw.unpersist()
+    val validity = applicableRules.map(r => r.name -> global.getAs[Long](r.name)).toMap
+    val compoundDups = Uniqueness.compoundDupGroups(deduped, compoundKey)
+      .agg(count(lit(1))).first().getLong(0)
     val daily = Timeliness.dailyCounts(deduped, col("DepTime_Date"))
-    val gaps = Timeliness.calendarGaps(spark, daily)
+    val gaps = Timeliness.calendarGaps(spark, daily,
+      global.getAs[java.sql.Date]("lo"), global.getAs[java.sql.Date]("hi"))
       .collect().map(_.getDate(0)).toSeq
-    Report(dropped, totalRows, exactDups, rowsAfterDedup, compoundDups,
-      validity, gaps, deduped)
+    Report(dropped, totalRows, global.getAs[Long]("dup_groups"), global.getAs[Long]("rows"),
+      compoundDups, validity, gaps, deduped.drop(copies))
   }
 }

@@ -70,9 +70,19 @@ object Timeliness {
     // the calendar-bounded aggregate or its upstream shuffle runs twice.
     val daily = dailyIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mm = daily.agg(min(col("day")), max(col("day"))).first()
-    if (mm.isNullAt(0)) return spark.emptyDataFrame.select(lit(null).cast("date").as("day")).limit(0)
-    val dim = dateDim(spark, mm.getDate(0), mm.getDate(1))
-    dim.join(broadcast(daily), Seq("day"), "left")
+    calendarGaps(spark, daily, mm.getDate(0), mm.getDate(1))
+  }
+
+  /** [[calendarGaps]] over KNOWN bounds: the days in [lo, hi] with zero
+    * rows in `daily`. For a caller that already has min/max of the
+    * series from an aggregation it runs anyway — `daily` then has one
+    * consumer, so no persist and no bounds job. Null bounds (an empty
+    * or all-null series) give no gaps. */
+  def calendarGaps(spark: SparkSession, daily: DataFrame,
+                   lo: java.sql.Date, hi: java.sql.Date): DataFrame = {
+    if (lo == null || hi == null)
+      return spark.emptyDataFrame.select(lit(null).cast("date").as("day")).limit(0)
+    dateDim(spark, lo, hi).join(broadcast(daily), Seq("day"), "left")
       .withColumn("n", coalesce(col("n"), lit(0L)))
       .where(col("n") === 0)
       .select(col("day"))

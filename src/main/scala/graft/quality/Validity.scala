@@ -22,9 +22,16 @@ object Validity {
   /** Failing rows for one rule — the reference's check_validity filter. */
   def failures(df: DataFrame, rule: Rule): DataFrame = df.filter(!rule.holds)
 
-  /** (rule, failures) table for all rules in ONE pass.
-    * `!holds <=> true` counts only genuine failures (3VL: null → false).
-    */
+  /** One aggregate column per rule, named after it: the rule's failure
+    * count. `!holds <=> true` counts only genuine failures (3VL: null →
+    * false); coalesce(…, 0) because sum over ZERO rows is null, and an
+    * empty slice has zero failures, not null ones. For callers that fold
+    * the counts into an aggregation of their own. */
+  def failureCounts(rules: Seq[Rule]): Seq[Column] =
+    rules.map(r =>
+      coalesce(sum((!r.holds <=> lit(true)).cast("long")), lit(0L)).as(r.name))
+
+  /** (rule, failures) table for all rules in ONE pass ([[failureCounts]]). */
   def report(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     if (rules.isEmpty)
       // No applicable rules (every guarded column dropped): an empty
@@ -36,10 +43,7 @@ object Validity {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("failures",
             org.apache.spark.sql.types.LongType))))
-    // coalesce(…, 0): sum over ZERO rows is null; an empty slice has
-    // zero failures, not null ones.
-    val aggs = rules.map(r =>
-      coalesce(sum((!r.holds <=> lit(true)).cast("long")), lit(0L)).as(r.name))
+    val aggs = failureCounts(rules)
     val wide = df.agg(aggs.head, aggs.tail: _*)
     // Reshape wide→long with Column literals (never string-spliced SQL:
     // a rule name containing a quote must not break the plan).

@@ -110,6 +110,24 @@ class QualitySpec extends AnyFunSuite {
     assert(Timeliness.calendarGaps(spark, dense).count() == 0)
   }
 
+  test("calendar gaps over known bounds equal the self-bounded form") {
+    def daily(days: String*) = days.map(d => (d, 1L)).toDF("day", "n")
+      .select(col("day").cast("date").as("day"), col("n"))
+    val series = Seq(
+      daily("2024-03-01", "2024-03-02", "2024-03-04"), // planted gap
+      daily("2024-03-01", "2024-03-02"),               // dense
+      daily("2024-02-27", "2024-03-02"),               // gaps across Feb 29
+      daily("2024-06-15"))                             // single day
+    series.foreach { d =>
+      val mm = d.agg(min(col("day")), max(col("day"))).first()
+      val bounded = Timeliness.calendarGaps(spark, d, mm.getDate(0), mm.getDate(1))
+        .collect().map(_.getDate(0)).toSeq
+      assert(bounded == Timeliness.calendarGaps(spark, d).collect().map(_.getDate(0)).toSeq)
+    }
+    // Null bounds (empty or all-null series): no calendar, no gaps.
+    assert(Timeliness.calendarGaps(spark, daily().limit(0), null, null).count() == 0)
+  }
+
   test("gapFill: zero-fill counts, LOCF gauges across planted gaps") {
     val daily = Seq(
       ("2024-03-01", 5L, 1.5), ("2024-03-04", 7L, 9.0))
