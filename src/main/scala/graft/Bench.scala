@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 object Bench {
 
   /** One self-triaged regression flag: this run's min, its re-measure,
@@ -56,20 +56,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // House overwrite discipline: every partitioned overwrite-insert
-      // is a dynamic per-partition replace (Writer
-      // .ensureDynamicOverwrite doc) — set once at startup so the
-      // library's latch never has to mutate conf mid-run.
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.envCpus.toString
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT, janino codegen-compile and parquet-footer
     // costs land here, not in the first timed query — timings then

@@ -2,65 +2,54 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.GraftFunctionBuilders
+import graft.functions.{GraftFunctionBuilders => B, MisraGriesTopK}
 
-/** Engine extension point: registers the custom codegen'd expressions
-  * (graft_dot, graft_minhash_bands) into the session's function
-  * registry. Wire with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
-  * Verify/Bench/test sessions all do; library call sites fall back to
-  * the equivalent higher-order-function forms when the extension is
-  * absent (Dedup.bands, Similarity.dot), so results never depend on it.
+/** Engine extension point: registers the codegen'd kernel expressions
+  * in [[GraftExtensions.kernels]] into the session's function registry
+  * and injects the opt-in approximate similarity-join rewrite.
+  * [[GraftSession.local]] installs it; a session built elsewhere needs
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`, or every
+  * kernel-backed operator fails at analysis with an unresolved
+  * `graft_*` function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      GraftFunctionBuilders.dotInfo, GraftFunctionBuilders.dotBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_bands"),
-      GraftFunctionBuilders.minhashInfo, GraftFunctionBuilders.minhashBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      GraftFunctionBuilders.shingleInfo, GraftFunctionBuilders.shingleBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_cosine_sim"),
-      GraftFunctionBuilders.cosineInfo, GraftFunctionBuilders.cosineBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_bucket"),
-      GraftFunctionBuilders.lshInfo, GraftFunctionBuilders.lshBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
-      GraftFunctionBuilders.mightContainInfo, GraftFunctionBuilders.mightContainBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_cms_estimate"),
-      GraftFunctionBuilders.cmsEstimateInfo, GraftFunctionBuilders.cmsEstimateBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      GraftFunctionBuilders.simhashInfo, GraftFunctionBuilders.simhashBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_ivfadc_scores"),
-      GraftFunctionBuilders.ivfAdcScoresInfo,
-      GraftFunctionBuilders.ivfAdcScoresBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_ivf_cos_scores"),
-      GraftFunctionBuilders.ivfCosScoresInfo,
-      GraftFunctionBuilders.ivfCosScoresBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      GraftFunctionBuilders.winnowInfo, GraftFunctionBuilders.winnowBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_winnow_packed"),
-      GraftFunctionBuilders.winnowPackedInfo, GraftFunctionBuilders.winnowPackedBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_encode"),
-      GraftFunctionBuilders.bpeEncodeInfo, GraftFunctionBuilders.bpeEncodeBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      GraftFunctionBuilders.nfcInfo, GraftFunctionBuilders.nfcBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_mg_topk"),
-      graft.functions.MisraGriesTopK.info, graft.functions.MisraGriesTopK.builder _))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      GraftFunctionBuilders.pqEncodeInfo, GraftFunctionBuilders.pqEncodeBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_image_dims"),
-      GraftFunctionBuilders.imageDimsInfo,
-      GraftFunctionBuilders.imageDimsBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_unigram_encode"),
-      GraftFunctionBuilders.unigramEncodeInfo,
-      GraftFunctionBuilders.unigramEncodeBuilder _))
-    ext.injectFunction((FunctionIdentifier("graft_wav_meta"),
-      GraftFunctionBuilders.wavMetaInfo,
-      GraftFunctionBuilders.wavMetaBuilder _))
+    GraftExtensions.kernels.foreach(ext.injectFunction)
     // Opt-in approximate similarity-join rewrite (see
     // graft.plans.ApproxSimilarityJoin — off unless
     // spark.graft.approxSimilarityJoin=true).
     ext.injectOptimizerRule(_ => new graft.plans.ApproxSimilarityJoin)
   }
+}
+
+object GraftExtensions {
+  type Kernel = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def k(name: String, info: ExpressionInfo,
+                builder: Seq[Expression] => Expression): Kernel =
+    (FunctionIdentifier(name), info, builder)
+
+  /** Every kernel function the extension registers. */
+  val kernels: Seq[Kernel] = Seq(
+    k("graft_dot", B.dotInfo, B.dotBuilder),
+    k("graft_minhash_bands", B.minhashInfo, B.minhashBuilder),
+    k("graft_shingle_hashes", B.shingleInfo, B.shingleBuilder),
+    k("graft_cosine_sim", B.cosineInfo, B.cosineBuilder),
+    k("graft_lsh_bucket", B.lshInfo, B.lshBuilder),
+    k("graft_might_contain", B.mightContainInfo, B.mightContainBuilder),
+    k("graft_cms_estimate", B.cmsEstimateInfo, B.cmsEstimateBuilder),
+    k("graft_simhash", B.simhashInfo, B.simhashBuilder),
+    k("graft_ivfadc_scores", B.ivfAdcScoresInfo, B.ivfAdcScoresBuilder),
+    k("graft_ivf_cos_scores", B.ivfCosScoresInfo, B.ivfCosScoresBuilder),
+    k("graft_winnow", B.winnowInfo, B.winnowBuilder),
+    k("graft_winnow_packed", B.winnowPackedInfo, B.winnowPackedBuilder),
+    k("graft_bpe_encode", B.bpeEncodeInfo, B.bpeEncodeBuilder),
+    k("graft_nfc", B.nfcInfo, B.nfcBuilder),
+    k("graft_mg_topk", MisraGriesTopK.info, MisraGriesTopK.builder),
+    k("graft_pq_encode", B.pqEncodeInfo, B.pqEncodeBuilder),
+    k("graft_image_dims", B.imageDimsInfo, B.imageDimsBuilder),
+    k("graft_unigram_encode", B.unigramEncodeInfo, B.unigramEncodeBuilder),
+    k("graft_wav_meta", B.wavMetaInfo, B.wavMetaBuilder))
 }

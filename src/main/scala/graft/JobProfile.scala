@@ -11,7 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *   sbt "runMain graft.JobProfile x_lm_index [reps]"
   *
   * Runs the query `reps` times (default 2 — the second run is the
-  * warm one to read) under the exact Bench session config, with a
+  * warm one to read) in the GraftSession.local session Bench uses, with a
   * listener printing one line per Spark job: job id, wall seconds,
   * the job group/description if set, and the DRIVER GAP since the
   * previous job's end — catalog/metastore/planning time that never
@@ -23,22 +23,7 @@ object JobProfile {
       sys.error("usage: JobProfile <queryName> [reps]"))
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment knob: semicolon-separated extra confs, e.g.
-    //   SPARK_GRAFT_EXTRA_CONF='spark.local.dir=/dev/shm/x;spark.foo=1'
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     @volatile var lastEnd = 0L

@@ -3001,7 +3001,7 @@ object ScaleBench {
     }
     spark.sqlContext.clearCache()
     val withBucket = emb.withColumn("bucket",
-      Similarity.lshBucketIn(spark)(col("embedding"), 8))
+      Similarity.lshBucketIn(col("embedding"), 8))
     val bucketMass = pairMass(withBucket, "bucket")
     val (nEmb, tEmb) = timed {
       Similarity.cosinePairsWithin(withBucket, "vec_id", "embedding", "bucket",
@@ -3092,15 +3092,7 @@ object ScaleBench {
     val outBase = positional.headOption.getOrElse("/tmp/graft_scale")
     val scales = positional.drop(1).headOption.getOrElse("1,10,50")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // `serve-only`: the streaming serving loop vs one-shot batch probe.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.TimestampType
 
 /** Environment-drift smoke (seconds, not the 3.5-minute suite): the
@@ -26,12 +25,7 @@ object SmokeCheck {
       System.err.println(s"[smoke] no sf* dirs under $base — testdata missing or moved")
       sys.exit(1)
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     for (dir <- sfDirs) {

@@ -28,9 +28,8 @@ object AnnIndex {
     * into the file buckets). */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
             table: String, bits: Int = 8, nBuckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
     val bucketed = corpus.select(col(idCol), col(vecCol),
-      Similarity.lshBucketIn(spark)(col(vecCol), bits).as("bucket"))
+      Similarity.lshBucketIn(col(vecCol), bits).as("bucket"))
     Writer.bucketedTable(bucketed, table, "bucket", nBuckets)
   }
 
@@ -67,7 +66,7 @@ object AnnIndex {
     val probes = Similarity.probeBuckets(query, bits, multiProbe)
     spark.table(table)
       .where(col("bucket").isin(probes: _*))
-      .select(col(idCol), Similarity.cosineIn(spark)(col(vecCol), q).as("cos_sim"))
+      .select(col(idCol), Similarity.cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }

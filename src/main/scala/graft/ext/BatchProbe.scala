@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
@@ -10,14 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   * paths) ride the exact expression shapes the IVFADC batch proved:
   *
   *   - [[cellGatedScores]]: ONE union-cell scan fans each row into
-  *     per-query scores gated to that query's own probed cells — the
-  *     graft_ivf_cos_scores kernel when the session has graft
-  *     extensions (one call per row at any batch size; per-query
-  *     constants ship as a single reference object — flat per-query
-  *     expressions blow janino past ~8 queries, the higher-order
-  *     fan-out is CodegenFallback), else flat expressions up to
-  *     [[IvfPq.FlatFanoutMax]], else a literal-indexed lambda. Every
-  *     path replays the single probe's score expression EXACTLY
+  *     per-query scores gated to that query's own probed cells through
+  *     the graft_ivf_cos_scores kernel (one call per row at any batch
+  *     size; per-query constants ship as a single reference object —
+  *     flat per-query expressions blow janino past ~8 queries). It
+  *     replays the single probe's score expression EXACTLY
   *     (Kernels.ivfCosScores documents the IEEE argument), so batch
   *     scores are bit-identical to the per-query probes'.
   *   - [[rerankFloat]]: ONE exact-cosine scan over the union of the
@@ -28,15 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   *
   * Null convention: a member row whose score is null (null vector
   * element, dims mismatch, zero int8 direction) is KEPT with a null
-  * score on every path — the kernel conflates "not this query's row"
-  * with "member, null score" in its array<double> output (both null
-  * elements), so the kernel fan-out re-derives membership for null
-  * elements only (an array_contains over that query's probed cells,
-  * short-circuited behind isNotNull) and retains the member ones.
-  * Downstream rank windows order nulls last (float desc default /
-  * explicit desc_nulls_last), exactly the single probes' placement,
-  * so degenerate vectors can no longer vanish from the kernel path
-  * while surviving the fallbacks (round-17 advice #1).
+  * score, exactly as the single probes keep it; downstream rank
+  * windows order nulls last (float desc default / explicit
+  * desc_nulls_last), the single probes' placement.
   */
 private[ext] object BatchProbe {
 
@@ -52,12 +43,11 @@ private[ext] object BatchProbe {
     * int8 tier's 1.0 (its probe divides by the row norm only).
     * `zeroNull` selects the int8 tier's when(qnorm2 === 0, null)
     * zero-direction guard. Output: (query_id, idCol, score). */
-  def cellGatedScores(spark: SparkSession, base: DataFrame, idCol: String,
+  def cellGatedScores(base: DataFrame, idCol: String,
                       vecCol: String, queries: Seq[(Long, IndexedSeq[Double])],
                       qdiv: IndexedSeq[Double],
                       probedCells: Map[Long, Seq[Int]],
                       zeroNull: Boolean): DataFrame = {
-    val n = queries.size
     val vec = col(vecCol)
     val qids = array(queries.map(q => lit(q._1)): _*)
     val q2d = array(queries.map { case (_, qd) =>
@@ -73,61 +63,21 @@ private[ext] object BatchProbe {
       else array(mine.map(lit): _*)
     }: _*)
     val qdivLit = array(qdiv.map(lit(_)): _*)
-    // The single probes' exact score expressions, for the two
-    // non-kernel fallbacks. Float tier = Similarity.cosineIn's tree
-    // (its query-norm factor constant-folds to the qdiv double); int8
-    // tier = quantizedPreRank's guarded row-norm division.
-    def flatScore(qlit: Column): Column =
-      if (zeroNull) {
-        val qn2 = Similarity.dotIn(spark)(vec, vec)
-        when(qn2 === 0.0, lit(null).cast("double"))
-          .otherwise(Similarity.dotIn(spark)(vec, qlit) / sqrt(qn2))
-      } else Similarity.cosineIn(spark)(vec, qlit)
-    def lambdaScore(qel: Column, qi: Column): Column =
-      if (zeroNull) {
-        val qn2 = Similarity.dotIn(spark)(vec, vec)
-        when(qn2 === 0.0, lit(null).cast("double"))
-          .otherwise(Similarity.dotIn(spark)(vec, qel) / sqrt(qn2))
-      } else
-        Similarity.dotIn(spark)(vec, qel) /
-          (sqrt(Similarity.dotIn(spark)(vec, vec)) * element_at(qdivLit, qi + 1))
-    if (spark.catalog.functionExists("graft_ivf_cos_scores"))
-      // Null elements are EITHER non-members (drop) or degenerate
-      // members (keep, nulls-last downstream) — the kernel can't tell
-      // them apart in array<double>, so re-derive membership for null
-      // elements only (the Or short-circuits behind isNotNull, so
-      // scored rows never pay the array_contains).
-      base.select(col(idCol), col("cluster_id"),
-          posexplode(call_function("graft_ivf_cos_scores",
-            vec, col("cluster_id").cast("int"),
-            struct(q2d, qdivLit, cells2d, lit(zeroNull)))))
-        .toDF(idCol, "__cl", "__qi", "score")
-        .where(col("score").isNotNull ||
-          array_contains(element_at(cells2d, col("__qi") + 1),
-            col("__cl").cast("int")))
-        .select(element_at(qids, col("__qi") + 1).as("query_id"),
-          col(idCol), col("score"))
-    else {
-      val fanout =
-        if (n <= IvfPq.FlatFanoutMax)
-          array(queries.map { case (qid, qd) =>
-            val mine = probedCells(qid)
-            val member = if (mine.isEmpty) lit(false)
-              else col("cluster_id").cast("int").isin(mine: _*)
-            struct(lit(qid).as("query_id"), member.as("__in"),
-              when(member, flatScore(array(qd.map(lit(_)): _*))).as("score"))
-          }: _*)
-        else transform(sequence(lit(0), lit(n - 1)), qi => {
-          val member = array_contains(element_at(cells2d, qi + 1),
-            col("cluster_id").cast("int"))
-          struct(element_at(qids, qi + 1).as("query_id"), member.as("__in"),
-            when(member, lambdaScore(element_at(q2d, qi + 1), qi)).as("score"))
-        })
-      base.select(col(idCol), explode(fanout).as("__e"))
-        .where(col("__e.__in"))
-        .select(col("__e.query_id").as("query_id"), col(idCol),
-          col("__e.score").as("score"))
-    }
+    // Null elements are EITHER non-members (drop) or degenerate
+    // members (keep, nulls-last downstream) — the kernel can't tell
+    // them apart in array<double>, so re-derive membership for null
+    // elements only (the Or short-circuits behind isNotNull, so
+    // scored rows never pay the array_contains).
+    base.select(col(idCol), col("cluster_id"),
+        posexplode(call_function("graft_ivf_cos_scores",
+          vec, col("cluster_id").cast("int"),
+          struct(q2d, qdivLit, cells2d, lit(zeroNull)))))
+      .toDF(idCol, "__cl", "__qi", "score")
+      .where(col("score").isNotNull ||
+        array_contains(element_at(cells2d, col("__qi") + 1),
+          col("__cl").cast("int")))
+      .select(element_at(qids, col("__qi") + 1).as("query_id"),
+        col(idCol), col("score"))
   }
 
   /** Stage 2: exact-cosine re-rank of per-query shortlists in ONE
@@ -156,7 +106,7 @@ private[ext] object BatchProbe {
     val lambdaRerank = transform(sequence(lit(0), lit(queries.size - 1)), qi =>
       struct(element_at(qids2, qi + 1).as("query_id"),
         array_contains(element_at(ids2d, qi + 1), col(idCol)).as("__in"),
-        Similarity.cosineIn(spark)(col(vecCol), element_at(q2d, qi + 1))
+        Similarity.cosineIn(col(vecCol), element_at(q2d, qi + 1))
           .as("cos_sim")))
     val rerankFan =
       if (queries.size <= IvfPq.FlatFanoutMax)
@@ -166,7 +116,7 @@ private[ext] object BatchProbe {
             else col(idCol).isin(mine: _*)
           val qlit = array(q.map(v => lit(v.toDouble)): _*)
           struct(lit(qid).as("query_id"), member.as("__in"),
-            Similarity.cosineIn(spark)(col(vecCol), qlit).as("cos_sim"))
+            Similarity.cosineIn(col(vecCol), qlit).as("cos_sim"))
         }: _*)
       else lambdaRerank
     val reranked = spark.table(table)

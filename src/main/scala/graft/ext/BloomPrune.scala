@@ -43,29 +43,12 @@ object BloomPrune {
 
   /** Prune `big` to rows whose key might be in the filter. Nulls never
     * match (null → null under 3VL, so WHERE drops them — a null key
-    * cannot equi-join, so dropping it is join-semantics-preserving).
-    *
-    * Requires the `graft_might_contain` kernel (sessions with
-    * GraftExtensions — Verify/Bench/tests all are). Without it the
-    * prune is a documented NO-OP: pruning is an optimization, and
-    * `prunedJoin`'s exact join preserves the result either way —
-    * the same results-never-depend-on-the-extension contract as the
-    * Dedup/Similarity kernel fallbacks. */
-  def prune(big: DataFrame, keyCol: String, bf: BloomFilter): DataFrame =
-    if (big.sparkSession.catalog.functionExists("graft_might_contain")) {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      big.where(call_function("graft_might_contain", col(keyCol), lit(bos.toByteArray)))
-    } else {
-      // Loud, not silent: the caller asked for a prune and is getting
-      // none — results stay correct through prunedJoin's exact join,
-      // but the shuffle savings are gone until the extension is wired.
-      System.err.println(
-        "[graft] BloomPrune.prune: graft_might_contain not registered " +
-          "(spark.sql.extensions=graft.GraftExtensions) - returning the " +
-          "input unpruned; prunedJoin results are unaffected")
-      big
-    }
+    * cannot equi-join, so dropping it is join-semantics-preserving). */
+  def prune(big: DataFrame, keyCol: String, bf: BloomFilter): DataFrame = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    big.where(call_function("graft_might_contain", col(keyCol), lit(bos.toByteArray)))
+  }
 
   /** Bloom-pruned equi-join: filter the big side with the small side's
     * key sketch, then join exactly. Result ≡ `big.join(small, key)` —

@@ -60,7 +60,7 @@ object Dedup {
     * Takes hashes, not text, on purpose: inlining the string shingling
     * into each of the 64 lambdas (which CollapseProject will happily
     * do) re-tokenizes every document 64 times — measured 30× slower.
-    * Callers materialize the hash array once (see `bands`).
+    * Callers materialize the hash array once.
     */
   def minhashSignature(hashes: Column, numHashes: Int): Column =
     transform(sequence(lit(0), lit(numHashes - 1)), minhashAt(hashes, _))
@@ -75,7 +75,9 @@ object Dedup {
 
   /** Higher-order-function twin of the graft_minhash_bands kernel: for
     * band j, fold the minima of hash functions i ∈ [j·rows, (j+1)·rows)
-    * with acc' = (acc·31 + min_i) mod P. Public so the kernel-vs-HOF
+    * with acc' = (acc·31 + min_i) mod P — reduced every step, so
+    * acc·31 + min_i stays under 2^36 and never overflows Long (safe
+    * under ANSI mode). Public so the kernel-vs-HOF
     * equivalence is oracle-checkable (x_kernel_equiv) as well as
     * spec-pinned (GraftFunctionsSpec). */
   def minhashBandsHof(hs: Column, bands: Int, rows: Int): Column =
@@ -96,11 +98,8 @@ object Dedup {
 
   /** (id, band_id, band_hash) — one row per LSH band per doc.
     *
-    * The signature projection is persisted before banding: without the
-    * materialization barrier, CollapseProject inlines the whole
-    * 64-hash signature expression into EVERY band's aggregate (16×
-    * recomputation per row and a codegen tree too big to JIT) — 100×
-    * slowdown observed. With the barrier each doc hashes once.
+    * The shingle-hash projection is staged before banding, so each
+    * doc hashes once.
     *
     * EXECUTES EAGERLY at construction (the checkpoint barrier runs a
     * Spark job) — plan-only consumers pay the pipeline. Every barrier
@@ -115,42 +114,20 @@ object Dedup {
     val rows = params.numHashes / params.bands
     // Spread BEFORE the heavy shingle+minhash projections (the policy
     // and its 100 TB rationale live in graft.ext.Spread).
-    // Kernel fast path for the shingle+hash projection too (tokenize →
-    // rolling shingle → xxhash64 → distinct in one primitive pass);
-    // same values as the higher-order chain (GraftFunctionsSpec).
     val hsExpr =
-      if (docs.sparkSession.catalog.functionExists("graft_shingle_hashes"))
-        call_function("graft_shingle_hashes", col(textCol), lit(params.shingleSize))
-      else shingleHashes(shingles(col(textCol), params.shingleSize))
+      call_function("graft_shingle_hashes", col(textCol), lit(params.shingleSize))
     val distributed = Spread.ensure(docs.select(col(idCol).as("id"), col(textCol)))
-    // EAGER localCheckpoint, not persist: (a) it is the materialization
-    // barrier that stops CollapseProject from inlining the shingle
-    // expression into every band lambda (see below); (b) checkpoint
-    // blocks are freed by the ContextCleaner when the DataFrame is
-    // GC'd, so long-lived library sessions don't accumulate storage
-    // the way CacheManager persists (which live until an explicit
-    // unpersist) do.
+    // EAGER localCheckpoint, not persist: checkpoint blocks are freed
+    // by the ContextCleaner when the DataFrame is GC'd, so long-lived
+    // library sessions don't accumulate storage the way CacheManager
+    // persists (which live until an explicit unpersist) do.
     val hashDf = distributed
       .select(col("id"), hsExpr.as("hs"))
       .pipe(Checkpoints.stage)
-    // Each band folds its OWN rows-per-band minhash indices — every
-    // minhash is computed exactly once (slicing a shared signature
-    // array would inline all 64 minima into each of the 16 bands).
-    // The fold is reduced mod P at every step: acc < P and mh < P keep
-    // acc*31+mh under 2^36, so the arithmetic can never overflow Long —
-    // safe under ANSI mode (Spark 4's default), where a wrapping
-    // multiply would throw ARITHMETIC_OVERFLOW instead.
-    //
-    // Fast path: sessions with GraftExtensions evaluate the whole fold
-    // in the codegen'd graft_minhash_bands kernel (higher-order
-    // functions are interpreted — the nested 64-lambda form below is
-    // the same arithmetic, an order of magnitude slower). Both paths
-    // produce identical band hashes (GraftFunctionsSpec).
-    val bandArray =
-      if (docs.sparkSession.catalog.functionExists("graft_minhash_bands"))
-        call_function("graft_minhash_bands", col("hs"),
-          lit(params.bands), lit(rows))
-      else minhashBandsHof(col("hs"), params.bands, rows)
+    // Same fold as [[minhashBandsHof]]: each band folds its own
+    // rows-per-band minhash indices mod P.
+    val bandArray = call_function("graft_minhash_bands", col("hs"),
+      lit(params.bands), lit(rows))
     hashDf
       .select(col("id"), posexplode(bandArray))
       .withColumnRenamed("pos", "band_id")
@@ -498,8 +475,7 @@ object Dedup {
     * does: the hash array is referenced once per window, and an
     * inlined text→hashes expression would be recomputed per window by
     * the lambda (O(len²) md5 calls). Callers materialize the hashes
-    * first — [[winnowed]] stages the projection exactly like
-    * [[bands]]. */
+    * first. */
   def winnowSelect(hs: Column, w: Int): Column =
     when(hs.isNull, lit(null).cast("array<string>"))
       .when(size(hs) === 0, array().cast("array<string>"))
@@ -507,26 +483,15 @@ object Dedup {
         sequence(lit(1), greatest(size(hs) - (w - 1), lit(1))),
         j => array_min(slice(hs, j, lit(w))))))
 
-  /** [[kgramHashes]] + [[winnowSelect]] end to end. Sessions with
-    * GraftExtensions run the codegen'd `graft_winnow` kernel — one
-    * primitive pass per row, no barrier needed (identical
-    * fingerprints: GraftFunctionsSpec pins the equality, x_kernel_equiv
-    * gates it hard-0 through the driver compare). The fallback
-    * higher-order path MATERIALIZES the hash projection between the
-    * two stages (eager — the barrier keeps CollapseProject from
-    * inlining the md5 chain into every window lambda; see [[bands]]
-    * for the policy and the executor-loss caveat). Adds `outCol`
-    * (array<string> fingerprints) to `df`. */
+  /** [[kgramHashes]] + [[winnowSelect]] end to end through the
+    * codegen'd `graft_winnow` kernel — one primitive pass per row
+    * (identical fingerprints: GraftFunctionsSpec pins the equality,
+    * x_kernel_equiv gates it hard-0 through the DuckDB oracle). Adds
+    * `outCol` (array<string> fingerprints) to `df`. */
   def winnowed(df: DataFrame, textCol: String, outCol: String,
                k: Int = 8, w: Int = 4): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_winnow"))
-      Spread.ensure(df).withColumn(outCol,
-        call_function("graft_winnow", col(textCol), lit(k), lit(w)))
-    else
-      Spread.ensure(df)
-        .withColumn(outCol, kgramHashes(col(textCol), k))
-        .pipe(Checkpoints.stage)
-        .withColumn(outCol, winnowSelect(col(outCol), w))
+    Spread.ensure(df).withColumn(outCol,
+      call_function("graft_winnow", col(textCol), lit(k), lit(w)))
 
   /** [[winnowed]] with INT-PACKED fingerprints (`outCol` is
     * array<long>, each element the md5-prefix fingerprint's unsigned
@@ -537,19 +502,11 @@ object Dedup {
     * (lexicographic hex == unsigned numeric), so the SELECTED
     * fingerprint set is identical to [[winnowed]]'s modulo encoding —
     * `lpad(lower(hex(fp)), 8, '0')` recovers the string form exactly
-    * (GraftFunctionsSpec pins it; hex only at oracle boundaries).
-    * Kernel fast path (`graft_winnow_packed`); the fallback converts
-    * the string pipeline's output AFTER winnow-select, so it pays the
-    * conv() on ~2/(w+1) of the hashes only. */
+    * (GraftFunctionsSpec pins it; hex only at oracle boundaries). */
   def winnowedPacked(df: DataFrame, textCol: String, outCol: String,
                      k: Int = 8, w: Int = 4): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_winnow_packed"))
-      Spread.ensure(df).withColumn(outCol,
-        call_function("graft_winnow_packed", col(textCol), lit(k), lit(w)))
-    else
-      winnowed(df, textCol, outCol, k, w)
-        .withColumn(outCol,
-          transform(col(outCol), s => conv(s, 16, 10).cast("long")))
+    Spread.ensure(df).withColumn(outCol,
+      call_function("graft_winnow_packed", col(textCol), lit(k), lit(w)))
 
   /** Shared-passage document pairs via a winnow-fingerprint inverted
     * index: explode each doc's fingerprint set, self-join keyed on the
@@ -830,7 +787,7 @@ object Dedup {
                            textCol: String): DataFrame =
     docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        simhashIn(docs.sparkSession)(col(textCol)).as("sh"))
+        simhashIn(col(textCol)).as("sh"))
       .select(col("id"), col("sh"),
         explode(array((0 until 4).map(j =>
           struct(lit(j).as("band_id"),
@@ -900,14 +857,9 @@ object Dedup {
       })
   }
 
-  /** [[simhash]] with kernel dispatch: the codegen'd `graft_simhash`
-    * (ONE token pass — the HOF form re-evaluates the split+hash array
-    * once per mask bit, 64× per row) when the session has graft
-    * extensions, the bit-identical HOF when it doesn't (vote sums are
-    * exact integers, so the two can never diverge — pinned in
+  /** [[simhash]] through the codegen'd `graft_simhash` kernel: ONE
+    * token pass, where the HOF form re-evaluates the split+hash array
+    * once per mask bit, 64× per row (bit-identical — pinned in
     * DedupSpec). */
-  def simhashIn(spark: org.apache.spark.sql.SparkSession)(text: Column): Column =
-    if (spark.catalog.functionExists("graft_simhash"))
-      call_function("graft_simhash", text)
-    else simhash(text)
+  def simhashIn(text: Column): Column = call_function("graft_simhash", text)
 }

@@ -376,7 +376,7 @@ object IvfIndex {
     val q = array(query.map(v => lit(v.toDouble)): _*)
     minusTombstones(spark, table, idCol,
         spark.table(table).where(col("cluster_id").isin(probe: _*)))
-      .select(col(idCol), Similarity.cosineIn(spark)(col(vecCol), q).as("cos_sim"))
+      .select(col(idCol), Similarity.cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -418,12 +418,12 @@ object IvfIndex {
     val probe = Similarity.probeClusters(cents, query, nProbe)
     val qq = Quantize.quantizeLocal(query)
     val qlit = array(qq.toIndexedSeq.map(lit(_)): _*)
-    val qnorm2 = Similarity.dotIn(spark)(col("qv"), col("qv"))
+    val qnorm2 = Similarity.dotIn(col("qv"), col("qv"))
     minusTombstones(spark, table, idCol,
         spark.table(table).where(col("cluster_id").isin(probe: _*)))
       .select(col(idCol),
         when(qnorm2 === 0.0, lit(null).cast("double"))
-          .otherwise(Similarity.dotIn(spark)(col("qv"), qlit) / sqrt(qnorm2))
+          .otherwise(Similarity.dotIn(col("qv"), qlit) / sqrt(qnorm2))
           .as("qscore"))
       .orderBy(col("qscore").desc_nulls_last, col(idCol))
       .limit(shortlist)
@@ -497,14 +497,14 @@ object IvfIndex {
       .select(col("cluster_id"))
     val newSide = assigned.join(sized, Seq("cluster_id"))
       .select(col("cluster_id"), col(idCol).as("__id_n"),
-      col(vecCol).as("__v_n"), Similarity.normIn(spark)(col(vecCol)).as("__nrm_n"))
+      col(vecCol).as("__v_n"), Similarity.normIn(col(vecCol)).as("__nrm_n"))
     val allSide = union.join(sized, Seq("cluster_id"))
       .select(col("cluster_id"), col(idCol).as("__id_o"),
-      col(vecCol).as("__v_o"), Similarity.normIn(spark)(col(vecCol)).as("__nrm_o"))
+      col(vecCol).as("__v_o"), Similarity.normIn(col(vecCol)).as("__nrm_o"))
     newSide.join(allSide, Seq("cluster_id"))
       .where(col("__id_n") =!= col("__id_o"))
       .withColumn("cos_sim",
-        Similarity.dotIn(spark)(col("__v_n"), col("__v_o")) /
+        Similarity.dotIn(col("__v_n"), col("__v_o")) /
           (col("__nrm_n") * col("__nrm_o")))
       .where(col("cos_sim") >= threshold)
       .select(least(col("__id_n"), col("__id_o")).as("id_a"),
@@ -623,7 +623,7 @@ object IvfIndex {
     val q = array(query.map(v => lit(v.toDouble)): _*)
     spark.table(table).where(col("cluster_id").isin(probe: _*))
       .where(col(idCol).isin(shortIds.toIndexedSeq: _*))
-      .select(col(idCol), Similarity.cosineIn(spark)(col(vecCol), q).as("cos_sim"))
+      .select(col(idCol), Similarity.cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -689,7 +689,7 @@ object IvfIndex {
     val qdiv = qd.map { case (_, q) =>
       math.sqrt(q.foldLeft(0.0)((a, x) => a + x * x))
     }.toIndexedSeq
-    val scored = BatchProbe.cellGatedScores(spark, base, idCol, vecCol,
+    val scored = BatchProbe.cellGatedScores(base, idCol, vecCol,
       qd, qdiv, probedCells, zeroNull = false)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col(idCol))
@@ -741,7 +741,7 @@ object IvfIndex {
     // its ranking); x · 1.0 is IEEE-exact in the kernel's shared
     // denominator shape.
     val ones = IndexedSeq.fill(queries.size)(1.0)
-    val scored = BatchProbe.cellGatedScores(spark, base, idCol, "qv",
+    val scored = BatchProbe.cellGatedScores(base, idCol, "qv",
       qq, ones, probedCells, zeroNull = true)
     val wQ = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc_nulls_last, col(idCol))

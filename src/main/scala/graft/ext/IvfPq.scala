@@ -56,12 +56,12 @@ object IvfPq {
 
   def codebooksTable(table: String): String = table + "_codebooks"
 
-  /** Batch size up to which [[probeBatch]]'s fan-out uses one flat
-    * codegen'd struct per query (tightest plan; ~25–30 expression
-    * nodes per query, well inside janino's method limits at 8), and
-    * above which it switches to the size-independent literal-indexed
-    * lambda (higher-order transform — CodegenFallback, but compiles
-    * at any batch size). */
+  /** Batch size up to which the float re-rank fan-out
+    * ([[BatchProbe.rerankFloat]]) uses one flat codegen'd struct per
+    * query (tightest plan; ~25–30 expression nodes per query, well
+    * inside janino's method limits at 8), and above which it switches
+    * to the size-independent literal-indexed lambda (higher-order
+    * transform — CodegenFallback, but compiles at any batch size). */
   val FlatFanoutMax = 8
 
   /** Unit-normalize a centroid into the residual REFERENCE point for
@@ -407,7 +407,7 @@ object IvfPq {
     spark.table(table).where(col("cluster_id").isin(probe: _*))
       .where(col(idCol).isin(shortIds.toIndexedSeq: _*))
       .select(col(idCol),
-        Similarity.cosineIn(spark)(col(vecCol), q).as("cos_sim"))
+        Similarity.cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -430,19 +430,14 @@ object IvfPq {
                                        books: Seq[Seq[Seq[Float]]],
                                        sl: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = books.size
-    // THREE fan-out builders, same arithmetic, by capability/size:
-    // the graft_ivfadc_scores KERNEL when the session has graft
-    // extensions (one call per row at any batch size, constants as a
-    // reference object); else flat per-query ivfadcScore structs up to
-    // [[FlatFanoutMax]] (blow janino past that); else a
-    // literal-indexed lambda (CodegenFallback, but size-independent).
-    // All replay [[ivfadcScore]] EXACTLY — per-query cell-dot constant
-    // plus the m residual-LUT terms folded left in subspace order,
-    // over the same driver-computed doubles (Pq.adcLut3d builds the
-    // shared LUT literal) — so every path is bit-identical to the
-    // single probe; IvfPqSpec pins kernel ≡ adcShortlist and the
-    // 32-query ScaleBench gate proves batch ≡ per-query end to end.
+    // The graft_ivfadc_scores kernel fans out in one call per row at
+    // any batch size, the per-query constants shipped as one reference
+    // object. It replays [[ivfadcScore]] EXACTLY — per-query cell-dot
+    // constant plus the m residual-LUT terms folded left in subspace
+    // order, over the same driver-computed doubles (Pq.adcLut3d builds
+    // the shared LUT literal) — so it is bit-identical to the single
+    // probe; IvfPqSpec pins kernel ≡ adcShortlist and the 32-query
+    // ScaleBench gate proves batch ≡ per-query end to end.
     // [query][cell] → dot(q̂, ref_cell); [query][subspace][code] → LUT.
     val cellDot2d = array(queries.map { case (_, q) =>
       val qq = Pq.unitOf(q)
@@ -466,60 +461,17 @@ object IvfPq {
       else array(mine.map(lit): _*)
     }: _*)
     val qids = array(queries.map(q => lit(q._1)): _*)
-    val lambdaFanout = transform(sequence(lit(0), lit(queries.size - 1)), qi => {
-      val qlut = element_at(lut3d, qi + 1)
-      // cellDot + ((l0 + l1) + … + l7): EXACTLY ivfadcScore's
-      // association (cell constant added to the left-folded LUT sum) —
-      // float addition is not associative, so the shape must match for
-      // batch ≡ single bit-identity.
-      val lutSum = (0 until m).map(j =>
-        element_at(element_at(qlut, j + 1),
-          pmod(shiftright(col("pq_code"), 8 * j), lit(256L)).cast("int") + 1))
-        .reduceLeft[Column](_ + _)
-      val score = element_at(element_at(cellDot2d, qi + 1),
-        col("cluster_id").cast("int") + 1) + lutSum
-      val member = array_contains(element_at(cells2d, qi + 1),
-        col("cluster_id").cast("int"))
-      // Lazy score: a row scores only the queries whose probed cells
-      // hold it (the filter below drops the rest — at nProbe = k/4
-      // roughly 3/4 of the fan-out would otherwise compute m lookups
-      // just to be discarded).
-      struct(element_at(qids, qi + 1).as("query_id"), member.as("__in"),
-        when(member, score).as("pq_score"))
-    })
-    val base = minusTombstones(spark, table, idCol,
+    val stacked = minusTombstones(spark, table, idCol,
         spark.table(table).where(col("cluster_id").isin(unionCells: _*)))
       .select(col(idCol), col("cluster_id"), col("pq_code"))
-    // Fan-out ladder: the codegen KERNEL when the session has graft
-    // extensions (one call per row whatever the batch size — the
-    // per-query constants ship as one reference object), else flat
-    // per-query expressions up to FlatFanoutMax, else the
-    // literal-indexed lambda. All three replay the same association
-    // over the same doubles (kernel ≡ flat pinned in IvfPqSpec).
-    val stacked =
-      if (spark.catalog.functionExists("graft_ivfadc_scores"))
-        base.select(col(idCol),
-            posexplode(call_function("graft_ivfadc_scores",
-              col("pq_code"), col("cluster_id").cast("int"),
-              struct(lut3d, cellDot2d, cells2d))))
-          .toDF(idCol, "__qi", "pq_score")
-          .where(col("pq_score").isNotNull)
-          .select(element_at(qids, col("__qi") + 1).as("query_id"),
-            col(idCol), col("pq_score"))
-      else {
-        val fanout =
-          if (queries.size <= FlatFanoutMax)
-            array(queries.map { case (qid, q) =>
-              struct(lit(qid).as("query_id"),
-                col("cluster_id").isin(probedCells(qid): _*).as("__in"),
-                ivfadcScore(q, cents, books).as("pq_score"))
-            }: _*)
-          else lambdaFanout
-        base.select(col(idCol), explode(fanout).as("__e"))
-          .where(col("__e.__in"))
-          .select(col("__e.query_id").as("query_id"), col(idCol),
-            col("__e.pq_score").as("pq_score"))
-      }
+      .select(col(idCol),
+        posexplode(call_function("graft_ivfadc_scores",
+          col("pq_code"), col("cluster_id").cast("int"),
+          struct(lut3d, cellDot2d, cells2d))))
+      .toDF(idCol, "__qi", "pq_score")
+      .where(col("pq_score").isNotNull)
+      .select(element_at(qids, col("__qi") + 1).as("query_id"),
+        col(idCol), col("pq_score"))
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("pq_score").desc, col(idCol))
     stacked.withColumn("__rn", row_number().over(wAdc))

@@ -111,14 +111,13 @@ object OperatingPoint {
                                 aCells: DataFrame,
                                 centroids: Seq[Seq[Float]],
                                 k: Int): DataFrame = {
-    val s = corpus.sparkSession
     val assigned = Similarity.ivfAssign(corpus, idCol, vecCol, centroids)
       .select(col(idCol), col(vecCol), col("cluster_id"))
     val wCell = Window.partitionBy(col("anchor_id"), col("cluster_id"))
       .orderBy(col("cos_sim").desc, col(idCol))
     assigned.join(broadcast(a), col(idCol) =!= col("anchor_id"))
       .select(col("anchor_id"), col(idCol), col("cluster_id"),
-        Similarity.cosineIn(s)(col(vecCol), col("__avec")).as("cos_sim"))
+        Similarity.cosineIn(col(vecCol), col("__avec")).as("cos_sim"))
       .join(broadcast(aCells), Seq("anchor_id", "cluster_id"))
       .withColumn("__rc", row_number().over(wCell))
       .where(col("__rc") <= k)
@@ -132,11 +131,10 @@ object OperatingPoint {
                                   anchors: DataFrame,
                                   centroids: Seq[Seq[Float]])
       : (DataFrame, DataFrame) = {
-    val s = anchors.sparkSession
     val a = anchors.select(col(idCol).as("anchor_id"),
       col(vecCol).as("__avec"))
     val asims = array(centroids.map(cv =>
-      Similarity.cosineIn(s)(col("__avec"),
+      Similarity.cosineIn(col("__avec"),
         array(cv.map(v => lit(v.toDouble)): _*))): _*)
     val wRank = Window.partitionBy(col("anchor_id"))
       .orderBy(col("__csim").desc, col("cluster_id"))
@@ -186,7 +184,6 @@ object OperatingPoint {
       s"shortlists must all be >= k: $shortlists, $k")
     require(centroids.nonEmpty && nProbe > 0 && nProbe <= centroids.size,
       s"need 1 <= nProbe <= ${centroids.size}: $nProbe")
-    val s = corpus.sparkSession
     val maxS = shortlists.max
     val a = Quantize.withQuantized(
         anchors.select(col(idCol), col(vecCol)), vecCol, "__aqv")
@@ -194,7 +191,7 @@ object OperatingPoint {
         col("__aqv"))
     // Each anchor's nProbe probed cells, under probeClusters' order.
     val asims = array(centroids.map(cv =>
-      Similarity.cosineIn(s)(col("__avec"),
+      Similarity.cosineIn(col("__avec"),
         array(cv.map(v => lit(v.toDouble)): _*))): _*)
     val wRank = Window.partitionBy(col("anchor_id"))
       .orderBy(col("__csim").desc, col("cluster_id"))
@@ -238,13 +235,12 @@ object OperatingPoint {
                                    aCells: DataFrame,
                                    centroids: Seq[Seq[Float]], k: Int,
                                    maxS: Int): DataFrame = {
-    val s = corpus.sparkSession
     val scored = Quantize.withQuantized(
         Similarity.ivfAssign(corpus, idCol, vecCol, centroids), vecCol, "__qv")
       .join(broadcast(a), col(idCol) =!= col("anchor_id"))
       .join(broadcast(aCells), Seq("anchor_id", "cluster_id"))
       .select(col("anchor_id"), col(idCol),
-        Similarity.cosineIn(s)(col(vecCol), col("__avec")).as("__cf"),
+        Similarity.cosineIn(col(vecCol), col("__avec")).as("__cf"),
         Quantize.cosineQ(col("__qv"), col("__aqv")).as("__cq"))
     val wF = Window.partitionBy(col("anchor_id"))
       .orderBy(col("__cf").desc, col(idCol))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011, "Product quantization for
@@ -36,15 +36,13 @@ object Pq {
     * element lambda reads a bound attribute — the Quantize
     * .withQuantized shape (an aggregate inside the lambda would be
     * O(d²) per row). */
-  private[ext] def withUnit(df: DataFrame, vecCol: String, outCol: String): DataFrame = {
-    val spark = df.sparkSession
+  private[ext] def withUnit(df: DataFrame, vecCol: String, outCol: String): DataFrame =
     df.withColumn("__pq_n",
-        sqrt(Similarity.dotIn(spark)(col(vecCol), col(vecCol))))
+        sqrt(Similarity.dotIn(col(vecCol), col(vecCol))))
       .withColumn(outCol,
         when(col("__pq_n") === 0.0, transform(col(vecCol), _ => lit(0.0)))
           .otherwise(transform(col(vecCol), x => x.cast("double") / col("__pq_n"))))
       .drop("__pq_n")
-  }
 
   /** The m×k×sub codebook as one constant-folded plan literal —
     * centroids widen Float → Double exactly as l2Dists does, so the
@@ -53,24 +51,17 @@ object Pq {
     array(books.map(book => array(book.map(cv =>
       array(cv.map(d => lit(d.toDouble)): _*)): _*)): _*)
 
-  /** Packed-code expression with kernel dispatch: the codegen'd
-    * graft_pq_encode when the session has graft extensions (zero
-    * allocations per row), the aliased-HOF form is taken by the
-    * callers below when it doesn't. */
-  private def kernelCode(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.catalog.functionExists("graft_pq_encode")
-
   /** GATE-ONLY single-Column HOF twin of the packed code (dist arrays
     * re-evaluate per argmin reference — x_kernel_equiv compares it
     * against the kernel at gate scale; production encode uses the
-    * aliased multi-column form or the kernel). */
-  private[graft] def packedCodeHof(spark: org.apache.spark.sql.SparkSession)(
+    * kernel). */
+  private[graft] def packedCodeHof(
       vec: Column, books: Seq[Seq[Seq[Float]]], normalize: Boolean): Column = {
     val sub = books.head.head.size
     val u =
       if (!normalize) vec
       else {
-        val nrm = sqrt(Similarity.dotIn(spark)(vec, vec))
+        val nrm = sqrt(Similarity.dotIn(vec, vec))
         when(nrm === 0.0, transform(vec, _ => lit(0.0)))
           .otherwise(transform(vec, x => x.cast("double") / nrm))
       }
@@ -80,7 +71,7 @@ object Pq {
     }.reduceLeft[Column](_ + _)
   }
 
-  /** The kernel call (callers gate on [[kernelCode]]). */
+  /** The codegen'd graft_pq_encode call: zero allocations per row. */
   private[graft] def packedCodeKernel(vec: Column,
       books: Seq[Seq[Seq[Float]]], normalize: Boolean): Column =
     call_function("graft_pq_encode", vec, booksLit(books), lit(normalize))
@@ -101,9 +92,8 @@ object Pq {
         lit(0.0), (acc, x) => acc + x))
   }
 
-  /** Argmin over an ALIASED distance column (first min wins —
-    * deterministic ties). Callers alias the l2Dists array first so it
-    * evaluates once per row, not once per reference. */
+  /** Argmin over a distance array (first min wins — deterministic
+    * ties). */
   private def argminCode(distCol: Column): Column =
     (array_position(distCol, array_min(distCol)) - 1).cast("int")
 
@@ -152,16 +142,9 @@ object Pq {
         val sums = (0 until sub).map(d =>
           sum(element_at(col("__sv"), d + 1)
             .cast("decimal(27,15)")).as(s"__s$d"))
-        // Assign via the encode kernel when present (a 1-book pack IS
-        // the argmin code); identical bits to the HOF dist+argmin.
-        val assigned =
-          if (kernelCode(corpus.sparkSession))
-            sv.withColumn("__c",
-              packedCodeKernel(col("__sv"), Seq(cents), normalize = false)
-                .cast("int"))
-          else
-            sv.withColumn("__d", l2Dists(col("__sv"), cents))
-              .withColumn("__c", argminCode(col("__d")))
+        // Assign via the encode kernel: a 1-book pack IS the argmin code.
+        val assigned = sv.withColumn("__c",
+          packedCodeKernel(col("__sv"), Seq(cents), normalize = false).cast("int"))
         val rows = assigned
           .groupBy(col("__c"))
           .agg(count(lit(1)).as("__n"), sums: _*)
@@ -184,35 +167,16 @@ object Pq {
     * projection, no id-keyed join). One shuffle-free codegen pass. */
   def withPackedCode(df: DataFrame, vecCol: String, outCol: String,
                      books: Seq[Seq[Seq[Float]]]): DataFrame =
-    if (kernelCode(df.sparkSession))
-      // Kernel path: normalize + assign + pack in ONE zero-allocation
-      // codegen call — no materialized unit-vector column at all.
-      df.withColumn(outCol, packedCodeKernel(col(vecCol), books, normalize = true))
-    else
-      packCodesOn(withUnit(df, vecCol, "__pq_u"), "__pq_u", outCol, books)
-        .drop("__pq_u")
+    // Normalize + assign + pack in ONE codegen call — no materialized
+    // unit-vector column at all.
+    df.withColumn(outCol, packedCodeKernel(col(vecCol), books, normalize = true))
 
   /** The encode core of [[withPackedCode]] WITHOUT the unit-normalize
     * step — `rawCol` (array<double>) is assigned to each subspace's
     * nearest code as-is. IvfPq packs RESIDUAL codes through this. */
   private[ext] def packCodesOn(df: DataFrame, rawCol: String, outCol: String,
-                               books: Seq[Seq[Seq[Float]]]): DataFrame = {
-    if (kernelCode(df.sparkSession))
-      return df.withColumn(outCol,
-        packedCodeKernel(col(rawCol), books, normalize = false))
-    val sub = books.head.head.size
-    // One aliased distance array per subspace, so each evaluates once
-    // per row (argmin references it twice).
-    val withDists = books.zipWithIndex.foldLeft(df) { case (d, (cents, j)) =>
-      d.withColumn(s"__pq_d$j",
-        l2Dists(slice(col(rawCol), j * sub + 1, sub), cents))
-    }
-    val packed = books.indices.map { j =>
-      argminCode(col(s"__pq_d$j")).cast("long") * lit(1L << (8 * j))
-    }.reduceLeft[Column](_ + _)
-    withDists.withColumn(outCol, packed)
-      .drop(books.indices.map(j => s"__pq_d$j"): _*)
-  }
+                               books: Seq[Seq[Seq[Float]]]): DataFrame =
+    df.withColumn(outCol, packedCodeKernel(col(rawCol), books, normalize = false))
 
   /** Encode the corpus: normalize, assign each subspace's nearest
     * code, pack all m codes into one BIGINT (code_j in bits
@@ -294,37 +258,25 @@ object Pq {
     require(queries.map(_._1).distinct.size == queries.size,
       "query ids must be distinct")
     import org.apache.spark.sql.expressions.Window
-    val spark = encoded.sparkSession
     val qids = array(queries.map(q => lit(q._1)): _*)
-    // Kernel fan-out when the session has graft extensions: one
-    // graft_ivfadc_scores call per row in FLAT mode (empty cell
+    // One graft_ivfadc_scores call per row in FLAT mode (empty cell
     // tables — score is the bare left-folded LUT sum, bit-identical
     // to adcScore), with every per-query LUT riding one folded
-    // literal. The flat per-query expression form below blows
-    // janino's generated-method limits near the 64-query cap
-    // (measured: InternalCompilerException at 64 × kPq=128, falling
-    // back to interpreted eval); the kernel path compiles at any
-    // batch size.
-    val stacked =
-      if (spark.catalog.functionExists("graft_ivfadc_scores")) {
-        val emptyD = array().cast("array<double>")
-        val emptyI = array().cast("array<int>")
-        encoded.select(col(idCol),
-            posexplode(call_function("graft_ivfadc_scores",
-              col("pq_code"), lit(0),
-              struct(adcLut3d(queries, books),
-                array(queries.map(_ => emptyD): _*),
-                array(queries.map(_ => emptyI): _*)))))
-          .toDF(idCol, "__qi", "pq_score")
-          .select(element_at(qids, col("__qi") + 1).as("query_id"),
-            col(idCol), col("pq_score"))
-      } else
-        encoded.select(col(idCol),
-            explode(array(queries.map { case (qid, q) =>
-              struct(lit(qid).as("query_id"), adcScore(q, books).as("pq_score"))
-            }: _*)).as("__e"))
-          .select(col("__e.query_id").as("query_id"), col(idCol),
-            col("__e.pq_score").as("pq_score"))
+    // literal. A flat per-query expression form blows janino's
+    // generated-method limits near the 64-query cap (measured:
+    // InternalCompilerException at 64 × kPq=128); the kernel compiles
+    // at any batch size.
+    val emptyD = array().cast("array<double>")
+    val emptyI = array().cast("array<int>")
+    val stacked = encoded.select(col(idCol),
+        posexplode(call_function("graft_ivfadc_scores",
+          col("pq_code"), lit(0),
+          struct(adcLut3d(queries, books),
+            array(queries.map(_ => emptyD): _*),
+            array(queries.map(_ => emptyI): _*)))))
+      .toDF(idCol, "__qi", "pq_score")
+      .select(element_at(qids, col("__qi") + 1).as("query_id"),
+        col(idCol), col("pq_score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("pq_score").desc, col(idCol))
     stacked.withColumn("__rn", row_number().over(w))
@@ -346,11 +298,10 @@ object Pq {
                         books: Seq[Seq[Seq[Float]]], topK: Int,
                         shortlist: Int = 50): DataFrame = {
     require(shortlist >= topK, s"shortlist $shortlist < topK $topK")
-    val spark = corpus.sparkSession
     val ids = probeTopK(encoded, idCol, q, books, shortlist).select(col(idCol))
     val qlit = array(q.map(v => lit(v.toDouble)): _*)
     corpus.join(broadcast(ids), Seq(idCol))
-      .withColumn("score", Similarity.cosineIn(spark)(col(vecCol), qlit))
+      .withColumn("score", Similarity.cosineIn(col(vecCol), qlit))
       .orderBy(col("score").desc, col(idCol))
       .limit(topK)
   }

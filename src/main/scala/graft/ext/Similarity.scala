@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
   *
   * Vector math is a SEQUENTIAL double-precision fold over the array
   * (zip_with + aggregate) — deterministic bit-for-bit regardless of
-  * partitioning, which the oracle hash-compare requires. All of it is
-  * builtin higher-order functions: codegen'd, no UDFs.
+  * partitioning, which the oracle hash-compare requires. [[dot]] and
+  * [[lshBucket]] are the builtin higher-order reference forms; the
+  * operators evaluate them through the codegen'd graft_dot /
+  * graft_lsh_bucket kernels ([[dotIn]], [[lshBucketIn]]) — no UDFs.
   *
   * Scale path: brute force is one scan per query batch (fine when the
   * query side is small and broadcast); the LSH variant buckets vectors
@@ -26,18 +28,13 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Session-aware dot: uses the codegen'd graft_dot kernel when
-    * GraftExtensions is installed (bit-identical fold order — see
-    * graft.functions.Kernels), else the higher-order form above. */
-  def dotIn(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else dot(a, b)
+  /** [[dot]] through the codegen'd graft_dot kernel (bit-identical
+    * fold order — see graft.functions.Kernels). */
+  def dotIn(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  def normIn(spark: org.apache.spark.sql.SparkSession)(a: Column): Column =
-    sqrt(dotIn(spark)(a, a))
+  def normIn(a: Column): Column = sqrt(dotIn(a, a))
 
-  def cosineIn(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    dotIn(spark)(a, b) / (normIn(spark)(a) * normIn(spark)(b))
+  def cosineIn(a: Column, b: Column): Column = dotIn(a, b) / (normIn(a) * normIn(b))
 
   /** Brute-force top-k by cosine against one literal query vector.
     * One scan + TakeOrderedAndProject (no full sort materialized).
@@ -45,7 +42,7 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      query: Seq[Float], k: Int): DataFrame = {
     val q = array(query.map(v => lit(v.toDouble)): _*)
-    corpus.select(col(idCol), cosineIn(corpus.sparkSession)(col(vecCol), q).as("cos_sim"))
+    corpus.select(col(idCol), cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -64,14 +61,13 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
                     labelCol: String, anchors: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s = corpus.sparkSession
     val a = anchors.select(col(idCol).as("anchor_id"),
       col(vecCol).as("__anchor_vec"), col(labelCol).as("__anchor_label"))
     val w = Window.partitionBy(col("anchor_id"))
       .orderBy(col("cos_sim").desc, col(idCol))
     corpus.join(broadcast(a), col(labelCol) =!= col("__anchor_label"))
       .select(col("anchor_id"), col(idCol),
-        cosineIn(s)(col(vecCol), col("__anchor_vec")).as("cos_sim"))
+        cosineIn(col(vecCol), col("__anchor_vec")).as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
   }
@@ -124,14 +120,10 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** Session-aware lshBucket: the codegen'd graft_lsh_bucket kernel
-    * when GraftExtensions is installed (identical values — pinned in
-    * ApproxSimilarityJoinSpec), else the interpreted higher-order form.
-    * Same dispatch pattern as `dotIn`. */
-  def lshBucketIn(spark: org.apache.spark.sql.SparkSession)(vec: Column, bits: Int): Column =
-    if (spark.catalog.functionExists("graft_lsh_bucket"))
-      call_function("graft_lsh_bucket", vec, lit(bits))
-    else lshBucket(vec, bits)
+  /** [[lshBucket]] through the codegen'd graft_lsh_bucket kernel
+    * (identical values — pinned in ApproxSimilarityJoinSpec). */
+  def lshBucketIn(vec: Column, bits: Int): Column =
+    call_function("graft_lsh_bucket", vec, lit(bits))
 
   /** Driver-side bucket id for a literal query vector — the SAME kernel
     * arithmetic the column path evaluates (the kernel is pinned equal
@@ -160,12 +152,11 @@ object Similarity {
   def annTopK(corpus: DataFrame, idCol: String, vecCol: String,
               query: Seq[Float], k: Int, bits: Int = 8,
               multiProbe: Boolean = true): DataFrame = {
-    val spark = corpus.sparkSession
     val q = array(query.map(v => lit(v.toDouble)): _*)
     val probes = probeBuckets(query, bits, multiProbe)
-    corpus.withColumn("bucket", lshBucketIn(spark)(col(vecCol), bits))
+    corpus.withColumn("bucket", lshBucketIn(col(vecCol), bits))
       .where(col("bucket").isin(probes: _*))
-      .select(col(idCol), cosineIn(spark)(col(vecCol), q).as("cos_sim"))
+      .select(col(idCol), cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
   }
@@ -196,7 +187,6 @@ object Similarity {
                        k: Int): DataFrame = {
     require(dims.nonEmpty && k > 0, s"need dims and k > 0: $dims, $k")
     import org.apache.spark.sql.expressions.Window
-    val s = corpus.sparkSession
     val a = anchors.select(col(idCol).as("anchor_id"),
       col(vecCol).as("__avec"))
     val w = Window.partitionBy(col("anchor_id"))
@@ -205,7 +195,7 @@ object Similarity {
       def sliced(c: Column) = cut.fold(c)(d => slice(c, 1, d))
       corpus.join(broadcast(a), col(idCol) =!= col("anchor_id"))
         .select(col("anchor_id"), col(idCol),
-          cosineIn(s)(sliced(col(vecCol)), sliced(col("__avec")))
+          cosineIn(sliced(col(vecCol)), sliced(col("__avec")))
             .as("cos_sim"))
         .withColumn("__rk", row_number().over(w))
         .where(col("__rk") <= k)
@@ -249,13 +239,12 @@ object Similarity {
     */
   def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
                 centroids: Seq[Seq[Float]]): DataFrame = {
-    val spark = corpus.sparkSession
     // LINEAR argmax: one sims array + array_position(max). A
     // fold-of-when chain that threads the accumulator through both
     // branches duplicates the subtree per step — 2^k expression nodes
     // for k centroids (measured: heap exhaustion at k=16).
     val sims = array(centroids.map(cv =>
-      cosineIn(spark)(col(vecCol), array(cv.map(v => lit(v.toDouble)): _*))): _*)
+      cosineIn(col(vecCol), array(cv.map(v => lit(v.toDouble)): _*))): _*)
     corpus
       .withColumn("__sims", sims)
       .withColumn("cluster_id",
@@ -337,7 +326,7 @@ object Similarity {
     val q = array(query.map(v => lit(v.toDouble)): _*)
     ivfAssign(corpus, idCol, vecCol, centroids)
       .where(col("cluster_id").isin(probe: _*))
-      .select(col(idCol), cosineIn(corpus.sparkSession)(col(vecCol), q).as("cos_sim"))
+      .select(col(idCol), cosineIn(col(vecCol), q).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(topK)
   }
@@ -364,14 +353,13 @@ object Similarity {
     // instead of once per pair (n²). The cosine is then the identical
     // IEEE expression dot/(norm_a*norm_b), so results are bit-equal to
     // the naive form — only the work moves.
-    val spark = corpus.sparkSession
     val sized = SkipReport.within(
         SkipReport.census(corpus.select(col(blockCol).as("blk")),
           Seq(col("blk"))),
         maxBlockSize)
       .select(col("blk"))
     val withNorm = corpus.select(col(blockCol).as("blk"), col(idCol).as("id"),
-      col(vecCol).as("v"), normIn(spark)(col(vecCol)).as("nrm"))
+      col(vecCol).as("v"), normIn(col(vecCol)).as("nrm"))
       .join(sized, Seq("blk"))
     val a = withNorm.select(col("blk"), col("id").as("id_a"),
       col("v").as("v_a"), col("nrm").as("nrm_a"))
@@ -379,7 +367,7 @@ object Similarity {
       col("v").as("v_b"), col("nrm").as("nrm_b"))
     a.join(b, Seq("blk"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", dotIn(spark)(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
+      .withColumn("cos_sim", dotIn(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
       .where(col("cos_sim") >= threshold)
       .select(col("blk"), col("id_a"), col("id_b"), col("cos_sim"))
   }
@@ -395,16 +383,15 @@ object Similarity {
     */
   def bruteForcePairs(corpus: DataFrame, idCol: String, vecCol: String,
                       threshold: Double): DataFrame = {
-    val spark = corpus.sparkSession
     val withNorm = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      normIn(spark)(col(vecCol)).as("nrm"))
+      normIn(col(vecCol)).as("nrm"))
     val a = withNorm.select(col("id").as("id_a"), col("v").as("v_a"),
       col("nrm").as("nrm_a"))
     val b = withNorm.select(col("id").as("id_b"), col("v").as("v_b"),
       col("nrm").as("nrm_b"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("cos_sim",
-        dotIn(spark)(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
+        dotIn(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
       .where(col("cos_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
@@ -429,9 +416,8 @@ object Similarity {
                       threshold: Double, bits: Int = 8,
                       maxBlockSize: Int = 10000): DataFrame = {
     import scala.util.chaining._
-    val spark = corpus.sparkSession
     val bucketed = corpus.select(col(idCol), col(vecCol))
-      .withColumn("__bucket", lshBucketIn(spark)(col(vecCol), bits))
+      .withColumn("__bucket", lshBucketIn(col(vecCol), bits))
     val pairs = cosinePairsWithin(bucketed, idCol, vecCol, "__bucket",
         threshold, maxBlockSize)
       .select(col("id_a"), col("id_b"))
@@ -491,7 +477,7 @@ object Similarity {
       .map { case (cv, i) => (i, cv.map(_.toDouble)) }
       .toDF("__cell", "__cent")
     val withCos = assigned.join(broadcast(centDf), Seq("__cell"))
-      .withColumn("__cos_cent", cosineIn(spark)(col(vecCol), col("__cent")))
+      .withColumn("__cos_cent", cosineIn(col(vecCol), col("__cent")))
       .drop("__cent")
     val pairs = cosinePairsWithin(withCos, idCol, vecCol, "__cell",
         threshold, maxClusterSize)

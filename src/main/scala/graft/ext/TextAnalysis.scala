@@ -826,8 +826,7 @@ object TextAnalysis {
                 outCol: String): DataFrame = {
     require(df.sparkSession.catalog.functionExists("graft_bpe_encode"),
       "graft_bpe_encode kernel not registered — set " +
-        "spark.sql.extensions=graft.GraftExtensions (unlike the " +
-        "dot/minhash kernels this one has no higher-order fallback)")
+        "spark.sql.extensions=graft.GraftExtensions")
     df.withColumn(outCol,
       call_function("graft_bpe_encode", col(textCol), lit(merges.toArray)))
   }

@@ -45,7 +45,6 @@ object TierAdvisor {
              anchors: DataFrame,
              pqResMicro: Long = 4000L, mult: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s = corpus.sparkSession
     def micro(c: Column): Column = floor(c * lit(1e6)).cast("long")
     val aq = Quantize.withQuantized(
         anchors.select(col(idCol), col(vecCol)), vecCol, "__aqv")
@@ -56,7 +55,7 @@ object TierAdvisor {
       .orderBy(col("cos_sim").desc, col(idCol))
     val top2 = cq.join(broadcast(aq), col(idCol) =!= col("anchor_id"))
       .select(col("anchor_id"), col(idCol),
-        Similarity.cosineIn(s)(col(vecCol), col("__avec")).as("cos_sim"),
+        Similarity.cosineIn(col(vecCol), col("__avec")).as("cos_sim"),
         Quantize.cosineQ(col("__cqv"), col("__aqv")).as("cos_q"))
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") <= 2)

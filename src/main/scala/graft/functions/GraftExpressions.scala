@@ -406,7 +406,7 @@ object Kernels {
   /** Per-band minhash-fold hashes: for band j, fold the minima of hash
     * functions h_i(x) = (a_i·x + b_i) mod P over i ∈ [j·rows, (j+1)·rows)
     * with acc' = (acc·31 + min_i) mod P. Exactly the expression chain in
-    * Dedup.bands' higher-order form (empty shingle set → min = P).
+    * Dedup.minhashBandsHof (empty shingle set → min = P).
     */
   def minhashBands(hs: ArrayData, bands: Int, rows: Int): ArrayData = {
     val n = hs.numElements()

@@ -214,7 +214,7 @@ object Writer {
     * (guide §2.6 via Par) a concurrent restore could flip an
     * in-flight plan back to STATIC overwrite, which truncates every
     * other partition — the writeBatchSinks lesson, now house-wide.
-    * The Bench/Verify/test sessions set the conf at startup, so this
+    * GraftSession.local sets the conf at startup, so this
     * is normally a no-op check. */
   def ensureDynamicOverwrite(spark: SparkSession): Unit = {
     val key = "spark.sql.sources.partitionOverwriteMode"

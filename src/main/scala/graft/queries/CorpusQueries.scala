@@ -1241,7 +1241,7 @@ private[graft] object CorpusQueries {
     val verified = Dedup.simhashPairs(docs, "doc_id", "text")
       .pipe(graft.ext.Checkpoints.stage)
     val hashes = live
-      .select(col("doc_id"), Dedup.simhashIn(s)(col("text")).as("sh"))
+      .select(col("doc_id"), Dedup.simhashIn(col("text")).as("sh"))
       .pipe(graft.ext.Checkpoints.stage)
     // Truth pass (gate scale): all-pairs hamming over DISTINCT hash
     // values, expanded back to id pairs.

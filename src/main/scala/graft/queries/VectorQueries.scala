@@ -49,7 +49,7 @@ private[graft] object VectorQueries {
       // in exactly one bucket), every bucket in [0, 2^8), occupied
       // buckets at most 2^8. Per-bucket values stay in SimilaritySpec.
       Tables.embeddings(s, dir)
-        .select(Similarity.lshBucketIn(s)(col("embedding"), 8).as("bucket"))
+        .select(Similarity.lshBucketIn(col("embedding"), 8).as("bucket"))
         .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
         .agg(coalesce(sum(col("n")), lit(0L)).as("total_vecs"),
           (min(col("bucket")) >= 0 && max(col("bucket")) < 256)
@@ -139,7 +139,7 @@ private[graft] object VectorQueries {
       // double), so buckets match exactly across engines.
       Tables.embeddings(s, dir)
         .select(floor(sqrt(
-            Similarity.dotIn(s)(col("embedding"), col("embedding"))) * 4)
+            Similarity.dotIn(col("embedding"), col("embedding"))) * 4)
           .cast("long").as("bucket"))
         .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
         .orderBy(col("bucket")))
@@ -265,7 +265,7 @@ private[graft] object VectorQueries {
   private def embedNearDup(s: SparkSession, dir: String): DataFrame = {
     import scala.util.chaining._
     val e = Tables.embeddings(s, dir)
-      .withColumn("bucket", Similarity.lshBucketIn(s)(col("embedding"), 8))
+      .withColumn("bucket", Similarity.lshBucketIn(col("embedding"), 8))
     val confirmed = Similarity.cosinePairsWithin(e, "vec_id", "embedding",
         "bucket", 0.9, maxBlockSize = 10000)
       .select(col("id_a"), col("id_b"))
@@ -426,10 +426,10 @@ private[graft] object VectorQueries {
         // (m=4 × k=8 × sub=16 on the 64-dim embeddings).
         mismatch(
           graft.ext.Pq.packedCodeKernel(col("v_a"), kernelEquivBooks, normalize = true),
-          graft.ext.Pq.packedCodeHof(s)(col("v_a"), kernelEquivBooks, normalize = true)).as("m_pqn"),
+          graft.ext.Pq.packedCodeHof(col("v_a"), kernelEquivBooks, normalize = true)).as("m_pqn"),
         mismatch(
           graft.ext.Pq.packedCodeKernel(col("v_a"), kernelEquivBooks, normalize = false),
-          graft.ext.Pq.packedCodeHof(s)(col("v_a"), kernelEquivBooks, normalize = false)).as("m_pqr"))
+          graft.ext.Pq.packedCodeHof(col("v_a"), kernelEquivBooks, normalize = false)).as("m_pqr"))
       .agg(coalesce(sum(col("m_dot") + col("m_cos") + col("m_lsh") +
         col("m_pqn") + col("m_pqr")), lit(0L)).as("m_vec"))
     // Stage the 1-row report: a lazily-returned gate is COLUMN-PRUNED
@@ -1135,7 +1135,7 @@ private[graft] object VectorQueries {
     val qlit = array(Quantize.quantizeLocal(q).map(lit(_)).toIndexedSeq: _*)
     val quant = Quantize.withQuantized(corpus, "embedding", "qv")
       .select(col("vec_id"), col("qv").cast("array<double>").as("qd"))
-      .select(col("vec_id"), Similarity.cosineIn(s)(col("qd"), qlit).as("cos_q"))
+      .select(col("vec_id"), Similarity.cosineIn(col("qd"), qlit).as("cos_q"))
       .orderBy(col("cos_q").desc, col("vec_id"))
       .limit(10)
       .select(col("vec_id"))
@@ -1280,7 +1280,7 @@ private[graft] object VectorQueries {
       col("embedding").as("v_b"))
     a.join(b, Seq("id_a"))
       .select(col("id_a"), col("id_b"),
-        Similarity.cosineIn(s)(col("v_a"), col("v_b")).as("cos_sim"))
+        Similarity.cosineIn(col("v_a"), col("v_b")).as("cos_sim"))
       .orderBy(col("id_a"))
   }
 

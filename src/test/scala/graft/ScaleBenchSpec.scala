@@ -43,7 +43,7 @@ class ScaleBenchSpec extends AnyFunSuite {
     val b = emb.where(col("vec_id") < 40 && col("vec_id") % 2 === 1)
       .select(expr("(vec_id DIV 2)").as("p"), col("embedding").as("v_b"))
     val cos = a.join(b, Seq("p"))
-      .select(Similarity.cosineIn(spark)(col("v_a"), col("v_b")).as("c"))
+      .select(Similarity.cosineIn(col("v_a"), col("v_b")).as("c"))
       .agg(min(col("c"))).first().getDouble(0)
     assert(cos >= 0.999, s"planted pair cosine too low: $cos")
     // Labels cover many blocks (blocking evidence needs spread).

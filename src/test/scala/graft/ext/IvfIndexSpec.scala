@@ -196,13 +196,12 @@ class IvfIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("probeBatch float + int8 tiers: bit-identical to the single probes per query; fallback ladder equal; tombstones honored; nProbe=0 degrades") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
+  test("probeBatch float + int8 tiers: bit-identical to the single probes per query; re-rank ladder equal; tombstones honored; nProbe=0 degrades") {
     import spark.implicits._
     val e = Tables.embeddings(spark, TestSpark.sf0001)
     val corpus = e.where(col("vec_id") >= 10).select(col("vec_id"), col("embedding"))
-    // 10 queries: past FlatFanoutMax, so the no-kernel fallback below
-    // exercises the literal-indexed lambda as well as the flat path.
+    // 10 queries: past FlatFanoutMax, so the float re-rank runs its
+    // literal-indexed lambda; the 3-query batch below runs the flat one.
     val qs = e.where(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
@@ -235,24 +234,14 @@ class IvfIndexSpec extends AnyFunSuite {
         assert(qByQ.getOrElse(qid, Seq.empty) == sq,
           s"quantized batch diverges from probeTopKQuantized for query $qid")
       }
-      // The no-kernel fallback ladder (flat ≤ FlatFanoutMax, lambda
-      // past it) must produce the identical rows: drop the kernel
-      // function from the session registry and re-run.
-      val fid = FunctionIdentifier("graft_ivf_cos_scores")
-      val registry = spark.sessionState.functionRegistry
-      assert(registry.dropFunction(fid), "kernel function must be registered")
-      try {
-        assert(batchF() == f, "lambda fallback (10 queries) diverges from the kernel path")
-        assert(batchQ() == qn, "lambda fallback (quantized) diverges from the kernel path")
-        val few = qs.take(3)
-        val fewF = collectBatch(
-          IvfIndex.probeBatch(spark, t, "vec_id", "embedding", few, k, nProbe))
-        val fewKeys = few.map(_._1).toSet
-        assert(fewF == f.filter(r => fewKeys.contains(r._1)),
-          "flat fallback (3 queries) diverges from the kernel path")
-      } finally registry.registerFunction(fid,
-        graft.functions.GraftFunctionBuilders.ivfCosScoresInfo,
-        graft.functions.GraftFunctionBuilders.ivfCosScoresBuilder _)
+      // The re-rank ladder (flat ≤ FlatFanoutMax, lambda past it)
+      // must produce the identical rows.
+      val few = qs.take(3)
+      val fewF = collectBatch(
+        IvfIndex.probeBatch(spark, t, "vec_id", "embedding", few, k, nProbe))
+      val fewKeys = few.map(_._1).toSet
+      assert(fewF == f.filter(r => fewKeys.contains(r._1)),
+        "flat re-rank (3 queries) diverges from the lambda re-rank (10 queries)")
       // Tombstones: a deleted id vanishes from both batch tiers.
       val victim = f.head._2
       IvfIndex.delete(spark, t, Seq(victim).toDF("id"))

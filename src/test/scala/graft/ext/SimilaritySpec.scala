@@ -149,7 +149,7 @@ class SimilaritySpec extends AnyFunSuite {
     // LSH-bucket-blocked pairs at the same threshold ⊆ truth, and the
     // identical pair always survives blocking (same hyperplane signs).
     val blocked = Similarity.cosinePairsWithin(
-      vecs.withColumn("bucket", Similarity.lshBucketIn(spark)(col("embedding"), 8)),
+      vecs.withColumn("bucket", Similarity.lshBucketIn(col("embedding"), 8)),
       "vec_id", "embedding", "bucket", 0.9)
     assert(blocked.select(col("id_a"), col("id_b"))
       .join(truth.select(col("id_a"), col("id_b")), Seq("id_a", "id_b"), "left_anti")

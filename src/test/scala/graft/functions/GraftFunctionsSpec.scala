@@ -14,9 +14,10 @@ import graft.ext.{Dedup, Similarity}
 class GraftFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("GraftExtensions registers both functions in the session") {
-    assert(spark.catalog.functionExists("graft_dot"))
-    assert(spark.catalog.functionExists("graft_minhash_bands"))
+  test("GraftExtensions registers every kernel of its table") {
+    val names = graft.GraftExtensions.kernels.map(_._1.funcName)
+    assert(names.nonEmpty && names.distinct == names)
+    names.foreach(n => assert(spark.catalog.functionExists(n), s"$n is not registered"))
   }
 
   test("graft_dot is bit-identical to the zip_with/aggregate fold on real embeddings") {
@@ -59,7 +60,7 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val rows = params.numHashes / params.bands
     val hs = Dedup.shingleHashes(Dedup.shingles(col("text"), params.shingleSize))
     val P = 2147483647L
-    // The HOF form as written in Dedup.bands' fallback branch.
+    // The HOF form, spelled out independently of Dedup.minhashBandsHof.
     val slow = transform(sequence(lit(0), lit(params.bands - 1)), j =>
       aggregate(sequence(j * rows, j * rows + (rows - 1)), lit(1125899907L),
         (acc, i) => pmod(acc * 31 +
