@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,9 +29,12 @@ import graft.ext.{Dedup, Similarity}
   *     ±0.01 perturbation (cosine ≈ 0.9997, above the 0.9 threshold);
   *     labels are 64 uniform blocks.
   *
-  * Usage: runMain graft.ScaleBench [outBase] [scales]
-  *   outBase  defaults to /tmp/graft_scale
-  *   scales   comma list of multipliers, default "1,10,50"
+  * Usage: runMain graft.ScaleBench [outBase] [scales] [selector]
+  *   outBase   defaults to /tmp/graft_scale
+  *   scales    comma list of multipliers, default "1,10,50"
+  *   selector  any argument ending in `-only`: run just that entry of
+  *             [[points]] (an unknown one fails, listing them all);
+  *             without one, the default suite runs
   * Prints one JSON line per scale point (and a gen line per corpus).
   */
 object ScaleBench {
@@ -98,6 +102,19 @@ object ScaleBench {
           .cast("float")))
       .select(col("vec_id"), col("embedding"))
 
+  /** A drift blob next to an n-vector [[genClusteredEmbeddings]]
+    * corpus: a NEW REGION the corpus's cells cannot resolve — nBlob
+    * near-twins of a synthetic direction (hash seed 888) unrelated to
+    * the 16 base centers, at ids n..n+nBlob-1. */
+  def genDriftBlob(spark: SparkSession, n: Long, nBlob: Long): DataFrame =
+    spark.range(0, nBlob, 1, 32).toDF("i")
+      .select((col("i") + n).as("vec_id"),
+        transform(sequence(lit(1), lit(64)), j =>
+          (((pmod(xxhash64(lit(888L), j), lit(2001L)).cast("double")
+              - 1000.0) / 1000.0)
+            + (pmod(xxhash64(col("i"), j + 700), lit(21L)).cast("double")
+                - 10.0) / 2000.0).cast("float")).as("embedding"))
+
   /** [[genDocuments]] plus one VIRAL near-identical cluster appended
     * at ids [n, n+v): v = max(2000, n/50) docs sharing a single base
     * body with a tiny per-doc variant suffix — every LSH band bucket
@@ -135,8 +152,7 @@ object ScaleBench {
     val n = 5000L * scale
     val pathStr = s"$dir/neardup_skew_x$scale"
     val (gen, viralSize) = genViralDocs(spark, n)
-    gen.write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, gen, pathStr)
     val capOn = Dedup.MinHashParams()
     val capOff = capOn.copy(maxBucketSize = Int.MaxValue)
     spark.sqlContext.clearCache()
@@ -152,13 +168,11 @@ object ScaleBench {
       .first().getLong(0)
     val massOn = mass(buckets.where(col("m") <= capOn.maxBucketSize))
     val massOff = mass(buckets)
-    spark.sqlContext.clearCache()
     val (pairsOn, tOn, bytesOn) = withShuffleBytes(spark) {
       Dedup.candidatePairsFromBands(bands, capOn)
         .pipe(graft.ext.Checkpoints.stage)
     }
     val nOn = pairsOn.count()
-    spark.sqlContext.clearCache()
     val (pairsOff, tOff, bytesOff) = withShuffleBytes(spark) {
       Dedup.candidatePairsFromBands(bands, capOff)
         .pipe(graft.ext.Checkpoints.stage)
@@ -213,8 +227,7 @@ object ScaleBench {
   def winnowSkewPoint(spark: SparkSession, dir: String, scale: Int): String = {
     val n = 5000L * scale
     val pathStr = s"$dir/winnow_skew_x$scale"
-    genHighEntropyDocs(spark, n).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, genHighEntropyDocs(spark, n), pathStr)
     spark.sqlContext.clearCache()
     // Posting census once (one winnow pass): Σ df·(df−1)/2 with and
     // without the cap — the join's exact pair budget either way.
@@ -233,8 +246,7 @@ object ScaleBench {
     val massOn = mass(census.where(col("df") <= cap))
     val massOff = mass(census)
     val hotDf = census.agg(coalesce(max(col("df")), lit(0L))).first().getLong(0)
-    spark.sqlContext.clearCache()
-    val (nOn, tOn) = timed {
+    val (nOn, tOn) = leg(spark) {
       Dedup.winnowPairs(docs, "doc_id", "text", minShared = 1, maxPostings = cap)
         .count()
     }
@@ -242,8 +254,7 @@ object ScaleBench {
     // only at 1× (30·10⁶ join rows); beyond that the mass IS the cost.
     val offJson =
       if (scale == 1) {
-        spark.sqlContext.clearCache()
-        val (nOff, tOff) = timed {
+        val (nOff, tOff) = leg(spark) {
           Dedup.winnowPairs(docs, "doc_id", "text", minShared = 1,
             maxPostings = Int.MaxValue).count()
         }
@@ -281,23 +292,19 @@ object ScaleBench {
     val n = 5000L * scale
     val batchN = math.max(100L, n / 100)
     val pathStr = s"$dir/inc_dedup_x$scale"
-    genDocuments(spark, n + batchN).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, genDocuments(spark, n + batchN), pathStr)
     val oldDocs = docs.where(col("doc_id") < n)
     val batch = docs.where(col("doc_id") >= n)
     val params = Dedup.MinHashParams()
     val table = s"graft_scale_inc_idx_x$scale"
-    spark.sqlContext.clearCache()
-    val (_, tBuild) = timed { DedupIndex.build(oldDocs, "doc_id", "text", table, params) }
-    spark.sqlContext.clearCache()
-    val (probe, tProbe) = timed {
+    val (_, tBuild) = leg(spark) { DedupIndex.build(oldDocs, "doc_id", "text", table, params) }
+    val (probe, tProbe) = leg(spark) {
       import scala.util.chaining._
       DedupIndex.probeNewBatch(spark, table, batch, "doc_id", "text", params)
         .pipe(graft.ext.Checkpoints.stage)
     }
     val nProbe = probe.count()
-    spark.sqlContext.clearCache()
-    val (full, tFull) = timed {
+    val (full, tFull) = leg(spark) {
       import scala.util.chaining._
       Dedup.candidatePairs(docs, "doc_id", "text", params)
         .where(col("id_a") >= n || col("id_b") >= n)
@@ -318,60 +325,44 @@ object ScaleBench {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Run `f` and report (result, wall seconds, shuffle-WRITE bytes of
-    * every task that ran during it). The listener bus is async, so
-    * after the action we wait for the byte counter to go quiet — fine
-    * for a bench harness where points are run serially. */
-  private def withShuffleBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => acc.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (r, t) = timed(f)
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      // Bounded quiesce: the harness runs points serially, but a
-      // concurrent shuffle-writing job must not spin this loop forever
-      // — after 30 s of non-quiet counter, take the value as-is.
-      while (stable < 3 && waited < 150) {
-        Thread.sleep(200)
-        waited += 1
-        val cur = acc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      (r, t, acc.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // finally: a throwing measurement must never leave the counting
-    // listener attached — it would double-count every later point.
+  /** One measured leg. Every leg starts cold: the SQL cache is
+    * cleared, then `f` is timed. */
+  private def leg[T](spark: SparkSession)(f: => T): (T, Double) = {
+    spark.sqlContext.clearCache()
+    timed(f)
   }
 
-  /** [[withShuffleBytes]]'s INPUT twin: wall seconds + bytes READ
-    * (taskMetrics.inputMetrics) of every task during `f` — the scan
-    * cost a storage-bound probe pays. Same bounded quiesce. */
-  private def withInputBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => acc.addAndGet(m.inputMetrics.bytesRead))
+  /** A [[leg]] that also reports the shuffle-WRITE bytes of every task
+    * that ran during it ([[TaskMeter]]). */
+  private def withShuffleBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
+    val ((r, reading), _) = leg(spark)(TaskMeter.run(spark)(f))
+    (r, reading.wallSeconds, reading.shuffleBytesWritten)
+  }
+
+  /** Write `df` as Parquet to `path` (overwrite) and read it back, so
+    * a point's legs scan files instead of re-running its generator. */
+  private def staged(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** One parquet file per shard in `$base/in`, written in shard order
+    * and named by `name` — the file-per-trigger source the streaming
+    * points replay at maxFilesPerTrigger=1. Returns the `in` dir. */
+  private def shardFiles(base: String, shards: Int, name: Int => String)(
+      shard: Int => DataFrame): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    (0 until shards).foreach { i =>
+      val w = s"$base/w$i"
+      shard(i).coalesce(1).write.mode("overwrite").parquet(w)
+      val part = new java.io.File(w).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"no part file under $w"))
+      Files.move(part.toPath, Paths.get(in, name(i)), StandardCopyOption.REPLACE_EXISTING)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (r, t) = timed(f)
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 150) {
-        Thread.sleep(200)
-        waited += 1
-        val cur = acc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      (r, t, acc.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+    in
   }
 
   /** WinnowIndex probe vs one-shot winnowPairs — the amortization
@@ -403,25 +394,20 @@ object ScaleBench {
           concat(bodyOf(col("doc_id") - n), lit(" uquote"), col("doc_id")))
           .otherwise(bodyOf(col("doc_id") + lit(10000000L))))
       .select(col("doc_id"), col("text"))
-    genHighEntropyDocs(spark, n).unionByName(batchGen)
-      .write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, genHighEntropyDocs(spark, n).unionByName(batchGen), pathStr)
     val oldDocs = docs.where(col("doc_id") < n)
     val batch = docs.where(col("doc_id") >= n)
     val table = s"graft_scale_winnow_idx_x$scale"
-    spark.sqlContext.clearCache()
-    val (_, tBuild) = timed {
+    val (_, tBuild) = leg(spark) {
       WinnowIndex.build(oldDocs, "doc_id", "text", table)
     }
-    spark.sqlContext.clearCache()
-    val (probe, tProbe) = timed {
+    val (probe, tProbe) = leg(spark) {
       WinnowIndex.probeNewBatch(spark, table, batch, "doc_id", "text",
           minShared = 1, maxPostings = cap)
         .pipe(graft.ext.Checkpoints.stage)
     }
     val nProbe = probe.count()
-    spark.sqlContext.clearCache()
-    val (oneShot, tFull) = timed {
+    val (oneShot, tFull) = leg(spark) {
       Dedup.winnowPairs(docs, "doc_id", "text", minShared = 1, maxPostings = cap)
         .where(col("id_a") >= n || col("id_b") >= n)
         .pipe(graft.ext.Checkpoints.stage)
@@ -458,8 +444,7 @@ object ScaleBench {
     val batchN = math.max(100L, n / 100)
     val shards = 50
     val pathStr = s"$dir/compaction_x$scale"
-    genDocuments(spark, n + batchN).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, genDocuments(spark, n + batchN), pathStr)
     val params = Dedup.MinHashParams()
     val table = s"graft_scale_compact_idx_x$scale"
     graft.io.Writer.emptyPartitionedBucketedTable(spark, table,
@@ -481,7 +466,7 @@ object ScaleBench {
     }
     spark.catalog.refreshTable(table)
     def indexFiles(): Int = {
-      val loc = new org.apache.hadoop.fs.Path(
+      val loc = new Path(
         spark.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
@@ -492,8 +477,7 @@ object ScaleBench {
     }
     val newBands = Dedup.bands(docs.where(col("doc_id") >= n), "doc_id", "text", params)
       .localCheckpoint(true)
-    spark.sqlContext.clearCache()
-    val (probeFrag, tFrag) = timed {
+    val (probeFrag, tFrag) = leg(spark) {
       DedupIndex.probeNewBatchFromBands(spark, table, newBands, params)
         .pipe(graft.ext.Checkpoints.stage)
     }
@@ -501,8 +485,7 @@ object ScaleBench {
     val filesFrag = indexFiles()
     val (_, tCompact) = timed { DedupIndex.compact(spark, table) }
     val filesCompact = indexFiles()
-    spark.sqlContext.clearCache()
-    val (probeCompact, tComp) = timed {
+    val (probeCompact, tComp) = leg(spark) {
       DedupIndex.probeNewBatchFromBands(spark, table, newBands, params)
         .pipe(graft.ext.Checkpoints.stage)
     }
@@ -541,24 +524,12 @@ object ScaleBench {
     import graft.streaming.StreamOps
     val n = 5000L * scale
     val pathStr = s"$dir/stream_ingest_x$scale"
-    genDocuments(spark, n).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
+    val docs = staged(spark, genDocuments(spark, n), pathStr)
     // Stage one parquet file per shard — the file-per-trigger source.
-    val inDir = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_scale_stream_x$scale").toString
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      (0 until shards).foreach { i =>
-        val w = s"$base/w$i"
-        docs.where(pmod(col("doc_id"), lit(shards)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(w)
-        val part = new java.io.File(w).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-        Files.move(part.toPath, Paths.get(in, f"shard_$i%03d.parquet"))
-      }
-      in
+    val inDir = shardFiles(
+        java.nio.file.Files.createTempDirectory(s"graft_scale_stream_x$scale").toString,
+        shards, i => f"shard_$i%03d.parquet") { i =>
+      docs.where(pmod(col("doc_id"), lit(shards)) === i)
     }
     val params = Dedup.MinHashParams()
     val table = s"graft_scale_stream_idx_x$scale"
@@ -622,28 +593,19 @@ object ScaleBench {
       s""""slope_last_over_first":${fmt(lastTen / math.max(firstTen, 1e-9))}}}}"""
   }
 
-  /** Compressed parquet column-chunk bytes of `cols` across the given
-    * cluster partitions of a saved IVF index — EXACTLY the bytes a
-    * column-pruned, partition-pruned probe scan must fetch (the
-    * range-GETs an object store serves). Read from file footers:
-    * deterministic, unlike task input metrics, which on a local
+  /** Compressed parquet column-chunk bytes of `cols` summed over the
+    * footers of `files` — EXACTLY the bytes a column-pruned scan of
+    * those files must fetch (the range-GETs an object store serves).
+    * Deterministic, unlike task input metrics, which on a local
     * filesystem track only metadata reads (measured: two scans of
     * DIFFERENT columns reported byte-identical "input"). */
-  private def probedChunkBytes(spark: SparkSession, table: String,
-                               clusters: Seq[Int], cols: Set[String]): Long = {
+  private def chunkBytes(spark: SparkSession, files: Seq[Path],
+                         cols: Set[String]): Long = {
     import scala.jdk.CollectionConverters._
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = loc.getFileSystem(conf)
-    clusters.flatMap { c =>
-      val d = new org.apache.hadoop.fs.Path(loc, s"cluster_id=$c")
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-    }.map { st =>
+    files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try r.getFooter.getBlocks.asScala.map(_.getColumns.asScala
           .filter(cc => cols.contains(cc.getPath.toDotString.split("\\.")(0)))
           .map(_.getTotalSize).sum).sum
@@ -651,12 +613,27 @@ object ScaleBench {
     }.sum
   }
 
+  /** The parquet files directly under `dir` (none if it is missing). */
+  private def parquetFiles(spark: SparkSession, dir: Path): Seq[Path] = {
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+  }
+
+  /** The parquet files of the given cluster partitions of a saved IVF
+    * index — the files a partition-pruned probe scan opens. */
+  private def cellFiles(spark: SparkSession, table: String, clusters: Seq[Int]): Seq[Path] = {
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    clusters.flatMap(c => parquetFiles(spark, new Path(loc, s"cluster_id=$c")))
+  }
+
   /** The int8 IVF probe vs the float probe — the scan-bytes cut
     * measured on a CLUSTERED corpus ([[genClusteredEmbeddings]], so
     * probed partitions carry ~nProbe/k of the data and the float
     * column has realistic (incompressible) entropy. Byte numbers are
     * compressed column-chunk sizes over the probed partitions
-    * ([[probedChunkBytes]]):
+    * ([[chunkBytes]]):
     *   - float_scan: (id, embedding) chunks — what probeTopK's
     *     ranking scan fetches;
     *   - int8_scan: (id, qv) chunks — what the quantized pre-rank
@@ -672,8 +649,7 @@ object ScaleBench {
     import graft.ext.{IvfIndex, Similarity}
     val n = 2000L * scale
     val pathStr = s"$dir/ivf_quant_x$scale"
-    genClusteredEmbeddings(spark, n + 1).write.mode("overwrite").parquet(pathStr)
-    val emb = spark.read.parquet(pathStr)
+    val emb = staged(spark, genClusteredEmbeddings(spark, n + 1), pathStr)
     val corpus = emb.where(col("vec_id") =!= 0)
     val q = emb.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0)
@@ -682,15 +658,14 @@ object ScaleBench {
       IvfIndex.build(corpus, "vec_id", "embedding", table, k = 16, iters = 2)
     }
     val probed = Similarity.probeClusters(IvfIndex.centroids(spark, table), q, 4)
-    val bytesFloat = probedChunkBytes(spark, table, probed, Set("vec_id", "embedding"))
-    val bytesInt8 = probedChunkBytes(spark, table, probed, Set("vec_id", "qv"))
-    spark.sqlContext.clearCache()
-    val (fRows, tF) = timed {
+    val files = cellFiles(spark, table, probed)
+    val bytesFloat = chunkBytes(spark, files, Set("vec_id", "embedding"))
+    val bytesInt8 = chunkBytes(spark, files, Set("vec_id", "qv"))
+    val (fRows, tF) = leg(spark) {
       IvfIndex.probeTopK(spark, table, "vec_id", "embedding", q, 10, nProbe = 4)
         .collect()
     }
-    spark.sqlContext.clearCache()
-    val (qRows, tQ) = timed {
+    val (qRows, tQ) = leg(spark) {
       IvfIndex.probeTopKQuantized(spark, table, "vec_id", "embedding", q, 10,
         nProbe = 4).collect()
     }
@@ -716,8 +691,7 @@ object ScaleBench {
       graft.operators.PrefixSum.runningTotal(df, Seq("k"), "v")
         .agg(sum(col("cum"))).head().getLong(0)
     }
-    spark.sqlContext.clearCache()
-    val (sumW, tW) = timed {
+    val (sumW, tW) = leg(spark) {
       import org.apache.spark.sql.expressions.Window
       df.withColumn("cum", sum(col("v")).over(
           Window.orderBy(col("k"))
@@ -744,7 +718,6 @@ object ScaleBench {
     val (mgRows, tMg, mgBytes) = withShuffleBytes(spark) {
       graft.ext.HeavyHitters.confirmedHeavy(items, "token", k).collect()
     }
-    spark.sqlContext.clearCache()
     // The exact-census alternative a user would otherwise run: full
     // groupBy census, filtered at the same n*(k+1) > total threshold.
     val (censusRows, tCensus, censusBytes) = withShuffleBytes(spark) {
@@ -810,26 +783,22 @@ object ScaleBench {
     }
     val ev = spark.read.parquet(path)
     val expectedSessions = nUsers * ((perUser + 7) / 8)
-    spark.sqlContext.clearCache()
-    val (nSess, tSess) = timed {
+    val (nSess, tSess) = leg(spark) {
       StreamOps.sessionizeBatch(ev, "user_id", "ts", gapMin).count()
     }
     require(nSess == expectedSessions,
       s"batch sessionization: expected $expectedSessions sessions, got $nSess")
-    spark.sqlContext.clearCache()
-    val (nSw, tSw) = timed {
+    val (nSw, tSw) = leg(spark) {
       ev.groupBy(col("user_id"), session_window(col("ts"), s"$gapMin minutes"))
         .agg(count(lit(1)).as("n")).count()
     }
     require(nSw == expectedSessions,
       s"native session_window: expected $expectedSessions sessions, got $nSw")
-    spark.sqlContext.clearCache()
-    val (nSlide, tSlide) = timed {
+    val (nSlide, tSlide) = leg(spark) {
       ev.groupBy(window(col("ts"), "60 minutes", "15 minutes"))
         .agg(count(lit(1)).as("n")).count()
     }
-    spark.sqlContext.clearCache()
-    val (nScd, tScd) = timed {
+    val (nScd, tScd) = leg(spark) {
       graft.operators.Scd2.intervals(
         ev.select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
         "user_id", "ts", "event_type", tieCols = Seq("event_id")).count()
@@ -876,16 +845,13 @@ object ScaleBench {
     import graft.ext.{Mixing, TextAnalysis}
     val n = 5000L * scale
     val docs = genDocuments(spark, n).localCheckpoint(true)
-    spark.sqlContext.clearCache()
-    val (nSur, tSur) = timed {
+    val (nSur, tSur) = leg(spark) {
       TextAnalysis.surprisalStats(docs, "doc_id", "text").count()
     }
     require(nSur == n, s"surprisal must keep every doc: $nSur != $n")
-    spark.sqlContext.clearCache()
-    val (nMem, tMem) = timed {
+    val (nMem, tMem) = leg(spark) {
       TextAnalysis.memorizedBigramStats(docs, "doc_id", "text", minCount = 4L).count()
     }
-    spark.sqlContext.clearCache()
     // Exponentially skewed sources (group k holds ids
     // [500·2^k, 500·2^{k+1}), counts doubling from a 500-doc smallest
     // group — the web-dump shape √-temperature exists for, with c_min
@@ -894,15 +860,14 @@ object ScaleBench {
     // compress well under n, not pass through.
     val withSrc = docs.withColumn("source",
       concat(lit("s"), floor(log2(expr("doc_id DIV 500") + 1))))
-    val (nMix, tMix) = timed {
+    val (nMix, tMix) = leg(spark) {
       Mixing.sqrtTemperatureMix(withSrc, "doc_id", "source").count()
     }
     // Strictly compressive at every scale; the ratio tightens as more
     // doubling groups exist (few groups at the 1× warmup).
     require(nMix < (n * 3) / 4,
       s"skewed sources must downsample: kept $nMix of $n")
-    spark.sqlContext.clearCache()
-    val (nSpan, tSpan) = timed {
+    val (nSpan, tSpan) = leg(spark) {
       graft.ext.Packing.chunkBoundaries(docs, "doc_id",
         TextAnalysis.wsTokenCount(col("text")), capacity = 512L, shards = 32).count()
     }
@@ -943,8 +908,7 @@ object ScaleBench {
     val vals = spark.range(0, nVals, 1, 32)
       .select(col("id"), xxhash64(col("id")).as("value"))
       .localCheckpoint(true)
-    spark.sqlContext.clearCache()
-    val ((nLow, nHigh), tWz) = timed {
+    val ((nLow, nHigh), tWz) = leg(spark) {
       val loRank = math.max(1L, nVals / 100)
       val hiRank = nVals - loRank + 1
       val bounds = graft.operators.EquiDepth.percentileValues(
@@ -972,14 +936,12 @@ object ScaleBench {
       .localCheckpoint(true)
     val expectKept = grouped.groupBy(col("source")).agg(count(lit(1)).as("c"))
       .collect().map(r => math.min(r.getLong(1), budget)).sum
-    spark.sqlContext.clearCache()
-    val (nKept, tGb) = timed {
+    val (nKept, tGb) = leg(spark) {
       Mixing.tokenBudgetPerGroup(grouped, "id", "source", col("tok"), budget).count()
     }
     require(nKept == expectKept,
       s"group budget kept $nKept, closed form says $expectKept")
-    spark.sqlContext.clearCache()
-    val (nKeptW, tGbWindow) = timed {
+    val (nKeptW, tGbWindow) = leg(spark) {
       val w = Window.partitionBy(col("source"))
         .orderBy(Mixing.orderHash(col("id")), col("id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -991,8 +953,7 @@ object ScaleBench {
     val nVecs = 2000L * scale
     val emb = genEmbeddings(spark, nVecs).localCheckpoint(true)
     val anchors = emb.where(col("vec_id") < 200)
-    spark.sqlContext.clearCache()
-    val (nNeg, tHn) = timed {
+    val (nNeg, tHn) = leg(spark) {
       Similarity.hardNegativesChunked(emb, "vec_id", "embedding", "label",
         anchors, k = 5, sliceSize = 50).count()
     }
@@ -1003,8 +964,7 @@ object ScaleBench {
     val nDocs = 5000L * scale
     val docs = genDocuments(spark, nDocs).localCheckpoint(true)
     val params = Dedup.MinHashParams()
-    spark.sqlContext.clearCache()
-    val ((nPairs, nBad, nBaseVar), tCp) = timed {
+    val ((nPairs, nBad, nBaseVar), tCp) = leg(spark) {
       val pairs = graft.ext.Checkpoints.stage(
         Dedup.candidatePairs(docs, "doc_id", "text", params))
       val scored = graft.ext.Checkpoints.stage(
@@ -1045,27 +1005,22 @@ object ScaleBench {
     // the discriminative/common mix BM25's idf weighting exists for.
     val terms = Seq(vocab.head, "uvar1")
     val table = "graft_bm25_scale"
-    spark.sqlContext.clearCache()
-    val (_, tBuild) = timed {
+    val (_, tBuild) = leg(spark) {
       PostingsIndex.build(spark, docs, "doc_id", "text", table)
     }
-    spark.sqlContext.clearCache()
-    val (probeRows, tProbe) = timed {
+    val (probeRows, tProbe) = leg(spark) {
       PostingsIndex.probe(spark, table, terms, 10).collect()
     }
-    spark.sqlContext.clearCache()
-    val (scanRows, tScan) = timed {
+    val (scanRows, tScan) = leg(spark) {
       graft.ext.TextAnalysis.bm25TopK(docs, "doc_id", "text", terms, 10).collect()
     }
     require(probeRows.map(_.toSeq).toSeq == scanRows.map(_.toSeq).toSeq,
       "BM25 index probe must equal the corpus scan bit-for-bit")
-    spark.sqlContext.clearCache()
-    val (merges, tTrain) = timed {
+    val (merges, tTrain) = leg(spark) {
       graft.ext.TextAnalysis.bpeTrain(docs, "text", nMerges = 30)
     }
     require(merges.size == 30, s"expected 30 merges, got ${merges.size}")
-    spark.sqlContext.clearCache()
-    val ((nTok, nChars, nBadRec), tEnc) = timed {
+    val ((nTok, nChars, nBadRec), tEnc) = leg(spark) {
       val r = graft.ext.TextAnalysis.bpeEncode(docs, "text", merges, "toks")
         .agg(
           sum(size(col("toks")).cast("long")).as("n_tok"),
@@ -1079,8 +1034,7 @@ object ScaleBench {
     require(nTok < nChars,
       s"trained merges must compress: $nTok tokens vs $nChars chars")
     val params = Dedup.MinHashParams()
-    spark.sqlContext.clearCache()
-    val ((nLeaky, nBadLabel, nSplitDocs), tCs) = timed {
+    val ((nLeaky, nBadLabel, nSplitDocs), tCs) = leg(spark) {
       val pairs = graft.ext.Checkpoints.stage(
         Dedup.nearDupPairs(docs, "doc_id", "text", params, threshold = 0.5)
           .select(col("id_a"), col("id_b")))
@@ -1103,8 +1057,7 @@ object ScaleBench {
     // Boilerplate removal: every planted 4-doc cluster shares its
     // 50-token body, so its five 10-word body blocks have df ≥ 4 and
     // must drop from every member; unique docs keep all blocks.
-    spark.sqlContext.clearCache()
-    val ((nDropped, nBadUnique), tBp) = timed {
+    val ((nDropped, nBadUnique), tBp) = leg(spark) {
       val out = graft.ext.TextAnalysis.dropRepeatedBlocks(
           docs, "doc_id", "text", blockTokens = 10, minDf = 2L)
         .localCheckpoint(true)
@@ -1120,8 +1073,7 @@ object ScaleBench {
     require(nBadUnique == 0,
       s"$nBadUnique unique docs lost blocks — boilerplate census over-fired")
     // FIM: per-row rewrite, mass preserved on every transformed doc.
-    spark.sqlContext.clearCache()
-    val ((nFim, nBadMass), tFim) = timed {
+    val ((nFim, nBadMass), tFim) = leg(spark) {
       val out = graft.ext.Packing.fimTransform(docs, "doc_id", "text")
       val r = out.agg(
         coalesce(sum(col("fim_applied")), lit(0L)).as("nf"),
@@ -1143,26 +1095,6 @@ object ScaleBench {
       s""""fim":{"t":${fmt(tFim)},"n_rewritten":$nFim}}"""
   }
 
-  /** Column-chunk bytes for `cols` over every parquet file under a
-    * raw directory — [[probedChunkBytes]] for non-catalog paths. */
-  private def dirChunkBytes(spark: SparkSession, pathStr: String,
-                            cols: Set[String]): Long = {
-    import scala.jdk.CollectionConverters._
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-        try r.getFooter.getBlocks.asScala.map(_.getColumns.asScala
-            .filter(cc => cols.contains(cc.getPath.toDotString.split("\\.")(0)))
-            .map(_.getTotalSize).sum).sum
-        finally r.close()
-      }.sum
-  }
-
   /** Product quantization at scale — the BYTES story next to the int8
     * point: the corpus written twice, once as float vectors and once
     * as the packed 8-byte PQ codes, compressed column-chunk sizes
@@ -1182,38 +1114,32 @@ object ScaleBench {
     import graft.ext.{Pq, Similarity}
     val n = 2000L * scale
     val basePath = s"$dir/pq_x$scale"
-    genEmbeddings(spark, n).write.mode("overwrite")
-      .parquet(s"$basePath/float")
-    val emb = spark.read.parquet(s"$basePath/float")
+    val emb = staged(spark, genEmbeddings(spark, n), s"$basePath/float")
     val corpus = emb.where(col("vec_id") =!= 0)
     val q = emb.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0)
-    spark.sqlContext.clearCache()
-    val (books, tTrain) = timed {
+    val (books, tTrain) = leg(spark) {
       Pq.trainCodebooks(corpus, "vec_id", "embedding", m = 8, k = 128, iters = 3)
     }
     val (_, tEnc) = timed {
       Pq.encodePacked(corpus, "vec_id", "embedding", books)
         .write.mode("overwrite").parquet(s"$basePath/codes")
     }
-    val bytesFloat = dirChunkBytes(spark, s"$basePath/float",
-      Set("vec_id", "embedding"))
-    val bytesCodes = dirChunkBytes(spark, s"$basePath/codes",
-      Set("vec_id", "pq_code"))
+    def dirBytes(sub: String, cols: Set[String]) = chunkBytes(spark,
+      parquetFiles(spark, new Path(s"$basePath/$sub")), cols)
+    val bytesFloat = dirBytes("float", Set("vec_id", "embedding"))
+    val bytesCodes = dirBytes("codes", Set("vec_id", "pq_code"))
     val enc = spark.read.parquet(s"$basePath/codes")
-    spark.sqlContext.clearCache()
-    val (adcIds, tAdc) = timed {
+    val (adcIds, tAdc) = leg(spark) {
       Pq.probeTopK(enc, "vec_id", q, books, 50)
         .select(col("vec_id")).collect().map(_.getLong(0))
     }
-    spark.sqlContext.clearCache()
-    val (rrIds, tRr) = timed {
+    val (rrIds, tRr) = leg(spark) {
       Pq.probeTopKReranked(enc, corpus, "vec_id", "embedding", q, books,
         topK = 10, shortlist = 50).select(col("vec_id")).collect()
         .map(_.getLong(0))
     }
-    spark.sqlContext.clearCache()
-    val (exactIds, tBrute) = timed {
+    val (exactIds, tBrute) = leg(spark) {
       Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 10)
         .select(col("vec_id")).collect().map(_.getLong(0))
     }
@@ -1237,7 +1163,7 @@ object ScaleBench {
     * int8 IVF probe's (same cell fraction, 8-byte code vs d-byte qv)
     * and far below the flat-PQ scan (which reads every code). Bytes
     * are compressed column-chunk sizes over each index's own probed
-    * partitions ([[probedChunkBytes]] — both indexes train their own
+    * partitions ([[chunkBytes]] — both indexes train their own
     * Lloyd cells, so each probe prunes with its own centroids).
     *
     * THE REGIME BOUNDARY this gate encodes (measured, not assumed):
@@ -1282,9 +1208,7 @@ object ScaleBench {
     // tail (~4σ over 25 k candidates); ±0.2/coord (margin ≈ 1.3σ) left
     // the twins at the 37th ADC percentile. Clusters stay separated
     // (radius ≈ 2.3 vs inter-center ≈ 6.5).
-    genClusteredEmbeddings(spark, n + 1, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(pathStr)
-    val emb = spark.read.parquet(pathStr)
+    val emb = staged(spark, genClusteredEmbeddings(spark, n + 1, noiseDiv = 2e6), pathStr)
     val q = emb.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0)
     // Plant vecs 1..10 as graded near-twins (replacing their clustered
@@ -1320,21 +1244,20 @@ object ScaleBench {
       Similarity.probeClusters(IvfIndex.centroids(spark, tableQ), q, nProbe)
     val probedPq =
       Similarity.probeClusters(IvfIndex.centroids(spark, tablePq), q, nProbe)
-    val bytesInt8 = probedChunkBytes(spark, tableQ, probedQ, Set("vec_id", "qv"))
-    val bytesCode = probedChunkBytes(spark, tablePq, probedPq, Set("vec_id", "pq_code"))
-    val bytesFloat = probedChunkBytes(spark, tablePq, probedPq, Set("vec_id", "embedding"))
-    spark.sqlContext.clearCache()
-    val (qRows, tQ) = timed {
+    val filesQ = cellFiles(spark, tableQ, probedQ)
+    val filesPq = cellFiles(spark, tablePq, probedPq)
+    val bytesInt8 = chunkBytes(spark, filesQ, Set("vec_id", "qv"))
+    val bytesCode = chunkBytes(spark, filesPq, Set("vec_id", "pq_code"))
+    val bytesFloat = chunkBytes(spark, filesPq, Set("vec_id", "embedding"))
+    val (qRows, tQ) = leg(spark) {
       IvfIndex.probeTopKQuantized(spark, tableQ, "vec_id", "embedding", q, 10,
         nProbe = nProbe).collect()
     }
-    spark.sqlContext.clearCache()
-    val (pqRows, tPq) = timed {
+    val (pqRows, tPq) = leg(spark) {
       IvfPq.probeTopK(spark, tablePq, "vec_id", "embedding", q, 10,
         nProbe = nProbe).collect()
     }
-    spark.sqlContext.clearCache()
-    val (bRows, tBrute) = timed {
+    val (bRows, tBrute) = leg(spark) {
       Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 10).collect()
     }
     require(bRows.map(_.getLong(0)).toSet == (1L to 10L).toSet &&
@@ -1392,9 +1315,8 @@ object ScaleBench {
     import graft.io.Writer
     val n = 20000L * scale
     val pathStr = s"$dir/bucket_scaling_x$scale"
-    genDocuments(spark, n).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
-    val p = new org.apache.hadoop.fs.Path(pathStr)
+    val docs = staged(spark, genDocuments(spark, n), pathStr)
+    val p = new Path(pathStr)
     val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getContentSummary(p).getLength
     val planBuckets = Writer.scaledBuckets(docs)
@@ -1430,9 +1352,7 @@ object ScaleBench {
     import graft.ext.{LmIndex, TextAnalysis}
     val n = 5000L * scale
     val pathStr = s"$dir/lm_inc_x$scale"
-    genDocuments(spark, n + n / 50)
-      .write.mode("overwrite").parquet(pathStr)
-    val all = spark.read.parquet(pathStr)
+    val all = staged(spark, genDocuments(spark, n + n / 50), pathStr)
     val corpus = all.where(col("doc_id") < n)
     val shard = all.where(col("doc_id") >= n).localCheckpoint(true)
     val nShard = shard.count()
@@ -1453,13 +1373,11 @@ object ScaleBench {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     require(got.toSeq == want.toSeq,
       s"index probe diverged from surprisalStats on ${got.length} sampled docs")
-    spark.sqlContext.clearCache()
-    val (probeRows, tProbe) = timed {
+    val (probeRows, tProbe) = leg(spark) {
       LmIndex.probe(spark, table, shard, "doc_id", "text")
         .agg(count(lit(1)), sum(col("n_bigrams"))).head()
     }
-    spark.sqlContext.clearCache()
-    val (_, tRecompute) = timed {
+    val (_, tRecompute) = leg(spark) {
       TextAnalysis.surprisalStats(corpus.unionByName(shard), "doc_id", "text")
         .join(shard.select(col("doc_id")), Seq("doc_id"), "left_semi")
         .agg(count(lit(1)), sum(col("n_bigrams"))).head()
@@ -1486,9 +1404,7 @@ object ScaleBench {
     val n = 2000L * scale
     val nQ = 32
     val pathStr = s"$dir/ivfpq_batch_x$scale"
-    genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(pathStr)
-    val emb = spark.read.parquet(pathStr)
+    val emb = staged(spark, genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6), pathStr)
     val queries = emb.where(col("vec_id") < nQ)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
@@ -1500,13 +1416,11 @@ object ScaleBench {
       IvfPq.build(corpus, "vec_id", "embedding", table,
         kCells = kCells, ivfIters = 2, m = 8, kPq = 128, pqIters = 2)
     }
-    spark.sqlContext.clearCache()
-    val (batchRows, tBatch) = timed {
+    val (batchRows, tBatch) = leg(spark) {
       IvfPq.probeBatch(spark, table, "vec_id", "embedding", queries,
         k = 10, nProbe = nProbe).collect()
     }
-    spark.sqlContext.clearCache()
-    val (loopRows, tLoop) = timed {
+    val (loopRows, tLoop) = leg(spark) {
       queries.map { case (qid, q) =>
         qid -> IvfPq.probeTopK(spark, table, "vec_id", "embedding", q,
           k = 10, nProbe = nProbe).collect()
@@ -1541,9 +1455,7 @@ object ScaleBench {
     import graft.ext.{LmIndex, TextAnalysis}
     val n = 5000L * scale
     val pathStr = s"$dir/dsir_inc_x$scale"
-    genDocuments(spark, n + n / 50)
-      .write.mode("overwrite").parquet(pathStr)
-    val all = spark.read.parquet(pathStr)
+    val all = staged(spark, genDocuments(spark, n + n / 50), pathStr)
     val corpus = all.where(col("doc_id") < n)
     val shard = all.where(col("doc_id") >= n).localCheckpoint(true)
     val nShard = shard.count()
@@ -1554,24 +1466,21 @@ object ScaleBench {
       LmIndex.build(spark, corpus.where(pmod(col("doc_id"), lit(7L)) === 1),
         "doc_id", "text", tgt)
     }
-    spark.sqlContext.clearCache()
     // The raw-LM append is INGEST cost (one shard census, amortized
     // across every consumer of the growing LM — the family's own
     // lm_inc point prices it); timed apart so the published ratio is
     // the per-consumer serving cost the two-index split actually
     // changes: weight the shard via two pruned probes vs re-census
     // both corpora.
-    val (_, tAppend) = timed {
+    val (_, tAppend) = leg(spark) {
       LmIndex.append(spark, raw, shard, "doc_id", "text")
     }
-    spark.sqlContext.clearCache()
-    val (probed, tProbe) = timed {
+    val (probed, tProbe) = leg(spark) {
       LmIndex.dsirProbe(spark, raw, tgt, shard, "doc_id", "text")
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     }
-    spark.sqlContext.clearCache()
-    val (want, tRecompute) = timed {
+    val (want, tRecompute) = leg(spark) {
       // The status quo: both censuses from scratch over the grown
       // corpus (target pred pinned to the FIXED target slice — the
       // production shape the two-index split encodes).
@@ -1608,9 +1517,7 @@ object ScaleBench {
     val n = 2000L * scale
     val nQ = 32
     val pathStr = s"$dir/ivf_batch_x$scale"
-    genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(pathStr)
-    val emb = spark.read.parquet(pathStr)
+    val emb = staged(spark, genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6), pathStr)
     val queries = emb.where(col("vec_id") < nQ)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
@@ -1634,26 +1541,22 @@ object ScaleBench {
         require(b == l, s"$tier batch != per-query for query $qid:\n$b\nvs\n$l")
       }
     }
-    spark.sqlContext.clearCache()
-    val (batchF, tBatchF) = timed {
+    val (batchF, tBatchF) = leg(spark) {
       IvfIndex.probeBatch(spark, table, "vec_id", "embedding", queries,
         k = 10, nProbe = nProbe).collect()
     }
-    spark.sqlContext.clearCache()
-    val (loopF, tLoopF) = timed {
+    val (loopF, tLoopF) = leg(spark) {
       queries.map { case (qid, q) =>
         qid -> IvfIndex.probeTopK(spark, table, "vec_id", "embedding", q,
           k = 10, nProbe = nProbe).collect()
       }
     }
     checkEqual("float", batchF, loopF)
-    spark.sqlContext.clearCache()
-    val (batchQ, tBatchQ) = timed {
+    val (batchQ, tBatchQ) = leg(spark) {
       IvfIndex.probeBatchQuantized(spark, table, "vec_id", "embedding",
         queries, k = 10, nProbe = nProbe).collect()
     }
-    spark.sqlContext.clearCache()
-    val (loopQ, tLoopQ) = timed {
+    val (loopQ, tLoopQ) = leg(spark) {
       queries.map { case (qid, q) =>
         qid -> IvfIndex.probeTopKQuantized(spark, table, "vec_id",
           "embedding", q, k = 10, nProbe = nProbe).collect()
@@ -1686,9 +1589,8 @@ object ScaleBench {
     val n = 2000L * scale
     val nQ = 64
     val pathStr = s"$dir/serve_x$scale"
-    genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(s"$pathStr/emb")
-    val emb = spark.read.parquet(s"$pathStr/emb")
+    val emb = staged(spark, genClusteredEmbeddings(spark, n + nQ, noiseDiv = 2e6),
+      s"$pathStr/emb")
     val queriesDf = emb.where(col("vec_id") < nQ)
       .select(col("vec_id"), col("embedding"))
     val corpus = emb.where(col("vec_id") >= nQ)
@@ -1706,24 +1608,13 @@ object ScaleBench {
       queries, k = 10, nProbe = nProbe)
     val (oneShot, tOneShot) = timed { oneShotDf.collect() }
     // Stage 4 one-file shards (16 queries each, vec_id % 4).
-    val inDir = s"$pathStr/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-    (0 until 4).foreach { i =>
-      val w = s"$pathStr/w$i"
+    val inDir = shardFiles(pathStr, 4, i => s"shard_$i.parquet") { i =>
       queriesDf.where(pmod(col("vec_id"), lit(4)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(w)
-      val part = new java.io.File(w).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(inDir, s"shard_$i.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     val stream = spark.readStream.schema(queriesDf.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     val sink = s"graft_scale_serve_sink_x$scale"
-    spark.sqlContext.clearCache()
-    val (nBatches, tStream) = timed {
+    val (nBatches, tStream) = leg(spark) {
       StreamOps.streamServe(spark, stream, sink, chunkCap = 16,
         oneShotDf.schema, "query_id",
         StreamOps.vectorQueryCollector("vec_id", "embedding"),
@@ -1762,24 +1653,13 @@ object ScaleBench {
     val n = 2000L * scale
     val nBlob = n / 4
     val basePath = s"$dir/rebalance_x$scale"
-    genClusteredEmbeddings(spark, n, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(s"$basePath/base")
-    val base = spark.read.parquet(s"$basePath/base")
-    // The drift blob: a NEW REGION the pre-drift partition cannot
-    // resolve — near-twins of a synthetic direction (hash seed 888)
-    // unrelated to the 16 base centers, at ids n..n+nBlob-1. Under the
-    // FROZEN pre-drift centroids every blob vector maps to whichever
-    // old cell happens to be least-unlike the new direction, piling
-    // new mass onto that cell's unrelated base members.
-    spark.range(0, nBlob, 1, 32).toDF("i")
-      .select((col("i") + n).as("vec_id"),
-        transform(sequence(lit(1), lit(64)), j =>
-          (((pmod(xxhash64(lit(888L), j), lit(2001L)).cast("double")
-              - 1000.0) / 1000.0)
-            + (pmod(xxhash64(col("i"), j + 700), lit(21L)).cast("double")
-                - 10.0) / 2000.0).cast("float")).as("embedding"))
-      .write.mode("overwrite").parquet(s"$basePath/blob")
-    val blob = spark.read.parquet(s"$basePath/blob")
+    val base = staged(spark, genClusteredEmbeddings(spark, n, noiseDiv = 2e6),
+      s"$basePath/base")
+    // The drift blob ([[genDriftBlob]]): under the FROZEN pre-drift
+    // centroids every blob vector maps to whichever old cell happens to
+    // be least-unlike the new direction, piling new mass onto that
+    // cell's unrelated base members.
+    val blob = staged(spark, genDriftBlob(spark, n, nBlob), s"$basePath/blob")
     val t = s"graft_scale_rebalance_x$scale"
     val tFresh = s"graft_scale_rebalance_fresh_x$scale"
     val kCells = math.max(16, (n / 1250L).toInt)
@@ -1809,8 +1689,7 @@ object ScaleBench {
     require(IvfIndex.cellSkew(spark, t, "vec_id", dueMilli = 2000L)
       .collect().head.getLong(4) == 1L,
       "planted drift must trip rebalance_due at the 2x-mean threshold")
-    spark.sqlContext.clearCache()
-    val (_, tReb) = timed {
+    val (_, tReb) = leg(spark) {
       IvfIndex.rebalance(spark, t, "vec_id", "embedding",
         k = kCells, iters = 2)
     }
@@ -1872,23 +1751,18 @@ object ScaleBench {
             (pmod(xxhash64(col("vec_id"), i), lit(21L)).cast("double") - 10.0)
               / 2000.0).cast("float")).as("embedding"))
     val sepPath = s"$dir/advisor_sep_x$scale"
-    sep0.unionByName(twins).write.mode("overwrite").parquet(sepPath)
-    val sep = spark.read.parquet(sepPath)
+    val sep = staged(spark, sep0.unionByName(twins), sepPath)
     val plateauPath = s"$dir/advisor_plateau_x$scale"
-    spark.range(0, n, 1, 32).toDF("vec_id")
+    val plateau = staged(spark, spark.range(0, n, 1, 32).toDF("vec_id")
       .withColumn("embedding", transform(sequence(lit(1), lit(64)), i =>
         (((pmod(xxhash64(lit(99L), i), lit(2001L)).cast("double") - 1000.0)
             / 1000.0)
           + (pmod(xxhash64(col("vec_id"), i + 900), lit(2000001L))
-              .cast("double") - 1000000.0) / 2e9).cast("float")))
-      .write.mode("overwrite").parquet(plateauPath)
-    val plateau = spark.read.parquet(plateauPath)
-    def run(c: org.apache.spark.sql.DataFrame) = {
-      spark.sqlContext.clearCache()
-      timed {
-        TierAdvisor.advise(c, "vec_id", "embedding",
-          c.where(col("vec_id") < nA)).collect().head
-      }
+              .cast("double") - 1000000.0) / 2e9).cast("float"))),
+      plateauPath)
+    def run(c: DataFrame) = leg(spark) {
+      TierAdvisor.advise(c, "vec_id", "embedding",
+        c.where(col("vec_id") < nA)).collect().head
     }
     val (rSep, tSep) = run(sep)
     val (rPl, tPl) = run(plateau)
@@ -1924,15 +1798,12 @@ object ScaleBench {
     val n = 2000L * scale
     val nA = 8
     val basePath = s"$dir/opoint_x$scale"
-    genClusteredEmbeddings(spark, n, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(basePath)
-    val corpus = spark.read.parquet(basePath)
+    val corpus = staged(spark, genClusteredEmbeddings(spark, n, noiseDiv = 2e6), basePath)
     val kCells = math.max(16, (n / 1250L).toInt)
     val cents = Similarity.ivfTrain(corpus, "vec_id", "embedding",
       kCells, iters = 2)
     val nProbes = Seq(1, 2, math.max(4, kCells / 4), kCells).distinct.sorted
-    spark.sqlContext.clearCache()
-    val (rows, tCurve) = timed {
+    val (rows, tCurve) = leg(spark) {
       graft.ext.OperatingPoint.nProbeCurve(corpus, "vec_id", "embedding",
           corpus.where(col("vec_id") < nA), cents, nProbes, k = 10,
           targetRecallMilli = 950L)
@@ -1957,8 +1828,7 @@ object ScaleBench {
     // candidates); recall at the widest sample published honestly —
     // the int8 ordering's quality on this corpus's geometry, not a
     // constant anyone promised.
-    spark.sqlContext.clearCache()
-    val (slRows, tSl) = timed {
+    val (slRows, tSl) = leg(spark) {
       graft.ext.OperatingPoint.shortlistCurve(corpus, "vec_id",
           "embedding", corpus.where(col("vec_id") < nA), cents,
           nProbe = math.max(4, kCells / 4),
@@ -2033,9 +1903,8 @@ object ScaleBench {
       .select((col("id") * step + 7L).as("id"))
     val expB = (0L until 1000L).count(i => i * step + 7L >= n / 2)
     graft.ext.DedupIndex.delete(spark, tA, ids)
-    spark.sqlContext.clearCache()
 
-    val (audit, tAudit) = timed {
+    val (audit, tAudit) = leg(spark) {
       IndexOps.takedownAudit(spark, entries, ids).collect()
         .map(r => r.getString(0) -> r).toMap
     }
@@ -2100,7 +1969,6 @@ object ScaleBench {
     * = one row per distinct text, token mass = 24·survivors. */
   def curationStreamPoint(spark: SparkSession, dir: String,
                           scale: Int): String = {
-    import java.nio.file.{Files, Paths}
     val n = 20000L * scale
     val sink = s"graft_scale_curation_x$scale"
     Seq(sink, graft.ext.Curation.fingerprintIndexOf(sink))
@@ -2127,23 +1995,14 @@ object ScaleBench {
             concat(lit("w"), lpad(base.cast("string"), 6, "0"), lit("x"),
               j.cast("string"))), " ")).as("text"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val ioBase = Files.createTempDirectory("graft_scale_curation_").toString
-    val inDir = s"$ioBase/in"
-    Files.createDirectories(Paths.get(inDir))
-    (0 until 5).foreach { k =>
-      val w = s"$ioBase/w$k"
+    val inDir = shardFiles(
+        java.nio.file.Files.createTempDirectory("graft_scale_curation_").toString,
+        5, k => s"shard_$k.parquet") { k =>
       docs.where(pmod(col("doc_id"), lit(5)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(w)
-      val part = new java.io.File(w).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part under $w"))
-      Files.move(part.toPath, Paths.get(inDir, s"shard_$k.parquet"))
     }
-    spark.sqlContext.clearCache()
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val ((acc, nBatches), wall) = timed {
+    val ((acc, nBatches), wall) = leg(spark) {
       graft.ext.Curation.streamCurate(spark, sink, stream,
         "doc_id", "text", queryName = s"scale_curation_x$scale")
     }
@@ -2169,18 +2028,9 @@ object ScaleBench {
     val n = 2000L * scale
     val nBlob = n / 4
     val basePath = s"$dir/vecdrift_x$scale"
-    genClusteredEmbeddings(spark, n, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(s"$basePath/base")
-    val base = spark.read.parquet(s"$basePath/base")
-    spark.range(0, nBlob, 1, 32).toDF("i")
-      .select((col("i") + n).as("vec_id"),
-        transform(sequence(lit(1), lit(64)), j =>
-          (((pmod(xxhash64(lit(888L), j), lit(2001L)).cast("double")
-              - 1000.0) / 1000.0)
-            + (pmod(xxhash64(col("i"), j + 700), lit(21L)).cast("double")
-                - 10.0) / 2000.0).cast("float")).as("embedding"))
-      .write.mode("overwrite").parquet(s"$basePath/blob")
-    val blob = spark.read.parquet(s"$basePath/blob")
+    val base = staged(spark, genClusteredEmbeddings(spark, n, noiseDiv = 2e6),
+      s"$basePath/base")
+    val blob = staged(spark, genDriftBlob(spark, n, nBlob), s"$basePath/blob")
     val t = s"graft_scale_vecdrift_x$scale"
     val kCells = math.max(16, (n / 1250L).toInt)
     IvfIndex.build(base, "vec_id", "embedding", t, k = kCells, iters = 2)
@@ -2195,8 +2045,7 @@ object ScaleBench {
       .select(col("vec_id"), col("embedding"), col("qv"), col("cluster_id"))
       .write.insertInto(t)
     spark.catalog.refreshTable(t)
-    spark.sqlContext.clearCache()
-    val (drift, tDrift) = timed {
+    val (drift, tDrift) = leg(spark) {
       IvfIndex.cellDrift(spark, t, "vec_id", reference).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(5)))
         .toSeq
@@ -2232,27 +2081,24 @@ object ScaleBench {
     import graft.ext.Drift
     val n = 500000L * scale
     val basePath = s"$dir/multidrift_x$scale"
-    spark.range(0, n, 1, 32).toDF("id")
+    val rows = staged(spark, spark.range(0, n, 1, 32).toDF("id")
       .select(col("id"),
         pmod(xxhash64(col("id"), lit(1)), lit(1009L)).cast("double").as("m1"),
         pmod(xxhash64(col("id"), lit(2)), lit(5003L)).cast("double").as("m2"),
-        pmod(xxhash64(col("id"), lit(3)), lit(101L)).cast("double").as("m3"))
-      .write.mode("overwrite").parquet(basePath)
-    val rows = spark.read.parquet(basePath)
+        pmod(xxhash64(col("id"), lit(3)), lit(101L)).cast("double").as("m3")),
+      basePath)
     val old = rows.where(pmod(col("id"), lit(2L)) === 0)
     val nw = rows.where(pmod(col("id"), lit(2L)) === 1)
     val metrics = Seq(
       Drift.Metric("m1", col("m1"), 64.0, 16),
       Drift.Metric("m2", col("m2"), 320.0, 16),
       Drift.Metric("m3", col("m3"), 8.0, 16))
-    spark.sqlContext.clearCache()
-    val (multi, tMulti) = timed {
+    val (multi, tMulti) = leg(spark) {
       Drift.censusMulti(old, nw, metrics).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
     }
-    spark.sqlContext.clearCache()
-    val (singles, tSingles) = timed {
+    val (singles, tSingles) = leg(spark) {
       metrics.map { m =>
         Drift.census(old, nw, m.value, m.bucketWidth, m.maxBucket).collect()
           .map(r => (m.name, r.getLong(0), r.getLong(1), r.getLong(2),
@@ -2289,16 +2135,14 @@ object ScaleBench {
     import spark.implicits._
     val n = 2000L * scale
     val pathStr = s"$dir/purge_x$scale"
-    genClusteredEmbeddings(spark, n, noiseDiv = 2e6)
-      .write.mode("overwrite").parquet(pathStr)
-    val emb = spark.read.parquet(pathStr)
+    val emb = staged(spark, genClusteredEmbeddings(spark, n, noiseDiv = 2e6), pathStr)
     val table = s"graft_scale_purge_x$scale"
     val kCells = math.max(16, (n / 1250L).toInt)
     val (_, tBuild) = timed {
       IvfIndex.build(emb, "vec_id", "embedding", table, k = kCells, iters = 1)
     }
-    val loc = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")),
+    val loc = new Path(
+      new Path(spark.conf.get("spark.sql.warehouse.dir")),
       table.toLowerCase(java.util.Locale.ROOT))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def listing(): Map[String, Set[(String, Long, Long)]] =
@@ -2426,20 +2270,18 @@ object ScaleBench {
     val nOrd = 50000L * scale
     val nLine = 200000L * scale
     val base = s"$dir/relational_x$scale"
-    spark.range(0, nCust, 1, 32)
+    val customer = staged(spark, spark.range(0, nCust, 1, 32)
       .select(col("id").as("c_custkey"),
         concat(lit("S"), pmod(xxhash64(col("id"), lit(10)), lit(5)))
-          .as("c_mktsegment"))
-      .write.mode("overwrite").parquet(s"$base/customer")
-    spark.range(0, nOrd, 1, 32)
+          .as("c_mktsegment")), s"$base/customer")
+    val orders = staged(spark, spark.range(0, nOrd, 1, 32)
       .select(col("id").as("o_orderkey"),
         pmod(xxhash64(col("id"), lit(11)), lit(nCust)).as("o_custkey"),
         pmod(xxhash64(col("id"), lit(12)), lit(730)).cast("int")
           .as("o_orderdate"),
         concat(lit("P"), pmod(xxhash64(col("id"), lit(13)), lit(5)))
-          .as("o_orderpriority"))
-      .write.mode("overwrite").parquet(s"$base/orders")
-    spark.range(0, nLine, 1, 32)
+          .as("o_orderpriority")), s"$base/orders")
+    val lineitem = staged(spark, spark.range(0, nLine, 1, 32)
       .select(col("id").as("l_linekey"),
         pmod(xxhash64(col("id"), lit(14)), lit(nOrd)).as("l_orderkey"),
         pmod(xxhash64(col("id"), lit(15)), lit(730)).cast("int")
@@ -2447,22 +2289,18 @@ object ScaleBench {
         (pmod(xxhash64(col("id"), lit(16)), lit(90000L)) / lit(100.0) +
           lit(100.0)).as("l_extendedprice"),
         (pmod(xxhash64(col("id"), lit(17)), lit(10L)) / lit(100.0))
-          .as("l_discount"))
-      .write.mode("overwrite").parquet(s"$base/lineitem")
-    def q3(): DataFrame = spark.read.parquet(s"$base/customer")
+          .as("l_discount")), s"$base/lineitem")
+    def q3(): DataFrame = customer
       .where(col("c_mktsegment") === "S0")
-      .join(spark.read.parquet(s"$base/orders")
-          .where(col("o_orderdate") < 365),
+      .join(orders.where(col("o_orderdate") < 365),
         col("c_custkey") === col("o_custkey"))
-      .join(spark.read.parquet(s"$base/lineitem")
-          .where(col("l_shipdate") >= 365),
+      .join(lineitem.where(col("l_shipdate") >= 365),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .cast("decimal(18,4)")).cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey"))
       .limit(10)
-    spark.sqlContext.clearCache()
     val dfA = q3()
     val (rowsA, tA, bytesA) = withShuffleBytes(spark) { dfA.collect() }
     val planA = dfA.queryExecution.executedPlan.toString
@@ -2470,7 +2308,6 @@ object ScaleBench {
       s"default leg must broadcast the filtered dim side:\n$planA")
     require(planA.contains("TakeOrderedAndProject"),
       s"top-10 must be TakeOrderedAndProject, not a global sort:\n$planA")
-    spark.sqlContext.clearCache()
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(key)
     val (rowsB, tB, bytesB, planB) =
@@ -2500,16 +2337,12 @@ object ScaleBench {
     val nKeys = 10000L
     val pathL = s"$dir/skewjoin_left_x$scale"
     val pathR = s"$dir/skewjoin_right_x$scale"
-    spark.range(0, n, 1, 32).toDF("row_id")
+    val left = staged(spark, spark.range(0, n, 1, 32).toDF("row_id")
       .withColumn("key", when(pmod(col("row_id"), lit(2L)) === 0, lit(0L))
         .otherwise(pmod(xxhash64(col("row_id")), lit(nKeys))))
-      .withColumn("payload", xxhash64(col("row_id"), lit(1)))
-      .write.mode("overwrite").parquet(pathL)
-    spark.range(0, nKeys, 1, 4).toDF("key")
-      .withColumn("dim_payload", xxhash64(col("key")))
-      .write.mode("overwrite").parquet(pathR)
-    val left = spark.read.parquet(pathL)
-    val right = spark.read.parquet(pathR)
+      .withColumn("payload", xxhash64(col("row_id"), lit(1))), pathL)
+    val right = staged(spark, spark.range(0, nKeys, 1, 4).toDF("key")
+      .withColumn("dim_payload", xxhash64(col("key"))), pathR)
     def withConfs[T](confs: Map[String, String])(f: => T): T = {
       val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -2602,8 +2435,7 @@ object ScaleBench {
       .localCheckpoint(true)
     val nHoldExpect = labeled
       .where(TextAnalysis.splitBucket(col("doc_id")) >= 80).count()
-    spark.sqlContext.clearCache()
-    val ((nHold, nCorrect), tNb) = timed {
+    val ((nHold, nCorrect), tNb) = leg(spark) {
       val r = TextAnalysis.nbClassify(labeled, "doc_id", "text", "label")
         .agg(count(lit(1)).as("n"), sum(col("correct")).as("c")).first()
       (r.getLong(0), r.getLong(1))
@@ -2612,8 +2444,7 @@ object ScaleBench {
     require(nCorrect * 100L >= nHold * 99L,
       s"planted-marker accuracy below 99%: $nCorrect/$nHold")
     // Gopher rules: census + flag-consistency invariant.
-    spark.sqlContext.clearCache()
-    val ((nRules, nInconsistent), tGr) = timed {
+    val ((nRules, nInconsistent), tGr) = leg(spark) {
       val out = TextAnalysis.gopherRules(labeled, "doc_id", "text")
       val r = out.agg(count(lit(1)).as("n"),
         sum((col("pass_all") =!=
@@ -2635,26 +2466,14 @@ object ScaleBench {
       .select(col("doc_id"), concat(col("text"), lit(" "), col("etext")).as("text"))
     val train = rawTrain.where(pmod(col("doc_id"), lit(100L)) =!= 0)
       .unionByName(planted).localCheckpoint(true)
-    val inDir = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_scale_decon_x$scale").toString
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      (0 until 8).foreach { i =>
-        val w = s"$base/w$i"
-        train.where(pmod(col("doc_id"), lit(8L)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(w)
-        val part = new java.io.File(w).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-        Files.move(part.toPath, Paths.get(in, f"shard_$i%03d.parquet"))
-      }
-      in
+    val inDir = shardFiles(
+        java.nio.file.Files.createTempDirectory(s"graft_scale_decon_x$scale").toString,
+        8, i => f"shard_$i%03d.parquet") { i =>
+      train.where(pmod(col("doc_id"), lit(8L)) === i)
     }
     val idx = s"graft_scale_decon_eval_x$scale"
     WinnowIndex.build(evalDocs, "doc_id", "text", idx, k = 20, w = 8)
-    spark.sqlContext.clearCache()
-    val ((nFlags, nBatches), tSd) = timed {
+    val ((nFlags, nBatches), tSd) = leg(spark) {
       val stream = spark.readStream.schema(train.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val (acc, nb) = WinnowIndex.streamDecontaminate(spark, idx, stream,
@@ -2690,8 +2509,7 @@ object ScaleBench {
     // planted doc must flag AND shed at least its quote's mass (the
     // quote's k-grams all appear in the matched eval doc, so its
     // chars are fully covered; organic cuts only shrink further).
-    spark.sqlContext.clearCache()
-    val ((nExcised, nBadPlant), tEx) = timed {
+    val ((nExcised, nBadPlant), tEx) = leg(spark) {
       val out = graft.ext.Dedup.excisePassages(train, evalDocs,
           "doc_id", "text", k = 20, w = 8, minShared = 2)
         .localCheckpoint(true)
@@ -2711,8 +2529,7 @@ object ScaleBench {
     require(nExcised >= n / 100,
       s"every planted doc must flag: $nExcised < ${n / 100}")
     // Tokenize→pack: the composition's four invariants at scale.
-    spark.sqlContext.clearCache()
-    val ((nDocsTp, bitsOk), tTp) = timed {
+    val ((nDocsTp, bitsOk), tTp) = leg(spark) {
       val norm = TextAnalysis.nfcNormalize(
         rawTrain.localCheckpoint(true), "text", "__norm")
       val merges = TextAnalysis.bpeTrain(norm, "__norm", nMerges = 30)
@@ -2764,10 +2581,8 @@ object ScaleBench {
         array(lit("zqx")) +: Seq(slice(split(col("text"), " "), 2, 10000)): _*)
         .as("text"))
     val pathStr = s"$dir/dedup_ender_x$scale"
-    base.unionByName(copies).write.mode("overwrite").parquet(pathStr)
-    val docs = spark.read.parquet(pathStr)
-    spark.sqlContext.clearCache()
-    val (survivors, t) = timed {
+    val docs = staged(spark, base.unionByName(copies), pathStr)
+    val (survivors, t) = leg(spark) {
       Dedup.dedupNearDups(docs, "doc_id", "text", threshold = 0.5)
         .select(col("doc_id")).localCheckpoint(true)
     }
@@ -2812,8 +2627,7 @@ object ScaleBench {
     val rows = spark.range(0, n, 1, 32).toDF("id")
       .withColumn("len", pmod(xxhash64(col("id")), lit(485L)) + 16L)
       .localCheckpoint(true)
-    spark.sqlContext.clearCache()
-    val (got, t) = timed {
+    val (got, t) = leg(spark) {
       Packing.paddingCensus(rows, "id", col("len"), batchSize = 16)
         .collect().map(r => r.getString(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
@@ -2910,8 +2724,7 @@ object ScaleBench {
       .groupBy(col("sh")).agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
       .first().getLong(0)
-    spark.sqlContext.clearCache()
-    val ((nPairs, nHam0), tSim) = timed {
+    val ((nPairs, nHam0), tSim) = leg(spark) {
       val p = Dedup.simhashPairs(docs, "doc_id", "text")
         .localCheckpoint(true)
       (p.count(), p.where(col("hamming") === 0).count())
@@ -2987,16 +2800,13 @@ object ScaleBench {
       Dedup.bands(docs, "doc_id", "text", params)
         .withColumn("__bb", concat_ws("|", col("band_id"), col("band_hash"))),
       "__bb")
-    spark.sqlContext.clearCache()
-    val (nCand, tCand) = timed {
+    val (nCand, tCand) = leg(spark) {
       Dedup.candidatePairs(docs, "doc_id", "text", params).count()
     }
-    spark.sqlContext.clearCache()
-    val (nConf, tConf) = timed {
+    val (nConf, tConf) = leg(spark) {
       Dedup.nearDupPairs(docs, "doc_id", "text", params, threshold = 0.5).count()
     }
-    spark.sqlContext.clearCache()
-    val (nSurv, tDedup) = timed {
+    val (nSurv, tDedup) = leg(spark) {
       Dedup.dedupNearDups(docs, "doc_id", "text", params, threshold = 0.5).count()
     }
     spark.sqlContext.clearCache()
@@ -3018,15 +2828,13 @@ object ScaleBench {
     // produce identical buckets (EquiDepthSpec); the window form
     // funnels every row through ONE task, so its wall is the
     // single-core sort — the gap widens linearly with the corpus.
-    spark.sqlContext.clearCache()
     val nt = docs.select(col("doc_id"),
       pmod(xxhash64(col("doc_id")), lit(1000003L)).as("v"))
-    val (ntBuckets, tNt) = timed {
+    val (ntBuckets, tNt) = leg(spark) {
       graft.operators.EquiDepth.ntileBuckets(nt, Seq("v", "doc_id"), 100)
         .groupBy(col("bucket")).count().count()
     }
-    spark.sqlContext.clearCache()
-    val (_, tWin) = timed {
+    val (_, tWin) = leg(spark) {
       import org.apache.spark.sql.expressions.Window
       nt.withColumn("bucket",
           ntile(100).over(Window.orderBy(col("v"), col("doc_id"))))
@@ -3038,12 +2846,11 @@ object ScaleBench {
     // logarithmic for the operator to be usable at all). Component
     // count = the exact truth at every scale; rounds is the shuffle
     // count, i.e. the cost that must grow ~log(n), not n.
-    spark.sqlContext.clearCache()
     val nNodes = 5000L * scale
     val pathEdges = spark.range(0, nNodes - 1, 1, 32)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
       .where((col("id") + 1) % 1000 =!= 0) // cut into 1000-node paths
-    val ((nComp, ccRounds), tCc) = timed {
+    val ((nComp, ccRounds), tCc) = leg(spark) {
       val (labels, rounds) =
         graft.operators.ConnectedComponents.runCounted(pathEdges, "src", "dst")
       (labels.select(col("component")).distinct().count(), rounds)
@@ -3087,307 +2894,137 @@ object ScaleBench {
       s""""hub_degree":$hubSpokes,"n_edges":$nSkewEdges}}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val positional = args.filterNot(_ == "points-only")
+  /** One point entry: (session, outBase, scales) => its JSON lines.
+    * Entries return lazy sequences, so each line is computed when it is
+    * printed and a long run shows its results as they land. */
+  type Point = (SparkSession, String, Seq[Int]) => Seq[String]
+
+  /** The regular entry: an untimed warm-up of `f` at 1× (janino codegen
+    * + JIT land there, so the first printed scale measures the plans,
+    * not JVM cold start), then one line per scale. */
+  private def scaled(f: (SparkSession, String, Int) => String): Point =
+    (spark, dir, scales) => {
+      f(spark, dir, 1)
+      scales.to(LazyList).map(f(spark, dir, _))
+    }
+
+  /** The fixed-size points (not per-scale): heavy hitters at 10M items,
+    * ~7M distinct — the regime where the census's shuffle is the
+    * product the sketch exists to avoid — the prefix-sum crossover at
+    * 20M rows, and the 50-micro-batch ingest at 10×. The SAME plan
+    * shapes are warmed untimed first: in points-only mode nothing else
+    * has warmed the JVM, and the first measured path would otherwise
+    * absorb all janino+JIT cost, biasing the comparison the points
+    * exist to publish. */
+  private def fixedPoints(spark: SparkSession, dir: String, scales: Seq[Int]): Seq[String] = {
+    heavyHittersPoint(spark, 100000L)
+    prefixSumPoint(spark, 100000L)
+    heavyHittersPoint(spark, 10000000L) #:: prefixSumPoint(spark, 20000000L) #::
+      streamIngestPoint(spark, dir, 10) #:: LazyList.empty
+  }
+
+  /** The default run (no selector): generate the documents and
+    * embeddings corpora per scale, the blocked-pipeline [[runPoint]]
+    * (warmed untimed at the smallest scale) and the dedup/IVF points
+    * per scale, then [[fixedPoints]]. */
+  private def suite(spark: SparkSession, outBase: String, scales: Seq[Int]): Seq[String] = {
+    val gens = scales.to(LazyList).map { m =>
+      val dir = s"$outBase/x$m"
+      val (_, tGen) = timed {
+        genDocuments(spark, 5000L * m)
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        genEmbeddings(spark, 2000L * m)
+          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      }
+      s"""{"gen":"x$m","t":${fmt(tGen)}}"""
+    }
+    def perScale: Seq[String] = {
+      runPoint(spark, s"$outBase/x${scales.min}", scales.min)
+      scales.to(LazyList).map(m => runPoint(spark, s"$outBase/x$m", m)) #:::
+        Seq[(SparkSession, String, Int) => String](neardupSkewPoint, incrementalDedupPoint,
+          winnowSkewPoint, ivfQuantizedPoint, winnowIncPoint, compactionPoint)
+          .to(LazyList).flatMap(p => scales.to(LazyList).map(p(spark, outBase, _)))
+    }
+    gens #::: perScale.to(LazyList) #::: fixedPoints(spark, outBase, scales).to(LazyList)
+  }
+
+  /** Every selector, in run order. `scaled` entries warm up at 1× and
+    * print one line per scale; the others say how they differ. */
+  val points: Seq[(String, Point)] = Seq(
+    "serve-only" -> scaled(servePoint),
+    "bucket-scaling-only" -> scaled(bucketScalingPoint),
+    "rebalance-only" -> scaled(rebalancePoint),
+    "advisor-only" -> scaled(advisorPoint),
+    "opoint-only" -> scaled(opointPoint),
+    "ops-only" -> scaled(opsPoint),
+    "curation-stream-only" -> scaled(curationStreamPoint),
+    "vecdrift-only" -> scaled(vecDriftPoint),
+    "multidrift-only" -> scaled(multiDriftPoint),
+    "relational-only" -> scaled(relationalPoint),
+    "neardup-skew-only" -> scaled(neardupSkewPoint),
+    "inc-dedup-only" -> scaled(incrementalDedupPoint),
+    "winnow-skew-only" -> scaled(winnowSkewPoint),
+    "ivf-quantized-only" -> scaled(ivfQuantizedPoint),
+    "winnow-inc-only" -> scaled(winnowIncPoint),
+    "corpus-ops-only" -> scaled(corpusOpsPoint),
+    "curation-ops-only" -> scaled(curationOpsPoint),
+    "retrieval-ops-only" -> scaled(retrievalOpsPoint),
+    "dedup-ender-only" -> scaled(dedupEnderPoint),
+    "simhash-only" -> scaled(simhashPoint),
+    // No warm-up: the point is a band census, not a timed leg.
+    "simhash-saturation-only" -> ((spark: SparkSession, dir: String, scales: Seq[Int]) =>
+      scales.to(LazyList).map(simhashSaturationPoint(spark, dir, _))),
+    "padding-only" -> scaled(paddingPoint),
+    "pq-only" -> scaled(pqPoint),
+    "ivfpq-only" -> scaled(ivfPqPoint),
+    "purge-only" -> scaled(purgePoint),
+    "skew-join-only" -> scaled(skewJoinPoint),
+    "ivfpq-batch-only" -> scaled(ivfPqBatchPoint),
+    "ivf-batch-only" -> scaled(ivfBatchPoint),
+    "dsir-inc-only" -> scaled(dsirIncPoint),
+    "lm-inc-only" -> scaled(lmIncPoint),
+    "classifier-ops-only" -> scaled(classifierOpsPoint),
+    // Fixed size: the probe width is the axis, not the corpus.
+    "ivf-curve-only" -> ((spark: SparkSession, _: String, _: Seq[Int]) =>
+      Seq(ivfRecallCurvePoint(spark))),
+    "event-time-only" -> scaled(eventTimePoint),
+    "compaction-only" -> scaled(compactionPoint),
+    // Fixed 10× scale: the batch COUNT is the axis, not the corpus. The
+    // untimed warm-up runs 10 shards at 1×.
+    "stream-ingest-only" -> ((spark: SparkSession, dir: String, _: Seq[Int]) => {
+      streamIngestPoint(spark, dir, 1, shards = 10)
+      Seq(streamIngestPoint(spark, dir, 10))
+    }),
+    // Skips the corpus scales: just the fixed-size points.
+    "points-only" -> (fixedPoints _))
+
+  /** (outBase, scales, selector) from the command line. An argument
+    * ending in `-only` is a selector and must name an entry of
+    * [[points]]; every other argument is positional. Throws
+    * IllegalArgumentException on an unknown selector, more than one,
+    * or more than two positionals. */
+  def parseArgs(args: Seq[String]): (String, Seq[Int], Option[String]) = {
+    val (selectors, positional) = args.partition(_.endsWith("-only"))
+    val names = points.map(_._1)
+    selectors.find(s => !names.contains(s)).foreach { s =>
+      throw new IllegalArgumentException(
+        s"unknown selector '$s'; the selectors are: ${names.mkString(" ")}")
+    }
+    require(selectors.size <= 1, s"at most one selector, got ${selectors.mkString(" ")}")
+    require(positional.size <= 2,
+      s"expected [outBase] [scales], got ${positional.mkString(" ")}")
     val outBase = positional.headOption.getOrElse("/tmp/graft_scale")
     val scales = positional.drop(1).headOption.getOrElse("1,10,50")
       .split(",").map(_.trim.toInt).toSeq
+    (outBase, scales, selectors.headOption)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (outBase, scales, selector) = parseArgs(args.toSeq)
+    val run: Point = selector.fold[Point](suite)(s => points.find(_._1 == s).get._2)
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
-
-    // `serve-only`: the streaming serving loop vs one-shot batch probe.
-    if (args.contains("serve-only")) {
-      servePoint(spark, outBase, 1)
-      scales.foreach(m => println(servePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `bucket-scaling-only`: the size-derived layout paths observed
-    // GROWING (buckets / sink buckets / state partitions > 1) with
-    // sub-linear walls — the evidence leg sf0.1 cannot provide.
-    if (args.contains("bucket-scaling-only")) {
-      bucketScalingPoint(spark, outBase, 1)
-      scales.foreach(m => println(bucketScalingPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `rebalance-only`: rebalance under planted distribution drift.
-    if (args.contains("rebalance-only")) {
-      rebalancePoint(spark, outBase, 1)
-      scales.foreach(m => println(rebalancePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `advisor-only`: the tier advisor on regime-constructed corpora.
-    if (args.contains("advisor-only")) {
-      advisorPoint(spark, outBase, 1)
-      scales.foreach(m => println(advisorPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `opoint-only`: the recall-vs-nProbe operating-point curve.
-    if (args.contains("opoint-only")) {
-      opointPoint(spark, outBase, 1)
-      scales.foreach(m => println(opointPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ops-only`: audit/freshness/janitor walls vs growing index state.
-    if (args.contains("ops-only")) {
-      opsPoint(spark, outBase, 1)
-      scales.foreach(m => println(opsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `curation-stream-only`: the streaming curation pipeline's wall
-    // vs corpus scale, counts exact at every m.
-    if (args.contains("curation-stream-only")) {
-      curationStreamPoint(spark, outBase, 1)
-      scales.foreach(m => println(curationStreamPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `vecdrift-only`: the cell-mass drift census vs a reference.
-    if (args.contains("vecdrift-only")) {
-      vecDriftPoint(spark, outBase, 1)
-      scales.foreach(m => println(vecDriftPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `multidrift-only`: the one-pass multi-metric census vs singles.
-    if (args.contains("multidrift-only")) {
-      multiDriftPoint(spark, outBase, 1)
-      scales.foreach(m => println(multiDriftPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `relational-only`: the TPC-H Q3-shape shuffle point (broadcast
-    // vs SMJ legs, cross-plan determinism gate), 1× warmup untimed.
-    if (args.contains("relational-only")) {
-      relationalPoint(spark, outBase, 1)
-      scales.foreach(m => println(relationalPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `neardup-skew-only` (any arg position): just the boilerplate-skew
-    // dedup point at each scale, 1× warmup untimed first.
-    if (args.contains("neardup-skew-only")) {
-      neardupSkewPoint(spark, outBase, 1)
-      scales.foreach(m => println(neardupSkewPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `inc-dedup-only`: just the incremental-probe-vs-full-recompute
-    // point at each scale, 1× warmup untimed first.
-    if (args.contains("inc-dedup-only")) {
-      incrementalDedupPoint(spark, outBase, 1)
-      scales.foreach(m => println(incrementalDedupPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `winnow-skew-only`: just the winnowing posting-cap point.
-    if (args.contains("winnow-skew-only")) {
-      winnowSkewPoint(spark, outBase, 1)
-      scales.foreach(m => println(winnowSkewPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-quantized-only`: just the int8-probe scan-bytes point.
-    if (args.contains("ivf-quantized-only")) {
-      ivfQuantizedPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfQuantizedPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `winnow-inc-only`: just the incremental-winnow probe point.
-    if (args.contains("winnow-inc-only")) {
-      winnowIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(winnowIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `corpus-ops-only`: the round-12 corpus operators at scale.
-    if (args.contains("corpus-ops-only")) {
-      corpusOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(corpusOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `curation-ops-only`: the round-13 curation quartet at scale.
-    if (args.contains("curation-ops-only")) {
-      curationOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(curationOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `retrieval-ops-only`: the round-13 retrieval/tokenizer/split
-    // additions at scale (BM25 index, BPE, cluster split).
-    if (args.contains("retrieval-ops-only")) {
-      retrievalOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(retrievalOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `dedup-ender-only`: the survivor anti-join at 50% duplicate mass.
-    if (args.contains("dedup-ender-only")) {
-      dedupEnderPoint(spark, outBase, 1)
-      scales.foreach(m => println(dedupEnderPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `simhash-only`: banded-SimHash detector point.
-    if (args.contains("simhash-only")) {
-      simhashPoint(spark, outBase, 1)
-      scales.foreach(m => println(simhashPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `simhash-saturation-only`: 16-bit vs 8-bit band saturation on
-    // near-uniform hashes.
-    if (args.contains("simhash-saturation-only")) {
-      scales.foreach(m => println(simhashSaturationPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `padding-only`: batch-assembly padding census at scale.
-    if (args.contains("padding-only")) {
-      paddingPoint(spark, outBase, 1)
-      scales.foreach(m => println(paddingPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `pq-only`: product-quantization bytes/probe point.
-    if (args.contains("pq-only")) {
-      pqPoint(spark, outBase, 1)
-      scales.foreach(m => println(pqPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivfpq-only`: IVFADC bytes/probe vs the int8 IVF probe.
-    if (args.contains("ivfpq-only")) {
-      ivfPqPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfPqPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `purge-only`: purge bytes-written ∝ touched partitions.
-    if (args.contains("purge-only")) {
-      purgePoint(spark, outBase, 1)
-      scales.foreach(m => println(purgePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `skew-join-only`: AQE skew-join vs salted join head to head.
-    if (args.contains("skew-join-only")) {
-      skewJoinPoint(spark, outBase, 1)
-      scales.foreach(m => println(skewJoinPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivfpq-batch-only`: batched vs per-query IVFADC serving.
-    if (args.contains("ivfpq-batch-only")) {
-      ivfPqBatchPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfPqBatchPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-batch-only`: batched vs per-query float/int8 IVF serving.
-    if (args.contains("ivf-batch-only")) {
-      ivfBatchPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfBatchPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `dsir-inc-only`: two-index incremental DSIR vs full recompute.
-    if (args.contains("dsir-inc-only")) {
-      dsirIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(dsirIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `lm-inc-only`: incremental LM scoring vs full recompute.
-    if (args.contains("lm-inc-only")) {
-      lmIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(lmIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `classifier-ops-only`: the round-13 second-half additions
-    // (NB classifier, Gopher rules, streaming decontamination,
-    // tokenize→pack) at scale.
-    if (args.contains("classifier-ops-only")) {
-      classifierOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(classifierOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-curve-only`: the recall-vs-nProbe operating curve (fixed
-    // size — the probe width is the axis, not the corpus).
-    if (args.contains("ivf-curve-only")) {
-      println(ivfRecallCurvePoint(spark))
-      spark.stop()
-      return
-    }
-    // `event-time-only`: sessionization / windows / SCD-2 at scale.
-    if (args.contains("event-time-only")) {
-      eventTimePoint(spark, outBase, 1)
-      scales.foreach(m => println(eventTimePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `compaction-only`: just the index-compaction recovery point.
-    if (args.contains("compaction-only")) {
-      compactionPoint(spark, outBase, 1)
-      scales.foreach(m => println(compactionPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `stream-ingest-only`: just the 50-micro-batch ingest point
-    // (fixed 10× scale — the batch COUNT is the axis, not the corpus).
-    if (args.contains("stream-ingest-only")) {
-      streamIngestPoint(spark, outBase, 1, shards = 10) // warmup, untimed
-      println(streamIngestPoint(spark, outBase, 10))
-      spark.stop()
-      return
-    }
-    // `points-only` (any arg position) skips the corpus scales and
-    // runs just the fixed-size points — quick re-measurement.
-    val pointsOnly = args.contains("points-only")
-    if (!pointsOnly) {
-      scales.foreach { m =>
-        val dir = s"$outBase/x$m"
-        val (_, tGen) = timed {
-          genDocuments(spark, 5000L * m)
-            .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-          genEmbeddings(spark, 2000L * m)
-            .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        }
-        println(s"""{"gen":"x$m","t":${fmt(tGen)}}""")
-      }
-      // Untimed warmup at the smallest point: janino codegen + JIT land
-      // here so the 1× numbers measure the plans, not JVM cold start
-      // (same policy as Bench).
-      runPoint(spark, s"$outBase/x${scales.min}", scales.min)
-      scales.foreach { m => println(runPoint(spark, s"$outBase/x$m", m)) }
-      scales.foreach { m => println(neardupSkewPoint(spark, outBase, m)) }
-      scales.foreach { m => println(incrementalDedupPoint(spark, outBase, m)) }
-      scales.foreach { m => println(winnowSkewPoint(spark, outBase, m)) }
-      scales.foreach { m => println(ivfQuantizedPoint(spark, outBase, m)) }
-      scales.foreach { m => println(winnowIncPoint(spark, outBase, m)) }
-      scales.foreach { m => println(compactionPoint(spark, outBase, m)) }
-    }
-    // Fixed-size points (not per-scale): heavy hitters at 10M items,
-    // ~7M distinct — the regime where the census's shuffle is the
-    // product the sketch exists to avoid — and the prefix-sum
-    // crossover at 20M rows. Warm the SAME plan shapes untimed first
-    // (in points-only mode nothing else has warmed the JVM, and the
-    // first measured path would otherwise absorb all janino+JIT cost,
-    // biasing the comparison the points exist to publish).
-    heavyHittersPoint(spark, 100000L)
-    prefixSumPoint(spark, 100000L)
-    println(heavyHittersPoint(spark, 10000000L))
-    println(prefixSumPoint(spark, 20000000L))
-    println(streamIngestPoint(spark, outBase, 10))
-    spark.stop()
+    try run(spark, outBase, scales).foreach(println)
+    finally spark.stop()
   }
 }

@@ -310,11 +310,9 @@ object DedupIndex {
       // refresh lands at the start of the next probe instead of
       // serializing after the append.
       spark.catalog.refreshTable(table)
-      val nb = StreamOps.Profile.timed(queryName, "band")(
-        Dedup.bands(b, idCol, textCol, params).localCheckpoint(true))
-      val pairs = StreamOps.Profile.timed(queryName, "probe_stage")(
-        probeNewBatchFromBands(spark, table, nb, params,
-          excludeBatch = Some(batchId)))
+      val nb = Dedup.bands(b, idCol, textCol, params).localCheckpoint(true)
+      val pairs = probeNewBatchFromBands(spark, table, nb, params,
+        excludeBatch = Some(batchId))
       // The index append rides as a side write: its rows (nb) and the
       // pairs plan share no live table (the probe's union checkpoint
       // above already materialized the index contact), so both inserts

@@ -585,13 +585,11 @@ object IvfIndex {
       // Refresh-at-probe + index append as a concurrent side write —
       // see the dedup twin's comments.
       spark.catalog.refreshTable(table)
-      val assigned = StreamOps.Profile.timed(queryName, "assign")(
-        Similarity.ivfAssign(b, idCol, vecCol, centroids)
-          .select(col(idCol), col(vecCol), col("cluster_id"))
-          .localCheckpoint(true))
-      val pairs = StreamOps.Profile.timed(queryName, "probe_stage")(
-        probeNewBatch(spark, table, assigned, idCol, vecCol, threshold,
-          excludeBatch = Some(batchId)))
+      val assigned = Similarity.ivfAssign(b, idCol, vecCol, centroids)
+        .select(col(idCol), col(vecCol), col("cluster_id"))
+        .localCheckpoint(true)
+      val pairs = probeNewBatch(spark, table, assigned, idCol, vecCol, threshold,
+        excludeBatch = Some(batchId))
       (pairs, Seq(table -> assigned))
     }
   }

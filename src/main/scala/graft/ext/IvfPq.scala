@@ -224,8 +224,8 @@ object IvfPq {
       StreamOps.BatchTag, "cluster_id", StreamOps.scaledSinkBuckets(stream))
     StreamOps.sinkBatches(spark, stream, queryName, table,
         checkpointLocation) { (b, _) =>
-      val encoded = StreamOps.Profile.timed(queryName, "encode")(
-        encodeWith(b, idCol, vecCol, cents, books).localCheckpoint(true))
+      val encoded = encodeWith(b, idCol, vecCol, cents, books)
+        .localCheckpoint(true)
       (encoded, Seq.empty)
     }
   }

@@ -415,8 +415,7 @@ object PostingsIndex {
     StreamOps.sinkBatches(spark, stream, queryName, table + "_stats",
         checkpointLocation) { (b, _) =>
       // Tokenize the batch once; postings and stats both read it.
-      val dls = StreamOps.Profile.timed(queryName, "doc_lengths")(
-        docLengths(b, idCol, textCol).localCheckpoint(true))
+      val dls = docLengths(b, idCol, textCol).localCheckpoint(true)
       val post = postings(b, idCol, textCol)
       (statsOf(dls), Seq(table -> post, (table + "_docs") -> dls))
     }

@@ -203,11 +203,9 @@ object WinnowIndex {
       // Refresh-at-probe + index append as a concurrent side write —
       // see the dedup twin's comments.
       spark.catalog.refreshTable(table)
-      val np = StreamOps.Profile.timed(queryName, "band")(
-        postings(b, idCol, textCol, k, w).localCheckpoint(true))
-      val pairs = StreamOps.Profile.timed(queryName, "probe_stage")(
-        probeNewBatchFromPostings(spark, table, np, minShared, maxPostings,
-          excludeBatch = Some(batchId)))
+      val np = postings(b, idCol, textCol, k, w).localCheckpoint(true)
+      val pairs = probeNewBatchFromPostings(spark, table, np, minShared,
+        maxPostings, excludeBatch = Some(batchId))
       (pairs, Seq(table -> np))
     }
   }
@@ -318,8 +316,7 @@ object WinnowIndex {
       .localCheckpoint(true)
     StreamOps.sinkBatches(spark, stream, queryName, sink,
         checkpointLocation) { (b, batchId) =>
-      val np = StreamOps.Profile.timed(queryName, "fp")(
-        postings(b, idCol, textCol, k, w).localCheckpoint(true))
+      val np = postings(b, idCol, textCol, k, w).localCheckpoint(true)
       // Winnow fp sets are distinct per doc, so count(*) per pair IS
       // the shared-fingerprint count.
       val flags = np.join(evCapped, Seq("fp"))

@@ -139,25 +139,6 @@ object StreamOps {
     graft.io.Writer.scaledBucketsForBytes(BigInt(sourceBytes(stream)),
       targetBytes)
 
-  /** Per-phase wall timing of the streaming ingest loops, gated on
-    * SPARK_GRAFT_STREAM_PROFILE — the instrument behind the per-batch
-    * fixed-cost breakdown in BENCH_NOTES.md (each micro-batch's
-    * checkpoint / band / slice / append / sink_write terms to stderr).
-    * Off (the default): zero overhead beyond the env lookup at class
-    * init. */
-  private[graft] object Profile {
-    private val on = sys.env.contains("SPARK_GRAFT_STREAM_PROFILE")
-    def timed[T](query: String, label: String)(f: => T): T =
-      if (!on) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[stream-profile] $query $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-  }
-
   /** `readStream` over the events parquet directory, with the same
     * `ts` normalization as the batch loader (graft.Tables.events) —
     * nanos-as-long → micros, TIMESTAMP_NTZ → session-tz timestamp —
@@ -528,9 +509,8 @@ object StreamOps {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val jobs = writes.map { case (sinkTable, rows) => Future {
         val sess = rows.sparkSession
-        val aligned = Profile.timed(sinkTable, "sink_align")(
-          rows.withColumn(BatchTag, lit(batchId))
-            .select(spark.table(sinkTable).columns.toIndexedSeq.map(col): _*))
+        val aligned = rows.withColumn(BatchTag, lit(batchId))
+          .select(spark.table(sinkTable).columns.toIndexedSeq.map(col): _*)
         // Shape the write to the target's layout BEFORE the insert. A
         // micro-batch arrives in up-to-shuffle-partitions slices, and a
         // bucketed insert writes one file per (task, bucket) — 32 tasks
@@ -545,7 +525,7 @@ object StreamOps {
         // capped at shuffle parallelism: join-inflated plan-stats
         // estimates must degrade to "no coalesce", not a 5-billion-
         // partition request).
-        val shaped = Profile.timed(sinkTable, "sink_shape") {
+        val shaped = {
           import org.apache.spark.sql.catalyst.TableIdentifier
           sess.sessionState.catalog
             .getTableMetadata(TableIdentifier(sinkTable)).bucketSpec match {
@@ -557,8 +537,7 @@ object StreamOps {
                   .min(sess.sessionState.conf.numShufflePartitions))
           }
         }
-        Profile.timed(sinkTable, "sink_insert")(
-          shaped.write.mode("overwrite").insertInto(sinkTable))
+        shaped.write.mode("overwrite").insertInto(sinkTable)
       }}
       Await.result(Future.sequence(jobs), Duration.Inf)
     }
@@ -781,11 +760,10 @@ object StreamOps {
       perBatch: (DataFrame, Long) => (DataFrame, Seq[(String, DataFrame)])): (DataFrame, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = foreachBatchSink(stream, queryName, checkpointLocation) { (batch, batchId) =>
-      val b = Profile.timed(queryName, "checkpoint")(batch.localCheckpoint(true))
+      val b = batch.localCheckpoint(true)
       n.incrementAndGet()
       val (out, side) = perBatch(b, batchId)
-      Profile.timed(queryName, "sink_write")(
-        writeBatchSinks(spark, batchId, (sinkTable -> out) +: side))
+      writeBatchSinks(spark, batchId, (sinkTable -> out) +: side)
     }
     q.awaitTermination()
     spark.catalog.refreshTable(sinkTable)

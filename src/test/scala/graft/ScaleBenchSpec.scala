@@ -8,7 +8,9 @@ import graft.ext.{Dedup, Similarity}
 /** The scale-evidence generators must keep their planted invariants —
   * the BENCH_NOTES scaling claims are only as good as the corpus
   * construction, so pin it: cluster structure, Jaccard/cosine levels,
-  * determinism across invocations.
+  * determinism across invocations. Also pinned: the selector table and
+  * its strict argument parsing, and the [[TaskMeter]] the byte legs
+  * read.
   */
 class ScaleBenchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -53,5 +55,47 @@ class ScaleBenchSpec extends AnyFunSuite {
       .orderBy(col("vec_id")).collect().map(_.getSeq[Float](1))
     assert(x.zip(y).forall { case (u, v) => u == v },
       "generator must be deterministic")
+  }
+
+  test("points: unique -only selectors; parseArgs splits selector from positionals") {
+    val names = ScaleBench.points.map(_._1)
+    assert(names.distinct == names, "selector names must be unique")
+    assert(names.forall(_.endsWith("-only")), names.filterNot(_.endsWith("-only")))
+    assert(ScaleBench.parseArgs(Seq("/tmp/x", "1,10", "serve-only")) ==
+      (("/tmp/x", Seq(1, 10), Some("serve-only"))))
+    assert(ScaleBench.parseArgs(Seq("serve-only")) ==
+      (("/tmp/graft_scale", Seq(1, 10, 50), Some("serve-only"))))
+    assert(ScaleBench.parseArgs(Seq("/tmp/y")) ==
+      (("/tmp/y", Seq(1, 10, 50), None)))
+  }
+
+  test("parseArgs: an unknown selector fails before any session, naming every selector") {
+    val e = intercept[IllegalArgumentException] {
+      ScaleBench.parseArgs(Seq("/tmp/x", "1", "serve-onyl-only"))
+    }
+    ScaleBench.points.map(_._1).foreach(n => assert(e.getMessage.contains(n), n))
+    // main parses before it builds (and finally stops) its session: the
+    // same throw surfaces there and the shared test session survives.
+    val sc = spark.sparkContext
+    intercept[IllegalArgumentException](ScaleBench.main(Array("nope-only")))
+    assert(!sc.isStopped)
+    intercept[IllegalArgumentException](
+      ScaleBench.parseArgs(Seq("serve-only", "pq-only")))
+    // A misspelling that drops the suffix is a third positional.
+    intercept[IllegalArgumentException](
+      ScaleBench.parseArgs(Seq("/tmp/x", "1", "serve-onyl")))
+  }
+
+  test("TaskMeter: a groupBy count writes shuffle bytes; a range count writes none") {
+    val (n, grouped) = TaskMeter.run(spark) {
+      spark.range(0, 10000, 1, 4).groupBy((col("id") % 7).as("k")).count().count()
+    }
+    assert(n == 7)
+    assert(grouped.shuffleBytesWritten > 0, grouped)
+    assert(grouped.jobs.nonEmpty, grouped)
+    assert(grouped.jobs.forall(j => j.endNs >= j.startNs), grouped)
+    val (m, flat) = TaskMeter.run(spark)(spark.range(0, 10000, 1, 1).count())
+    assert(m == 10000)
+    assert(flat.shuffleBytesWritten == 0, flat)
   }
 }
