@@ -298,10 +298,9 @@ object ScaleBench {
     val params = Dedup.MinHashParams()
     val table = s"graft_scale_inc_idx_x$scale"
     val (_, tBuild) = leg(spark) { DedupIndex.build(oldDocs, "doc_id", "text", table, params) }
+    // The probe stages its own pair set.
     val (probe, tProbe) = leg(spark) {
-      import scala.util.chaining._
       DedupIndex.probeNewBatch(spark, table, batch, "doc_id", "text", params)
-        .pipe(graft.ext.Checkpoints.stage)
     }
     val nProbe = probe.count()
     val (full, tFull) = leg(spark) {
@@ -436,7 +435,6 @@ object ScaleBench {
     * `require`s the pair sets identical, so the published delta is
     * pure layout — file count and probe wall, nothing semantic. */
   def compactionPoint(spark: SparkSession, dir: String, scale: Int): String = {
-    import scala.util.chaining._
     import graft.ext.DedupIndex
     import graft.streaming.StreamOps
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -479,7 +477,6 @@ object ScaleBench {
       .localCheckpoint(true)
     val (probeFrag, tFrag) = leg(spark) {
       DedupIndex.probeNewBatchFromBands(spark, table, newBands, params)
-        .pipe(graft.ext.Checkpoints.stage)
     }
     val nFrag = probeFrag.count()
     val filesFrag = indexFiles()
@@ -487,7 +484,6 @@ object ScaleBench {
     val filesCompact = indexFiles()
     val (probeCompact, tComp) = leg(spark) {
       DedupIndex.probeNewBatchFromBands(spark, table, newBands, params)
-        .pipe(graft.ext.Checkpoints.stage)
     }
     val nComp = probeCompact.count()
     require(nFrag == nComp &&

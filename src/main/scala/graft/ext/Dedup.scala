@@ -98,16 +98,13 @@ object Dedup {
 
   /** (id, band_id, band_hash) — one row per LSH band per doc.
     *
-    * The shingle-hash projection is staged before banding, so each
-    * doc hashes once.
-    *
-    * EXECUTES EAGERLY at construction (the checkpoint barrier runs a
-    * Spark job) — plan-only consumers pay the pipeline. Every barrier
-    * in this file goes through Checkpoints.stage: local
-    * executor-storage blocks by default, or a RELIABLE
-    * checkpoint(dir) when `spark.graft.checkpointDir` is set — the
-    * deployment knob for clusters with executor loss / dynamic
-    * allocation, where an evicted local block would fail the job.
+    * LAZY: no job runs at construction. The shingle-hash array feeds
+    * exactly one expression (the graft_minhash_bands kernel), so the
+    * 64-lambda re-tokenize trap [[minhashSignature]] documents cannot
+    * arise here and no barrier is needed inside. A caller that reads
+    * the result more than once stages it (Checkpoints.stage), or every
+    * read re-runs shingle+minhash; one that reads it once (an index
+    * build, a census) pays the pipeline once inside its own job.
     */
   def bands(docs: DataFrame, idCol: String, textCol: String,
             params: MinHashParams): DataFrame = {
@@ -117,26 +114,19 @@ object Dedup {
     val hsExpr =
       call_function("graft_shingle_hashes", col(textCol), lit(params.shingleSize))
     val distributed = Spread.ensure(docs.select(col(idCol).as("id"), col(textCol)))
-    // EAGER localCheckpoint, not persist: checkpoint blocks are freed
-    // by the ContextCleaner when the DataFrame is GC'd, so long-lived
-    // library sessions don't accumulate storage the way CacheManager
-    // persists (which live until an explicit unpersist) do.
-    val hashDf = distributed
-      .select(col("id"), hsExpr.as("hs"))
-      .pipe(Checkpoints.stage)
     // Same fold as [[minhashBandsHof]]: each band folds its own
     // rows-per-band minhash indices mod P.
-    val bandArray = call_function("graft_minhash_bands", col("hs"),
+    val bandArray = call_function("graft_minhash_bands", hsExpr,
       lit(params.bands), lit(rows))
-    hashDf
+    distributed
       .select(col("id"), posexplode(bandArray))
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "band_hash")
   }
 
   /** Candidate pairs (id_a < id_b) from same-bucket collisions, with
-    * the hot-bucket cap applied. Eager (checkpoints the band table —
-    * see [[bands]] for the executor-loss caveat). */
+    * the hot-bucket cap applied. Eager: stages the band table
+    * (Checkpoints.stage has the executor-loss caveat). */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      params: MinHashParams): DataFrame =
     // The band table feeds three consumers (bucket sizing + both join
@@ -193,7 +183,7 @@ object Dedup {
   /** Exact-Jaccard verification of a precomputed (id_a, id_b) pair set
     * (so callers can reuse one candidate computation for several
     * downstream consumers). Eager unless the pair set is already
-    * materialized (see [[bands]] for the executor-loss caveat). */
+    * materialized (Checkpoints.stage has the executor-loss caveat). */
   def verifyPairs(docs: DataFrame, pairs: DataFrame, idCol: String,
                   textCol: String, params: MinHashParams,
                   threshold: Double): DataFrame = {

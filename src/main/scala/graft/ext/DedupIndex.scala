@@ -142,12 +142,13 @@ object DedupIndex {
     * shingled; the corpus side comes from the saved band table,
     * restricted up front to buckets the batch touches.
     *
-    * `stager` is the multi-consumer materialization barrier
-    * (Checkpoints.stage in production); PlanAuditSpec injects
-    * `identity` to pin the UNSTAGED logical plan — the left_semi
-    * restriction sitting below the sizing aggregate, and no broadcast
-    * hint on the index side — which the barriers would otherwise hide
-    * behind LogicalRDD leaves. */
+    * `stager` is the materialization barrier (Checkpoints.stage in
+    * production) for the batch's bands, which the probe reads twice,
+    * and for the returned pair set; PlanAuditSpec injects `identity`
+    * to pin the UNSTAGED logical plan — the left_semi restriction
+    * sitting below the one grouped census, no inner join, and no
+    * broadcast hint on the index side — which the barriers would
+    * otherwise hide behind LogicalRDD leaves. */
   def probeNewBatch(spark: SparkSession, table: String, newDocs: DataFrame,
                     idCol: String, textCol: String,
                     params: Dedup.MinHashParams = Dedup.MinHashParams(),
@@ -158,7 +159,23 @@ object DedupIndex {
 
   /** [[probeNewBatch]] from a PRECOMPUTED band table of the batch
     * (materialized unless `stager` is identity — it feeds the touched
-    * projection, the union, and the new join side).
+    * restriction and the tagged union).
+    *
+    * Grouped plan: ONE groupBy(band_id, band_hash) over the tagged
+    * rows (touched index ∪ batch) computes the bucket census
+    * ([[SkipReport.census]] — the cap decision over old ∪ new, as
+    * before), every member id, and the batch's member ids; buckets
+    * within the cap explode new × all, self-pairs drop, and the pair
+    * set is canonicalized and distinct'ed. Two shuffles (the census,
+    * the distinct) where the join form paid five. The collected member
+    * lists cost O(bucket) memory per bucket, hot ones included (they
+    * are collected before the cap filter drops them); the cap still
+    * bounds the O(bucket²) explode.
+    *
+    * `stager` stages the final pair set: that barrier is the probe's
+    * one contact with the mutable index, so a caller that mutates the
+    * index afterwards (streamIngest's append) never changes what the
+    * returned pairs read.
     *
     * `excludeBatch`: on the STREAMING (batch-id-partitioned) index
     * layout, the in-flight batch's OWN partition is excluded from the
@@ -182,6 +199,7 @@ object DedupIndex {
                              params: Dedup.MinHashParams = Dedup.MinHashParams(),
                              stager: DataFrame => DataFrame = Checkpoints.stage,
                              excludeBatch: Option[Long] = None): DataFrame = {
+    val keys = Seq(col("band_id"), col("band_hash"))
     // Buckets untouched by the batch cannot yield a new-touching pair:
     // cut the index to touched buckets BEFORE sizing — the semi-join
     // is the probe's only contact with the corpus index. NO broadcast
@@ -189,8 +207,9 @@ object DedupIndex {
     // shuffle join to a broadcast at runtime, but a forced hint would
     // make a large shard (millions of docs × bands rows) a driver
     // OOM; the index side is bucketed on band_hash, so the shuffle
-    // form co-locates off the stored clustering.
-    val touched = newBands.select(col("band_id"), col("band_hash")).distinct()
+    // form co-locates off the stored clustering. No distinct on the
+    // batch side: duplicate right rows never change a semi-join.
+    val touched = newBands.select(keys: _*)
     // Explicit band-column projection: the STREAMING index layout adds
     // a batch-id partition column the union must not see; on the
     // unpartitioned batch layout this is an identity projection the
@@ -202,24 +221,26 @@ object DedupIndex {
     val idxTouched = minusTombstones(spark, table,
         idxRead.select(col("id"), col("band_id"), col("band_hash")))
       .join(touched, Seq("band_id", "band_hash"), "left_semi")
+    val tagged = idxTouched.withColumn("__new", lit(false))
+      .unionByName(newBands.select(col("id"), col("band_id"), col("band_hash"))
+        .withColumn("__new", lit(true)))
     // Bucket counts over old ∪ new — the SAME cap decision the batch
     // pipeline would make on the union corpus (see the object doc), so
     // incremental == full-recompute holds even on capped buckets.
-    // Feeds sizing + both join sides; stage it once.
-    val union = idxTouched.unionByName(newBands).pipe(stager)
-    val sized = SkipReport.within(
-      SkipReport.census(union, Seq(col("band_id"), col("band_hash"))),
+    // collect_list skips nulls, so `__new_ids` holds the batch's ids.
+    val kept = SkipReport.within(
+      SkipReport.census(tagged, keys,
+        collect_list(col("id")).as("__all_ids"),
+        collect_list(when(col("__new"), col("id"))).as("__new_ids")),
       params.maxBucketSize)
-    val inBucket = union.join(sized, Seq("band_id", "band_hash"))
-    val newSide = newBands.join(sized, Seq("band_id", "band_hash"))
-      .select(col("band_id"), col("band_hash"), col("id").as("id_n"))
-    val allSide = inBucket
-      .select(col("band_id"), col("band_hash"), col("id").as("id_o"))
-    newSide.join(allSide, Seq("band_id", "band_hash"))
+    kept
+      .select(explode(col("__new_ids")).as("id_n"), col("__all_ids"))
+      .select(col("id_n"), explode(col("__all_ids")).as("id_o"))
       .where(col("id_n") =!= col("id_o"))
       .select(least(col("id_n"), col("id_o")).as("id_a"),
         greatest(col("id_n"), col("id_o")).as("id_b"))
       .distinct()
+      .pipe(stager)
   }
 
   /** Streaming incremental dedup — the actual 100 TB ingest shape:
@@ -249,11 +270,13 @@ object DedupIndex {
     * near-dup cluster larger than the cap, which the cap exists to
     * drop anyway.
     *
-    * Per-batch plumbing: the batch is banded ONCE (shingle+minhash is
-    * the batch-side cost); the probe's union checkpoint — its only
-    * contact with the mutable table — materializes BEFORE the append
-    * mutates it, so the pair set the sink write executes afterwards
-    * never reads the live table. The INDEX here is batch-partitioned
+    * Per-batch plumbing: the raw micro-batch is read once, by the
+    * banding pass, and the staged bands are the batch's one barrier
+    * (shingle+minhash is the batch-side cost; the probe and the append
+    * both read them). The probe's staged pair set — its only contact
+    * with the mutable table — materializes BEFORE the append mutates
+    * it, so the pairs the sink write inserts afterwards never read the
+    * live table. The INDEX here is batch-partitioned
     * on top of the bucket spec (Writer.emptyPartitionedBucketedTable,
     * created fresh by this call — the stream owns its index): the
     * append is a dynamic overwrite of exactly the batch's own
@@ -314,9 +337,9 @@ object DedupIndex {
       val pairs = probeNewBatchFromBands(spark, table, nb, params,
         excludeBatch = Some(batchId))
       // The index append rides as a side write: its rows (nb) and the
-      // pairs plan share no live table (the probe's union checkpoint
-      // above already materialized the index contact), so both inserts
-      // overlap in writeBatchSinks.
+      // pairs share no live table (the probe's staged pair set already
+      // materialized the index contact), so both inserts overlap in
+      // writeBatchSinks.
       (pairs, Seq(table -> nb))
     }
   }

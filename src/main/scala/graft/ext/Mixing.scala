@@ -268,7 +268,9 @@ object Mixing {
         StructField(StreamOps.BatchTag, LongType))),
       StreamOps.BatchTag, groupCol, 1)
     StreamOps.sinkBatches(spark, stream, queryName, table,
-        checkpointLocation) { (b, batchId) =>
+        checkpointLocation) { (raw, batchId) =>
+      // The kept set and the ledger both read the batch; stage it once.
+      val b = Checkpoints.stage(raw)
       spark.catalog.refreshTable(table + "_totals")
       val rows = b.select(col(idCol), col(groupCol),
         tokExpr.cast("long").as("tok"))

@@ -413,8 +413,10 @@ object PostingsIndex {
         StructField(StreamOps.BatchTag, LongType))),
       StreamOps.BatchTag, "n_docs", 1)
     StreamOps.sinkBatches(spark, stream, queryName, table + "_stats",
-        checkpointLocation) { (b, _) =>
-      // Tokenize the batch once; postings and stats both read it.
+        checkpointLocation) { (raw, _) =>
+      // Postings and doc lengths both read the batch; stage it once.
+      // dls feeds both the stats and the `_docs` write.
+      val b = Checkpoints.stage(raw)
       val dls = docLengths(b, idCol, textCol).localCheckpoint(true)
       val post = postings(b, idCol, textCol)
       (statsOf(dls), Seq(table -> post, (table + "_docs") -> dls))

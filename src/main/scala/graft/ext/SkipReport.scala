@@ -37,9 +37,13 @@ object SkipReport {
   val CountCol = "block_n"
 
   /** Census of an exploded (row-per-member) frame by its block key:
-    * one row per block, sized as [[CountCol]]. */
-  def census(exploded: DataFrame, keys: Seq[Column]): DataFrame =
-    exploded.groupBy(keys: _*).agg(count(lit(1)).as(CountCol))
+    * one row per block, sized as [[CountCol]]. `extra` aggregates ride
+    * the same groupBy — a pair generator that needs each block's
+    * members (DedupIndex's grouped probe) collects them in the census
+    * itself, so keep-filter and members come from one shuffle. */
+  def census(exploded: DataFrame, keys: Seq[Column],
+             extra: Column*): DataFrame =
+    exploded.groupBy(keys: _*).agg(count(lit(1)).as(CountCol), extra: _*)
 
   /** The blocks a capped operator KEEPS (block_n ≤ cap) — the
     * keep-filter side of the partition. */

@@ -1182,7 +1182,9 @@ object TextAnalysis {
     val g = grid.localCheckpoint(true)
     val d = dflt.localCheckpoint(true)
     StreamOps.sinkBatches(spark, stream, queryName, table,
-        checkpointLocation) { (b, _) =>
+        checkpointLocation) { (raw, _) =>
+      // nbScore reads the batch twice (doc-word pairs, labels).
+      val b = Checkpoints.stage(raw)
       (nbScore(b.where(col(textCol).isNotNull), idCol, textCol, labelCol, g, d),
         Seq.empty)
     }

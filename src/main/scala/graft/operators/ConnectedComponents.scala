@@ -105,8 +105,8 @@ object ConnectedComponents {
       // inner pair's result is referenced several times by the outer
       // pair's joins, and without a barrier between them the inner
       // DAG re-evaluates per reference — the same CollapseProject/
-      // shared-subtree trap Dedup.bands documents. The barrier IS the
-      // reuse point.) r22: the barrier is LAZY and the signature
+      // shared-subtree trap Dedup.minhashSignature documents. The
+      // barrier IS the reuse point.) r22: the barrier is LAZY and the signature
       // aggregate is the job that materializes it — ONE action per
       // round instead of stage + signature (the round-cost fix VERDICT
       // r21 #1 asked for; same signature, same rounds, labels

@@ -887,8 +887,8 @@ private[graft] object CorpusQueries {
     * per-operator signal reads cleanly only with the fixed component
     * separated). This query does NO operator work by design: three
     * one-row file shards ride the full house loop — stream start,
-    * AvailableNow trigger, per-batch localCheckpoint, resume-aware
-    * sink creation, three dynamic-partition-overwrite commits — and
+    * AvailableNow trigger, resume-aware sink creation, three
+    * dynamic-partition-overwrite commits — and
     * nothing else, so its wall IS the per-streaming-query machinery
     * unit. Bench publishes its min as `streaming_machinery_unit_s`
     * next to the family subtotal, separating machinery from
@@ -2742,8 +2742,9 @@ private[graft] object CorpusQueries {
           IvfIndex.centroidsTable(t("ivf")))
         val docs = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
           .where(col("doc_id") < 90 && col("text").isNotNull))
+        // Staged: two index builds read the bands.
         val banded = Dedup.bands(docs, "doc_id", "text",
-          Dedup.MinHashParams())
+          Dedup.MinHashParams()).pipe(graft.ext.Checkpoints.stage)
         DedupIndex.buildFromBands(banded.where(col("id") < 60), t("a"),
           nBuckets = 4)
         DedupIndex.buildFromBands(banded.where(col("id") >= 30), t("b"),
@@ -2937,8 +2938,10 @@ private[graft] object CorpusQueries {
     // ONE banding pass over the union slice, row-subset per family —
     // the documented buildFromBands pattern (bands are per-row), so
     // the fixture pays shingle+minhash once, not per index. Tiny
-    // fixture → 4 buckets: the audit scans 4 tasks, not 16.
+    // fixture → 4 buckets: the audit scans 4 tasks, not 16. Staged:
+    // both builds read the bands.
     val banded = Dedup.bands(docs, "doc_id", "text", Dedup.MinHashParams())
+      .pipe(graft.ext.Checkpoints.stage)
     // Two disjoint index builds off the shared band pass — overlap
     // (guide §2.6 via Par).
     graft.ext.Par.all(
@@ -3125,9 +3128,9 @@ private[graft] object CorpusQueries {
     // bits; only the serial fixed overheads overlap.
     val incF = graft.ext.Par.future {
       DedupIndex.buildFromBands(allBands.where(!isNewId(col("id"))), table)
+      // Staged by the probe itself (its returned pair set).
       val inc = DedupIndex.probeNewBatch(s, table, newDocs, "doc_id",
           "text", params)
-        .pipe(graft.ext.Checkpoints.stage)
       val verified = Dedup.verifyPairs(docs, inc, "doc_id", "text",
           params, 0.5)
         .pipe(graft.ext.Checkpoints.stage)

@@ -391,11 +391,11 @@ private[graft] object VectorQueries {
     // before the bands twin reads them (round 19): inlined into
     // minhashBandsHof's 64 interpreted lambda sites, the tokenize+
     // shingle+hash subtree re-evaluated 64× per doc — the exact
-    // CollapseProject trap Dedup.bands documents — making this gate
-    // ~19 ms/doc (95 s of hidden cost at sf0.1). The comparison is
-    // unchanged: kernel hashes vs HOF hashes on raw text (m_sh), then
-    // kernel bands over kernel hashes vs HOF bands over HOF hashes
-    // (m_mb), each path reading its own materialized array.
+    // CollapseProject trap Dedup.minhashSignature documents — making
+    // this gate ~19 ms/doc (95 s of hidden cost at sf0.1). The
+    // comparison is unchanged: kernel hashes vs HOF hashes on raw text
+    // (m_sh), then kernel bands over kernel hashes vs HOF bands over
+    // HOF hashes (m_mb), each path reading its own materialized array.
     val hashed = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
       .select(
         call_function("graft_shingle_hashes", col("text"),

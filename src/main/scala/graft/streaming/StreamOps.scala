@@ -112,15 +112,28 @@ object StreamOps {
         paths.map { raw =>
           val p = new org.apache.hadoop.fs.Path(raw)
           val fs = p.getFileSystem(conf)
-          def walk(p0: org.apache.hadoop.fs.Path): Long =
-            fs.listStatus(p0).map { st =>
-              val name = st.getPath.getName
-              if (name.startsWith(".") || name.startsWith("_")) 0L
-              else if (st.isDirectory) walk(st.getPath)
-              else if (glob.forall(_.accept(st.getPath))) st.getLen
-              else 0L
-            }.sum
-          if (fs.exists(p)) walk(p) else 0L
+          if (!fs.exists(p)) 0L
+          else {
+            // One recursive listing (a paged flat listing on object
+            // stores) instead of a listStatus per directory. Hidden
+            // and metadata entries (`.crc`, `_SUCCESS`,
+            // `_spark_metadata/`) are skipped wherever they sit below
+            // the root; a root that is a file is judged by its own
+            // name.
+            val root = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
+            val it = fs.listFiles(p, true)
+            var bytes = 0L
+            while (it.hasNext) {
+              val st = it.next()
+              val f = st.getPath
+              val rel = f.toUri.getPath.stripPrefix(root).stripPrefix("/")
+              val parts = if (rel.isEmpty) Array(f.getName) else rel.split('/')
+              if (!parts.exists(n => n.startsWith(".") || n.startsWith("_")) &&
+                  glob.forall(_.accept(f)))
+                bytes += st.getLen
+            }
+            bytes
+          }
         }.sum
     }.sum
   }
@@ -485,7 +498,7 @@ object StreamOps {
   /** [[writeBatchToSink]] for SEVERAL independent (table, rows) writes
     * of one micro-batch, run CONCURRENTLY: the streaming ingests pay
     * two inserts per batch (index append + pairs sink) whose plans
-    * share no live table (the probe stages its index union before the
+    * share no live table (the probe stages its pair set before the
     * append — DedupIndex doc), so their jobs overlap instead of
     * serializing — the profile's two largest per-batch terms. The
     * partitionOverwriteMode conf is a ONE-WAY dynamic latch
@@ -753,16 +766,21 @@ object StreamOps {
     * `perBatch` returns the batch's sink rows PLUS any side writes —
     * (table, rows) pairs whose plans are independent of the sink rows'
     * (the ingests' index appends, staged apart from the probe) — and
-    * all land through ONE [[writeBatchSinks]] call, concurrently. */
+    * all land through ONE [[writeBatchSinks]] call, concurrently.
+    *
+    * The micro-batch reaches `perBatch` UNSTAGED: every read of it
+    * re-reads the batch's source slice (files or memory rows). A
+    * closure that reads it once (a banding or encoding pass whose
+    * output it stages) pays no barrier; one that reads it more than
+    * once stages it on its first line (PostingsIndex, Mixing). */
   def sinkBatches(spark: SparkSession, stream: DataFrame, queryName: String,
                   sinkTable: String,
                   checkpointLocation: Option[String] = None)(
       perBatch: (DataFrame, Long) => (DataFrame, Seq[(String, DataFrame)])): (DataFrame, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = foreachBatchSink(stream, queryName, checkpointLocation) { (batch, batchId) =>
-      val b = batch.localCheckpoint(true)
       n.incrementAndGet()
-      val (out, side) = perBatch(b, batchId)
+      val (out, side) = perBatch(batch, batchId)
       writeBatchSinks(spark, batchId, (sinkTable -> out) +: side)
     }
     q.awaitTermination()

@@ -109,7 +109,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("DedupIndex.probeNewBatch: left_semi bucket restriction BELOW the sizing agg, no broadcast hint") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val params = graft.ext.Dedup.MinHashParams()
@@ -135,7 +135,20 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(a.exists { case j: Join => j.joinType == LeftSemi; case _ => false },
         s"sizing aggregate not fed by the left_semi restriction:\n$opt")
     }
-    // 3) No broadcast HINT on any join — a huge shard must never be
+    // 3) ONE groupBy on the bucket key sizes the buckets and collects
+    //    their members; pairs come from exploding those lists, so no
+    //    inner join is left — only the left_semi restriction and the
+    //    tombstone left_anti (absent here: nothing is tombstoned).
+    val keyed = opt.collect {
+      case a: Aggregate if a.groupingExpressions.flatMap(_.references.map(_.name))
+          .toSet == Set("band_id", "band_hash") => a
+    }
+    assert(keyed.size == 1,
+      s"expected exactly one Aggregate keyed on (band_id, band_hash), got ${keyed.size}:\n$opt")
+    val joinTypes = opt.collect { case j: Join => j.joinType }
+    assert(joinTypes.forall(t => t == LeftSemi || t == LeftAnti),
+      s"probeNewBatch must plan no inner join, got ${joinTypes.mkString(", ")}:\n$opt")
+    // 4) No broadcast HINT on any join — a huge shard must never be
     //    forced through the driver; AQE may still pick broadcast at
     //    runtime, which is the intended adaptivity.
     opt.collect { case j: Join => j.hint }.foreach { h =>

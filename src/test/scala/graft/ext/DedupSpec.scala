@@ -351,6 +351,48 @@ class DedupSpec extends AnyFunSuite {
     assert(probe2Again == probe2, "probe must be unchanged after a retried append")
   }
 
+  test("DedupIndex: probe equals full recompute when the bucket cap binds on batch docs") {
+    // Three indexed copies of one text plus a batch copy put at least
+    // four members in every one of its buckets (a variant on each side
+    // joins the buckets its edit leaves intact), past a cap of 2 or 3:
+    // the probe's census must drop buckets holding batch docs. An
+    // exact copy of one indexed doc makes a 2-member bucket that stays
+    // under either cap.
+    val t = corpus.where(col("doc_id") === 7).select(col("text")).first().getString(0)
+    val t10 = corpus.where(col("doc_id") === 10).select(col("text")).first().getString(0)
+    val old = corpus.unionByName(Seq(500L -> t, 501L -> t, 502L -> t,
+      503L -> t.replaceFirst("\\w+$", "xray")).toDF("doc_id", "text"))
+    val batch = Seq(600L -> t, 601L -> t.replaceFirst("^\\w+", "xray"),
+      602L -> t10, 603L -> "entirely novel content that matches nothing at all")
+      .toDF("doc_id", "text")
+    val all = old.unionByName(batch)
+    val newIds = Set(600L, 601L, 602L, 603L)
+    def touching(p: Dedup.MinHashParams): Set[(Long, Long)] =
+      Dedup.candidatePairs(all, "doc_id", "text", p)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .filter(q => newIds(q._1) || newIds(q._2)).toSet
+    val table = "graft_dedup_idx_cap_spec"
+    DedupIndex.build(old, "doc_id", "text", table, params)
+    val uncapped = touching(params)
+    Seq(2, 3).foreach { cap =>
+      val capped = params.copy(maxBucketSize = cap)
+      val probe = DedupIndex.probeNewBatch(spark, table, batch, "doc_id", "text", capped)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val full = touching(capped)
+      assert(probe == full, s"cap $cap: probe $probe != batch-restricted $full")
+      // The cap binds on the batch: over-cap buckets hold batch ids,
+      // and the pairs they carried at the default cap are gone.
+      val hot = Dedup.minhashOversized(
+          Dedup.bands(all, "doc_id", "text", capped), capped)
+        .join(Dedup.bands(batch, "doc_id", "text", capped),
+          Seq("band_id", "band_hash"), "left_semi")
+      assert(hot.count() > 0, s"cap $cap: no over-cap bucket holds a batch doc")
+      assert(uncapped.contains((500L, 600L)) && !probe.contains((500L, 600L)),
+        s"cap $cap: the copy cluster's pairs must be dropped by the cap")
+      assert(probe.contains((10L, 602L)), s"cap $cap: under-cap bucket pair missing")
+    }
+  }
+
   test("streamIngest: two successive micro-batched shards accumulate the full candidate set") {
     import java.nio.file.{Files, Paths}
     // Shards split the planted corpus so near-dup pairs land in every
