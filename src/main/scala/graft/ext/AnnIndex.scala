@@ -50,8 +50,8 @@ object AnnIndex {
                 vecCol: String, query: Seq[Float], k: Int,
                 bits: Int = 8, multiProbe: Boolean = true): DataFrame =
     withBucketPruning(spark) {
-      probePlan(spark, table, idCol, vecCol, query, k, bits, multiProbe)
-        .localCheckpoint(true)
+      Checkpoints.stage(
+        probePlan(spark, table, idCol, vecCol, query, k, bits, multiProbe))
     }
 
   /** The lazy probe plan behind [[probeTopK]]. Callers that want to

@@ -25,6 +25,11 @@ import graft.io.Writer
   *     has committed batches ([[resumeAwareTableMaker]]): a fresh
   *     checkpoint with a leftover table is a drop-and-recreate, never
   *     a silent merge.
+  *
+  * The keyed-pair families (DedupIndex, WinnowIndex, and IvfIndex's
+  * stream ingest) go one step further: build, append, purge, the probe
+  * prelude, the pair-sink stream ingest and compact have one body,
+  * in [[PairIndex]].
   */
 private[graft] object IndexLifecycle {
 
@@ -74,10 +79,11 @@ private[graft] object IndexLifecycle {
         "deleted ids there, and a physical purge belongs in " +
         "compact(purge = true)")
 
-  /** The streaming-layout compact driver shared by the five tombstoned
+  /** The streaming-layout compact driver shared by the tombstoned
     * families (VERDICT r17 #6: the quiesce → merged-rewrite → sibling
     * rewrites → tombstone-drop skeleton was hand-rolled five times;
-    * DedupIndex's and WinnowIndex's were verbatim identical): read the
+    * the three pair families call it through PairIndex.compact,
+    * whose sibling rewrite is the `_pairs` sink): read the
     * tombstone list when purging, [[graft.streaming.StreamOps
     * .compactSink]] the MAIN table with it (the merged rewrite a
     * compaction pays anyway also reclaims tombstoned bytes), run the
@@ -107,17 +113,6 @@ private[graft] object IndexLifecycle {
       spark.catalog.refreshTable(table)
     }
     merged
-  }
-
-  /** The `_pairs` results-sink compact three families run as their
-    * sibling rewrite (never purged — pair rows are results, not index
-    * state; takedown-filtered at probe time). */
-  def compactPairsSink(spark: SparkSession, table: String,
-                       checkpointLocation: Option[String]): Unit = {
-    val sink = table + "_pairs"
-    if (spark.catalog.tableExists(sink))
-      graft.streaming.StreamOps.compactSink(spark, sink,
-        checkpointLocation = checkpointLocation)
   }
 
   /** The rebalance in-flight marker of `table` — present exactly

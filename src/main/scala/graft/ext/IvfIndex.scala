@@ -281,8 +281,9 @@ object IvfIndex {
     * away, and the scan is partition-pruned to the probed clusters. */
 
   /** Tombstone-delete vectors from the index — the takedown pattern
-    * shared across the four index families (WinnowIndex's doc has the
-    * contract). Probes hide tombstoned ids; [[purgeTombstones]]
+    * shared across the index families (WinnowIndex's doc has the
+    * contract). Probes — the stream ingest's screening probe included
+    * — hide tombstoned ids; [[purgeTombstones]]
     * rewrites the partitioned layout later. Pinned in IvfIndexSpec. */
   def delete(spark: SparkSession, table: String, ids: DataFrame): Unit =
     IndexLifecycle.registerTombstones(spark, table, ids)
@@ -461,21 +462,15 @@ object IvfIndex {
                     stager: DataFrame => DataFrame = Checkpoints.stage,
                     excludeBatch: Option[Long] = None,
                     maxCellSize: Int = 10000): DataFrame = {
-    val touched = assigned.select(col("cluster_id")).distinct()
-    // `excludeBatch`: on the streaming layout, cut the in-flight
-    // batch's OWN partition out of the index read — a crashed attempt
-    // can land the index append without the sink write, and on
-    // redelivery the probe would see the batch's vectors on both
-    // union sides (inflated cell census, duplicate same-score pairs).
-    // Partition-pruned; a fresh run reads exactly what it read before.
-    // Same contract as DedupIndex.probeNewBatchFromBands.
-    val idxRead = excludeBatch.foldLeft(spark.table(table))((df, b) =>
-      df.where(col(graft.streaming.StreamOps.BatchTag) =!= lit(b)))
-    // Explicit projection: the streaming index layout adds a batch-id
-    // partition column the union must not see.
-    val idxTouched = idxRead
-      .select(col(idCol), col(vecCol), col("cluster_id"))
-      .join(touched, Seq("cluster_id"), "left_semi")
+    // The shared probe prelude (PairIndex.touchedIndex): `excludeBatch`
+    // cuts the in-flight batch's own partition (a crashed attempt's
+    // orphaned append would otherwise sit on both union sides —
+    // inflated cell census, duplicate same-score pairs), tombstoned
+    // vectors vanish before the cell census, and the index is cut to
+    // the batch's cells.
+    val idxTouched = PairIndex.touchedIndex(spark, table,
+      Seq(idCol, vecCol, "cluster_id"), Seq("cluster_id"), assigned,
+      excludeBatch)
     val union = idxTouched
       .unionByName(assigned.select(col(idCol), col(vecCol), col("cluster_id")))
       .pipe(stager)
@@ -485,12 +480,8 @@ object IvfIndex {
     // would make a batch's probe quadratic in that cell with no
     // backpressure. Cells whose old ∪ new count exceeds `maxCellSize`
     // are DROPPED from pair generation (the batch's rows still index —
-    // later batches see them). Caveat shared with the dedup twin: the
-    // cap decision is made on indexed-so-far ∪ batch counts, so a cell
-    // crossing the cap only after later batches arrive leaves extra
-    // early pairs vs the one-shot recompute; with the 10k default that
-    // needs a near-dup cell larger than the cap, which the cap exists
-    // to drop anyway.
+    // later batches see them). The cap is decided on indexed-so-far ∪
+    // batch counts — PairIndex.streamIngest's over-cap caveat.
     val sized = union.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cell_n"))
       .where(col("cell_n") <= maxCellSize)
@@ -544,54 +535,27 @@ object IvfIndex {
                    threshold: Double = 0.9,
                    queryName: String = "graft_stream_ivf",
                    checkpointLocation: Option[String] = None): (DataFrame, Int) = {
-    import graft.streaming.StreamOps
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
-    val idType = stream.schema(idCol).dataType
-    val vecType = stream.schema(vecCol).dataType
-    // Restartable with a checkpoint — see the dedup twin's comment.
-    // A restart MUST pass the same centroids (and threshold): run 1's
-    // rows are indexed under run 1's cell assignment, so different
-    // centroids would silently mis-prune probes against them. The
-    // centroids table is rewritten on restart because it is derived
-    // from the argument, not state.
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
+    // Restartable with a checkpoint (PairIndex.streamIngest). A restart
+    // MUST pass the same centroids (and threshold): run 1's rows are
+    // indexed under run 1's cell assignment, so different centroids
+    // would silently mis-prune probes against them. The centroids
+    // table is rewritten on restart because it is derived from the
+    // argument, not state.
     Writer.dropTableAndLocation(spark, centroidsTable(table))
     import spark.implicits._
     centroids.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cluster_id", "centroid")
       .write.format("parquet").saveAsTable(centroidsTable(table))
-    // Keep prior state only when the checkpoint has committed batches
-    // (fresh checkpoint + leftover table = drop, not silent merge —
-    // see the dedup twin).
-    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)
-    // Source-byte-derived buckets (r22, guide §6 — scaledSinkBuckets).
-    val nBuckets = StreamOps.scaledSinkBuckets(stream)
-    mkTable(spark, table,
-      StructType(Seq(
-        StructField(idCol, idType),
-        StructField(vecCol, vecType),
-        StructField("cluster_id", IntegerType),
-        StructField(StreamOps.BatchTag, LongType))),
-      StreamOps.BatchTag, "cluster_id", nBuckets)
-    val sink = table + "_pairs"
-    mkTable(spark, sink,
-      StructType(Seq(
-        StructField("id_a", idType),
-        StructField("id_b", idType),
-        StructField("cos_sim", DoubleType),
-        StructField(StreamOps.BatchTag, LongType))),
-      StreamOps.BatchTag, "id_a", nBuckets)
-    StreamOps.sinkBatches(spark, stream, queryName, sink,
-        checkpointLocation) { (b, batchId) =>
-      // Refresh-at-probe + index append as a concurrent side write —
-      // see the dedup twin's comments.
-      spark.catalog.refreshTable(table)
-      val assigned = Similarity.ivfAssign(b, idCol, vecCol, centroids)
-        .select(col(idCol), col(vecCol), col("cluster_id"))
-        .localCheckpoint(true)
-      val pairs = probeNewBatch(spark, table, assigned, idCol, vecCol, threshold,
-        excludeBatch = Some(batchId))
-      (pairs, Seq(table -> assigned))
-    }
+    PairIndex.streamIngest(spark, table, stream, queryName, checkpointLocation,
+        Seq(StructField(idCol, stream.schema(idCol).dataType),
+          StructField(vecCol, stream.schema(vecCol).dataType),
+          StructField("cluster_id", IntegerType)),
+        "cluster_id", Seq(StructField("cos_sim", DoubleType)))(
+      Similarity.ivfAssign(_, idCol, vecCol, centroids)
+        .select(col(idCol), col(vecCol), col("cluster_id")))(
+      (assigned, batchId) => probeNewBatch(spark, table, assigned, idCol,
+        vecCol, threshold, excludeBatch = Some(batchId)))
   }
 
   /** Compact a [[streamIngest]] vector index (and its pairs sink) —
@@ -600,15 +564,12 @@ object IvfIndex {
     * `checkpointLocation` to refuse crash-then-compact corruption.
     * `purge = true` physically drops tombstoned vectors during the
     * rewrite and clears the tombstone list (the streaming layout's
-    * purge — WinnowIndex.compact documents the shared contract);
+    * purge — PairIndex.compact documents the shared contract);
     * `idCol` names the index's id column for the purge anti-join. */
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,
               purge: Boolean = false, idCol: String = "id"): Int =
-    IndexLifecycle.compactStreaming(spark, table, checkpointLocation,
-      purge, idCol) { _ =>
-      IndexLifecycle.compactPairsSink(spark, table, checkpointLocation)
-    }
+    PairIndex.compact(spark, table, checkpointLocation, purge, idCol)
 
   def probeTopKQuantized(spark: SparkSession, table: String, idCol: String,
                          vecCol: String, query: Seq[Float], k: Int,

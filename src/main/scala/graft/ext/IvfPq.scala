@@ -224,8 +224,8 @@ object IvfPq {
       StreamOps.BatchTag, "cluster_id", StreamOps.scaledSinkBuckets(stream))
     StreamOps.sinkBatches(spark, stream, queryName, table,
         checkpointLocation) { (b, _) =>
-      val encoded = encodeWith(b, idCol, vecCol, cents, books)
-        .localCheckpoint(true)
+      val encoded = Checkpoints.stage(
+        encodeWith(b, idCol, vecCol, cents, books))
       (encoded, Seq.empty)
     }
   }
@@ -237,7 +237,7 @@ object IvfPq {
     * The quantizer side tables are already compact (k-row).
     * `purge = true` physically drops tombstoned vectors during the
     * rewrite and clears the tombstone list (the streaming layout's
-    * purge — WinnowIndex.compact documents the shared contract);
+    * purge — PairIndex.compact documents the shared contract);
     * `idCol` names the index's id column for the purge anti-join. */
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,

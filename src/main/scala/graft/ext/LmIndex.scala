@@ -585,7 +585,7 @@ object LmIndex {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = StreamOps.foreachBatchSink(stream, queryName,
         checkpointLocation) { (batch, batchId) =>
-      val b = batch.localCheckpoint(true)
+      val b = Checkpoints.stage(batch)
       n.incrementAndGet()
       val wave = s"batch-$batchId"
       // The two batch waves OVERLAP (r22, guide §2.6): unlike append,

@@ -283,11 +283,10 @@ object Mixing {
         groupCol, Seq("__mix_h", idCol), "tok", outCol = "__cum")
       // Materialize the kept set before the ledger side-write lands —
       // the plan reads _totals, which that write is about to mutate.
-      val kept = withCum
+      val kept = Checkpoints.stage(withCum
         .join(prior, Seq(groupCol), "left")
         .where(col("__cum") + coalesce(col("__prior"), lit(0L)) <= budget)
-        .select(col(idCol), col(groupCol), col("tok"))
-        .localCheckpoint(true)
+        .select(col(idCol), col(groupCol), col("tok")))
       val ledger = rows.groupBy(col(groupCol))
         .agg(coalesce(sum(col("tok")), lit(0L)).as("total_tok"))
       (kept, Seq((table + "_totals") -> ledger))

@@ -160,9 +160,9 @@ object PostingsIndex {
   def delete(spark: SparkSession, table: String, ids: DataFrame): Unit = {
     val t = table + "_tombstones"
     val d = ids.select(col("id")).distinct()
-    val fresh = (if (!spark.catalog.tableExists(t)) d
+    val fresh = Checkpoints.stage(
+      if (!spark.catalog.tableExists(t)) d
       else d.join(spark.table(t), Seq("id"), "left_anti"))
-      .localCheckpoint(true)
     // The wave's corpus mass, measured while the wave is still
     // un-tombstoned: docs never in `_docs` (unknown ids) contribute
     // nothing; docs of an earlier wave were filtered by the anti-join.
@@ -208,7 +208,7 @@ object PostingsIndex {
   }
 
   /** Physically purge tombstoned docs from all three tables via
-    * STAGE-AND-SWAP ([[PurgeSwap]] — WinnowIndex.purgeTombstones has
+    * STAGE-AND-SWAP ([[PurgeSwap]] — PairIndex.purgeTombstones has
     * the full contract): the live postings, doc lengths, and a
     * recomputed stats row are each staged into the same bucketed
     * layouts (every stage write reads only live tables), then swapped
@@ -417,7 +417,7 @@ object PostingsIndex {
       // Postings and doc lengths both read the batch; stage it once.
       // dls feeds both the stats and the `_docs` write.
       val b = Checkpoints.stage(raw)
-      val dls = docLengths(b, idCol, textCol).localCheckpoint(true)
+      val dls = Checkpoints.stage(docLengths(b, idCol, textCol))
       val post = postings(b, idCol, textCol)
       (statsOf(dls), Seq(table -> post, (table + "_docs") -> dls))
     }
@@ -438,7 +438,7 @@ object PostingsIndex {
               checkpointLocation: Option[String] = None,
               purge: Boolean = false): Int = {
     // `purge = true`: the streaming layout's physical purge
-    // (WinnowIndex.compact documents the shared contract) with the
+    // (PairIndex.compact documents the shared contract) with the
     // BM25 twist purgeTombstones has in batch form — the stats must
     // shed the purged docs' mass. Postings and `_docs` anti-join the
     // tombstones during their rewrites; `_stats` is then RECOMPUTED

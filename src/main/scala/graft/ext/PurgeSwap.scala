@@ -6,8 +6,8 @@ import graft.io.Writer
 
 /** Stage-and-swap machinery for the index families' physical purges.
   *
-  * The r14/r15 purge implementations snapshotted the ENTIRE index via
-  * `localCheckpoint(true)` before a `SaveMode.Overwrite` that dropped
+  * The r14/r15 purge implementations snapshotted the ENTIRE index into
+  * an eager local checkpoint before a `SaveMode.Overwrite` that dropped
   * the only other copy — a corpus-sized memory/storage spike, and a
   * mid-purge executor loss could lose the snapshot blocks while the
   * table files were already gone. Stage-and-swap removes both hazards:

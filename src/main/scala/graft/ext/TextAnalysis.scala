@@ -1179,8 +1179,8 @@ object TextAnalysis {
         StructField(StreamOps.BatchTag, LongType))),
       // Source-byte-derived (r22, guide §6 — scaledSinkBuckets doc).
       StreamOps.BatchTag, idCol, StreamOps.scaledSinkBuckets(stream))
-    val g = grid.localCheckpoint(true)
-    val d = dflt.localCheckpoint(true)
+    val g = Checkpoints.stage(grid)
+    val d = Checkpoints.stage(dflt)
     StreamOps.sinkBatches(spark, stream, queryName, table,
         checkpointLocation) { (raw, _) =>
       // nbScore reads the batch twice (doc-word pairs, labels).

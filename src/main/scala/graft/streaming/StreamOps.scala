@@ -499,7 +499,7 @@ object StreamOps {
     * of one micro-batch, run CONCURRENTLY: the streaming ingests pay
     * two inserts per batch (index append + pairs sink) whose plans
     * share no live table (the probe stages its pair set before the
-    * append — DedupIndex doc), so their jobs overlap instead of
+    * append — PairIndex.probe doc), so their jobs overlap instead of
     * serializing — the profile's two largest per-batch terms. The
     * partitionOverwriteMode conf is a ONE-WAY dynamic latch
     * (Writer.ensureDynamicOverwrite): any save/restore racing a
@@ -754,14 +754,15 @@ object StreamOps {
     * last committed batch instead of reprocessing the input — without
     * it the run is exactly-once only within one driver lifetime), and
     * RACE-FREE by construction (no cross-thread `var`;
-    * the one counter is an AtomicInteger). Shared by
-    * DedupIndex.streamIngest and WinnowIndex.streamIngest, whose
-    * per-batch outputs are provably disjoint (a pair is emitted only
-    * by the batch its later member arrives in), so reading the sink
-    * back needs no distinct — a per-batch distinct would re-shuffle
-    * the whole accumulated set every batch, O(batches²) at ingest
-    * scale. Returns (sink contents minus the tag, batches
-    * processed).
+    * the one counter is an AtomicInteger). The micro-batch loop of
+    * every sink-table stream operator: the pair-index ingests
+    * (graft.ext.PairIndex), decontamination, postings, PQ, mixing,
+    * curation and text classification. The sink is read back with no
+    * distinct — the pair ingests' per-batch outputs are provably
+    * disjoint (a pair is emitted only by the batch its later member
+    * arrives in), and a per-batch distinct would re-shuffle the whole
+    * accumulated set every batch, O(batches²) at ingest scale.
+    * Returns (sink contents minus the tag, batches processed).
     *
     * `perBatch` returns the batch's sink rows PLUS any side writes —
     * (table, rows) pairs whose plans are independent of the sink rows'
@@ -772,7 +773,8 @@ object StreamOps {
     * re-reads the batch's source slice (files or memory rows). A
     * closure that reads it once (a banding or encoding pass whose
     * output it stages) pays no barrier; one that reads it more than
-    * once stages it on its first line (PostingsIndex, Mixing). */
+    * once stages it on its first line (PostingsIndex, Mixing,
+    * TextAnalysis). */
   def sinkBatches(spark: SparkSession, stream: DataFrame, queryName: String,
                   sinkTable: String,
                   checkpointLocation: Option[String] = None)(

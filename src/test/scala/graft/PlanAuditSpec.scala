@@ -159,7 +159,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("WinnowIndex.probeNewBatch: left_semi posting restriction below the sizing agg, no hints") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val table = "graft_plan_audit_winnow_idx"
@@ -179,6 +179,19 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(a.exists { case j: Join => j.joinType == LeftSemi; case _ => false },
         s"sizing aggregate not fed by the left_semi restriction:\n$opt")
     }
+    // ONE groupBy on `fp` sizes the postings and collects their
+    // members (the DedupIndex census shape): no inner join is left —
+    // only the left_semi restriction and the tombstone left_anti.
+    val keyed = opt.collect {
+      case a: Aggregate if a.groupingExpressions.flatMap(_.references.map(_.name))
+          .toSet == Set("fp") => a
+    }
+    assert(keyed.size == 1 &&
+      keyed.head.aggregateExpressions.exists(_.name == graft.ext.SkipReport.CountCol),
+      s"expected exactly one Aggregate keyed on fp carrying the census count, got ${keyed.size}:\n$opt")
+    val joinTypes = opt.collect { case j: Join => j.joinType }
+    assert(joinTypes.forall(t => t == LeftSemi || t == LeftAnti),
+      s"probeNewBatch must plan no inner join, got ${joinTypes.mkString(", ")}:\n$opt")
     opt.collect { case j: Join => j.hint }.foreach { h =>
       assert(h.leftHint.isEmpty && h.rightHint.isEmpty,
         s"probeNewBatch must not carry join hints:\n$opt")

@@ -292,6 +292,53 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("streamIngest under reliable checkpointing: every stream barrier lands in the conf'd dir, pairs unchanged") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft_stream_ckpt_spec_").toString
+    val inDir = s"$base/in"
+    Files.createDirectories(Paths.get(inDir))
+    Seq(corpus.where(col("doc_id") < 50 || col("doc_id") === 100L),
+        corpus.where(col("doc_id") >= 50 && col("doc_id") =!= 100L))
+      .zipWithIndex.foreach { case (df, i) =>
+        val w = s"$base/w$i"
+        df.coalesce(1).write.mode("overwrite").parquet(w)
+        val part = new java.io.File(w).listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+          .get
+        Files.move(part.toPath, Paths.get(inDir, s"shard_$i.parquet"))
+      }
+    def run(table: String): (Set[(Long, Long)], Int) = {
+      val stream = spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir)
+      val (acc, n) = DedupIndex.streamIngest(spark, table, stream,
+        "doc_id", "text", params, queryName = table)
+      (acc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, n)
+    }
+    val tables = Seq("graft_stream_ckpt_local", "graft_stream_ckpt_reliable")
+    val dir = Files.createTempDirectory("graft_ckpt_stream_").toString
+    try {
+      val (local, _) = run(tables(0))
+      spark.conf.set(Checkpoints.ConfKey, dir)
+      val (reliable, n) = run(tables(1))
+      assert(n == 2, s"expected 2 micro-batches, got $n")
+      assert(reliable == local,
+        s"reliable checkpointing changed the pairs: extra=${reliable -- local} missing=${local -- reliable}")
+      // Each batch has two barriers — its staged bands and the probe's
+      // staged pair set — and each must be a reliable checkpoint: one
+      // rdd-<id> directory apiece under the configured dir.
+      val rdds = Files.walk(Paths.get(dir))
+        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+        .count()
+      assert(rdds == 2L * n,
+        s"expected ${2 * n} reliable checkpoints (bands + pairs per batch), found $rdds")
+    } finally {
+      spark.conf.unset(Checkpoints.ConfKey)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      tables.flatMap(t => Seq(t, t + "_pairs"))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
   test("DedupIndex: probe equals full recompute restricted to new-touching pairs; append extends the index") {
     import scala.util.chaining._
     // Index the 63-doc corpus, then arrive with a batch holding: a
@@ -638,6 +685,61 @@ class DedupSpec extends AnyFunSuite {
     WinnowIndex.append(spark, table, batch, "doc_id", "text")
     assert(spark.table(table).count() == before,
       "re-appending an already-indexed shard must not add postings")
+  }
+
+  test("WinnowIndex: probe equals one-shot winnowPairs when the posting cap binds on batch docs") {
+    // A boilerplate footer in three indexed docs and two batch docs
+    // posts its interior fingerprints five times, past a cap of 2 or
+    // 3; the batch pair (10, 11) also shares a passage of its own (a
+    // new–new pair whose n_shared the cap must shrink, not drop), and
+    // batch doc 12 quotes a passage two indexed docs hold (3 postings:
+    // kept at cap 3, dropped at cap 2).
+    val boiler = "standard legal disclaimer footer attached to every single page"
+    val p = "a private passage only the two arriving documents ever share"
+    val q = "an older quotation two indexed documents already carried around"
+    val old = Seq(
+      (1L, s"first indexed body about rivers $boiler"),
+      (2L, s"second indexed body about mountains $boiler"),
+      (3L, s"third indexed body about deserts $boiler"),
+      (4L, s"fourth indexed body that says $q and stops"),
+      (5L, s"fifth indexed body which also says $q and ends"),
+      (6L, "sixth indexed body sharing nothing with any arrival")
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, s"new arrival ten opens with $p then $boiler"),
+      (11L, s"new arrival eleven repeats $p before $boiler"),
+      (12L, s"new arrival twelve quotes $q verbatim"),
+      (13L, "new arrival thirteen quotes nothing from anyone at all")
+    ).toDF("doc_id", "text")
+    val all = old.unionByName(batch)
+    val newIds = Set(10L, 11L, 12L, 13L)
+    def touching(cap: Int): Map[(Long, Long), Long] =
+      Dedup.winnowPairs(all, "doc_id", "text", maxPostings = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .filter { case ((a, b), _) => newIds(a) || newIds(b) }.toMap
+    val table = "graft_winnow_idx_cap_spec"
+    WinnowIndex.build(old, "doc_id", "text", table)
+    val uncapped = touching(1000)
+    val batchPostings = WinnowIndex.postings(batch, "doc_id", "text", 8, 4)
+    Seq(2, 3).foreach { cap =>
+      val probe = WinnowIndex.probeNewBatch(spark, table, batch, "doc_id", "text",
+          maxPostings = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val full = touching(cap)
+      assert(probe == full, s"cap $cap: probe $probe != one-shot restricted $full")
+      // The cap binds on the batch: over-cap fingerprints are posted by
+      // batch docs, the boilerplate-only pairs are gone, and the new–new
+      // pair survives with its boilerplate fingerprints no longer counted.
+      val hot = Dedup.winnowOversized(all, "doc_id", "text", maxPostings = cap)
+        .join(batchPostings, Seq("fp"), "left_semi")
+      assert(hot.count() > 0, s"cap $cap: no over-cap fingerprint is posted by a batch doc")
+      assert(uncapped.contains((1L, 10L)) && !probe.contains((1L, 10L)),
+        s"cap $cap: the boilerplate-only pair must be dropped by the cap")
+      assert(probe.contains((10L, 11L)) && probe((10L, 11L)) < uncapped((10L, 11L)),
+        s"cap $cap: new-new pair must survive with a capped n_shared: $probe vs $uncapped")
+      assert(probe.contains((4L, 12L)) == (cap >= 3),
+        s"cap $cap: the 3-posting quotation must pair only at cap 3: $probe")
+    }
   }
 
   test("WinnowIndex.streamIngest: micro-batched shards accumulate the one-shot pair set, n_shared exact") {

@@ -152,6 +152,75 @@ class IvfIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("streamIngest: a vector deleted between batches pairs with no later batch; later pairs equal a stream over the live rows") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 8)
+    val threshold = 0.35
+    def shard(i: Int) = e.where(pmod(col("vec_id"), lit(3)) === i)
+    // The victim: an id of shards 0–1 that pairs with a shard-2 vector
+    // in the one-shot cell-blocked pair set, so an unfiltered probe of
+    // shard 2 would emit it.
+    val victim = Similarity.cosinePairsWithin(
+        Similarity.ivfAssign(e, "vec_id", "embedding", cents),
+        "vec_id", "embedding", "cluster_id", threshold, maxBlockSize = Int.MaxValue)
+      .select(col("id_a"), col("id_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .collectFirst { case (a, b) if (a % 3 == 2) != (b % 3 == 2) =>
+        if (a % 3 == 2) b else a }
+      .getOrElse(fail("fixture has no pair across shard 2 — lower the threshold"))
+    // Shards 0 and 1, then shard 2 on a restart of the same checkpoint;
+    // `between` runs while the stream is quiesced. Returns shard 2's
+    // pairs (batch 2's sink partition).
+    def ingest(t: String, first: Seq[org.apache.spark.sql.DataFrame],
+               between: () => Unit): Set[(Long, Long, Double)] = {
+      val base = Files.createTempDirectory("graft_ivf_takedown_spec_").toString
+      val inDir = s"$base/in"
+      Files.createDirectories(Paths.get(inDir))
+      def addShard(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        val w = s"$base/w_$name"
+        df.coalesce(1).write.mode("overwrite").parquet(w)
+        val part = new java.io.File(w).listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+        Files.move(part.toPath, Paths.get(inDir, s"$name.parquet"))
+      }
+      def run(): Int = {
+        val stream = spark.readStream.schema(e.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        IvfIndex.streamIngest(spark, t, stream, "vec_id", "embedding", cents,
+          threshold = threshold, queryName = t,
+          checkpointLocation = Some(s"$base/ckpt"))._2
+      }
+      first.zipWithIndex.foreach { case (df, i) => addShard(df, s"shard_$i") }
+      assert(run() == 2, "shards 0-1 must arrive as two batches")
+      between()
+      addShard(shard(2), "shard_2")
+      assert(run() == 1, "the restart must process only shard 2")
+      spark.table(t + "_pairs").where(col(StreamOps.BatchTag) === 2L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    val (tDel, tLive) = ("graft_ivf_takedown_spec", "graft_ivf_takedown_live_spec")
+    def dropAll(): Unit = Seq(tDel, tLive)
+      .flatMap(t => Seq(t, t + "_pairs", t + "_tombstones", IvfIndex.centroidsTable(t)))
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    dropAll()
+    try {
+      val deleted = ingest(tDel, Seq(shard(0), shard(1)),
+        () => IvfIndex.delete(spark, tDel, Seq(victim).toDF("id")))
+      val live = ingest(tLive,
+        Seq(shard(0), shard(1)).map(_.where(col("vec_id") =!= victim)), () => ())
+      assert(deleted.nonEmpty, "shard 2 produced no pairs — lower the threshold")
+      assert(!deleted.exists { case (a, b, _) => a == victim || b == victim },
+        s"deleted vector $victim still pairs with shard 2: $deleted")
+      assert(deleted == live,
+        s"takedown-filtered pairs diverge from a stream over the live rows: " +
+          s"extra=${deleted -- live} missing=${live -- deleted}")
+    } finally dropAll()
+  }
+
   test("excludeBatch: a crashed attempt's orphaned index append does not inflate the vector probe") {
     import graft.streaming.StreamOps
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}

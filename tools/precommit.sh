@@ -15,6 +15,15 @@
 # SKIP_SMOKE=1 when testdata is known-good and iterating fast.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# Barrier policy: every graft.ext barrier goes through Checkpoints.stage,
+# so spark.graft.checkpointDir reaches all of them. A direct
+# localCheckpoint( call anywhere else in the package fails the gate.
+if direct=$(grep -rn --include='*.scala' 'localCheckpoint(' src/main/scala/graft/ext \
+    | grep -v '^src/main/scala/graft/ext/Checkpoints\.scala:'); then
+  echo "precommit: direct localCheckpoint( in graft.ext — use Checkpoints.stage:" >&2
+  echo "$direct" >&2
+  exit 1
+fi
 if [[ "${1:-}" == "test" ]]; then
   sbt -batch test
 else
