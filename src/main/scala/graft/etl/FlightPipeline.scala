@@ -13,23 +13,28 @@ import graft.quality.{Completeness, Timeliness, Uniqueness, Validity}
   *
   * Differences from the reference, by design (SURVEY §4): the reference
   * rescans the CSV for every check — the completeness census, the dup
-  * census, the dedup and each validity rule's filter+count. `run`
-  * computes each stage of the data once:
-  *   - one CSV decode: the raw scan is persisted, and the single
-  *     count(*) + per-column non-null aggregation that fills the cache
-  *     also gives `totalRows` and the all-null drop list;
-  *   - one all-column shuffle: groupBy(all kept columns) with a copy
-  *     count is both the dedup (one row per group) and the exact-dup
-  *     census (groups with more than one copy); time derivation runs on
-  *     it and the result is persisted;
-  *   - one global pass over that cache: the row count after dedup, the
-  *     exact-dup census, every validity rule's failure count and the
-  *     min/max day that bounds the calendar-gap check.
-  * The compound-key census and the daily series for the gap join stay
-  * keyed shuffles of their own. None of this changes a result:
-  * FlightPipelineSpec checks the Report against the unfused library
-  * calls (Completeness.dropAllNull, Uniqueness.exactDupGroups/dropDups,
-  * Validity.report, the two-argument Timeliness.calendarGaps).
+  * census, the dedup and each validity rule's filter+count — and joins
+  * a generated date dimension for the calendar gaps. `run` computes
+  * each stage of the data once:
+  *   - one CSV decode, inside the map stage of one all-column shuffle:
+  *     groupBy(all raw columns) with a copy count is both the dedup
+  *     (one row per group) and the exact-dup census (groups with more
+  *     than one copy). A column that is null in every row is constant,
+  *     so it splits no group; time derivation runs on the groups and
+  *     the result is the one cache;
+  *   - one global aggregation over that cache: the row counts before
+  *     (sum of copies) and after dedup, the exact-dup census, each raw
+  *     column's non-null count (zero = dropped, as in the reference),
+  *     every validity rule's failure count (the rules on dropped
+  *     columns are discarded afterwards) and the sorted set of present
+  *     days;
+  *   - the calendar gaps are the days missing from that set between
+  *     its first and last day, found on the driver.
+  * The compound-key census stays a keyed shuffle of its own. None of
+  * this changes a result: FlightPipelineSpec checks the Report against
+  * the unfused library calls (Completeness.dropAllNull,
+  * Uniqueness.exactDupGroups/dropDups, Validity.report,
+  * Timeliness.calendarGaps).
   */
 object FlightPipeline {
 
@@ -124,11 +129,11 @@ object FlightPipeline {
     gapDays: Seq[java.sql.Date],
     cleaned: DataFrame)
 
-  /** The pipeline re-adds these as typed null columns when the census
-    * drops them: the timestamp derivation and the compound key read
-    * them (e.g. a file of only cancelled flights has all-null DepTime).
-    * The data was all null anyway, so derived values are identical and
-    * nothing crashes downstream. */
+  /** The cleaned output keeps these, as all-null columns typed from the
+    * schema, when the census drops them: the timestamp derivation and
+    * the compound key read them (e.g. a file of only cancelled flights
+    * has all-null DepTime). The data was all null anyway, so derived
+    * values are identical and nothing crashes downstream. */
   private val requiredColumns: Seq[String] = Seq("Year", "Month", "DayofMonth", "DepTime",
     "FlightNum", "Origin", "UniqueCarrier")
 
@@ -145,41 +150,43 @@ object FlightPipeline {
   private val copies = "__copies"
 
   def run(spark: SparkSession, path: String, asOfYear: Int): Report = {
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // One CSV decode: the census fills the raw cache and yields the row
-    // count and the drop list (Completeness.dropAllNull's rule: zero
-    // non-null values). Everything after it reads the cache.
-    val raw = load(spark, path).persist(level)
-    val census = raw.agg(count(lit(1)),
-      raw.columns.toSeq.map(c => count(col(c))): _*).first()
-    val totalRows = census.getLong(0)
-    val dropped = raw.columns.toSeq.zipWithIndex.collect {
-      case (c, i) if census.getLong(i + 1) == 0L => c
-    }
-    val kept = withRequiredColumns(if (dropped.isEmpty) raw else raw.drop(dropped: _*))
-    // One all-column shuffle: a group is a deduped row, its size says
-    // whether that row had exact duplicates.
-    val deduped = deriveTimestamps(kept.groupBy(kept.columns.toSeq.map(col): _*)
-      .agg(count(lit(1)).as(copies))).persist(level)
-    // One global pass over the deduped cache (which it fills).
-    val applicableRules = referenceRulesWithColumns(asOfYear).collect {
-      case (rule, column) if !dropped.contains(column) => rule
-    }
-    val day = col("DepTime_Date").cast("date")
-    val global = deduped.agg(count(lit(1)).as("rows"),
-      Seq(count(when(col(copies) > 1, lit(1))).as("dup_groups"),
-        min(day).as("lo"), max(day).as("hi"))
-        ++ Validity.failureCounts(applicableRules): _*).first()
-    // Everything downstream reads `deduped`; don't pin the raw scan.
-    raw.unpersist()
-    val validity = applicableRules.map(r => r.name -> global.getAs[Long](r.name)).toMap
-    val compoundDups = Uniqueness.compoundDupGroups(deduped, compoundKey)
+    val raw = load(spark, path)
+    val rawColumns = raw.columns.toSeq
+    // One CSV decode, in the map stage of one all-column shuffle: a
+    // group is a deduped row, its size says whether that row had exact
+    // duplicates. A column that is null in every row is constant, so
+    // grouping on it before the census drops it gives the same groups.
+    val groups = deriveTimestamps(raw.groupBy(rawColumns.map(col): _*)
+      .agg(count(lit(1)).as(copies)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // One aggregation over the groups (which it fills): the row counts
+    // before and after dedup, the exact-dup census, the completeness
+    // census (Completeness.dropAllNull's rule: zero non-null values),
+    // every validity rule's failure count and the set of present days.
+    val rules = referenceRulesWithColumns(asOfYear)
+    val global = groups.agg(count(lit(1)).as("rows"),
+      Seq(coalesce(sum(col(copies)), lit(0L)).as("total_rows"),
+        count(when(col(copies) > 1, lit(1))).as("dup_groups"),
+        array_sort(collect_set(col("DepTime_Date").cast("date"))).as("days"))
+        ++ rawColumns.map(c => count(col(c)).as(c))
+        ++ Validity.failureCounts(rules.map(_._1)): _*).first()
+    val dropped = rawColumns.filter(c => global.getAs[Long](c) == 0L)
+    val validity = rules.collect {
+      case (rule, column) if !dropped.contains(column) => rule.name -> global.getAs[Long](rule.name)
+    }.toMap
+    // The calendar is bounded by the present days, so its gaps are a
+    // driver-side walk over a set no larger than the date dimension.
+    val gaps = Timeliness.missingDays(
+      global.getSeq[java.sql.Date](global.fieldIndex("days")).map(_.toLocalDate))
+      .map(java.sql.Date.valueOf)
+    // A dropped required column is null in every group; it stays after
+    // the kept columns, in withRequiredColumns' order.
+    val derived = groups.columns.toSeq.diff(rawColumns :+ copies)
+    val cleaned = groups.select((rawColumns.filterNot(dropped.contains)
+      ++ requiredColumns.filter(dropped.contains) ++ derived).map(col): _*)
+    val compoundDups = Uniqueness.compoundDupGroups(cleaned, compoundKey)
       .agg(count(lit(1))).first().getLong(0)
-    val daily = Timeliness.dailyCounts(deduped, col("DepTime_Date"))
-    val gaps = Timeliness.calendarGaps(spark, daily,
-      global.getAs[java.sql.Date]("lo"), global.getAs[java.sql.Date]("hi"))
-      .collect().map(_.getDate(0)).toSeq
-    Report(dropped, totalRows, global.getAs[Long]("dup_groups"), global.getAs[Long]("rows"),
-      compoundDups, validity, gaps, deduped.drop(copies))
+    Report(dropped, global.getAs[Long]("total_rows"), global.getAs[Long]("dup_groups"),
+      global.getAs[Long]("rows"), compoundDups, validity, gaps, cleaned)
   }
 }

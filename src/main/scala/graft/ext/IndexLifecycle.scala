@@ -24,7 +24,8 @@ import graft.io.Writer
   *   - a streaming ingest keeps prior state ONLY when its checkpoint
   *     has committed batches ([[resumeAwareTableMaker]]): a fresh
   *     checkpoint with a leftover table is a drop-and-recreate, never
-  *     a silent merge.
+  *     a silent merge, and the recreate drops the table's takedown
+  *     list with it.
   *
   * The keyed-pair families (DedupIndex, WinnowIndex, and IvfIndex's
   * stream ingest) go one step further: build, append, purge, the probe
@@ -188,13 +189,18 @@ private[graft] object IndexLifecycle {
   /** The streaming-resume table maker: keep prior state only when the
     * checkpoint has committed batches (fresh checkpoint + leftover
     * table = drop-and-recreate, not a silent merge — the DedupIndex
-    * streamIngest lesson, shared by every family's ingest). */
+    * streamIngest lesson, shared by every family's ingest). The
+    * recreate drops the table's `<table>_tombstones` too: a fresh
+    * index must not hide ids an earlier run took down. */
   def resumeAwareTableMaker(spark: SparkSession,
                             checkpointLocation: Option[String])
       : (SparkSession, String, StructType, String, String, Int) => Unit = {
     val resuming = checkpointLocation.exists(cp =>
       graft.streaming.StreamOps.lastCommittedBatch(spark, cp).isDefined)
     if (resuming) Writer.ensurePartitionedBucketedTable _
-    else Writer.emptyPartitionedBucketedTable _
+    else { (s, table, schema, partitionCol, key, buckets) =>
+      Writer.dropTableAndLocation(s, tombstonesOf(table))
+      Writer.emptyPartitionedBucketedTable(s, table, schema, partitionCol, key, buckets)
+    }
   }
 }

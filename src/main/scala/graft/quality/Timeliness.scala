@@ -64,6 +64,20 @@ object Timeliness {
     }.orderBy(col(dayCol))
   }
 
+  /** The days in [min, max] of `present` that it lacks, in order:
+    * [[calendarGaps]] for a caller that already holds the present days
+    * on the driver (a set no larger than the date dimension the join
+    * form generates). No days give no gaps. */
+  def missingDays(present: Seq[java.time.LocalDate]): Seq[java.time.LocalDate] =
+    if (present.isEmpty) Nil
+    else {
+      val have = present.toSet
+      val lo = present.minBy(_.toEpochDay)
+      val hi = present.maxBy(_.toEpochDay)
+      Iterator.iterate(lo)(_.plusDays(1)).takeWhile(!_.isAfter(hi))
+        .filterNot(have.contains).toSeq
+    }
+
   /** Calendar days in [min(day), max(day)] with zero rows (reference J1). */
   def calendarGaps(spark: SparkSession, dailyIn: DataFrame): DataFrame = {
     // Two consumers (the min/max bounds collect + the gap join): persist

@@ -2,10 +2,12 @@ package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
@@ -48,6 +50,16 @@ class FlightPipelineSpec extends AnyFunSuite {
     "2008,3,1,6,700,700,830,835,DL,1,N1,90,95,80,-5,0,ATL,BNA,214,5,5,0,,0,,,,,",
     "2008,3,2,7,,900,,1015,AA,2,N2,,,,,,JFK,ORD,740,,,1,B,0,,,,,", // cancelled only
     "2008,3,3,1,700,700,830,835,DL,3,N3,90,95,80,-5,0,ATL,BNA,214,5,5,0,,0,,,,,"))
+
+  /** The mini fixture plus a pair of rows that differ only in TailNum:
+    * numeric ("316") in one copy, alphanumeric (null under the int
+    * schema) in the other. TailNum is then non-null in exactly one row,
+    * so it is kept, and the pair is two groups, not an exact duplicate. */
+  private def tailNumKeptByOne(): Path = {
+    val row = "2008,1,6,7,805,800,930,935,AA,105,%s,85,95,75,-5,5,JFK,BOS,187,5,5,0,,0,,,,,"
+    csvDir("graft_tailnum_one", Files.readAllLines(Paths.get(miniPath)).asScala.toSeq.drop(1)
+      ++ Seq(row.format("316"), row.format("N128AB")))
+  }
 
   /** Deterministic generator mirroring the recorded 2008 slice's SHAPE
     * (.dbc pos=13.0/19.0/21.0/23.0): 29 columns, alphanumeric TailNum
@@ -209,13 +221,24 @@ class FlightPipelineSpec extends AnyFunSuite {
 
   test("fused run equals the unfused library calls on every fixture") {
     val inputs = Seq("mini" -> Paths.get(miniPath), "2008 shape" -> shape2008(),
-      "cancelled only" -> cancelledOnly(), "cancelled day" -> cancelledDay())
+      "cancelled only" -> cancelledOnly(), "cancelled day" -> cancelledDay(),
+      "TailNum kept by one value" -> tailNumKeptByOne())
     inputs.foreach { case (name, path) =>
       withClue(s"$name: ") {
         assertSameReport(FlightPipeline.run(spark, path.toString, asOfYear = 2009),
           unfused(path.toString, asOfYear = 2009))
       }
     }
+  }
+
+  test("a column non-null in one row is kept, and its value splits an otherwise exact-duplicate pair") {
+    val dir = tailNumKeptByOne()
+    val rep = FlightPipeline.run(spark, dir.toString, asOfYear = 2009)
+    assert(rep.droppedColumns.isEmpty)
+    assert(rep.cleaned.where(col("TailNum") === 316).count() == 1)
+    // The mini fixture's planted pair is the only exact duplicate: the
+    // two copies that differ in TailNum stay two rows.
+    assert(rep.totalRows == 17 && rep.exactDupGroups == 1 && rep.rowsAfterDedup == 16)
   }
 
   test("header-only CSV: a zero Report, no crash") {
@@ -249,7 +272,7 @@ class FlightPipelineSpec extends AnyFunSuite {
     case other => other.children.flatMap(nodes(_, seen))
   })
 
-  test("one pass: one executed plan decodes the CSV, one shuffle keys on all kept columns") {
+  test("one pass: one executed plan decodes the CSV, one shuffle keys on all raw columns") {
     // A fresh copy: no cache from another run over the same path can
     // stand in for this run's work.
     val dir = Files.createTempDirectory("graft_onepass")
@@ -276,23 +299,39 @@ class FlightPipelineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
 
     val seen = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    import scala.jdk.CollectionConverters._
     val walked = plans.asScala.toSeq.map(nodes(_, seen))
-    val decodes = walked.count(_.exists {
+    def decodesCsv(p: SparkPlan): Boolean = p match {
       case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(dir.getFileName.toString))
       case _ => false
-    })
+    }
+    val decodes = walked.count(_.exists(decodesCsv))
     assert(decodes == 1, s"plans decoding the CSV: $decodes")
-    val kept = rep.cleaned.columns.toSet --
-      Set("DepTime_Hour", "DepTime_Min", "DepTime_Timestamp", "DepTime_Date")
     val allColumnShuffles = walked.flatten.count {
       case e: ShuffleExchangeExec => e.outputPartitioning match {
         case h: HashPartitioning =>
-          h.expressions.collect { case a: Attribute => a.name }.toSet == kept
+          h.expressions.collect { case a: Attribute => a.name }.toSet ==
+            FlightSchema.schema.fieldNames.toSet
         case _ => false
       }
       case _ => false
     }
     assert(allColumnShuffles == 1, s"all-column shuffles: $allColumnShuffles")
+    // The decode feeds the shuffle directly: no cache holds raw CSV
+    // rows, i.e. no cached plan reaches the scan without a shuffle.
+    def rawRows(p: SparkPlan): Boolean = p match {
+      case _: ShuffleExchangeExec | _: ShuffleQueryStageExec => false
+      case a: AdaptiveSparkPlanExec => rawRows(a.executedPlan)
+      case q: QueryStageExec => rawRows(q.plan)
+      case other => decodesCsv(other) || other.children.exists(rawRows)
+    }
+    val rawCaches = walked.flatten.collect {
+      case m: InMemoryTableScanExec if rawRows(m.relation.cachedPlan) => m.relation
+    }
+    assert(rawCaches.isEmpty, s"caches of the raw scan: $rawCaches")
+    // The calendar gaps come from the present days, not from a joined
+    // date dimension.
+    val ranges = walked.flatten.count(_.isInstanceOf[RangeExec])
+    assert(ranges == 0, s"date-dimension range scans: $ranges")
+    assert(rep.gapDays.map(_.toString) == Seq("2008-01-04"))
   }
 }

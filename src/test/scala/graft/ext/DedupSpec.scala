@@ -1029,6 +1029,50 @@ class DedupSpec extends AnyFunSuite {
     assert(staleIds == 0, s"leftover index rows survived a fresh checkpoint: $staleIds")
   }
 
+  test("a FRESH stream ingest drops an earlier run's takedowns; a resumed one keeps them") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val shared = "this exact passage appears verbatim in both documents today"
+    val docs = Seq(
+      (1L, s"left context totally different $shared and then some more"),
+      (2L, s"late arrival also containing $shared in its middle part")).toDF("doc_id", "text")
+    val base = Files.createTempDirectory("graft_fresh_tombstones_").toString
+    def addShard(inDir: String, id: Long): Unit = {
+      Files.createDirectories(Paths.get(inDir))
+      val w = s"$base/w$id"
+      docs.where(col("doc_id") === id).coalesce(1).write.mode("overwrite").parquet(w)
+      val part = new java.io.File(w).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, Paths.get(inDir, s"shard_$id.parquet"))
+    }
+    def ingest(table: String, inDir: String, ckpt: Option[String]): Set[(Long, Long)] = {
+      val stream = spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir)
+      WinnowIndex.streamIngest(spark, table, stream, "doc_id", "text",
+        queryName = "fresh_tombstones_spec", checkpointLocation = ckpt)._1
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    // Fresh runs: the second one rebuilds the index, so the first
+    // run's takedown of doc 1 must not hide the pair.
+    val fresh = "graft_fresh_tombstones_spec"
+    Seq(1L, 2L).foreach(addShard(s"$base/in", _))
+    assert(ingest(fresh, s"$base/in", None) == Set((1L, 2L)))
+    WinnowIndex.delete(spark, fresh, Seq(1L).toDF("id"))
+    assert(ingest(fresh, s"$base/in", None) == Set((1L, 2L)),
+      "a fresh ingest inherited the earlier run's takedowns")
+    assert(!spark.catalog.tableExists(IndexLifecycle.tombstonesOf(fresh)))
+    // A resumed run continues the same index: the takedown stands.
+    val resumed = "graft_resumed_tombstones_spec"
+    val ckpt = Some(s"$base/ckpt")
+    addShard(s"$base/in_resumed", 1L)
+    assert(ingest(resumed, s"$base/in_resumed", ckpt).isEmpty)
+    WinnowIndex.delete(spark, resumed, Seq(1L).toDF("id"))
+    addShard(s"$base/in_resumed", 2L)
+    assert(ingest(resumed, s"$base/in_resumed", ckpt).isEmpty,
+      "a resumed ingest paired a taken-down doc")
+    assert(spark.catalog.tableExists(IndexLifecycle.tombstonesOf(resumed)))
+  }
+
   test("crossCorpusPairs + decontaminate: planted leak flagged, clean train survives whole") {
     import spark.implicits._
     val evalDocs = Seq(

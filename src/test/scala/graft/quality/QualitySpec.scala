@@ -128,6 +128,28 @@ class QualitySpec extends AnyFunSuite {
     assert(Timeliness.calendarGaps(spark, daily().limit(0), null, null).count() == 0)
   }
 
+  test("missingDays (driver) equals the calendarGaps join on random day sets across Feb 29 and a year end") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val first = java.time.LocalDate.parse("2007-12-20")
+    val span = 81 // through 2008-03-09: crosses 2008-01-01 and 2008-02-29
+    def agrees(present: Seq[java.time.LocalDate]): Boolean = {
+      val daily = present.map(d => (java.sql.Date.valueOf(d), 1L)).toDF("day", "n")
+      val (lo, hi) =
+        if (present.isEmpty) (null, null)
+        else (java.sql.Date.valueOf(present.minBy(_.toEpochDay)),
+          java.sql.Date.valueOf(present.maxBy(_.toEpochDay)))
+      val joined = Timeliness.calendarGaps(spark, daily, lo, hi)
+        .collect().map(_.getDate(0).toLocalDate).toSeq
+      Timeliness.missingDays(present) == joined
+    }
+    assert(agrees(Nil))
+    assert(agrees(Seq(java.time.LocalDate.parse("2008-02-29"))))
+    val days = Gen.listOf(Gen.choose(0, span - 1)).map(_.distinct.map(first.plusDays(_)))
+    val prop = Prop.forAll(days)(agrees)
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("gapFill: zero-fill counts, LOCF gauges across planted gaps") {
     val daily = Seq(
       ("2024-03-01", 5L, 1.5), ("2024-03-04", 7L, 9.0))
