@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   *     scores are bit-identical to the per-query probes'.
   *   - [[rerankFloat]]: ONE exact-cosine scan over the union of the
   *     per-query shortlists through a single pushed In(id) filter over
-  *     the union cells — the [[IvfPq.probeBatch]] stage-2 shape,
-  *     shared verbatim (IvfPq now calls this), so the re-rank
-  *     expression can never drift between families.
+  *     the union cells — the one batched re-rank tail of both IVF
+  *     families, so the re-rank expression can never drift between
+  *     them.
   *
   * Null convention: a member row whose score is null (null vector
   * element, dims mismatch, zero int8 direction) is KEPT with a null
@@ -81,18 +81,29 @@ private[ext] object BatchProbe {
   }
 
   /** Stage 2: exact-cosine re-rank of per-query shortlists in ONE
-    * scan — a single pushed In(id) filter over the union cells, each
-    * row fanned out only to the queries whose shortlist holds it, then
-    * a per-query top-k rank window (WindowGroupLimit). Extracted
-    * verbatim from [[IvfPq.probeBatch]] (which now calls this), reused
-    * by [[IvfIndex.probeBatchQuantized]]. Output (query_id, idCol,
+    * scan. `shortlist` carries (query_id, idCol) rows — each query's
+    * shortlist, collected here (a queries×shortlist-scale driver
+    * collect, the single probes' shape). Then a single pushed In(id)
+    * filter over the union cells, each row fanned out only to the
+    * queries whose shortlist holds it, then a per-query top-k rank
+    * window (WindowGroupLimit). Serves [[IvfPq.probeBatch]] and
+    * [[IvfIndex.probeBatchQuantized]]. Output (query_id, idCol,
     * cos_sim) ordered (query_id, cos_sim DESC, id); per query the rows
     * are bit-identical to the single probes' float re-rank. */
   def rerankFloat(spark: SparkSession, table: String, idCol: String,
                   vecCol: String, queries: Seq[(Long, Seq[Float])],
-                  unionCells: Seq[Int], shortByQ: Map[Long, Seq[Any]],
-                  unionIds: IndexedSeq[Any], k: Int): DataFrame = {
+                  unionCells: Seq[Int], shortlist: DataFrame,
+                  k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val shortRows = shortlist.select(col("query_id"), col(idCol)).collect()
+    val shortByQ: Map[Long, Seq[Any]] = shortRows
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.get(1)).toSeq).toMap
+    val unionIds = shortRows.map(_.get(1)).distinct.toIndexedSeq
+    if (unionIds.isEmpty)
+      // Degenerate (empty probed cells): the single probe returns an
+      // empty frame too; keep the schema (idCol typed from the table).
+      return spark.table(table).where(lit(false))
+        .select(lit(0L).as("query_id"), col(idCol), lit(0.0).as("cos_sim"))
     val idT = spark.table(table).schema(idCol).dataType
     val qids2 = array(queries.map(q => lit(q._1)): _*)
     val ids2d = array(queries.map { case (qid, _) =>

@@ -157,60 +157,27 @@ object IvfIndex {
     * ([[cellSkew]] detects it): retrain Lloyd centroids on the LIVE
     * corpus (current rows minus tombstones) and rewrite the index
     * under the new cell layout, physically purging tombstoned rows in
-    * the same pass. The result is BIT-IDENTICAL to `build(live)` with
-    * the same (k, iters) — Lloyd is deterministic — which is the
-    * contract IvfRebalanceSpec pins probe-for-probe.
+    * the same pass. It runs [[build]]'s own encoder and [[publish]],
+    * only into the staging names, so the result is BIT-IDENTICAL to
+    * `build(live)` with the same (k, iters) by construction (Lloyd is
+    * deterministic) — the contract IvfRebalanceSpec pins
+    * probe-for-probe.
     *
     * Crash discipline (the PurgeSwap doctrine extended to a TWO-table
-    * swap): both staged tables are written FIRST (reads only — the
-    * live index keeps serving), then the 1-row in-flight marker
-    * appears, then both swaps run and the tombstone list drops, then
-    * the marker drops. A crash before the marker leaves the old index
-    * intact (stagings are garbage). A crash after it leaves the staged
-    * layout as the index-of-record: [[recoverRebalance]] — run at
-    * every probe and lifecycle entry — completes the remaining swaps
-    * idempotently, so the mixed-layout window (new cells + old
-    * centroids) lasts only until ANY next contact, and the index is
-    * never lost. */
+    * swap, [[rebalanceCells]]): both staged tables are written FIRST
+    * (reads only — the live index keeps serving), then the 1-row
+    * in-flight marker appears, then both swaps run and the tombstone
+    * list drops, then the marker drops. A crash before the marker
+    * leaves the old index intact (stagings are garbage). A crash after
+    * it leaves the staged layout as the index-of-record:
+    * [[recoverRebalance]] — run at every probe and lifecycle entry —
+    * completes the remaining swaps idempotently, so the mixed-layout
+    * window (new cells + old centroids) lasts only until ANY next
+    * contact, and the index is never lost. */
   def rebalance(spark: SparkSession, table: String, idCol: String,
-                vecCol: String, k: Int = 16, iters: Int = 2): Unit = {
-    recoverRebalance(spark, table)
-    val cT = centroidsTable(table)
-    val live = minusTombstones(spark, table, idCol,
-        spark.table(table))
-      .select(col(idCol), col(vecCol))
-    val cents = Similarity.ivfTrain(live, idCol, vecCol, k, iters)
-    val stage = PurgeSwap.stagingOf(table)
-    // DDL-created staging (Writer.emptyPartitionedTable doc): a
-    // saveAsTable(partitionBy) staging would register partitions with
-    // explicit staging-path locations the swap's RENAME cannot
-    // rewrite — the renamed index would scan a vanished directory.
-    Writer.emptyPartitionedTable(spark, stage,
-      org.apache.spark.sql.types.StructType(Seq(
-        live.schema(idCol), live.schema(vecCol),
-        org.apache.spark.sql.types.StructField("qv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.ByteType)),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.IntegerType))),
-      "cluster_id")
-    Quantize.withQuantized(
-        Similarity.ivfAssign(live, idCol, vecCol, cents), vecCol, "qv")
-      .withColumn("qv", col("qv").cast("array<tinyint>"))
-      .select(col(idCol), col(vecCol), col("qv"), col("cluster_id"))
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.insertInto(stage)
-    val cStage = PurgeSwap.stagingOf(cT)
-    Writer.dropTableAndLocation(spark, cStage)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(cStage)
-    IndexLifecycle.markSwap(spark, table, Seq(table, cT))
-    IndexLifecycle.finishSwap(spark, table)
-  }
+                vecCol: String, k: Int = 16, iters: Int = 2): Unit =
+    rebalanceCells(spark, cellTables(table), idCol, vecCol)(
+      encodeAndPublish(_, idCol, vecCol, table, PurgeSwap.stagingOf, k, iters))
 
   /** Heal a crashed rebalance swap (marker present) — delegated to
     * [[IndexLifecycle.recoverSwap]] (the marker's rows name the tables
@@ -220,8 +187,10 @@ object IvfIndex {
     IndexLifecycle.recoverSwap(spark, table)
 
   /** Train (Lloyd, exact-decimal means — deterministic), assign, and
-    * save. Returns the trained centroids so a caller that also wants
-    * on-the-fly queries needn't read them back.
+    * save through [[publish]]. Returns the trained centroids so a
+    * caller that also wants on-the-fly queries needn't read them back.
+    * A build into a reused name starts clean ([[clearCells]]): no
+    * takedowns of the old index, no leftover rebalance marker.
     *
     * Alongside the float vector, the saved row carries `qv` — the
     * per-vector-scaled int8 quantization (graft.ext.Quantize) stored
@@ -233,35 +202,28 @@ object IvfIndex {
     * slightly under the nominal 4×). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, table: String,
             k: Int = 16, iters: Int = 2): Seq[Seq[Float]] = {
-    val spark = corpus.sparkSession
-    Writer.dropTableAndLocation(spark, table)
-    Writer.dropTableAndLocation(spark, centroidsTable(table))
-    val cents = Similarity.ivfTrain(corpus, idCol, vecCol, k, iters)
-    // COMPACT layout: repartition on cluster_id before the partitioned
-    // save — one file per cluster directory instead of one per input
-    // partition per cluster (up to 32x fewer files; measured: probe
-    // input bytes were DOMINATED by footer reads of the tiny files,
-    // not column data). Rows sorted by id within each file so the
-    // quantized re-rank's pushed In(id) filter can skip row groups at
-    // volume. A cluster is one write task here; a deployment whose
-    // single cluster exceeds a task adds a salt expression to the
-    // repartition (more, still-large files per cluster).
-    Quantize.withQuantized(
-        Similarity.ivfAssign(corpus, idCol, vecCol, cents), vecCol, "qv")
-      .withColumn("qv", col("qv").cast("array<tinyint>"))
-      .select(col(idCol), col(vecCol), col("qv"), col("cluster_id"))
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id")
-      .format("parquet")
-      .saveAsTable(table)
-    import spark.implicits._
-    cents.zipWithIndex
-      .map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(centroidsTable(table))
+    clearCells(corpus.sparkSession, cellTables(table))
+    encodeAndPublish(corpus, idCol, vecCol, table, identity, k, iters)
+  }
+
+  /** The tables a build writes and a rebalance swaps, main first. */
+  private def cellTables(table: String): Seq[String] =
+    Seq(table, centroidsTable(table))
+
+  /** This family's encoder — Lloyd centroids on `rows`, each row's
+    * cell, and its int8 `qv` column — published under `name` of the
+    * index's table names (live for [[build]], staging for
+    * [[rebalance]]). Returns the centroids. */
+  private def encodeAndPublish(rows: DataFrame, idCol: String, vecCol: String,
+                               table: String, name: String => String,
+                               k: Int, iters: Int): Seq[Seq[Float]] = {
+    val cents = Similarity.ivfTrain(rows, idCol, vecCol, k, iters)
+    publish(rows.sparkSession, table, name,
+      Quantize.withQuantized(
+          Similarity.ivfAssign(rows, idCol, vecCol, cents), vecCol, "qv")
+        .withColumn("qv", col("qv").cast("array<tinyint>"))
+        .select(col(idCol), col(vecCol), col("qv"), col("cluster_id")),
+      idCol, cents, None)
     cents
   }
 
@@ -288,11 +250,12 @@ object IvfIndex {
   def delete(spark: SparkSession, table: String, ids: DataFrame): Unit =
     IndexLifecycle.registerTombstones(spark, table, ids)
 
-  private def minusTombstones(spark: SparkSession, table: String,
-                              idCol: String, rows: DataFrame): DataFrame = {
-    // The probe chokepoint doubles as the rebalance-recovery hook: a
-    // crashed two-table swap (marker present) completes before any
-    // read, so the mixed-layout window never outlives one contact.
+  /** Both cell-partitioned families' probe chokepoint. It doubles as
+    * the rebalance-recovery hook: a crashed marked swap completes
+    * before any read, so the mixed-layout window never outlives one
+    * contact. */
+  private[ext] def minusTombstones(spark: SparkSession, table: String,
+                                   idCol: String, rows: DataFrame): DataFrame = {
     recoverRebalance(spark, table)
     IndexLifecycle.minusTombstones(spark, table, rows, idCol)
   }
@@ -330,7 +293,7 @@ object IvfIndex {
     */
   private[ext] def purgeTouchedCells(spark: SparkSession, table: String,
                                      idCol: String): Long = {
-    val t = table + "_tombstones"
+    val t = IndexLifecycle.tombstonesOf(table)
     if (!spark.catalog.tableExists(t)) return 0L
     IndexLifecycle.requireBatchLayout(spark, table, Seq("cluster_id"),
       "purgeTombstones")
@@ -345,14 +308,11 @@ object IvfIndex {
     val touched = perCell.map(_.getAs[Int]("cluster_id")).toIndexedSeq
     val removed = perCell.map(_.getAs[Long]("__n")).sum
     val staging = PurgeSwap.stagingOf(table)
-    Writer.dropTableAndLocation(spark, staging)
-    spark.table(table)
+    val kept = spark.table(table)
       .where(col("cluster_id").isin(touched: _*))
       .join(stones, Seq(idCol), "left_anti")
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.partitionBy("cluster_id").format("parquet")
-      .saveAsTable(staging)
+    Writer.emptyPartitionedTable(spark, staging, kept.schema, "cluster_id")
+    writeCells(kept, idCol, staging)
     // One-way dynamic-overwrite latch (Writer.ensureDynamicOverwrite):
     // the old save/set/restore could race a concurrent family's
     // in-flight dynamic write under r21's overlapped sweep phases
@@ -367,6 +327,89 @@ object IvfIndex {
     spark.sql(s"DROP TABLE `$t`")
     spark.catalog.refreshTable(table)
     removed
+  }
+
+  /** Build's clear step for both cell-partitioned families (`tables`
+    * = main first, then its side tables). The rebalance marker drops
+    * FIRST, then every staging table: a staging table without its
+    * marker is garbage under the PurgeSwap doctrine, so a crashed
+    * rebalance's stale marker can never later swap its stagings over
+    * the fresh build. Then the live tables and the tombstone list — a
+    * rebuilt index hides no id the old index took down. */
+  private[ext] def clearCells(spark: SparkSession, tables: Seq[String]): Unit = {
+    Writer.dropTableAndLocation(spark, IndexLifecycle.rebalanceMarkerOf(tables.head))
+    (tables.map(PurgeSwap.stagingOf) ++ tables :+
+        IndexLifecycle.tombstonesOf(tables.head))
+      .foreach(Writer.dropTableAndLocation(spark, _))
+  }
+
+  /** Rebalance for both cell-partitioned families: heal a crashed
+    * swap, hand the LIVE rows (tombstones filtered) to `publishStaged`
+    * — the family's build encoder plus [[publish]] under the
+    * PurgeSwap.stagingOf names — then the marked swap of `tables`.
+    * Every staging table is complete before the marker is written. */
+  private[ext] def rebalanceCells(spark: SparkSession, tables: Seq[String],
+                                  idCol: String, vecCol: String)(
+      publishStaged: DataFrame => Unit): Unit = {
+    val table = tables.head
+    IndexLifecycle.recoverSwap(spark, table)
+    publishStaged(minusTombstones(spark, table, idCol, spark.table(table))
+      .select(col(idCol), col(vecCol)))
+    IndexLifecycle.markSwap(spark, table, tables)
+    IndexLifecycle.finishSwap(spark, table)
+  }
+
+  /** Write an encoded cell layout under `name` of the index's table
+    * names: the cell-partitioned main table — DDL-created, then
+    * [[writeCells]] (a saveAsTable(partitionBy) table registers its
+    * partitions at explicit locations that a swap's RENAME cannot
+    * rewrite, the Writer.emptyPartitionedTable doc) — then the
+    * quantizer side tables (`books` only for IvfPq). */
+  private[ext] def publish(spark: SparkSession, table: String,
+                           name: String => String, cells: DataFrame,
+                           idCol: String, cents: Seq[Seq[Float]],
+                           books: Option[Seq[Seq[Seq[Float]]]]): Unit = {
+    Writer.emptyPartitionedTable(spark, name(table), cells.schema, "cluster_id")
+    writeCells(cells, idCol, name(table))
+    writeCentroids(spark, name(centroidsTable(table)), cents)
+    books.foreach(writeCodebooks(spark, name(IvfPq.codebooksTable(table)), _))
+  }
+
+  /** Append cell rows (partition column last) to a cell-partitioned
+    * table. COMPACT layout: repartition on cluster_id first — one file
+    * per cluster directory instead of one per input partition per
+    * cluster (up to 32x fewer files; measured: probe input bytes were
+    * DOMINATED by footer reads of the tiny files, not column data).
+    * Rows sorted by id within each file so the quantized re-rank's
+    * pushed In(id) filter can skip row groups at volume. A cluster is
+    * one write task here; a deployment whose single cluster exceeds a
+    * task adds a salt expression to the repartition (more, still-large
+    * files per cluster). */
+  private[ext] def writeCells(cells: DataFrame, idCol: String,
+                              target: String): Unit =
+    cells.repartition(col("cluster_id"))
+      .sortWithinPartitions(col("cluster_id"), col(idCol))
+      .write.insertInto(target)
+
+  /** The k-row centroids side table (cluster_id, centroid). */
+  private[ext] def writeCentroids(spark: SparkSession, target: String,
+                                  cents: Seq[Seq[Float]]): Unit = {
+    import spark.implicits._
+    Writer.dropTableAndLocation(spark, target)
+    cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cluster_id", "centroid")
+      .write.format("parquet").saveAsTable(target)
+  }
+
+  /** The (m·kPq)-row codebooks side table (subspace, code, centroid). */
+  private[ext] def writeCodebooks(spark: SparkSession, target: String,
+                                  books: Seq[Seq[Seq[Float]]]): Unit = {
+    import spark.implicits._
+    Writer.dropTableAndLocation(spark, target)
+    books.zipWithIndex.flatMap { case (bk, j) =>
+      bk.zipWithIndex.map { case (c, code) => (j, code, c) }
+    }.toDF("subspace", "code", "centroid")
+      .write.format("parquet").saveAsTable(target)
   }
 
   def probeTopK(spark: SparkSession, table: String, idCol: String,
@@ -542,11 +585,7 @@ object IvfIndex {
     // would silently mis-prune probes against them. The centroids
     // table is rewritten on restart because it is derived from the
     // argument, not state.
-    Writer.dropTableAndLocation(spark, centroidsTable(table))
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.format("parquet").saveAsTable(centroidsTable(table))
+    writeCentroids(spark, centroidsTable(table), centroids)
     PairIndex.streamIngest(spark, table, stream, queryName, checkpointLocation,
         Seq(StructField(idCol, stream.schema(idCol).dataType),
           StructField(vecCol, stream.schema(vecCol).dataType),
@@ -575,10 +614,21 @@ object IvfIndex {
                          vecCol: String, query: Seq[Float], k: Int,
                          nProbe: Int, shortlist: Int = 0): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 4 * k
-    val shortIds = quantizedPreRank(spark, table, idCol, query, nProbe, sl)
-      .select(col(idCol)).collect().map(_.get(0))
-    val cents = centroids(spark, table)
-    val probe = Similarity.probeClusters(cents, query, nProbe)
+    rerankShortlist(spark, table, idCol, vecCol, query, k, nProbe,
+      quantizedPreRank(spark, table, idCol, query, nProbe, sl))
+  }
+
+  /** The single probes' exact float re-rank, shared by
+    * [[probeTopKQuantized]] and [[IvfPq.probeTopK]]: collect the
+    * shortlist's ids (a k-scale driver collect), read their float
+    * vectors through a pushed In(id) filter over the probed cells,
+    * top-k by exact cosine. */
+  private[ext] def rerankShortlist(spark: SparkSession, table: String,
+                                   idCol: String, vecCol: String,
+                                   query: Seq[Float], k: Int, nProbe: Int,
+                                   shortlist: DataFrame): DataFrame = {
+    val shortIds = shortlist.select(col(idCol)).collect().map(_.get(0))
+    val probe = Similarity.probeClusters(centroids(spark, table), query, nProbe)
     val q = array(query.map(v => lit(v.toDouble)): _*)
     spark.table(table).where(col("cluster_id").isin(probe: _*))
       .where(col(idCol).isin(shortIds.toIndexedSeq: _*))
@@ -590,7 +640,7 @@ object IvfIndex {
   /** Per-query probed cells and their union — the one set of
     * partitions a batch probe's scans open; shared head of both batch
     * tiers. */
-  private def batchCells(cents: Seq[Seq[Float]],
+  private[ext] def batchCells(cents: Seq[Seq[Float]],
                          queries: Seq[(Long, Seq[Float])], nProbe: Int)
       : (Map[Long, Seq[Int]], Seq[Int]) = {
     val probedCells = queries.map { case (qid, q) =>
@@ -599,7 +649,7 @@ object IvfIndex {
     (probedCells, probedCells.values.flatten.toSeq.distinct)
   }
 
-  private def requireBatch(queries: Seq[(Long, Seq[Float])]): Unit = {
+  private[ext] def requireBatch(queries: Seq[(Long, Seq[Float])]): Unit = {
     require(queries.nonEmpty && queries.size <= 64,
       s"probeBatch takes 1-64 queries, got ${queries.size}")
     require(queries.map(_._1).distinct.size == queries.size,
@@ -704,19 +754,9 @@ object IvfIndex {
       qq, ones, probedCells, zeroNull = true)
     val wQ = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc_nulls_last, col(idCol))
-    val shortRows = scored.withColumn("__rn", row_number().over(wQ))
+    val shortRanked = scored.withColumn("__rn", row_number().over(wQ))
       .where(col("__rn") <= sl)
-      .select(col("query_id"), col(idCol))
-      .collect()
-    val shortByQ: Map[Long, Seq[Any]] = shortRows
-      .groupBy(_.getLong(0)).view.mapValues(_.map(_.get(1)).toSeq).toMap
-    val unionIds = shortRows.map(_.get(1)).distinct.toIndexedSeq
-    if (unionIds.isEmpty)
-      // Degenerate (empty probed cells): the single probe returns an
-      // empty frame too; keep the schema (idCol typed from the table).
-      return spark.table(table).where(lit(false))
-        .select(lit(0L).as("query_id"), col(idCol), lit(0.0).as("cos_sim"))
-    BatchProbe.rerankFloat(spark, table, idCol, vecCol, queries,
-      unionCells, shortByQ, unionIds, k)
+    BatchProbe.rerankFloat(spark, table, idCol, vecCol, queries, unionCells,
+      shortRanked, k)
   }
 }

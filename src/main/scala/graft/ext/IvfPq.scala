@@ -1,9 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.io.Writer
 
 /** IVFADC — the composed serving index (Jégou et al. 2011, §IV
   * "IVFADC: coarse quantizer + PQ-encoded RESIDUALS"): IVF cells give
@@ -82,71 +80,70 @@ object IvfPq {
       (a, b) => a - b)
   }
 
-  /** Train both quantizers and persist one serving layout: rows
-    * (id, vec, pq_code, cluster_id) PARTITIONED by `cluster_id` (the
-    * IvfIndex compact layout — one file per cell, id-sorted so the
-    * re-rank's pushed In(id) filter skips row groups), plus the k-row
-    * `_centroids` and (m·kPq)-row `_codebooks` side tables, so probes
-    * need only the table name. `pq_code` packs the RESIDUAL codes;
-    * the codebooks table stores the residual codebooks. Returns
-    * (centroids, codebooks) for callers that probe immediately. */
+  /** Train both quantizers and persist one serving layout through
+    * [[IvfIndex.publish]]: rows (id, vec, pq_code, cluster_id)
+    * PARTITIONED by `cluster_id` (the IvfIndex compact layout — one
+    * file per cell, id-sorted so the re-rank's pushed In(id) filter
+    * skips row groups), plus the k-row `_centroids` and (m·kPq)-row
+    * `_codebooks` side tables, so probes need only the table name.
+    * `pq_code` packs the RESIDUAL codes; the codebooks table stores
+    * the residual codebooks. A build into a reused name starts clean
+    * ([[IvfIndex.clearCells]]). Returns (centroids, codebooks) for
+    * callers that probe immediately. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, table: String,
             kCells: Int = 16, ivfIters: Int = 2, m: Int = 8,
             kPq: Int = 128, pqIters: Int = 3)
       : (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    val spark = corpus.sparkSession
-    Writer.dropTableAndLocation(spark, table)
-    Writer.dropTableAndLocation(spark, IvfIndex.centroidsTable(table))
-    Writer.dropTableAndLocation(spark, codebooksTable(table))
-    Writer.dropTableAndLocation(spark, table + "_tombstones")
-    val cents = Similarity.ivfTrain(corpus, idCol, vecCol, kCells, ivfIters)
-    val refs = cents.map(unitRef)
+    IvfIndex.clearCells(corpus.sparkSession, cellTables(table))
+    encodeAndPublish(corpus, idCol, vecCol, table, identity,
+      kCells, ivfIters, m, kPq, pqIters)
+  }
+
+  /** The tables a build writes and a rebalance swaps, main first. */
+  private def cellTables(table: String): Seq[String] =
+    Seq(table, IvfIndex.centroidsTable(table), codebooksTable(table))
+
+  /** This family's encoder — Lloyd cells, residual codebooks trained
+    * on the cell residuals, and the packed codes ([[encodeWith]]) —
+    * published under `name` of the index's table names (live for
+    * [[build]], staging for [[rebalance]]). */
+  private def encodeAndPublish(rows: DataFrame, idCol: String, vecCol: String,
+                               table: String, name: String => String,
+                               kCells: Int, ivfIters: Int, m: Int, kPq: Int,
+                               pqIters: Int)
+      : (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
+    val cents = Similarity.ivfTrain(rows, idCol, vecCol, kCells, ivfIters)
     // Cell assignment, normalization, and the residual ride ONE
     // staged projection — assignment and residual computed once, the
     // codebook training and the encode pass both read it. Staged
     // through the barrier POLICY (corpus-sized, multi-pass) and
     // released as soon as the encode pass lands.
-    val withRes = Checkpoints.stage(Pq.withUnit(
-        Similarity.ivfAssign(corpus, idCol, vecCol, cents), vecCol, "__u")
-      .withColumn("__r", residualCol(col("__u"), col("cluster_id"), refs)))
+    val withRes = Checkpoints.stage(residuals(rows, idCol, vecCol, cents))
     val books = Pq.trainCodebooksOn(withRes, idCol, "__r", m, kPq, pqIters)
-    Pq.packCodesOn(withRes, "__r", "pq_code", books)
-      .select(col(idCol), col(vecCol), col("pq_code"), col("cluster_id"))
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster_id")
-      .format("parquet")
-      .saveAsTable(table)
+    IvfIndex.publish(rows.sparkSession, table, name,
+      encodeWith(withRes, idCol, vecCol, books), idCol, cents, Some(books))
     Checkpoints.release(withRes)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(IvfIndex.centroidsTable(table))
-    books.zipWithIndex.flatMap { case (bk, j) =>
-      bk.zipWithIndex.map { case (c, code) => (j, code, c) }
-    }.toDF("subspace", "code", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(codebooksTable(table))
     (cents, books)
   }
 
-  /** Encode a batch against FIXED quantizers: cell-assign, residual,
-    * pack — the pure (vec, centroids, codebooks) → row function both
-    * [[build]] and [[append]] run, so an appended vector's code is
-    * bit-identical to the code a build with the same quantizers would
-    * store. */
-  private def encodeWith(batch: DataFrame, idCol: String, vecCol: String,
-                         cents: Seq[Seq[Float]],
-                         books: Seq[Seq[Seq[Float]]]): DataFrame = {
-    val refs = cents.map(unitRef)
-    val withRes = Pq.withUnit(
+  /** Cell-assign `batch` under FIXED centroids and add its residual
+    * `__r` (unit vector minus the cell's reference). */
+  private def residuals(batch: DataFrame, idCol: String, vecCol: String,
+                        cents: Seq[Seq[Float]]): DataFrame =
+    Pq.withUnit(
         Similarity.ivfAssign(batch, idCol, vecCol, cents), vecCol, "__u")
-      .withColumn("__r", residualCol(col("__u"), col("cluster_id"), refs))
+      .withColumn("__r",
+        residualCol(col("__u"), col("cluster_id"), cents.map(unitRef)))
+
+  /** Pack [[residuals]] against FIXED codebooks into the cell rows —
+    * with [[residuals]], the pure (vec, centroids, codebooks) → row
+    * function [[build]], [[append]] and [[streamIngest]] all run, so an
+    * appended vector's code is bit-identical to the code a build with
+    * the same quantizers would store. */
+  private def encodeWith(withRes: DataFrame, idCol: String, vecCol: String,
+                         books: Seq[Seq[Seq[Float]]]): DataFrame =
     Pq.packCodesOn(withRes, "__r", "pq_code", books)
       .select(col(idCol), col(vecCol), col("pq_code"), col("cluster_id"))
-  }
 
   /** Append a batch to a saved index WITHOUT retraining: the standard
     * IVFADC serve-time ingest (Jégou et al. §IV — quantizers are
@@ -162,13 +159,8 @@ object IvfPq {
   def append(spark: SparkSession, table: String, batch: DataFrame,
              idCol: String, vecCol: String): Unit = {
     val cents = IvfIndex.centroids(spark, table)
-    val books = codebooks(spark, table)
-    encodeWith(batch, idCol, vecCol, cents, books)
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.mode(SaveMode.Append)
-      .format("parquet")
-      .insertInto(table)
+    IvfIndex.writeCells(encodeWith(residuals(batch, idCol, vecCol, cents),
+      idCol, vecCol, codebooks(spark, table)), idCol, table)
     spark.catalog.refreshTable(table)
   }
 
@@ -200,16 +192,8 @@ object IvfPq {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val idType = stream.schema(idCol).dataType
     val vecType = stream.schema(vecCol).dataType
-    import spark.implicits._
-    Writer.dropTableAndLocation(spark, IvfIndex.centroidsTable(table))
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.format("parquet").saveAsTable(IvfIndex.centroidsTable(table))
-    Writer.dropTableAndLocation(spark, codebooksTable(table))
-    books.zipWithIndex.flatMap { case (bk, j) =>
-      bk.zipWithIndex.map { case (c, code) => (j, code, c) }
-    }.toDF("subspace", "code", "centroid")
-      .write.format("parquet").saveAsTable(codebooksTable(table))
+    IvfIndex.writeCentroids(spark, IvfIndex.centroidsTable(table), cents)
+    IvfIndex.writeCodebooks(spark, codebooksTable(table), books)
     // Keep prior rows only when the checkpoint has committed batches
     // (fresh checkpoint + leftover table = drop, not silent merge).
     val mkTable = IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)
@@ -225,7 +209,7 @@ object IvfPq {
     StreamOps.sinkBatches(spark, stream, queryName, table,
         checkpointLocation) { (b, _) =>
       val encoded = Checkpoints.stage(
-        encodeWith(b, idCol, vecCol, cents, books))
+        encodeWith(residuals(b, idCol, vecCol, cents), idCol, vecCol, books))
       (encoded, Seq.empty)
     }
   }
@@ -257,72 +241,24 @@ object IvfPq {
     * distribution-drift story: retrain BOTH quantizer stages (Lloyd
     * cells AND the residual codebooks — drifted data moves residual
     * geometry too) on the live corpus, re-encode, and rewrite all
-    * three state tables, purging tombstones in the same pass. The
-    * result is BIT-IDENTICAL to `build(live)` with the same
-    * parameters (both trainers are deterministic) — pinned in
-    * IvfRebalanceSpec.
+    * three state tables, purging tombstones in the same pass. It runs
+    * [[build]]'s own encoder and [[IvfIndex.publish]], only into the
+    * staging names, so the result is BIT-IDENTICAL to `build(live)`
+    * with the same parameters by construction (both trainers are
+    * deterministic) — pinned in IvfRebalanceSpec.
     *
     * Crash discipline: the shared marked multi-table swap
-    * ([[IndexLifecycle.markSwap]] rows name main + centroids +
-    * codebooks), written only after ALL three stagings are complete;
-    * every probe's first contact (the [[IvfIndex.centroids]] read)
-    * heals a crashed swap idempotently whichever family owns the
-    * table. The MAIN staging is DDL-created + insertInto (the
-    * Writer.emptyPartitionedTable doc: a saveAsTable staging's
-    * partition locations do not survive the rename). */
+    * ([[IvfIndex.rebalanceCells]]; the [[IndexLifecycle.markSwap]]
+    * rows name main + centroids + codebooks), written only after ALL
+    * three stagings are complete; every probe's first contact (the
+    * [[IvfIndex.centroids]] read) heals a crashed swap idempotently
+    * whichever family owns the table. */
   def rebalance(spark: SparkSession, table: String, idCol: String,
                 vecCol: String, kCells: Int = 16, ivfIters: Int = 2,
-                m: Int = 8, kPq: Int = 128, pqIters: Int = 3): Unit = {
-    IndexLifecycle.recoverSwap(spark, table)
-    val cT = IvfIndex.centroidsTable(table)
-    val bT = codebooksTable(table)
-    val live = minusTombstones(spark, table, idCol, spark.table(table))
-      .select(col(idCol), col(vecCol))
-    val cents = Similarity.ivfTrain(live, idCol, vecCol, kCells, ivfIters)
-    val refs = cents.map(unitRef)
-    val withRes = Checkpoints.stage(Pq.withUnit(
-        Similarity.ivfAssign(live, idCol, vecCol, cents), vecCol, "__u")
-      .withColumn("__r", residualCol(col("__u"), col("cluster_id"), refs)))
-    val books = Pq.trainCodebooksOn(withRes, idCol, "__r", m, kPq, pqIters)
-    val stage = PurgeSwap.stagingOf(table)
-    Writer.emptyPartitionedTable(spark, stage,
-      org.apache.spark.sql.types.StructType(Seq(
-        live.schema(idCol), live.schema(vecCol),
-        org.apache.spark.sql.types.StructField("pq_code",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.IntegerType))),
-      "cluster_id")
-    Pq.packCodesOn(withRes, "__r", "pq_code", books)
-      .select(col(idCol), col(vecCol), col("pq_code"), col("cluster_id"))
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col(idCol))
-      .write.insertInto(stage)
-    Checkpoints.release(withRes)
-    import spark.implicits._
-    val cStage = PurgeSwap.stagingOf(cT)
-    Writer.dropTableAndLocation(spark, cStage)
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cluster_id", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(cStage)
-    val bStage = PurgeSwap.stagingOf(bT)
-    Writer.dropTableAndLocation(spark, bStage)
-    books.zipWithIndex.flatMap { case (bk, j) =>
-      bk.zipWithIndex.map { case (c, code) => (j, code, c) }
-    }.toDF("subspace", "code", "centroid")
-      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(bStage)
-    IndexLifecycle.markSwap(spark, table, Seq(table, cT, bT))
-    IndexLifecycle.finishSwap(spark, table)
-  }
-
-  private def minusTombstones(spark: SparkSession, table: String,
-                              idCol: String, rows: DataFrame): DataFrame = {
-    // Probe chokepoint doubles as rebalance-swap recovery (the
-    // IvfIndex.minusTombstones twin) — first contact is usually the
-    // centroids read, which also recovers.
-    IndexLifecycle.recoverSwap(spark, table)
-    IndexLifecycle.minusTombstones(spark, table, rows, idCol)
-  }
+                m: Int = 8, kPq: Int = 128, pqIters: Int = 3): Unit =
+    IvfIndex.rebalanceCells(spark, cellTables(table), idCol, vecCol)(
+      encodeAndPublish(_, idCol, vecCol, table, PurgeSwap.stagingOf,
+        kCells, ivfIters, m, kPq, pqIters))
 
   /** Physically purge tombstoned vectors by dynamic partition
     * overwrite of ONLY the touched cells — the shared cell-partitioned
@@ -379,7 +315,7 @@ object IvfPq {
     val cents = IvfIndex.centroids(spark, table)
     val probe = Similarity.probeClusters(cents, query, nProbe)
     val books = codebooks(spark, table)
-    minusTombstones(spark, table, idCol,
+    IvfIndex.minusTombstones(spark, table, idCol,
         spark.table(table).where(col("cluster_id").isin(probe: _*)))
       .select(col(idCol), ivfadcScore(query, cents, books).as("pq_score"))
       .orderBy(col("pq_score").desc, col(idCol))
@@ -399,17 +335,8 @@ object IvfPq {
                 shortlist: Int = 0): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 4 * k
     require(sl >= k, s"shortlist $sl < topK $k")
-    val shortIds = adcShortlist(spark, table, idCol, query, nProbe, sl)
-      .select(col(idCol)).collect().map(_.get(0))
-    val cents = IvfIndex.centroids(spark, table)
-    val probe = Similarity.probeClusters(cents, query, nProbe)
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    spark.table(table).where(col("cluster_id").isin(probe: _*))
-      .where(col(idCol).isin(shortIds.toIndexedSeq: _*))
-      .select(col(idCol),
-        Similarity.cosineIn(col(vecCol), q).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    IvfIndex.rerankShortlist(spark, table, idCol, vecCol, query, k, nProbe,
+      adcShortlist(spark, table, idCol, query, nProbe, sl))
   }
 
   /** The batched ADC shortlist stage, split out LAZY so its scan
@@ -451,8 +378,8 @@ object IvfPq {
     // nProbe = 0) must keep the array<int> element type — a bare
     // array() types array<null>, failing both the kernel's struct
     // type check and element_at analysis instead of degrading to
-    // zero-member gracefully (the ids2d cast in probeBatch's re-rank
-    // is the same guard).
+    // zero-member gracefully (the ids2d cast in
+    // BatchProbe.rerankFloat is the same guard).
     val cells2d = array(queries.map { case (qid, _) =>
       val mine = probedCells(qid)
       if (mine.isEmpty)
@@ -461,7 +388,7 @@ object IvfPq {
       else array(mine.map(lit): _*)
     }: _*)
     val qids = array(queries.map(q => lit(q._1)): _*)
-    val stacked = minusTombstones(spark, table, idCol,
+    val stacked = IvfIndex.minusTombstones(spark, table, idCol,
         spark.table(table).where(col("cluster_id").isin(unionCells: _*)))
       .select(col(idCol), col("cluster_id"), col("pq_code"))
       .select(col(idCol),
@@ -513,10 +440,7 @@ object IvfPq {
                  nProbe: Int, shortlist: Int = 0,
                  prepared: Option[(Seq[Seq[Float]], Seq[Seq[Seq[Float]]])] =
                    None): DataFrame = {
-    require(queries.nonEmpty && queries.size <= 64,
-      s"probeBatch takes 1-64 queries, got ${queries.size}")
-    require(queries.map(_._1).distinct.size == queries.size,
-      "query ids must be distinct")
+    IvfIndex.requireBatch(queries)
     val sl = if (shortlist > 0) shortlist else 4 * k
     require(sl >= k, s"shortlist $sl < topK $k")
     // `prepared` = (centroids, codebooks) loaded ONCE by a serving
@@ -527,31 +451,15 @@ object IvfPq {
     // don't pass it. Values are identical either way.
     val (cents, books) = prepared.getOrElse(
       (IvfIndex.centroids(spark, table), codebooks(spark, table)))
-    // Per-query probed cells (k-row driver work per query) and their
-    // union — the one set of partitions either scan opens.
-    val probedCells: Map[Long, Seq[Int]] = queries.map { case (qid, q) =>
-      qid -> Similarity.probeClusters(cents, q, nProbe)
-    }.toMap
-    val unionCells = probedCells.values.flatten.toSeq.distinct
-    val shortRows = adcBatchShortlist(spark, table, idCol, queries,
-        probedCells, unionCells, cents, books, sl)
-      .select(col("query_id"), col(idCol))
-      .collect()
-    val shortByQ: Map[Long, Seq[Any]] = shortRows
-      .groupBy(_.getLong(0)).view.mapValues(_.map(_.get(1)).toSeq).toMap
-    val unionIds = shortRows.map(_.get(1)).distinct.toIndexedSeq
-    if (unionIds.isEmpty)
-      // Degenerate (empty probed cells): the single probe returns an
-      // empty frame too; keep the schema (idCol typed from the table).
-      return spark.table(table).where(lit(false))
-        .select(lit(0L).as("query_id"), col(idCol), lit(0.0).as("cos_sim"))
+    val (probedCells, unionCells) = IvfIndex.batchCells(cents, queries, nProbe)
     // Stage 2 is the shared batched float re-rank (BatchProbe
-    // .rerankFloat — extracted verbatim, the int8 IVF tier rides it
-    // too): per-query shortlist membership from a 2-D id literal,
-    // per-query exact cosine against a 2-D query literal — the SAME
-    // cosineIn expression the single probe's re-rank evaluates, over
-    // the same widened doubles, through one pushed In(id) union scan.
-    BatchProbe.rerankFloat(spark, table, idCol, vecCol, queries,
-      unionCells, shortByQ, unionIds, k)
+    // .rerankFloat — the int8 IVF tier rides it too): per-query
+    // shortlist membership from a 2-D id literal, per-query exact
+    // cosine against a 2-D query literal — the SAME cosineIn
+    // expression the single probe's re-rank evaluates, over the same
+    // widened doubles, through one pushed In(id) union scan.
+    BatchProbe.rerankFloat(spark, table, idCol, vecCol, queries, unionCells,
+      adcBatchShortlist(spark, table, idCol, queries, probedCells,
+        unionCells, cents, books, sl), k)
   }
 }

@@ -154,7 +154,7 @@ object LmIndex {
     * discipline), so a crash inside a swap's drop→rename window never
     * leaves a reader facing a missing table. */
   private def recoverAll(spark: SparkSession, table: String): Unit =
-    Seq(table, table + "_docs", table + "_tombstones")
+    Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table))
       .foreach(PurgeSwap.recover(spark, _))
 
   /** Census the corpus and create the three-table index. Overwrites.
@@ -166,7 +166,7 @@ object LmIndex {
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0 else Writer.scaledBuckets(docs)
     val idType = docs.schema(idCol).dataType
-    Par.map(Seq(table, table + "_docs", table + "_tombstones",
+    Par.map(Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table),
         PurgeSwap.stagingOf(table)))(Writer.dropTableAndLocation(spark, _))
     // Three disjoint-table DDLs — overlap (guide §2.6 via Par).
     Par.all(
@@ -174,7 +174,8 @@ object LmIndex {
         "__wave", "w1", nBuckets),
       () => Writer.emptyPartitionedBucketedTable(spark, table + "_docs",
         idTableSchema(idType), "__wave", "id", nBuckets),
-      () => Writer.emptyPartitionedBucketedTable(spark, table + "_tombstones",
+      () => Writer.emptyPartitionedBucketedTable(spark,
+        IndexLifecycle.tombstonesOf(table),
         idTableSchema(idType), "__wave", "id", 1))
     append(spark, table, docs, idCol, textCol, overlapWaves = true)
   }
@@ -199,7 +200,8 @@ object LmIndex {
                      overlapWaves: Boolean): Unit = {
     recoverAll(spark, table)
     val known = spark.table(table + "_docs").select(col("id"))
-      .unionByName(spark.table(table + "_tombstones").select(col("id")))
+      .unionByName(spark.table(IndexLifecycle.tombstonesOf(table))
+        .select(col("id")))
     // Lazy barrier: the wave census below is the action that
     // materializes it — one job for barrier + emptiness + wave tag
     // (waveCensus doc) instead of three.
@@ -248,7 +250,8 @@ object LmIndex {
     val fresh = docsToDelete.dropDuplicates(Seq(idCol))
       .join(spark.table(table + "_docs").select(col("id").as(idCol)),
         Seq(idCol), "left_semi")
-      .join(spark.table(table + "_tombstones").select(col("id").as(idCol)),
+      .join(spark.table(IndexLifecycle.tombstonesOf(table))
+          .select(col("id").as(idCol)),
         Seq(idCol), "left_anti")
       .pipe(Checkpoints.stageLazy)
     val (removed, tag) = waveCensus(fresh, idCol)
@@ -264,7 +267,7 @@ object LmIndex {
       gramCensus(fresh, idCol, textCol)
         .select(col("w1"), col("g"), (lit(0L) - col("c")).as("c")),
       wave)
-    writeWave(spark, table + "_tombstones",
+    writeWave(spark, IndexLifecycle.tombstonesOf(table),
       fresh.select(col(idCol).as("id")), wave)
     removed
   }
@@ -498,7 +501,7 @@ object LmIndex {
     // same order as before.
     val staging = PurgeSwap.stagingOf(table)
     val stagingDocs = PurgeSwap.stagingOf(table + "_docs")
-    val t = table + "_tombstones"
+    val t = IndexLifecycle.tombstonesOf(table)
     Par.all(
       () => {
         Writer.dropTableAndLocation(spark, staging)
@@ -515,7 +518,8 @@ object LmIndex {
           idTableSchema(idType), "__wave", "id", nBuckets)
         writeWave(spark, stagingDocs,
           spark.table(table + "_docs").select(col("id"))
-            .join(spark.table(table + "_tombstones").select(col("id")),
+            .join(spark.table(IndexLifecycle.tombstonesOf(table))
+                .select(col("id")),
               Seq("id"), "left_anti"),
           mergedWave)
       },
@@ -568,7 +572,7 @@ object LmIndex {
     val resuming = checkpointLocation.exists(cp =>
       StreamOps.lastCommittedBatch(spark, cp).isDefined)
     if (!resuming) {
-      Seq(table, table + "_docs", table + "_tombstones")
+      Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table))
         .foreach(Writer.dropTableAndLocation(spark, _))
     }
     if (!spark.catalog.tableExists(table)) {
@@ -579,7 +583,8 @@ object LmIndex {
         "__wave", "w1", nBuckets)
       Writer.emptyPartitionedBucketedTable(spark, table + "_docs",
         idTableSchema(idType), "__wave", "id", nBuckets)
-      Writer.emptyPartitionedBucketedTable(spark, table + "_tombstones",
+      Writer.emptyPartitionedBucketedTable(spark,
+        IndexLifecycle.tombstonesOf(table),
         idTableSchema(idType), "__wave", "id", 1)
     }
     val n = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -84,9 +84,10 @@ object PostingsIndex {
     // DIRECTORY behind with no catalog entry (fresh in-memory
     // metastore on restart), and a later saveAsTable under the same
     // name fails with LOCATION_ALREADY_EXISTS.
-    Seq(table + "_tombstones", table + "_stats_deltas").foreach { t =>
-      Writer.dropTableAndLocation(spark, t)
-    }
+    Seq(IndexLifecycle.tombstonesOf(table), table + "_stats_deltas")
+      .foreach { t =>
+        Writer.dropTableAndLocation(spark, t)
+      }
     val dls = docLengths(docs, idCol, textCol).pipe(Checkpoints.stage)
     // nBuckets ≤ 0 sizes each table's buckets to its own estimated
     // bytes (Writer.scaledBuckets — r21, guide §6).
@@ -158,7 +159,7 @@ object PostingsIndex {
     * side of the crash (the anti-join empties the wave), and
     * [[purgeTombstones]] heals the drift exactly. */
   def delete(spark: SparkSession, table: String, ids: DataFrame): Unit = {
-    val t = table + "_tombstones"
+    val t = IndexLifecycle.tombstonesOf(table)
     val d = ids.select(col("id")).distinct()
     val fresh = Checkpoints.stage(
       if (!spark.catalog.tableExists(t)) d
@@ -223,7 +224,7 @@ object PostingsIndex {
                       nBuckets: Int = 0): Long = {
     val parts = Seq(table, table + "_docs", table + "_stats")
     parts.foreach(PurgeSwap.recover(spark, _))
-    val t = table + "_tombstones"
+    val t = IndexLifecycle.tombstonesOf(table)
     if (!spark.catalog.tableExists(t)) return 0L
     IndexLifecycle.requireBatchLayout(spark, table, Seq.empty, "purgeTombstones")
     val stones = broadcast(spark.table(t))

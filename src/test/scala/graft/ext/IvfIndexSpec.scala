@@ -421,4 +421,28 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(top(10) == after, "purge never changes answers")
     assert(IvfIndex.purgeTombstones(spark, t, "vec_id") == 0L)
   }
+
+  test("build into a reused name drops the old index's takedowns") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+    val q = e.where(col("vec_id") === 0)
+      .select(col("embedding")).first().getSeq[Float](0)
+    val corpus = e.where(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"))
+    val t = "ivf_rebuild_takedown_spec"
+    def top() = IvfIndex.probeTopK(spark, t, "vec_id", "embedding", q, 10,
+        nProbe = 8).collect().map(_.getLong(0)).toSeq
+    try {
+      IvfIndex.build(corpus, "vec_id", "embedding", t, k = 4, iters = 1)
+      val hit = top().head
+      IvfIndex.delete(spark, t, Seq(hit).toDF("id"))
+      assert(!top().contains(hit), "the takedown hides the id")
+      IvfIndex.build(corpus, "vec_id", "embedding", t, k = 4, iters = 1)
+      assert(top().head == hit,
+        "a rebuilt index must not inherit the old index's takedowns")
+    } finally {
+      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    }
+  }
 }

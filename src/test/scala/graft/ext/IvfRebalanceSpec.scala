@@ -15,7 +15,14 @@ import graft.{Tables, TestSpark}
   *     sum-conservation after;
   *   - the two-table swap heals from both crash windows (marker
   *     present with staged tables; marker present mid-swap) at the
-  *     next probe, which then serves the NEW layout.
+  *     next probe, which then serves the NEW layout;
+  *   - a fresh build discards a crashed rebalance: a build into the
+  *     name drops the marker and the stagings, so the next probe
+  *     serves the fresh build, not the stale staged layout;
+  *   - build and rebalance leave the same cell layout: one parquet
+  *     file per `cluster_id=` directory, every catalog partition
+  *     located under the table's own location (the rename-safe shape,
+  *     Writer.emptyPartitionedTable's doc).
   */
 class IvfRebalanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -40,6 +47,57 @@ class IvfRebalanceSpec extends AnyFunSuite {
     (f, z)
   }
 
+  /** The published cell layout of `t`: exactly one parquet file per
+    * `cluster_id=` directory, and every catalog partition located
+    * under the table location (a partition left at a staging path
+    * scans a vanished directory after the swap's rename). */
+  private def assertCellLayout(t: String): Unit = {
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(t)
+    val catalog = spark.sessionState.catalog
+    val root = new java.io.File(catalog.getTableMetadata(id).location)
+      .getCanonicalPath
+    val cells = new java.io.File(root).listFiles()
+      .filter(_.getName.startsWith("cluster_id="))
+    assert(cells.nonEmpty, s"$t has no cell directories under $root")
+    cells.foreach { d =>
+      val files = d.listFiles().map(_.getName)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
+      assert(files.length == 1,
+        s"$t cell ${d.getName} holds ${files.length} parquet files")
+    }
+    val parts = catalog.listPartitions(id)
+    assert(parts.size == cells.length,
+      s"$t: ${parts.size} catalog partitions vs ${cells.length} cell dirs")
+    parts.foreach { p =>
+      val loc = new java.io.File(p.location).getCanonicalPath
+      assert(loc.startsWith(root + java.io.File.separator),
+        s"$t partition ${p.spec} lies at $loc, outside $root")
+    }
+  }
+
+  /** Reconstruct the exact post-marker crash state of `t` from a
+    * freshly built `ref`: `ref`'s tables moved into `t`'s staging
+    * slots the way rebalance writes them (the MAIN staging
+    * DDL-created + insertInto — a renamed saveAsTable staging would
+    * carry explicit dead partition locations, the
+    * Writer.emptyPartitionedTable doc), then the marker listing `t`
+    * and its `sides`; the old index of `t` stays in place. */
+  private def stageAndMark(t: String, ref: String,
+                           sides: String => Seq[String]): Unit = {
+    graft.io.Writer.emptyPartitionedTable(spark, PurgeSwap.stagingOf(t),
+      spark.table(ref).schema, "cluster_id")
+    spark.table(ref).write.insertInto(PurgeSwap.stagingOf(t))
+    sides(ref).zip(sides(t)).foreach { case (from, to) =>
+      spark.sql(s"ALTER TABLE `$from` RENAME TO `${PurgeSwap.stagingOf(to)}`")
+    }
+    graft.io.Writer.dropTableAndLocation(spark, ref)
+    IndexLifecycle.markSwap(spark, t, t +: sides(t))
+  }
+
+  private def ivfSides(x: String) = Seq(IvfIndex.centroidsTable(x))
+  private def ivfPqSides(x: String) =
+    Seq(IvfIndex.centroidsTable(x), IvfPq.codebooksTable(x))
+
   test("rebalance equals a fresh build on the live corpus; census reports drift before and conserves after") {
     val e = Tables.embeddings(spark, TestSpark.sf0001)
     val base = e.where(col("vec_id") >= 100 && col("vec_id") < 300)
@@ -50,6 +108,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
     val t2 = "ivf_rebalance_spec_fresh"
     try {
       IvfIndex.build(corpus, "vec_id", "embedding", t, k = 8, iters = 2)
+      assertCellLayout(t)
       // The blob (100 near-twins of one vector) piles into one cell.
       val skew = IvfIndex.cellSkew(spark, t, "vec_id", dueMilli = 2000L)
         .collect().head
@@ -62,6 +121,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       IvfIndex.rebalance(spark, t, "vec_id", "embedding", k = 8, iters = 2)
       assert(!spark.catalog.tableExists(t + "_tombstones"),
         "rebalance must purge the tombstone list")
+      assertCellLayout(t)
       val live = corpus.where(!col("vec_id").isin(dels: _*))
       IvfIndex.build(live, "vec_id", "embedding", t2, k = 8, iters = 2)
       val qs = e.where(col("vec_id") < 2).select(col("embedding"))
@@ -100,12 +160,14 @@ class IvfRebalanceSpec extends AnyFunSuite {
     try {
       IvfPq.build(corpus, "vec_id", "embedding", t,
         kCells = 4, ivfIters = 1, m = 8, kPq = 8, pqIters = 1)
+      assertCellLayout(t)
       import spark.implicits._
       IvfPq.delete(spark, t, dels.toDF("id"))
       IvfPq.rebalance(spark, t, "vec_id", "embedding",
         kCells = 4, ivfIters = 1, m = 8, kPq = 8, pqIters = 1)
       assert(!spark.catalog.tableExists(t + "_tombstones"),
         "rebalance must purge the tombstone list")
+      assertCellLayout(t)
       IvfPq.build(live, "vec_id", "embedding", t2,
         kCells = 4, ivfIters = 1, m = 8, kPq = 8, pqIters = 1)
       val qs = e.where(col("vec_id") < 2).select(col("embedding"))
@@ -185,22 +247,12 @@ class IvfRebalanceSpec extends AnyFunSuite {
     val ref = "ivf_rebalance_crash_ref"
     val q = e.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0).toSeq
-    def stageAndMark(): Unit = {
-      // Reconstruct the exact post-marker crash state: both staged
-      // tables fully written the way rebalance writes them (the MAIN
-      // staging DDL-created + insertInto — a renamed saveAsTable
-      // staging would carry explicit dead partition locations, the
-      // Writer.emptyPartitionedTable doc), marker present, old index
-      // still in place with live tombstones registered.
+    def stageLiveAndMark(): Unit = {
+      // The exact post-marker crash state: both staged tables fully
+      // written, marker present, old index still in place with live
+      // tombstones registered.
       IvfIndex.build(live, "vec_id", "embedding", ref, k = 4, iters = 1)
-      graft.io.Writer.emptyPartitionedTable(spark, PurgeSwap.stagingOf(t),
-        spark.table(ref).schema, "cluster_id")
-      spark.table(ref).write.insertInto(PurgeSwap.stagingOf(t))
-      spark.sql(s"ALTER TABLE `${IvfIndex.centroidsTable(ref)}` RENAME TO " +
-        s"`${PurgeSwap.stagingOf(IvfIndex.centroidsTable(t))}`")
-      graft.io.Writer.dropTableAndLocation(spark, ref)
-      IndexLifecycle.markSwap(spark, t,
-        Seq(t, IvfIndex.centroidsTable(t)))
+      stageAndMark(t, ref, ivfSides)
     }
     try {
       IvfIndex.build(corpus, "vec_id", "embedding", t, k = 4, iters = 1)
@@ -213,7 +265,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       Seq(IvfIndex.centroidsTable(ref), ref)
         .foreach(x => spark.sql(s"DROP TABLE `$x`"))
       // Window 1: crash right after the marker, before any swap.
-      stageAndMark()
+      stageLiveAndMark()
       val (f1, z1) = probes(t, q)
       assert(f1 == expF && z1 == expZ, "window-1 heal serves the new layout")
       assert(!spark.catalog.tableExists(t + "_rebalance_inflight") &&
@@ -223,7 +275,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       // dropped, staging still named staging).
       IvfIndex.delete(spark, t,
         spark.range(0).select(col("id"))) // re-create an empty tombstone list
-      stageAndMark()
+      stageLiveAndMark()
       graft.io.Writer.dropTableAndLocation(spark, t)
       val (f2, z2) = probes(t, q)
       assert(f2 == expF && z2 == expZ, "window-2 heal serves the new layout")
@@ -234,6 +286,78 @@ class IvfRebalanceSpec extends AnyFunSuite {
           x + "_tombstones", PurgeSwap.stagingOf(x),
           PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
           x + "_rebalance_inflight"))
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    }
+  }
+
+  test("a fresh build discards a crashed two-table rebalance: stale marker and stagings dropped") {
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+    val old = e.where(col("vec_id") >= 100 && col("vec_id") < 250)
+      .select(col("vec_id"), col("embedding"))
+    val next = e.where(col("vec_id") >= 250 && col("vec_id") < 400)
+      .select(col("vec_id"), col("embedding"))
+    val t = "ivf_rebuild_over_marker_spec"
+    val ref = "ivf_rebuild_over_marker_ref"
+    val fresh = "ivf_rebuild_over_marker_fresh"
+    val q = e.where(col("vec_id") === 0)
+      .select(col("embedding")).first().getSeq[Float](0).toSeq
+    try {
+      IvfIndex.build(old, "vec_id", "embedding", t, k = 4, iters = 1)
+      IvfIndex.build(old, "vec_id", "embedding", ref, k = 4, iters = 1)
+      // A rebalance of `old` that crashed right after its marker.
+      stageAndMark(t, ref, ivfSides)
+      IvfIndex.build(next, "vec_id", "embedding", t, k = 4, iters = 1)
+      IvfIndex.build(next, "vec_id", "embedding", fresh, k = 4, iters = 1)
+      assert(probes(t, q) == probes(fresh, q),
+        "the first probe after a rebuild must serve the fresh build")
+      assert(!spark.catalog.tableExists(IndexLifecycle.rebalanceMarkerOf(t)),
+        "the rebuild must drop the stale marker")
+      assert((t +: ivfSides(t)).forall(x =>
+          !spark.catalog.tableExists(PurgeSwap.stagingOf(x))),
+        "the rebuild must drop the stale stagings")
+    } finally {
+      Seq(t, ref, fresh).flatMap(x => (x +: ivfSides(x)).flatMap(y =>
+          Seq(y, PurgeSwap.stagingOf(y))) ++ Seq(x + "_tombstones",
+          IndexLifecycle.rebalanceMarkerOf(x)))
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    }
+  }
+
+  test("a fresh IvfPq build discards a crashed three-table rebalance: stale marker and stagings dropped") {
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+    val old = e.where(col("vec_id") >= 100 && col("vec_id") < 220)
+      .select(col("vec_id"), col("embedding"))
+    val next = e.where(col("vec_id") >= 220 && col("vec_id") < 340)
+      .select(col("vec_id"), col("embedding"))
+    val t = "ivfpq_rebuild_over_marker_spec"
+    val ref = "ivfpq_rebuild_over_marker_ref"
+    val fresh = "ivfpq_rebuild_over_marker_fresh"
+    val q = e.where(col("vec_id") === 0)
+      .select(col("embedding")).first().getSeq[Float](0).toSeq
+    def build(c: org.apache.spark.sql.DataFrame, x: String) =
+      IvfPq.build(c, "vec_id", "embedding", x,
+        kCells = 4, ivfIters = 1, m = 8, kPq = 8, pqIters = 1)
+    def rows(x: String) = IvfPq.probeTopK(spark, x, "vec_id", "embedding",
+        q, k = 10, nProbe = 2).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    try {
+      build(old, t)
+      build(old, ref)
+      // A rebalance of `old` that crashed right after its marker.
+      stageAndMark(t, ref, ivfPqSides)
+      build(next, t)
+      build(next, fresh)
+      assert(rows(t) == rows(fresh),
+        "the first probe after a rebuild must serve the fresh build")
+      assert(!spark.catalog.tableExists(IndexLifecycle.rebalanceMarkerOf(t)),
+        "the rebuild must drop the stale marker")
+      assert((t +: ivfPqSides(t)).forall(x =>
+          !spark.catalog.tableExists(PurgeSwap.stagingOf(x))),
+        "the rebuild must drop the stale stagings")
+    } finally {
+      Seq(t, ref, fresh).flatMap(x => (x +: ivfPqSides(x)).flatMap(y =>
+          Seq(y, PurgeSwap.stagingOf(y))) ++ Seq(x + "_tombstones",
+          IndexLifecycle.rebalanceMarkerOf(x)))
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
     }
   }

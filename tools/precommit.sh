@@ -24,6 +24,16 @@ if direct=$(grep -rn --include='*.scala' 'localCheckpoint(' src/main/scala/graft
   echo "$direct" >&2
   exit 1
 fi
+# Tombstone-table naming: IndexLifecycle.tombstonesOf owns the
+# `<table>_tombstones` name, so a family can never drop or read a
+# differently spelled takedown list. A "_tombstones" literal anywhere
+# else in the package fails the gate.
+if literal=$(grep -rn --include='*.scala' '"_tombstones"' src/main/scala/graft/ext \
+    | grep -v '^src/main/scala/graft/ext/IndexLifecycle\.scala:'); then
+  echo "precommit: \"_tombstones\" literal in graft.ext — use IndexLifecycle.tombstonesOf:" >&2
+  echo "$literal" >&2
+  exit 1
+fi
 if [[ "${1:-}" == "test" ]]; then
   sbt -batch test
 else
