@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Corpus-snapshot DISTRIBUTION drift census — the training-data
   * monitoring report next to [[graft.queries.CorpusQueries]]'
@@ -183,26 +184,23 @@ object Drift {
                    bucketWidth: Double, maxBucket: Int, sinkTable: String,
                    queryName: String,
                    checkpointLocation: Option[String] = None): Int = {
-    import org.apache.spark.sql.types._
     import graft.streaming.StreamOps
-    val sinkSchema = StructType(Seq(
-      StructField("bucket", LongType), StructField("n_old", LongType),
-      StructField("n_new", LongType), StructField("d_milli", LongType),
-      StructField("odds_bits", LongType), StructField("drift_score", LongType),
-      StructField(StreamOps.BatchTag, LongType)))
     IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)(
-      spark, sinkTable, sinkSchema, StreamOps.BatchTag, "bucket", 1)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = StreamOps.foreachBatchSink(stream, queryName,
-        checkpointLocation) { (batch, batchId) =>
-      n.incrementAndGet()
-      StreamOps.writeBatchToSink(spark, sinkTable,
-        census(reference, batch, value, bucketWidth, maxBucket), batchId)
-    }
-    q.awaitTermination()
-    spark.catalog.refreshTable(sinkTable)
-    n.get()
+      spark, sinkTable, censusSinkSchema, StreamOps.BatchTag, "bucket", 1)
+    StreamOps.sinkBatches(spark, stream, queryName, sinkTable,
+        checkpointLocation) { (batch, _) =>
+      (census(reference, batch, value, bucketWidth, maxBucket), Nil)
+    }._2
   }
+
+  /** The sink layout of a one-metric drift series — [[streamCensus]]'s
+    * and IvfIndex.streamCellDrift's rows (the [[contrastCounts]]
+    * columns) plus the batch tag. */
+  private[ext] val censusSinkSchema: StructType = StructType(Seq(
+    StructField("bucket", LongType), StructField("n_old", LongType),
+    StructField("n_new", LongType), StructField("d_milli", LongType),
+    StructField("odds_bits", LongType), StructField("drift_score", LongType),
+    StructField(graft.streaming.StreamOps.BatchTag, LongType)))
 
   /** Multi-metric streaming drift monitor — [[censusMulti]]'s
     * streaming twin, completing the symmetry census/streamCensus ::
@@ -221,25 +219,14 @@ object Drift {
                         metrics: Seq[Metric], sinkTable: String,
                         queryName: String,
                         checkpointLocation: Option[String] = None): Int = {
-    import org.apache.spark.sql.types._
     import graft.streaming.StreamOps
-    val sinkSchema = StructType(Seq(
-      StructField("metric", StringType), StructField("bucket", LongType),
-      StructField("n_old", LongType), StructField("n_new", LongType),
-      StructField("d_milli", LongType), StructField("odds_bits", LongType),
-      StructField("drift_score", LongType),
-      StructField(StreamOps.BatchTag, LongType)))
+    val sinkSchema = StructType(StructField("metric", StringType) +:
+      censusSinkSchema.fields)
     IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)(
       spark, sinkTable, sinkSchema, StreamOps.BatchTag, "metric", 1)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = StreamOps.foreachBatchSink(stream, queryName,
-        checkpointLocation) { (batch, batchId) =>
-      n.incrementAndGet()
-      StreamOps.writeBatchToSink(spark, sinkTable,
-        censusMulti(reference, batch, metrics), batchId)
-    }
-    q.awaitTermination()
-    spark.catalog.refreshTable(sinkTable)
-    n.get()
+    StreamOps.sinkBatches(spark, stream, queryName, sinkTable,
+        checkpointLocation) { (batch, _) =>
+      (censusMulti(reference, batch, metrics), Nil)
+    }._2
   }
 }

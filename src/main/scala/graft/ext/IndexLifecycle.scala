@@ -25,12 +25,19 @@ import graft.io.Writer
   *     has committed batches ([[resumeAwareTableMaker]]): a fresh
   *     checkpoint with a leftover table is a drop-and-recreate, never
   *     a silent merge, and the recreate drops the table's takedown
-  *     list with it.
+  *     list with it (plus any other takedown state the family names —
+  *     PostingsIndex's `_stats_deltas`). LmIndex creates its
+  *     three-table layout through the same maker.
   *
   * The keyed-pair families (DedupIndex, WinnowIndex, and IvfIndex's
   * stream ingest) go one step further: build, append, purge, the probe
   * prelude, the pair-sink stream ingest and compact have one body,
-  * in [[PairIndex]].
+  * in [[PairIndex]]. Every family's partitioned writes go through one
+  * insert, Writer.insertOverwrite (dynamic overwrite shaped to the
+  * bucket spec — the batch-tag sinks via StreamOps.writeBatchSinks,
+  * LmIndex's `__wave` waves directly), and every batch-tagged compact
+  * refuses a checkpoint's orphans through one check,
+  * StreamOps.refuseOrphans.
   */
 private[graft] object IndexLifecycle {
 
@@ -191,16 +198,23 @@ private[graft] object IndexLifecycle {
     * table = drop-and-recreate, not a silent merge — the DedupIndex
     * streamIngest lesson, shared by every family's ingest). The
     * recreate drops the table's `<table>_tombstones` too: a fresh
-    * index must not hide ids an earlier run took down. */
+    * index must not hide ids an earlier run took down.
+    * `dropsWhenFresh` names a family's other takedown state (tables
+    * that are not some created table's tombstone list — PostingsIndex's
+    * `_stats_deltas`), dropped once when the maker is built fresh. */
   def resumeAwareTableMaker(spark: SparkSession,
-                            checkpointLocation: Option[String])
+                            checkpointLocation: Option[String],
+                            dropsWhenFresh: Seq[String] = Nil)
       : (SparkSession, String, StructType, String, String, Int) => Unit = {
     val resuming = checkpointLocation.exists(cp =>
       graft.streaming.StreamOps.lastCommittedBatch(spark, cp).isDefined)
     if (resuming) Writer.ensurePartitionedBucketedTable _
-    else { (s, table, schema, partitionCol, key, buckets) =>
-      Writer.dropTableAndLocation(s, tombstonesOf(table))
-      Writer.emptyPartitionedBucketedTable(s, table, schema, partitionCol, key, buckets)
+    else {
+      dropsWhenFresh.foreach(Writer.dropTableAndLocation(spark, _))
+      (s, table, schema, partitionCol, key, buckets) => {
+        Writer.dropTableAndLocation(s, tombstonesOf(table))
+        Writer.emptyPartitionedBucketedTable(s, table, schema, partitionCol, key, buckets)
+      }
     }
   }
 }

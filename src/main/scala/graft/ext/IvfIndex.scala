@@ -126,31 +126,19 @@ object IvfIndex {
                       centroids: Seq[Seq[Float]], sinkTable: String,
                       queryName: String,
                       checkpointLocation: Option[String] = None): Int = {
-    import org.apache.spark.sql.types._
     import graft.streaming.StreamOps
-    val sinkSchema = StructType(Seq(
-      StructField("bucket", LongType), StructField("n_old", LongType),
-      StructField("n_new", LongType), StructField("d_milli", LongType),
-      StructField("odds_bits", LongType), StructField("drift_score", LongType),
-      StructField(StreamOps.BatchTag, LongType)))
     IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)(
-      spark, sinkTable, sinkSchema, StreamOps.BatchTag, "bucket", 1)
+      spark, sinkTable, Drift.censusSinkSchema, StreamOps.BatchTag, "bucket", 1)
     val ref = reference.select(
       col("cluster_id").cast("long").as("bucket"),
       col("n_live").as("n_old"))
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = StreamOps.foreachBatchSink(stream, queryName,
-        checkpointLocation) { (batch, batchId) =>
-      n.incrementAndGet()
+    StreamOps.sinkBatches(spark, stream, queryName, sinkTable,
+        checkpointLocation) { (batch, _) =>
       val census = Similarity.ivfAssign(batch, idCol, vecCol, centroids)
         .groupBy(col("cluster_id").cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_new"))
-      StreamOps.writeBatchToSink(spark, sinkTable,
-        Drift.contrastCounts(ref, census, centroids.size.toLong), batchId)
-    }
-    q.awaitTermination()
-    spark.catalog.refreshTable(sinkTable)
-    n.get()
+      (Drift.contrastCounts(ref, census, centroids.size.toLong), Nil)
+    }._2
   }
 
   /** REBALANCE — the index-maintenance answer to distribution drift
@@ -614,6 +602,7 @@ object IvfIndex {
                          vecCol: String, query: Seq[Float], k: Int,
                          nProbe: Int, shortlist: Int = 0): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 4 * k
+    require(sl >= k, s"shortlist $sl < topK $k")
     rerankShortlist(spark, table, idCol, vecCol, query, k, nProbe,
       quantizedPreRank(spark, table, idCol, query, nProbe, sl))
   }

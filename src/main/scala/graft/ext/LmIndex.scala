@@ -4,7 +4,7 @@ import scala.util.chaining._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.io.Writer
 
@@ -34,7 +34,11 @@ import graft.io.Writer
   *     tombstone-vs-delta ordering hazard).
   *
   * Layout, three tables, all partitioned by `__wave` (string) so waves
-  * overwrite idempotently:
+  * overwrite idempotently — one DDL helper ([[createLayout]]) serves build,
+  * the resume-aware stream ingest and compact's staging set, and every
+  * write is one Writer.insertOverwrite of a `__wave`-tagged frame
+  * ([[insertWave]]), the same layout-shaped dynamic-overwrite insert
+  * the streaming sinks use:
   *   - `<t>`       (w1, g, c, __wave) bucketed+sorted on `w1` — the
   *     bigram count DELTAS (negative for deletions). `w1` is the probe
   *     prune key: a doc's surprisal needs the prefix mass c1(w1) =
@@ -44,7 +48,10 @@ import graft.io.Writer
   *     skips ids already present (cross-wave dedup of whole docs).
   *   - `<t>_tombstones` (id, __wave) — ids whose counts were
   *     subtracted; blocked from re-append until [[compact]] absorbs
-  *     the deltas and clears them.
+  *     the deltas and clears them. This is the family's whole takedown
+  *     state: the deltas themselves live in `<t>`, so a build or a
+  *     fresh stream ingest that recreates the three tables starts
+  *     clean.
   *
   * Scale shape: build/append cost one gram census of their input
   * (output vocabulary-sized); probe contact = the probed docs' touched
@@ -91,20 +98,14 @@ object LmIndex {
       .select(element_at(split(col("g"), " "), 1).as("w1"),
         col("g"), col("c"))
 
-  /** Deterministic wave tag of a doc-id set: one small aggregation
-    * (count + two order-independent hash sums) — the same ids always
-    * produce the same tag, so a retried write overwrites its own
-    * partition instead of double-counting. */
-  private[ext] def waveOf(docs: DataFrame, idCol: String): String = {
-    val (n, tag) = waveCensus(docs, idCol)
-    require(n >= 0, "unreachable"); tag
-  }
-
-  /** (doc count, wave tag) in ONE aggregation — append/delete run it
+  /** (doc count, wave tag) in ONE aggregation — the tag is
+    * deterministic in the doc-id set (count + two order-independent
+    * hash sums), so a retried write overwrites its own partition
+    * instead of double-counting. Append/delete run it
     * over their LAZILY staged `fresh` barrier (Checkpoints.stageLazy),
     * so one job materializes the barrier AND answers both "is there
     * anything to do" and "what wave is it" (r22; these were three
-    * separate driver actions — stage, isEmpty, waveOf — per
+    * separate driver actions — stage, isEmpty, wave tag — per
     * append/delete, pure fixed overhead at any scale). */
   private def waveCensus(docs: DataFrame, idCol: String): (Long, String) = {
     val r = docs.agg(count(lit(1)).as("n"),
@@ -114,30 +115,19 @@ object LmIndex {
       f"w${r.getLong(0)}%x_${r.getLong(1)}%016x_${r.getLong(2)}%016x")
   }
 
-  /** Dynamic partition overwrite of `rows` into `table` as wave
-    * `wave` — the one write primitive every lifecycle op uses (shaped
-    * to the bucket layout so a wave lands as one file per bucket). */
-  private def writeWave(spark: SparkSession, table: String, rows: DataFrame,
-                        wave: String): Unit = {
-    // Dynamic overwrite via the one-way conf latch
-    // (Writer.ensureDynamicOverwrite) on the ROWS' session — the conf
-    // is read at write planning from that session (a foreachBatch
-    // micro-batch clone, not necessarily `spark` — the writeBatchSinks
-    // lesson), and the old per-write save/set/RESTORE racing r21's
-    // overlapped disjoint-table writes could flip an in-flight plan
-    // back to STATIC overwrite, truncating every other wave.
-    Writer.ensureDynamicOverwrite(rows.sparkSession)
-    val cols = spark.table(table).columns
-    val aligned = rows.withColumn("__wave", lit(wave))
-      .select(cols.toIndexedSeq.map(col): _*)
-    val shaped = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec match {
-      case Some(bs) =>
-        aligned.repartition(bs.numBuckets, bs.bucketColumnNames.map(col): _*)
-      case None => aligned.coalesce(1)
-    }
-    shaped.write.mode("overwrite").insertInto(table)
+  /** `rows` land as wave `wave` of `table` — Writer.insertOverwrite,
+    * the shared layout-shaped dynamic-overwrite insert (one file per
+    * bucket, only that wave's partition replaced; the one-way
+    * dynamic-overwrite latch goes on the ROWS' session, so r21's
+    * overlapped disjoint-table writes can never flip an in-flight plan
+    * back to STATIC overwrite) — then the reading session drops its
+    * cached listing. Every LmIndex write goes through it; the ordered
+    * lifecycle ops take it as a parameter so LmIndexSpec can crash
+    * them between their two waves. */
+  private[ext] def insertWave(spark: SparkSession)(table: String,
+                                                   rows: DataFrame,
+                                                   wave: String): Unit = {
+    Writer.insertOverwrite(rows.withColumn("__wave", lit(wave)), table)
     spark.catalog.refreshTable(table)
   }
 
@@ -146,8 +136,29 @@ object LmIndex {
       StructField("w1", StringType), StructField("g", StringType),
       StructField("c", LongType), StructField("__wave", StringType)))
 
-  private def idTableSchema(idType: org.apache.spark.sql.types.DataType) =
-    StructType(Seq(StructField("id", idType), StructField("__wave", StringType)))
+  /** Create the family's three tables (class doc) with ONE DDL.
+    * `make` has the signature Writer.emptyPartitionedBucketedTable and
+    * IndexLifecycle.resumeAwareTableMaker's maker share; `nameOf` maps
+    * each layout name to the table to create — identity for build and
+    * the stream ingest, PurgeSwap.stagingOf for compact's staging set.
+    * `overlap` runs the three DDLs concurrently (disjoint tables —
+    * guide §2.6 via Par; build and compact). The stream ingest runs
+    * them in order: the resume-aware maker's fresh branch drops
+    * `<t>_tombstones` while it makes `<t>`, which must not race the
+    * tombstone table's own creation. */
+  private def createLayout(spark: SparkSession,
+      make: (SparkSession, String, StructType, String, String, Int) => Unit,
+      nameOf: String => String, table: String, idType: DataType,
+      nBuckets: Int, overlap: Boolean): Unit = {
+    val ids = StructType(Seq(StructField("id", idType),
+      StructField("__wave", StringType)))
+    val ddls = Seq[() => Unit](
+      () => make(spark, nameOf(table), deltaSchema, "__wave", "w1", nBuckets),
+      () => make(spark, nameOf(table + "_docs"), ids, "__wave", "id", nBuckets),
+      () => make(spark, nameOf(IndexLifecycle.tombstonesOf(table)), ids,
+        "__wave", "id", 1))
+    if (overlap) Par.all(ddls: _*) else ddls.foreach(_())
+  }
 
   /** Heal any crashed stage-and-swap across the family's three tables
     * — run at every lifecycle entry point (the [[PurgeSwap.recover]]
@@ -165,19 +176,11 @@ object LmIndex {
             textCol: String, table: String, nBuckets0: Int = 0): Unit = {
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0 else Writer.scaledBuckets(docs)
-    val idType = docs.schema(idCol).dataType
-    Par.map(Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table),
-        PurgeSwap.stagingOf(table)))(Writer.dropTableAndLocation(spark, _))
-    // Three disjoint-table DDLs — overlap (guide §2.6 via Par).
-    Par.all(
-      () => Writer.emptyPartitionedBucketedTable(spark, table, deltaSchema,
-        "__wave", "w1", nBuckets),
-      () => Writer.emptyPartitionedBucketedTable(spark, table + "_docs",
-        idTableSchema(idType), "__wave", "id", nBuckets),
-      () => Writer.emptyPartitionedBucketedTable(spark,
-        IndexLifecycle.tombstonesOf(table),
-        idTableSchema(idType), "__wave", "id", 1))
-    append(spark, table, docs, idCol, textCol, overlapWaves = true)
+    Writer.dropTableAndLocation(spark, PurgeSwap.stagingOf(table))
+    createLayout(spark, Writer.emptyPartitionedBucketedTable, identity,
+      table, docs.schema(idCol).dataType, nBuckets, overlap = true)
+    append(spark, table, docs, idCol, textCol, overlapWaves = true,
+      insertWave(spark))
   }
 
   /** Add a batch's counts. IDEMPOTENT two ways: ids already indexed
@@ -186,7 +189,8 @@ object LmIndex {
     * append can never double-count. */
   def append(spark: SparkSession, table: String, newDocs: DataFrame,
              idCol: String, textCol: String): Unit =
-    append(spark, table, newDocs, idCol, textCol, overlapWaves = false)
+    append(spark, table, newDocs, idCol, textCol, overlapWaves = false,
+      insertWave(spark))
 
   /** [[append]] with the delta/registry wave ORDER relaxed to a §2.6
     * overlap — legal ONLY from [[build]] (r22): build just dropped and
@@ -194,10 +198,12 @@ object LmIndex {
     * scratch, not the registry-anti-join idempotence an interrupted
     * APPEND retry relies on (the ADVICE r21 crash contract). A crashed
     * build leaves an index that was never consistent; re-running build
-    * drops both waves whole. */
-  private def append(spark: SparkSession, table: String, newDocs: DataFrame,
-                     idCol: String, textCol: String,
-                     overlapWaves: Boolean): Unit = {
+    * drops both waves whole. `write` is [[insertWave]] (a spec passes a
+    * crashing one). */
+  private[ext] def append(spark: SparkSession, table: String,
+                          newDocs: DataFrame, idCol: String, textCol: String,
+                          overlapWaves: Boolean,
+                          write: (String, DataFrame, String) => Unit): Unit = {
     recoverAll(spark, table)
     val known = spark.table(table + "_docs").select(col("id"))
       .unionByName(spark.table(IndexLifecycle.tombstonesOf(table))
@@ -225,13 +231,11 @@ object LmIndex {
     // window; Par stays on the genuinely commutable overlaps — which
     // includes the BUILD path: `overlapWaves` doc.)
     if (overlapWaves) Par.all(
-      () => writeWave(spark, table, gramCensus(fresh, idCol, textCol), wave),
-      () => writeWave(spark, table + "_docs",
-        fresh.select(col(idCol).as("id")), wave))
+      () => write(table, gramCensus(fresh, idCol, textCol), wave),
+      () => write(table + "_docs", fresh.select(col(idCol).as("id")), wave))
     else {
-      writeWave(spark, table, gramCensus(fresh, idCol, textCol), wave)
-      writeWave(spark, table + "_docs",
-        fresh.select(col(idCol).as("id")), wave)
+      write(table, gramCensus(fresh, idCol, textCol), wave)
+      write(table + "_docs", fresh.select(col(idCol).as("id")), wave)
     }
   }
 
@@ -244,7 +248,15 @@ object LmIndex {
     * partitions, so a crashed delete re-runs to the same state —
     * never a double subtraction, never a blocked-but-counted limbo. */
   def delete(spark: SparkSession, table: String, docsToDelete: DataFrame,
-             idCol: String, textCol: String): Long = {
+             idCol: String, textCol: String): Long =
+    delete(spark, table, docsToDelete, idCol, textCol, insertWave(spark))
+
+  /** [[delete]] through the wave writer `write` ([[insertWave]]; a spec
+    * passes a crashing one). */
+  private[ext] def delete(spark: SparkSession, table: String,
+                          docsToDelete: DataFrame, idCol: String,
+                          textCol: String,
+                          write: (String, DataFrame, String) => Unit): Long = {
     recoverAll(spark, table)
     // Lazy barrier + one-job wave census — see append.
     val fresh = docsToDelete.dropDuplicates(Seq(idCol))
@@ -263,14 +275,55 @@ object LmIndex {
     // re-delete while the counts were never subtracted. Delta-first, a
     // crash leaves subtracted-but-untombstoned ids the retry re-deletes
     // into the same deterministic wave — a self-overwrite.
-    writeWave(spark, table,
+    write(table,
       gramCensus(fresh, idCol, textCol)
         .select(col("w1"), col("g"), (lit(0L) - col("c")).as("c")),
       wave)
-    writeWave(spark, IndexLifecycle.tombstonesOf(table),
+    write(IndexLifecycle.tombstonesOf(table),
       fresh.select(col(idCol).as("id")), wave)
     removed
   }
+
+  /** Stage the probe's per-doc gram census AHEAD of the probe — it
+    * reads only the docs, never the index, so a lifecycle caller can
+    * compute it CONCURRENTLY with its build/append/delete/compact
+    * chain (guide §2.6 via Par) and hand it to [[probe]]'s `prepared`
+    * parameter. Identical frame to what probe stages itself. */
+  def prepareProbe(docs: DataFrame, idCol: String,
+                   textCol: String): DataFrame =
+    docGrams(docs, idCol, textCol).pipe(Checkpoints.stage)
+
+  /** Live whole-bit surprisal `(g, outCol)` of one index over the
+    * `touched` w1 postings — the summed-delta reconstruction [[probe]]
+    * and [[dsirProbe]] both serve: per-gram wave deltas summed (zeroed
+    * grams drop), staged, against their c1 prefix masses. Pruning to
+    * touched w1 keys cannot change any c1 prefix mass (every gram
+    * sharing a touched w1 IS in the pruned set). */
+  private def liveBits(spark: SparkSession, table: String,
+                       touched: DataFrame, outCol: String): DataFrame = {
+    val live = spark.table(table)
+      .join(touched, Seq("w1"), "left_semi")
+      .groupBy(col("w1"), col("g"))
+      .agg(sum(col("c")).as("c"))
+      .where(col("c") > 0)
+      .pipe(Checkpoints.stage)
+    val prefix = live.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
+    live.join(prefix, "w1").select(col("g"),
+      (length(conv(expr("c1 DIV c"), 10, 2)) - 1).cast("long").as(outCol))
+  }
+
+  /** One row per probed doc, ordered by id: `perDoc`'s `counts` with
+    * the docs that produced no bigram zero-filled, then `derived`
+    * columns computed off the filled counts — [[probe]]'s and
+    * [[dsirProbe]]'s shared tail. */
+  private def zeroFilled(docs: DataFrame, idCol: String, perDoc: DataFrame,
+                         counts: Seq[String], derived: Column*): DataFrame =
+    docs.select(col(idCol).as("id"))
+      .join(perDoc, Seq("id"), "left")
+      .select(col("id").as(idCol) +:
+        counts.map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+      .select((col(idCol) +: counts.map(col)) ++ derived: _*)
+      .orderBy(col(idCol))
 
   /** Per-doc surprisal of `docs` against the CURRENT index counts —
     * the probe. Output (id, n_bigrams, n_oov, bits_sum, mean_bits):
@@ -281,31 +334,13 @@ object LmIndex {
     * same integer sums, same one double division). Contact: the
     * probed docs' touched-w1 postings (bucket-pruned semi-join), never
     * a corpus rescan. */
-  /** Stage the probe's per-doc gram census AHEAD of the probe — it
-    * reads only the docs, never the index, so a lifecycle caller can
-    * compute it CONCURRENTLY with its build/append/delete/compact
-    * chain (guide §2.6 via Par) and hand it to [[probe]]'s `prepared`
-    * parameter. Identical frame to what probe stages itself. */
-  def prepareProbe(docs: DataFrame, idCol: String,
-                   textCol: String): DataFrame =
-    docGrams(docs, idCol, textCol).pipe(Checkpoints.stage)
-
   def probe(spark: SparkSession, table: String, docs: DataFrame,
             idCol: String, textCol: String,
             prepared: Option[DataFrame] = None): DataFrame = {
     recoverAll(spark, table)
     val pairs = prepared.getOrElse(prepareProbe(docs, idCol, textCol))
-    val touched = pairs.select(col("w1")).distinct()
-    val live = spark.table(table)
-      .join(touched, Seq("w1"), "left_semi")
-      .groupBy(col("w1"), col("g"))
-      .agg(sum(col("c")).as("c"))
-      .where(col("c") > 0)
-      .pipe(Checkpoints.stage)
-    val prefix = live.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
-    val gramBits = live.join(prefix, "w1")
-      .select(col("g"),
-        (length(conv(expr("c1 DIV c"), 10, 2)) - 1).cast("long").as("bits"))
+    val gramBits = liveBits(spark, table, pairs.select(col("w1")).distinct(),
+      "bits")
     val perDoc = pairs.join(gramBits, Seq("g"), "left")
       .groupBy(col("id"))
       .agg(sum(col("c_doc")).as("n_bigrams"),
@@ -313,18 +348,45 @@ object LmIndex {
           .as("n_oov"),
         coalesce(sum(when(col("bits").isNotNull, col("c_doc") * col("bits"))),
           lit(0L)).as("bits_sum"))
-    docs.select(col(idCol).as("id"))
-      .join(perDoc, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("n_oov"), lit(0L)).as("n_oov"),
-        coalesce(col("bits_sum"), lit(0L)).as("bits_sum"),
-        when(coalesce(col("n_bigrams"), lit(0L)) -
-            coalesce(col("n_oov"), lit(0L)) > 0,
-          coalesce(col("bits_sum"), lit(0L)).cast("double") /
-            (col("n_bigrams") - col("n_oov")).cast("double"))
-          .otherwise(0.0).as("mean_bits"))
-      .orderBy(col(idCol))
+    zeroFilled(docs, idCol, perDoc, Seq("n_bigrams", "n_oov", "bits_sum"),
+      when(col("n_bigrams") - col("n_oov") > 0,
+        col("bits_sum").cast("double") /
+          (col("n_bigrams") - col("n_oov")).cast("double"))
+        .otherwise(0.0).as("mean_bits"))
+  }
+
+  /** Streaming DSIR scoring — [[dsirProbe]]'s streaming twin, the
+    * quality-scoring loop next to the serving loops (streamServe) and
+    * the monitoring loops (Drift.streamCensus): every micro-batch of
+    * arriving documents is importance-weighted against the SAME two
+    * persisted LM indexes, rows landing batch-tagged under the
+    * redelivery discipline into a resume-aware sink (the shared
+    * StreamOps.sinkBatches loop). The accumulated
+    * table is the scored corpus a mixing/curation stage reads, built
+    * shard-by-shard as the crawl arrives instead of in one batch
+    * pass. Per batch the contact is dsirProbe's: the shard's
+    * touched-w1 bucket-pruned postings of each index — never a corpus
+    * or full-vocabulary scan. Each batch is a pure function of
+    * (indexes, shard), so every accumulated slice value-replays —
+    * gated by x_stream_dsir, restart + redelivery spec-pinned
+    * (LmIndexSpec). Returns the number of batches processed. */
+  def streamDsir(spark: SparkSession, rawTable: String, targetTable: String,
+                 stream: DataFrame, idCol: String, textCol: String,
+                 sinkTable: String, queryName: String,
+                 checkpointLocation: Option[String] = None): Int = {
+    import graft.streaming.StreamOps
+    val idType = spark.table(targetTable + "_docs").schema("id").dataType
+    val sinkSchema = StructType(Seq(
+      StructField(idCol, idType), StructField("n_bigrams", LongType),
+      StructField("n_oov_target", LongType), StructField("w_bits", LongType),
+      StructField("n_oov_raw", LongType),
+      StructField(StreamOps.BatchTag, LongType)))
+    IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)(
+      spark, sinkTable, sinkSchema, StreamOps.BatchTag, idCol, 1)
+    StreamOps.sinkBatches(spark, stream, queryName, sinkTable,
+        checkpointLocation) { (batch, _) =>
+      (dsirProbe(spark, rawTable, targetTable, batch, idCol, textCol), Nil)
+    }._2
   }
 
   /** DSIR importance weights served from TWO persisted LM indexes —
@@ -355,70 +417,15 @@ object LmIndex {
     * DOES hold whose target surprisal is missing, so a nonzero
     * `n_oov_raw` is the detectable misuse signal instead of
     * plausible-looking target-OOV mass. */
-  /** Streaming DSIR scoring — [[dsirProbe]]'s streaming twin, the
-    * quality-scoring loop next to the serving loops (streamServe) and
-    * the monitoring loops (Drift.streamCensus): every micro-batch of
-    * arriving documents is importance-weighted against the SAME two
-    * persisted LM indexes, rows landing batch-tagged under the
-    * redelivery discipline into a resume-aware sink. The accumulated
-    * table is the scored corpus a mixing/curation stage reads, built
-    * shard-by-shard as the crawl arrives instead of in one batch
-    * pass. Per batch the contact is dsirProbe's: the shard's
-    * touched-w1 bucket-pruned postings of each index — never a corpus
-    * or full-vocabulary scan. Each batch is a pure function of
-    * (indexes, shard), so every accumulated slice value-replays —
-    * gated by x_stream_dsir, restart + redelivery spec-pinned
-    * (LmIndexSpec). Returns the number of batches processed. */
-  def streamDsir(spark: SparkSession, rawTable: String, targetTable: String,
-                 stream: DataFrame, idCol: String, textCol: String,
-                 sinkTable: String, queryName: String,
-                 checkpointLocation: Option[String] = None): Int = {
-    import org.apache.spark.sql.types._
-    import graft.streaming.StreamOps
-    val idType = spark.table(targetTable + "_docs").schema("id").dataType
-    val sinkSchema = StructType(Seq(
-      StructField(idCol, idType), StructField("n_bigrams", LongType),
-      StructField("n_oov_target", LongType), StructField("w_bits", LongType),
-      StructField("n_oov_raw", LongType),
-      StructField(StreamOps.BatchTag, LongType)))
-    IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)(
-      spark, sinkTable, sinkSchema, StreamOps.BatchTag, idCol, 1)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = StreamOps.foreachBatchSink(stream, queryName,
-        checkpointLocation) { (batch, batchId) =>
-      n.incrementAndGet()
-      StreamOps.writeBatchToSink(spark, sinkTable,
-        dsirProbe(spark, rawTable, targetTable, batch, idCol, textCol),
-        batchId)
-    }
-    q.awaitTermination()
-    spark.catalog.refreshTable(sinkTable)
-    n.get()
-  }
-
   def dsirProbe(spark: SparkSession, rawTable: String, targetTable: String,
                 docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     recoverAll(spark, rawTable)
     recoverAll(spark, targetTable)
     val pairs = docGrams(docs, idCol, textCol).pipe(Checkpoints.stage)
+    // Staged: both indexes' live reconstructions semi-join it.
     val touched = pairs.select(col("w1")).distinct().pipe(Checkpoints.stage)
-    // Live whole-bit surprisal of one index over the touched-w1
-    // postings — [[probe]]'s reconstruction, parameterized by table:
-    // pruning to touched w1 keys cannot change any c1 prefix mass
-    // (every gram sharing a touched w1 IS in the pruned set).
-    def liveBits(table: String, outCol: String): DataFrame = {
-      val live = spark.table(table)
-        .join(touched, Seq("w1"), "left_semi")
-        .groupBy(col("w1"), col("g"))
-        .agg(sum(col("c")).as("c"))
-        .where(col("c") > 0)
-        .pipe(Checkpoints.stage)
-      val prefix = live.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
-      live.join(prefix, "w1").select(col("g"),
-        (length(conv(expr("c1 DIV c"), 10, 2)) - 1).cast("long").as(outCol))
-    }
-    val gramBits = liveBits(rawTable, "bits_raw")
-      .join(liveBits(targetTable, "bits_t"), Seq("g"), "left")
+    val gramBits = liveBits(spark, rawTable, touched, "bits_raw")
+      .join(liveBits(spark, targetTable, touched, "bits_t"), Seq("g"), "left")
     // gramBits is LEFT-joined FROM the raw side, so within it bits_raw
     // is never null — after the pairs left join, bits_raw null ⇔ the
     // gram is absent from the raw index (raw-OOV, whether or not the
@@ -435,14 +442,8 @@ object LmIndex {
           .as("w_bits"),
         coalesce(sum(when(col("bits_raw").isNull, col("c_doc"))), lit(0L))
           .as("n_oov_raw"))
-    docs.select(col(idCol).as("id"))
-      .join(perDoc, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("n_oov_target"), lit(0L)).as("n_oov_target"),
-        coalesce(col("w_bits"), lit(0L)).as("w_bits"),
-        coalesce(col("n_oov_raw"), lit(0L)).as("n_oov_raw"))
-      .orderBy(col(idCol))
+    zeroFilled(docs, idCol, perDoc,
+      Seq("n_bigrams", "n_oov_target", "w_bits", "n_oov_raw"))
   }
 
   /** Collapse the accumulated waves into one summed partition via
@@ -462,10 +463,11 @@ object LmIndex {
     * (the batch's counts landed but the commit didn't), and absorbing
     * it into the merged wave would let the restarted stream redeliver
     * the same docs into a FRESH batch-N wave, double-counting their
-    * grams. Refused with the same restart-then-compact discipline as
-    * StreamOps.compactSink (the family-wide crash-then-compact
-    * contract). Batch compacts (no checkpoint) skip the check — their
-    * waves are doc-set-keyed, where a retry overwrites itself. */
+    * grams. Refused by the same StreamOps.refuseOrphans check
+    * StreamOps.compactSink runs (the family-wide crash-then-compact
+    * contract: restart, then compact). Batch compacts (no checkpoint)
+    * skip the check — their waves are doc-set-keyed, where a retry
+    * overwrites itself; `del_` waves are never candidates. */
   def compact(spark: SparkSession, table: String, nBuckets0: Int = 0,
               checkpointLocation: Option[String] = None): Int = {
     recoverAll(spark, table)
@@ -475,63 +477,35 @@ object LmIndex {
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0
       else Writer.bucketsOf(spark, table).getOrElse(16)
-    val idType = spark.table(table + "_docs").schema("id").dataType
     val waves = spark.sessionState.catalog
       .listPartitionNames(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .map(_.split("=", 2)(1)).sorted
-    checkpointLocation.foreach { cp =>
-      val last = graft.streaming.StreamOps.lastCommittedBatch(spark, cp)
-      val orphans = waves.flatMap(w =>
-        if (w.startsWith("batch-")) scala.util.Try(
-          w.stripPrefix("batch-").toLong).toOption else None)
-        .filter(id => last.forall(_ < id))
-      if (orphans.nonEmpty) throw new IllegalStateException(
-        s"refusing to compact `$table`: wave(s) batch-${orphans.mkString(", batch-")} " +
-          s"are beyond the checkpoint's last committed batch " +
-          s"(${last.fold("none")(_.toString)}) at $cp — a crashed attempt's " +
-          "orphaned count wave. Restart the stream so redelivery " +
-          "overwrites the orphan, then compact.")
-    }
+    graft.streaming.StreamOps.refuseOrphans(spark, table, checkpointLocation,
+      waves.filter(_.startsWith("batch-")).flatMap(w =>
+        scala.util.Try(w.stripPrefix("batch-").toLong).toOption.map(_ -> w)))
     val mergedWave = "m_" + java.security.MessageDigest.getInstance("MD5")
       .digest(waves.mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    // Stage the summed delta table and the live doc registry
+    val t = IndexLifecycle.tombstonesOf(table)
+    // All three staging tables first, created concurrently (the empty
+    // replacement-tombstone table is a pure DDL that reads nothing),
+    // then the summed delta table and the live doc registry staged
     // CONCURRENTLY (disjoint staging tables reading disjoint live
     // tables — guide §2.6 via Par); the swaps run after both, in the
     // same order as before.
-    val staging = PurgeSwap.stagingOf(table)
-    val stagingDocs = PurgeSwap.stagingOf(table + "_docs")
-    val t = IndexLifecycle.tombstonesOf(table)
+    createLayout(spark, Writer.emptyPartitionedBucketedTable,
+      PurgeSwap.stagingOf, table,
+      spark.table(table + "_docs").schema("id").dataType, nBuckets,
+      overlap = true)
     Par.all(
-      () => {
-        Writer.dropTableAndLocation(spark, staging)
-        Writer.emptyPartitionedBucketedTable(spark, staging, deltaSchema,
-          "__wave", "w1", nBuckets)
-        writeWave(spark, staging,
-          spark.table(table).groupBy(col("w1"), col("g"))
-            .agg(sum(col("c")).as("c")).where(col("c") =!= 0),
-          mergedWave)
-      },
-      () => {
-        Writer.dropTableAndLocation(spark, stagingDocs)
-        Writer.emptyPartitionedBucketedTable(spark, stagingDocs,
-          idTableSchema(idType), "__wave", "id", nBuckets)
-        writeWave(spark, stagingDocs,
-          spark.table(table + "_docs").select(col("id"))
-            .join(spark.table(IndexLifecycle.tombstonesOf(table))
-                .select(col("id")),
-              Seq("id"), "left_anti"),
-          mergedWave)
-      },
-      // The empty replacement-tombstone table reads NOTHING — staging
-      // it is a pure DDL that joins the overlap wave (r22, guide §2.6;
-      // its SWAP stays strictly last below, so the crash ordering is
-      // unchanged: a staged-but-unswapped empty table is inert).
-      () => {
-        Writer.dropTableAndLocation(spark, PurgeSwap.stagingOf(t))
-        Writer.emptyPartitionedBucketedTable(spark, PurgeSwap.stagingOf(t),
-          idTableSchema(idType), "__wave", "id", 1)
-      })
+      () => insertWave(spark)(PurgeSwap.stagingOf(table),
+        spark.table(table).groupBy(col("w1"), col("g"))
+          .agg(sum(col("c")).as("c")).where(col("c") =!= 0),
+        mergedWave),
+      () => insertWave(spark)(PurgeSwap.stagingOf(table + "_docs"),
+        spark.table(table + "_docs").select(col("id"))
+          .join(spark.table(t).select(col("id")), Seq("id"), "left_anti"),
+        mergedWave))
     PurgeSwap.swap(spark, table)
     PurgeSwap.swap(spark, table + "_docs")
     // Tombstones clear LAST, and ATOMICALLY (swap in the empty table
@@ -551,7 +525,10 @@ object LmIndex {
     * batch replaces exactly its own partitions), so the accumulated
     * counts equal a one-shot [[build]] over everything ingested in any
     * shard split, and probes serve mid-ingest. Same
-    * one-batch-per-doc-id contract as the sibling streamIngests.
+    * one-batch-per-doc-id contract as the sibling streamIngests. The
+    * three tables come from [[createLayout]] with
+    * IndexLifecycle.resumeAwareTableMaker: kept when the checkpoint
+    * has committed batches, recreated (takedowns included) otherwise.
     *
     * TAKEDOWNS INTERLEAVE: [[delete]] waves land between batch waves
     * with no coordination needed — additive deltas commute, a
@@ -568,25 +545,12 @@ object LmIndex {
                    queryName: String = "graft_stream_lm",
                    checkpointLocation: Option[String] = None): Int = {
     import graft.streaming.StreamOps
-    val idType = stream.schema(idCol).dataType
-    val resuming = checkpointLocation.exists(cp =>
-      StreamOps.lastCommittedBatch(spark, cp).isDefined)
-    if (!resuming) {
-      Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table))
-        .foreach(Writer.dropTableAndLocation(spark, _))
-    }
-    if (!spark.catalog.tableExists(table)) {
-      // Source-byte-derived buckets (r22, guide §6 — the streaming
-      // twin of build's scaledBuckets; scaledSinkBuckets doc).
-      val nBuckets = StreamOps.scaledSinkBuckets(stream)
-      Writer.emptyPartitionedBucketedTable(spark, table, deltaSchema,
-        "__wave", "w1", nBuckets)
-      Writer.emptyPartitionedBucketedTable(spark, table + "_docs",
-        idTableSchema(idType), "__wave", "id", nBuckets)
-      Writer.emptyPartitionedBucketedTable(spark,
-        IndexLifecycle.tombstonesOf(table),
-        idTableSchema(idType), "__wave", "id", 1)
-    }
+    // Source-byte-derived buckets (r22, guide §6 — the streaming twin
+    // of build's scaledBuckets; scaledSinkBuckets doc).
+    createLayout(spark,
+      IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation),
+      identity, table, stream.schema(idCol).dataType,
+      StreamOps.scaledSinkBuckets(stream), overlap = false)
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = StreamOps.foreachBatchSink(stream, queryName,
         checkpointLocation) { (batch, batchId) =>
@@ -600,8 +564,8 @@ object LmIndex {
       // it, and both waves dynamic-overwrite their own batch-N
       // partitions whole. No ordering can leak state across the retry.
       Par.all(
-        () => writeWave(spark, table, gramCensus(b, idCol, textCol), wave),
-        () => writeWave(spark, table + "_docs",
+        () => insertWave(spark)(table, gramCensus(b, idCol, textCol), wave),
+        () => insertWave(spark)(table + "_docs",
           b.select(col(idCol).as("id")), wave))
     }
     q.awaitTermination()

@@ -50,13 +50,20 @@ private[ext] object PairIndex {
   }
 
   /** Persist `rows` (the spec's columns) bucketed+sorted on the bucket
-    * column; overwrites `table`. `nBuckets` ≤ 0 sizes buckets to the
+    * column; overwrites `table`, then drops any takedown list an
+    * earlier index under the same name left (a fresh index must not
+    * hide the ids it took down). The drop runs AFTER the write — the
+    * tombstones-last rule: a crash in between leaves the new index
+    * hiding ids it no longer needs to hide, never the old index
+    * serving its taken-down ids. `nBuckets` ≤ 0 sizes buckets to the
     * frame's estimated bytes (Writer.scaledBuckets — r21, guide §6).
     * Keys are per-row, so any row-subset of a larger key table is a
     * valid index for that subset of docs. */
-  def build(rows: DataFrame, table: String, spec: Spec, nBuckets: Int): Unit =
+  def build(rows: DataFrame, table: String, spec: Spec, nBuckets: Int): Unit = {
     Writer.bucketedTable(rows, table, spec.bucket,
       if (nBuckets > 0) nBuckets else Writer.scaledBuckets(rows))
+    Writer.dropTableAndLocation(rows.sparkSession, IndexLifecycle.tombstonesOf(table))
+  }
 
   /** Append a batch's (materialized) key rows to a batch-layout index.
     *

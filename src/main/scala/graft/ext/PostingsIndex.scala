@@ -31,6 +31,19 @@ import graft.io.Writer
   *     (N, avgdl) instead of scanning `_docs` (2-col but
   *     corpus-sized — a 20 B-doc corpus would pay ~300 GB per probe).
   *
+  * Takedown state: `<table>_tombstones` (registered through
+  * IndexLifecycle.registerTombstones, hiding the ids' postings) and
+  * `<table>_stats_deltas` ([[statsDeltasOf]] — the negative
+  * corpus-mass rows [[delete]] snapshots). [[build]], a fresh
+  * (checkpoint-less or never-committed) [[streamIngest]] and
+  * compact(purge) drop both, so a fresh index never scores against an
+  * old one's takedowns: the shared lifecycle helpers drop the
+  * tombstone list themselves and take `_stats_deltas` as the family's
+  * extra drop.
+  * The streaming layout's per-batch writes go through
+  * StreamOps.sinkBatches, i.e. the shared Writer.insertOverwrite
+  * (layout-shaped dynamic overwrite of the batch's partition).
+  *
   * Cost model at 100 TB: build is one tokenize+census pass, paid once;
   * probe reads |terms| posting ranges off the stored bucketing (term
   * equality/In predicates prune buckets) + a k-row stats sum; append
@@ -74,20 +87,24 @@ object PostingsIndex {
     dls.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
 
+  /** The k-row takedown stats side table [[delete]] writes. Every
+    * path that starts an index afresh drops it (class doc): a leftover
+    * `_stats_deltas` would keep subtracting an old index's takedowns
+    * from the fresh one's N and avgdl. */
+  private def statsDeltasOf(table: String): String = table + "_stats_deltas"
+
   /** Tokenize `docs` and persist the three-table index. Overwrites —
-    * including any leftover takedown state (`_tombstones`,
-    * `_stats_deltas`) from a previous index under the same name, which
-    * would otherwise silently hide/miscount the fresh build's docs. */
+    * including any leftover takedown state (class doc) from a
+    * previous index under the same name, which would otherwise
+    * silently hide/miscount the fresh build's docs. */
   def build(spark: SparkSession, docs: DataFrame, idCol: String,
             textCol: String, table: String, nBuckets: Int = 0): Unit = {
     // Location-aware drop: a killed JVM can leave the warehouse
     // DIRECTORY behind with no catalog entry (fresh in-memory
     // metastore on restart), and a later saveAsTable under the same
     // name fails with LOCATION_ALREADY_EXISTS.
-    Seq(IndexLifecycle.tombstonesOf(table), table + "_stats_deltas")
-      .foreach { t =>
-        Writer.dropTableAndLocation(spark, t)
-      }
+    Seq(IndexLifecycle.tombstonesOf(table), statsDeltasOf(table))
+      .foreach(Writer.dropTableAndLocation(spark, _))
     val dls = docLengths(docs, idCol, textCol).pipe(Checkpoints.stage)
     // nBuckets ≤ 0 sizes each table's buckets to its own estimated
     // bytes (Writer.scaledBuckets — r21, guide §6).
@@ -150,6 +167,11 @@ object PostingsIndex {
     * [[purgeTombstones]] rewrites physically later, absorbing the
     * deltas back into a recomputed `_stats`.
     *
+    * The wave of NEWLY taken-down ids is staged lazily
+    * (Checkpoints.stageLazy): the tombstone registration
+    * (IndexLifecycle.registerTombstones) is the one action that
+    * materializes it, and the delta reads the staged wave back.
+    *
     * Crash contract: the wave is committed tombstones-first. A crash
     * between the tombstone write and the delta write leaves probes
     * hiding the wave's postings while the stats still count its mass
@@ -159,34 +181,24 @@ object PostingsIndex {
     * side of the crash (the anti-join empties the wave), and
     * [[purgeTombstones]] heals the drift exactly. */
   def delete(spark: SparkSession, table: String, ids: DataFrame): Unit = {
-    val t = IndexLifecycle.tombstonesOf(table)
-    val d = ids.select(col("id")).distinct()
-    val fresh = Checkpoints.stage(
-      if (!spark.catalog.tableExists(t)) d
-      else d.join(spark.table(t), Seq("id"), "left_anti"))
-    // The wave's corpus mass, measured while the wave is still
-    // un-tombstoned: docs never in `_docs` (unknown ids) contribute
+    val fresh = Checkpoints.stageLazy(IndexLifecycle.minusTombstones(
+      spark, table, ids.select(col("id")).distinct()))
+    IndexLifecycle.registerTombstones(spark, table, fresh)
+    // The wave's corpus mass off the `_docs` table (never tombstone-
+    // filtered): docs never in `_docs` (unknown ids) contribute
     // nothing; docs of an earlier wave were filtered by the anti-join.
     val delta = spark.table(table + "_docs")
       .select(col("id"), col("dl"))
       .join(broadcast(fresh), Seq("id"), "left_semi")
       .agg((lit(0L) - count(lit(1))).as("n_docs"),
         (lit(0L) - coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-    if (!spark.catalog.tableExists(t)) {
-      Writer.dropTableAndLocation(spark, t) // clear any stale location
-      fresh.write.saveAsTable(t)
-    } else fresh.write.mode("append").insertInto(t)
-    val dt = table + "_stats_deltas"
+    val dt = statsDeltasOf(table)
     if (!spark.catalog.tableExists(dt)) {
       Writer.dropTableAndLocation(spark, dt)
       delta.write.format("parquet").saveAsTable(dt)
     } else delta.write.mode("append").insertInto(dt)
-    Seq(t, dt).foreach(spark.catalog.refreshTable)
+    spark.catalog.refreshTable(dt)
   }
-
-  private def minusTombstones(spark: SparkSession, table: String,
-                              postings: DataFrame): DataFrame =
-    IndexLifecycle.minusTombstones(spark, table, postings)
 
   /** 1-row (n_docs, sum_dl) of the LIVE corpus: the k-row stats-table
     * sum plus the (negative) takedown deltas [[delete]] snapshotted —
@@ -196,7 +208,7 @@ object PostingsIndex {
     val total = spark.table(table + "_stats")
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("__n_docs"),
         coalesce(sum(col("sum_dl")), lit(0L)).as("__sum_dl"))
-    val dt = table + "_stats_deltas"
+    val dt = statsDeltasOf(table)
     if (!spark.catalog.tableExists(dt)) total
     else {
       val del = spark.table(dt)
@@ -256,12 +268,25 @@ object PostingsIndex {
     // wave's mass in the same bounded direction delete()'s crash
     // contract documents, healed exactly by a purge re-run), whereas
     // new-stats-plus-deltas would double-count the removal.
-    val dt = table + "_stats_deltas"
+    val dt = statsDeltasOf(table)
     if (spark.catalog.tableExists(dt)) spark.sql(s"DROP TABLE `$dt`")
     PurgeSwap.swap(spark, table + "_stats")
     spark.sql(s"DROP TABLE `$t`")
     removed
   }
+
+  /** The probe prelude [[probe]] and [[probeBatch]] share: the query
+    * terms' postings (term-bucket-pruned scan; the explicit projection
+    * drops a streaming layout's partition tag) minus tombstones,
+    * staged — they feed both the tf and the df aggregates, so the
+    * pruned postings are read once. */
+  private def livePostings(spark: SparkSession, table: String,
+                           terms: Seq[String]): DataFrame =
+    IndexLifecycle.minusTombstones(spark, table,
+        spark.table(table)
+          .select(col("term"), col("id"), col("tf"), col("dl"))
+          .where(col("term").isin(terms: _*)))
+      .pipe(Checkpoints.stage)
 
   /** BM25 top-k for 1–8 query terms off the persisted index: reads the
     * query terms' postings (term-bucket-pruned scan, `dl` riding in
@@ -275,12 +300,7 @@ object PostingsIndex {
     require(terms.nonEmpty && terms.size <= 8,
       s"probe takes 1–8 query terms, got ${terms.size}")
     require(terms.distinct.size == terms.size, "query terms must be distinct")
-    val post = minusTombstones(spark, table,
-        spark.table(table)
-          .select(col("term"), col("id"), col("tf"), col("dl"))
-          .where(col("term").isin(terms: _*)))
-      // Feeds tf and df aggregates — read the pruned postings once.
-      .pipe(Checkpoints.stage)
+    val post = livePostings(spark, table, terms)
     val st = liveStats(spark, table)
     val tfCols = terms.zipWithIndex.map { case (tm, i) =>
       sum(when(col("term") === tm, col("tf")).otherwise(0L)).as(s"tf_$i")
@@ -325,28 +345,15 @@ object PostingsIndex {
     val q = queries.flatMap { case (qid, ts) =>
       ts.zipWithIndex.map { case (t, i) => (qid, i, t) }
     }.toDF("query_id", "term_idx", "term")
-    val allTerms = queries.flatMap(_._2).distinct
-    val post = minusTombstones(spark, table,
-        spark.table(table)
-          .select(col("term"), col("id"), col("tf"), col("dl"))
-          .where(col("term").isin(allTerms: _*)))
-      .pipe(Checkpoints.stage)
+    val post = livePostings(spark, table, queries.flatMap(_._2).distinct)
     val st = liveStats(spark, table)
     // Document frequency per DISTINCT term, computed once and shared
     // across every query that uses the term.
     val dfs = post.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    val avgdl = col("__sum_dl").cast("double") / col("__n_docs").cast("double")
-    val tfD = col("tf").cast("double")
-    val dfD = col("__df").cast("double")
-    val idf = ((col("__n_docs").cast("double") - dfD) + lit(0.5)) /
-      (dfD + lit(0.5))
-    // Exactly bm25Rank's parenthesization (tf > 0 always holds on a
+    // bm25Rank's own per-term builder (tf > 0 always holds on a
     // posting row; the guard keeps the expression form identical).
-    val component = when(col("tf") > 0,
-      idf * ((tfD * lit(2.2)) /
-        (tfD + lit(1.2) * (lit(0.25) + lit(0.75) *
-          (col("dl").cast("double") / avgdl)))))
-      .otherwise(lit(0.0))
+    val component = TextAnalysis.bm25Term(col("tf"), col("__df"),
+      col("__sum_dl").cast("double") / col("__n_docs").cast("double"))
     val scored = post
       .join(broadcast(q), Seq("term"))
       .join(broadcast(dfs), Seq("term"))
@@ -392,7 +399,8 @@ object PostingsIndex {
     // stream's source bytes (r22, guide §6 — scaledSinkBuckets doc).
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0 else StreamOps.scaledSinkBuckets(stream)
-    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)
+    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark,
+      checkpointLocation, dropsWhenFresh = Seq(statsDeltasOf(table)))
     mkTable(spark, table,
       StructType(Seq(
         StructField("term", StringType),
@@ -449,7 +457,7 @@ object PostingsIndex {
     // the live corpus at every point in between, and a crashed
     // compact(purge) re-runs to the same state.
     IndexLifecycle.compactStreaming(spark, table, checkpointLocation,
-      purge, extraDropsOnPurge = Seq(table + "_stats_deltas")) { stones =>
+      purge, extraDropsOnPurge = Seq(statsDeltasOf(table))) { stones =>
       if (spark.catalog.tableExists(table + "_docs"))
         graft.streaming.StreamOps.compactSink(spark, table + "_docs",
           checkpointLocation = checkpointLocation, purgeIds = stones)

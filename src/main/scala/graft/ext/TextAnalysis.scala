@@ -944,6 +944,26 @@ object TextAnalysis {
     bm25Rank(tf.crossJoin(dfs).crossJoin(scalars), idCol, terms.size, topK)
   }
 
+  /** One query term's BM25 component of a doc — the ONE copy of the
+    * arithmetic, used per term by [[bm25Rank]] and per posting row by
+    * PostingsIndex.probeBatch, so their scores are bit-identical by
+    * construction. Reads `dl` and `__n_docs` from the frame; `tf`,
+    * `df` and `avgdl` are the caller's columns. The exact
+    * parenthesization the oracle SQL mirrors:
+    * idf · ((tf·2.2) / (tf + 1.2·(0.25 + 0.75·(dl/avgdl)))), and 0.0
+    * for an absent term (tf = 0). */
+  private[ext] def bm25Term(tf: Column, df: Column, avgdl: Column): Column = {
+    val tfD = tf.cast("double")
+    val dfD = df.cast("double")
+    val idf = ((col("__n_docs").cast("double") - dfD) + lit(0.5)) /
+      (dfD + lit(0.5))
+    when(tf > 0,
+      idf * ((tfD * lit(2.2)) /
+        (tfD + lit(1.2) * (lit(0.25) + lit(0.75) *
+          (col("dl").cast("double") / avgdl)))))
+      .otherwise(lit(0.0))
+  }
+
   /** The BM25 ranking stage shared by [[bm25TopK]] (scan-time) and
     * [[PostingsIndex.probe]] (index-time): takes the per-doc frame
     * with columns (idCol, dl, tf_0..tf_{n-1}, __df_0.., __n_docs,
@@ -954,20 +974,8 @@ object TextAnalysis {
                             nTerms: Int, topK: Int): DataFrame = {
     val scored = perDoc.withColumn("__avgdl",
       col("__sum_dl").cast("double") / col("__n_docs").cast("double"))
-    // Per-term BM25 with the exact parenthesization the oracle SQL
-    // mirrors: idf · ((tf·2.2) / (tf + 1.2·(0.25 + 0.75·(dl/avgdl)))).
-    def termScore(i: Int): Column = {
-      val tfD = col(s"tf_$i").cast("double")
-      val dfD = col(s"__df_$i").cast("double")
-      val idf = ((col("__n_docs").cast("double") - dfD) + lit(0.5)) /
-        (dfD + lit(0.5))
-      when(col(s"tf_$i") > 0,
-        idf * ((tfD * lit(2.2)) /
-          (tfD + lit(1.2) * (lit(0.25) + lit(0.75) *
-            (col("dl").cast("double") / col("__avgdl"))))))
-        .otherwise(lit(0.0))
-    }
-    val score = (0 until nTerms).map(termScore)
+    val score = (0 until nTerms)
+      .map(i => bm25Term(col(s"tf_$i"), col(s"__df_$i"), col("__avgdl")))
       .reduceLeft[Column](_ + _)
     scored
       .select((col(idCol) +: col("dl") +:

@@ -500,8 +500,9 @@ object StreamOps {
     * two inserts per batch (index append + pairs sink) whose plans
     * share no live table (the probe stages its pair set before the
     * append — PairIndex.probe doc), so their jobs overlap instead of
-    * serializing — the profile's two largest per-batch terms. The
-    * partitionOverwriteMode conf is a ONE-WAY dynamic latch
+    * serializing — the profile's two largest per-batch terms. Each
+    * write is one Writer.insertOverwrite (latch, align, bucket shape).
+    * The partitionOverwriteMode conf is a ONE-WAY dynamic latch
     * (Writer.ensureDynamicOverwrite): any save/restore racing a
     * concurrent insert could restore mid-plan and silently degrade it
     * to STATIC overwrite, which truncates every other batch's
@@ -509,51 +510,14 @@ object StreamOps {
     * insertInto ignores per-write options, hence session conf at all. */
   def writeBatchSinks(spark: SparkSession, batchId: Long,
                       writes: Seq[(String, DataFrame)]): Unit = {
-    // One-way dynamic-overwrite latch per ROWS' session (the
-    // foreachBatch micro-batch clone, not necessarily `spark`) — the
-    // conf is read at write planning; the old save/restore could race
-    // ANOTHER thread's in-flight dynamic write under r21's overlapped
-    // lifecycle phases (Writer.ensureDynamicOverwrite doc).
-    writes.map(_._2.sparkSession).distinct
-      .foreach(graft.io.Writer.ensureDynamicOverwrite)
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val jobs = writes.map { case (sinkTable, rows) => Future {
-        val sess = rows.sparkSession
-        val aligned = rows.withColumn(BatchTag, lit(batchId))
-          .select(spark.table(sinkTable).columns.toIndexedSeq.map(col): _*)
-        // Shape the write to the target's layout BEFORE the insert. A
-        // micro-batch arrives in up-to-shuffle-partitions slices, and a
-        // bucketed insert writes one file per (task, bucket) — 32 tasks
-        // × 16 buckets was ~500 tiny files per batch, and the dynamic-
-        // overwrite commit (staging list + rename per file) dominated
-        // the profile at ~1.2 s per insert. repartition(n, bucketCols)
-        // routes with the SAME pmod(murmur3, n) the bucketed write uses
-        // for bucket ids, so each task holds exactly one bucket → n
-        // files per batch, the floor for a bucketed layout. Unbucketed
-        // sinks coalesce to the size-derived count (Writer.partitionCount
-        // — 1 file at micro-batch scale, growing with actual bytes,
-        // capped at shuffle parallelism: join-inflated plan-stats
-        // estimates must degrade to "no coalesce", not a 5-billion-
-        // partition request).
-        val shaped = {
-          import org.apache.spark.sql.catalyst.TableIdentifier
-          sess.sessionState.catalog
-            .getTableMetadata(TableIdentifier(sinkTable)).bucketSpec match {
-            case Some(bs) =>
-              aligned.repartition(bs.numBuckets, bs.bucketColumnNames.map(col): _*)
-            case None =>
-              aligned.coalesce(
-                graft.io.Writer.partitionCount(graft.io.Writer.estimatedBytes(rows))
-                  .min(sess.sessionState.conf.numShufflePartitions))
-          }
-        }
-        shaped.write.mode("overwrite").insertInto(sinkTable)
-      }}
-      Await.result(Future.sequence(jobs), Duration.Inf)
-    }
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val jobs = writes.map { case (sinkTable, rows) => Future {
+      graft.io.Writer.insertOverwrite(rows.withColumn(BatchTag, lit(batchId)),
+        sinkTable)
+    }}
+    Await.result(Future.sequence(jobs), Duration.Inf)
   }
 
   /** Compact a batch-id-partitioned sink/index table: merge every
@@ -618,16 +582,7 @@ object StreamOps {
       .listPartitionNames(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .map(_.split("=", 2)(1).toLong)
       .filter(_ != mergedId).sorted
-    checkpointLocation.foreach { cp =>
-      val last = lastCommittedBatch(spark, cp)
-      val orphans = ids.filter(id => id >= 0 && last.forall(_ < id))
-      if (orphans.nonEmpty) throw new IllegalStateException(
-        s"refusing to compact `$table`: partition(s) ${orphans.mkString(", ")} " +
-          s"are beyond the checkpoint's last committed batch " +
-          s"(${last.fold("none")(_.toString)}) at $cp — a crashed attempt's " +
-          "orphaned append. Restart the stream so redelivery overwrites " +
-          "the orphan, then compact.")
-    }
+    refuseOrphans(spark, table, checkpointLocation, ids.map(id => id -> id.toString))
     // Nothing to merge AND nothing to purge: done. With purgeIds an
     // already-compact table still rewrites its merged partition (the
     // purge is the point).
@@ -696,16 +651,8 @@ object StreamOps {
     val newTags = tags.filter(t => t >= 0 && t > watermark)
     val stale = tags.filter(t =>
       (t >= 0 && t <= watermark) || keepTag.exists(k => t <= -2 && t != k))
-    checkpointLocation.foreach { cp =>
-      val last = lastCommittedBatch(spark, cp)
-      val orphans = newTags.filter(id => last.forall(_ < id))
-      if (orphans.nonEmpty) throw new IllegalStateException(
-        s"refusing to compact `$table`: partition(s) ${orphans.mkString(", ")} " +
-          s"are beyond the checkpoint's last committed batch " +
-          s"(${last.fold("none")(_.toString)}) at $cp — a crashed attempt's " +
-          "orphaned append. Restart the stream so redelivery overwrites " +
-          "the orphan, then compact.")
-    }
+    refuseOrphans(spark, table, checkpointLocation,
+      newTags.map(id => id -> id.toString))
     if (newTags.isEmpty) {
       // Nothing new — just retire crash leftovers (already absorbed).
       stale.foreach(id =>
@@ -725,6 +672,30 @@ object StreamOps {
       tags.count(_ != newTag)
     }
   }
+
+  /** The crash-then-compact refusal every batch-tagged compaction
+    * runs (compactSink, compactSinkAdditive, LmIndex.compact): a
+    * partition tagged with a batch id beyond the checkpoint's last
+    * COMMITTED batch is a crashed attempt's orphan, and absorbing it
+    * into a merged partition breaks the redelivery contract (compactSink
+    * doc). `tagged` pairs each candidate batch id with its partition
+    * name as the table spells it; negative ids (merged partitions) are
+    * never orphans. Throws IllegalStateException naming the orphans;
+    * no-op without a checkpoint. */
+  def refuseOrphans(spark: SparkSession, table: String,
+                    checkpointLocation: Option[String],
+                    tagged: Seq[(Long, String)]): Unit =
+    checkpointLocation.foreach { cp =>
+      val last = lastCommittedBatch(spark, cp)
+      val orphans = tagged.filter { case (id, _) => id >= 0 && last.forall(_ < id) }
+      if (orphans.nonEmpty) throw new IllegalStateException(
+        s"refusing to compact `$table`: partition(s) " +
+          s"${orphans.map(_._2).mkString(", ")} " +
+          "are beyond the checkpoint's last committed batch " +
+          s"(${last.fold("none")(_.toString)}) at $cp — a crashed attempt's " +
+          "orphaned write. Restart the stream so redelivery overwrites " +
+          "the orphan, then compact.")
+    }
 
   /** Highest batch id the checkpoint's commit log records as COMMITTED
     * — None when nothing committed yet (fresh or missing checkpoint).
@@ -757,7 +728,10 @@ object StreamOps {
     * the one counter is an AtomicInteger). The micro-batch loop of
     * every sink-table stream operator: the pair-index ingests
     * (graft.ext.PairIndex), decontamination, postings, PQ, mixing,
-    * curation and text classification. The sink is read back with no
+    * curation, text classification, the drift monitors
+    * (Drift.streamCensus / streamCensusMulti, IvfIndex.streamCellDrift)
+    * and DSIR scoring (LmIndex.streamDsir) — those four return only
+    * the batch count. The sink is read back with no
     * distinct — the pair ingests' per-batch outputs are provably
     * disjoint (a pair is emitted only by the batch its later member
     * arrives in), and a per-batch distinct would re-shuffle the whole

@@ -1121,6 +1121,29 @@ class DedupSpec extends AnyFunSuite {
     assert(DedupIndex.purgeTombstones(spark, idx) == 0L)
   }
 
+  test("DedupIndex.build into a reused name drops the old index's takedowns") {
+    import spark.implicits._
+    val body = (1 to 30).map(i => s"token$i").mkString(" ")
+    val old = Seq(
+      (1L, s"$body variant one"),
+      (3L, "a totally different unrelated document body here")).toDF("doc_id", "text")
+    val newDocs = Seq((9L, s"$body variant nine")).toDF("doc_id", "text")
+    val idx = "graft_band_rebuild_spec"
+    def cands() = DedupIndex.probeNewBatch(spark, idx, newDocs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      DedupIndex.build(old, "doc_id", "text", idx)
+      assert(cands() == Set((1L, 9L)), "pre-delete: the near-dup pairs")
+      DedupIndex.delete(spark, idx, Seq(1L).toDF("id"))
+      assert(cands().isEmpty, "the takedown hides the id")
+      DedupIndex.build(old, "doc_id", "text", idx)
+      assert(cands() == Set((1L, 9L)),
+        "a rebuilt index must not inherit the old index's takedowns")
+      assert(!spark.catalog.tableExists(idx + "_tombstones"))
+    } finally Seq(idx, idx + "_tombstones")
+      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+  }
+
   test("graft_simhash kernel is bit-identical to the nested-HOF simhash over the real corpus") {
     val docs = graft.Tables.documents(spark, graft.TestSpark.sf0001)
       .where(col("text").isNotNull)

@@ -445,4 +445,15 @@ class IvfIndexSpec extends AnyFunSuite {
         .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
     }
   }
+
+  test("probeTopKQuantized refuses a shortlist below k, like the other shortlist paths") {
+    // A shortlist of 5 cannot hold a top-10: the re-rank would return
+    // fewer than k rows without a word.
+    val q = Seq.fill(8)(0.5f)
+    val ex = intercept[IllegalArgumentException] {
+      IvfIndex.probeTopKQuantized(spark, table, "vec_id", "embedding", q, 10,
+        nProbe = 2, shortlist = 5)
+    }
+    assert(ex.getMessage.contains("shortlist 5 < topK 10"), ex.getMessage)
+  }
 }

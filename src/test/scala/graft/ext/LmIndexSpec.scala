@@ -50,6 +50,65 @@ class LmIndexSpec extends AnyFunSuite {
       "retried/overlapping appends must not change any count")
   }
 
+  /** A wave writer that lets the first `n` writes commit through the
+    * family's own [[LmIndex.insertWave]], then throws — a driver crash
+    * between the ordered waves of one append or delete. */
+  private def crashAfter(n: Int): (String, org.apache.spark.sql.DataFrame, String) => Unit = {
+    val left = new java.util.concurrent.atomic.AtomicInteger(n)
+    (table, rows, wave) =>
+      if (left.getAndDecrement() <= 0) throw new IllegalStateException("crash")
+      else LmIndex.insertWave(spark)(table, rows, wave)
+  }
+
+  private def ids(table: String) = spark.table(table).select(col("id"))
+    .collect().map(_.getLong(0)).toSet
+
+  test("append crashed after its count-delta wave: the retry equals a fresh build, no double count") {
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val t = "lm_crash_append_spec"
+    val old = docs.where(pmod(col("doc_id"), lit(5)) =!= 4)
+    val shard = docs.where(pmod(col("doc_id"), lit(5)) === 4)
+    LmIndex.build(spark, old, "doc_id", "text", t)
+    intercept[IllegalStateException] {
+      LmIndex.append(spark, t, shard, "doc_id", "text", overlapWaves = false,
+        crashAfter(1))
+    }
+    // The crash state: only the count-delta wave committed — the shard's
+    // counts are in, its ids are not registered.
+    val shardIds = shard.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert((ids(t + "_docs") intersect shardIds).isEmpty,
+      "the registry wave must not have committed")
+    assert(spark.sessionState.catalog.listPartitionNames(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).size == 2,
+      "the count-delta wave must have committed")
+    LmIndex.append(spark, t, shard, "doc_id", "text")
+    assert(rows(LmIndex.probe(spark, t, docs, "doc_id", "text")) ==
+      scanTruth(docs),
+      "the retried append must overwrite its own wave: probe equals a fresh build")
+  }
+
+  test("delete crashed after its negative-delta wave: the retry equals a build on the live docs") {
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val t = "lm_crash_delete_spec"
+    val dead = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
+    val live = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
+    LmIndex.build(spark, docs, "doc_id", "text", t)
+    intercept[IllegalStateException] {
+      LmIndex.delete(spark, t, dead, "doc_id", "text", crashAfter(1))
+    }
+    // The crash state: only the negative-delta wave committed — the
+    // counts are subtracted, no id is tombstoned.
+    assert(ids(t + "_tombstones").isEmpty,
+      "the tombstone wave must not have committed")
+    assert(rows(LmIndex.probe(spark, t, live, "doc_id", "text")) ==
+      scanTruth(live), "the negative-delta wave must have committed")
+    assert(LmIndex.delete(spark, t, dead, "doc_id", "text") > 0L,
+      "the retry must re-delete the untombstoned ids")
+    assert(rows(LmIndex.probe(spark, t, live, "doc_id", "text")) ==
+      scanTruth(live),
+      "the retried delete must overwrite its own wave: probe equals a build on the live docs")
+  }
+
   test("delete subtracts the docs' counts exactly: probe equals a fresh build on the live corpus; OOV surfaces") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val t = "lm_del_spec"

@@ -138,6 +138,34 @@ class PostingsIndexSpec extends AnyFunSuite {
     assert(nIndexed() == 8L, "compact must not change the stats mass")
   }
 
+  test("a fresh streamIngest into a reused name drops the old index's takedown state") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft_pidx_reuse_").toString
+    val inDir = s"$base/in"
+    Files.createDirectories(Paths.get(inDir))
+    corpus.coalesce(1).write.mode("overwrite").parquet(s"$base/w")
+    val part = new java.io.File(s"$base/w").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(inDir, "all.parquet"))
+    val table = "pidx_reuse_spec"
+    def ingest(): Unit = {
+      val stream = spark.readStream.schema(corpus.schema).parquet(inDir)
+      PostingsIndex.streamIngest(spark, table, stream, "doc_id", "text",
+        queryName = "pidx_reuse_spec_q")
+    }
+    ingest()
+    PostingsIndex.delete(spark, table, Seq(4L).toDF("id"))
+    assert(probeTopK(table) == scanTopK(corpus.where(col("doc_id") =!= 4L)))
+    // No checkpoint: the second ingest is fresh, so it starts from an
+    // empty index — no tombstones AND no stats deltas of the old one.
+    ingest()
+    assert(!spark.catalog.tableExists(table + "_tombstones"))
+    assert(!spark.catalog.tableExists(table + "_stats_deltas"),
+      "a fresh ingest must drop the old index's takedown stats deltas")
+    assert(probeTopK(table) == scanTopK(corpus),
+      "a fresh ingest must score like the scan over the whole corpus")
+  }
+
   test("delete: probe equals scan on the live corpus (idf/avgdl shift too); purge stable") {
     val table = "pidx_del"
     if (spark.catalog.tableExists(table + "_tombstones"))
