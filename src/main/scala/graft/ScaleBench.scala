@@ -1707,8 +1707,7 @@ object ScaleBench {
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     require(cells == cellsFresh,
       s"rebalanced layout must equal a fresh build's:\n$cells\nvs\n$cellsFresh")
-    Seq(tFresh, IvfIndex.centroidsTable(tFresh))
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    graft.ext.IndexLifecycle.clear(spark, IvfIndex.state(tFresh))
     s"""{"rebalance":{"scale":$scale,"n_base":$n,"n_blob":$nBlob,""" +
       s""""k_cells":$kCells,"skew_milli_before":$skewBefore,""" +
       s""""skew_milli_after":$skewAfter,"hot_probe_rows_before":$scanBefore,""" +
@@ -1881,9 +1880,10 @@ object ScaleBench {
     // would fail TableAlreadyExists. Slate-drop every table this
     // point writes (dropTableAndLocation, the gate-fixture rule: a
     // bare DROP TABLE can leave the warehouse directory behind).
-    Seq(tA, tB).flatMap(t => Seq(t, PurgeSwap.stagingOf(t),
-        graft.ext.IndexLifecycle.tombstonesOf(t)))
-      .foreach(graft.io.Writer.dropTableAndLocation(spark, _))
+    val entries = Seq(
+      IndexOps.Entry("a", graft.ext.DedupIndex.state(tA)),
+      IndexOps.Entry("b", graft.ext.DedupIndex.state(tB)))
+    entries.foreach(e => graft.ext.IndexLifecycle.clear(spark, e.state))
     def bands(from: Long, until: Long) =
       spark.range(from, until, 1, 32).toDF("id")
         .select(col("id"), explode(sequence(lit(0), lit(3))).as("band_id"))
@@ -1891,9 +1891,6 @@ object ScaleBench {
           xxhash64(col("id"), col("band_id")).as("band_hash"))
     graft.ext.DedupIndex.buildFromBands(bands(0L, n), tA)
     graft.ext.DedupIndex.buildFromBands(bands(n / 2, n + n / 2), tB)
-    val entries = Seq(
-      IndexOps.Entry("a", tA),
-      IndexOps.Entry("b", tB))
     val step = n / 1000L
     val ids = spark.range(0, 1000, 1, 8)
       .select((col("id") * step + 7L).as("id"))
@@ -1941,9 +1938,7 @@ object ScaleBench {
       vac("a").getAs[Long]("bytes_reclaimed") == orphanBytes &&
       vac("a").getAs[Long]("residual") == 0L, vac("a").toString)
 
-    Seq(tA, tB).flatMap(t => Seq(t, PurgeSwap.stagingOf(t),
-        graft.ext.IndexLifecycle.tombstonesOf(t)))
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    entries.foreach(e => graft.ext.IndexLifecycle.clear(spark, e.state))
     s"""{"ops":{"scale":$scale,"n_ids":$n,"n_audited":1000,""" +
       s""""overlap_hits":$expB,"audit_t":${fmt(tAudit)},""" +
       s""""fresh_t":${fmt(tFresh)},"orphan_census_t":${fmt(tCensus)},""" +
@@ -2056,8 +2051,7 @@ object ScaleBench {
     val gained = drift.map(r => r._3 - r._2).sum
     require(gained == nBlob,
       s"contrast must conserve the blob mass: gained $gained != $nBlob")
-    Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    graft.ext.IndexLifecycle.clear(spark, IvfIndex.state(t))
     s"""{"vec_drift":{"scale":$scale,"n_base":$n,"n_blob":$nBlob,""" +
       s""""k_cells":$kCells,"blob_cell":$blobCell,""" +
       s""""blob_drift_score":${blobRow._4},"census_t":${fmt(tDrift)}}}"""

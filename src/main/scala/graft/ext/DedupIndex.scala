@@ -30,6 +30,11 @@ object DedupIndex {
     Seq(StructField("band_id", IntegerType), StructField("band_hash", LongType)),
     "band_hash")
 
+  /** This family's declared state ([[IndexState]]): the band table and its
+    * tombstone list, taken down through [[delete]]. */
+  def state(table: String): IndexState =
+    IndexState.tombstoned(Seq(table), "id", delete)
+
   /** Band the corpus and persist as a bucketed+sorted table keyed on
     * `band_hash`. Overwrites `table`. */
   def build(docs: DataFrame, idCol: String, textCol: String, table: String,
@@ -43,7 +48,7 @@ object DedupIndex {
     * bucketed save, never a second shingle+minhash pass. `nBuckets`
     * ≤ 0 sizes buckets to the band frame ([[PairIndex.build]]). */
   def buildFromBands(bands: DataFrame, table: String, nBuckets: Int = 0): Unit =
-    PairIndex.build(bands, table, spec, nBuckets)
+    PairIndex.build(bands, state(table), spec, nBuckets)
 
   /** Tombstone-delete docs from the band index — the takedown pattern
     * shared across the index families (WinnowIndex's doc has the
@@ -131,8 +136,9 @@ object DedupIndex {
                    params: Dedup.MinHashParams = Dedup.MinHashParams(),
                    queryName: String = "graft_stream_ingest",
                    checkpointLocation: Option[String] = None): (DataFrame, Int) =
-    PairIndex.streamIngest(spark, table, stream, queryName, checkpointLocation,
-        spec.fields(stream.schema(idCol).dataType), spec.bucket, Nil)(
+    PairIndex.streamIngest(spark, state(table), stream, queryName,
+        checkpointLocation, spec.fields(stream.schema(idCol).dataType),
+        spec.bucket, Nil)(
       Dedup.bands(_, idCol, textCol, params))(
       (nb, batchId) => probeNewBatchFromBands(spark, table, nb, params,
         excludeBatch = Some(batchId)))
@@ -144,7 +150,7 @@ object DedupIndex {
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,
               purge: Boolean = false): Int =
-    PairIndex.compact(spark, table, checkpointLocation, purge)
+    PairIndex.compact(spark, state(table), checkpointLocation, purge)
 
   /** End-to-end incremental near-dup pairs: probe candidates, then
     * exact-Jaccard verification against the UNION corpus (only docs

@@ -6,12 +6,74 @@ import org.apache.spark.sql.types.StructType
 
 import graft.io.Writer
 
+/** One index family's persisted state, declared ONCE by the family
+  * (`DedupIndex.state`, `WinnowIndex.state`, `IvfIndex.state`,
+  * `IvfPq.state`, `PostingsIndex.state`, `LmIndex.state`) and read by
+  * every consumer that must know which tables the family owns — its
+  * fresh-start clears, purge drops, stream-ingest table maker, the
+  * IndexOps reports and takedown, and every fixture's slate drop. A
+  * hand-written table list drifts from the family (five "a fresh index
+  * inherits the old one's state" bugs were such drifts); a declaration
+  * cannot.
+  *
+  *   - `live` — the index-of-record tables, MAIN FIRST (a marked
+  *     rebalance swaps them in this order).
+  *   - `takedown` — the takedown state, the tombstone list FIRST; drops
+  *     run in REVERSE, so the tombstone list goes last and probes keep
+  *     filtering through any crash.
+  *   - `idTable` / `idCol` — the id-bearing table and its id column
+  *     (the LM's `_docs` registry; everyone else's main table).
+  *   - `delete` — the family's own id-only takedown; None when a
+  *     takedown needs more than ids (the LM subtracts the doc's counts,
+  *     so it needs the text — LmIndex.delete).
+  *   - `zeroedGrams` — dead count rows a compaction reclaims (LM only).
+  *
+  * Derived names: [[stagings]] (every table's PurgeSwap and compactSink
+  * staging), the rebalance [[marker]], and [[all]] — everything the
+  * family can leave behind, in the fresh-build clear order.
+  */
+final case class IndexState(live: Seq[String], takedown: Seq[String],
+                            idTable: String, idCol: String,
+                            delete: Option[(SparkSession, DataFrame) => Unit],
+                            zeroedGrams: SparkSession => Long = _ => 0L) {
+  def table: String = live.head
+  /** Live + takedown — the census's `n_tables` set and the tables a
+    * staging can shadow. */
+  def tables: Seq[String] = live ++ takedown
+  def stagings: Seq[String] = tables.flatMap(IndexLifecycle.stagingsOf)
+  def marker: String = IndexLifecycle.rebalanceMarkerOf(table)
+  /** What a fresh start drops beyond the live tables it rewrites: the
+    * rebalance marker FIRST (a staging without its marker is garbage,
+    * so a stale marker can never swap stagings over the fresh index),
+    * the stagings, then the takedown state. */
+  def stale: Seq[String] = marker +: (stagings ++ takedown)
+  /** Everything the family can leave behind: [[stale]] with the live
+    * tables before the takedown state. */
+  def all: Seq[String] = marker +: (stagings ++ tables)
+}
+
+object IndexState {
+  /** A family whose whole takedown state is its tombstone list, with
+    * the id column on the main table. */
+  def tombstoned(live: Seq[String], idCol: String,
+                 delete: (SparkSession, String, DataFrame) => Unit): IndexState =
+    IndexState(live, Seq(IndexLifecycle.tombstonesOf(live.head)), live.head,
+      idCol, Some(delete(_, live.head, _)))
+}
+
 /** The index-family lifecycle contract glue, shared (VERDICT r16 #4:
   * six families hand-rolled the same ensure-tables / takedown-register
   * / tombstone-filter / resume plumbing, so every lifecycle fix had to
   * land six times). The CONTRACTS these helpers encode are documented
   * once at their doc comments and referenced by every family:
   *
+  *   - every table a family owns comes from its [[IndexState]]
+  *     declaration, and this object owns the suffix of every shared
+  *     state-table name ([[tombstonesOf]], [[docsOf]], [[statsTableOf]],
+  *     [[statsDeltasOf]]). Each clear keeps its caller's place in the
+  *     write order; [[clear]] drops the rebalance marker first and the
+  *     takedown state after the live tables, and a purge drops the
+  *     takedown state in reverse, so the tombstone list goes last.
   *   - takedowns REGISTER first ([[registerTombstones]]): probes hide
   *     tombstoned ids immediately ([[minusTombstones]] — the takedown
   *     list stays takedown-sized, so the anti-join broadcasts); the
@@ -24,10 +86,10 @@ import graft.io.Writer
   *   - a streaming ingest keeps prior state ONLY when its checkpoint
   *     has committed batches ([[resumeAwareTableMaker]]): a fresh
   *     checkpoint with a leftover table is a drop-and-recreate, never
-  *     a silent merge, and the recreate drops the table's takedown
-  *     list with it (plus any other takedown state the family names —
-  *     PostingsIndex's `_stats_deltas`). LmIndex creates its
-  *     three-table layout through the same maker.
+  *     a silent merge, and a fresh index ingest drops its declaration's
+  *     [[IndexState.stale]] set (takedown state, stagings, marker)
+  *     with it. LmIndex creates its three-table layout through the
+  *     same maker.
   *
   * The keyed-pair families (DedupIndex, WinnowIndex, and IvfIndex's
   * stream ingest) go one step further: build, append, purge, the probe
@@ -42,6 +104,25 @@ import graft.io.Writer
 private[graft] object IndexLifecycle {
 
   def tombstonesOf(table: String): String = table + "_tombstones"
+  /** The doc registry (PostingsIndex's `(id, dl)`, LmIndex's ids). */
+  def docsOf(table: String): String = table + "_docs"
+  /** PostingsIndex's k-row corpus-mass table. */
+  def statsTableOf(table: String): String = table + "_stats"
+  /** PostingsIndex's takedown corpus-mass deltas. */
+  def statsDeltasOf(table: String): String = table + "_stats_deltas"
+
+  /** A state table's possible staging shadows: the PurgeSwap
+    * stage-and-swap staging and the streaming compactSink staging. */
+  def stagingsOf(table: String): Seq[String] =
+    Seq(PurgeSwap.stagingOf(table),
+      graft.streaming.StreamOps.compactStagingOf(table))
+
+  /** Drop everything `state`'s family can leave behind
+    * ([[IndexState.all]], in order; location-dropping, so a killed
+    * run's orphaned warehouse directory cannot fail the next write).
+    * The cell families' build clear and every fixture's slate drop. */
+  def clear(spark: SparkSession, state: IndexState): Unit =
+    state.all.foreach(Writer.dropTableAndLocation(spark, _))
 
   /** Register takedown ids in `<table>_tombstones` — the shared
     * takedown-register step (WinnowIndex's doc has the family
@@ -91,34 +172,29 @@ private[graft] object IndexLifecycle {
     * families (VERDICT r17 #6: the quiesce → merged-rewrite → sibling
     * rewrites → tombstone-drop skeleton was hand-rolled five times;
     * the three pair families call it through PairIndex.compact,
-    * whose sibling rewrite is the `_pairs` sink): read the
+    * whose other rewrite is the `_pairs` sink): read the
     * tombstone list when purging, [[graft.streaming.StreamOps
     * .compactSink]] the MAIN table with it (the merged rewrite a
     * compaction pays anyway also reclaims tombstoned bytes), run the
-    * family's sibling rewrites with the SAME purge ids, then drop the
-    * tombstone list LAST — probes keep filtering until every sibling
-    * rewrote, so any crash point leaves answers unchanged and a re-run
-    * heals (compactSink's contract). `extraDropsOnPurge` lists side
-    * tables the purge obsoletes (PostingsIndex's `_stats_deltas`),
-    * dropped in the same drop-last window. Returns the main table's
-    * merged partition count. */
-  def compactStreaming(spark: SparkSession, table: String,
-                       checkpointLocation: Option[String], purge: Boolean,
-                       idCol: String = "id",
-                       extraDropsOnPurge: Seq[String] = Nil)
-                      (siblings: Option[DataFrame] => Unit): Int = {
-    val t = tombstonesOf(table)
+    * family's other rewrites (`rest`) with the SAME purge ids, then
+    * drop the declared takedown state in reverse — the tombstone list
+    * LAST, so probes keep filtering until every table rewrote: any
+    * crash point leaves answers unchanged and a re-run heals
+    * (compactSink's contract). Returns the main table's merged
+    * partition count. */
+  def compactStreaming(spark: SparkSession, state: IndexState,
+                       checkpointLocation: Option[String], purge: Boolean)
+                      (rest: Option[DataFrame] => Unit): Int = {
+    val t = tombstonesOf(state.table)
     val stones = if (purge && spark.catalog.tableExists(t))
       Some(spark.table(t)) else None
-    val merged = graft.streaming.StreamOps.compactSink(spark, table,
+    val merged = graft.streaming.StreamOps.compactSink(spark, state.table,
       checkpointLocation = checkpointLocation, purgeIds = stones,
-      purgeIdCol = idCol)
-    siblings(stones)
+      purgeIdCol = state.idCol)
+    rest(stones)
     stones.foreach { _ =>
-      extraDropsOnPurge.filter(spark.catalog.tableExists)
-        .foreach(x => spark.sql(s"DROP TABLE `$x`"))
-      spark.sql(s"DROP TABLE `$t`")
-      spark.catalog.refreshTable(table)
+      state.takedown.reverse.foreach(Writer.dropTableAndLocation(spark, _))
+      spark.catalog.refreshTable(state.table)
     }
     merged
   }
@@ -196,25 +272,23 @@ private[graft] object IndexLifecycle {
   /** The streaming-resume table maker: keep prior state only when the
     * checkpoint has committed batches (fresh checkpoint + leftover
     * table = drop-and-recreate, not a silent merge — the DedupIndex
-    * streamIngest lesson, shared by every family's ingest). The
-    * recreate drops the table's `<table>_tombstones` too: a fresh
-    * index must not hide ids an earlier run took down.
-    * `dropsWhenFresh` names a family's other takedown state (tables
-    * that are not some created table's tombstone list — PostingsIndex's
-    * `_stats_deltas`), dropped once when the maker is built fresh. */
+    * streamIngest lesson, shared by every family's ingest). A fresh
+    * INDEX ingest passes its family's declaration: its
+    * [[IndexState.stale]] set drops once, before any table is made, so
+    * a fresh index never hides ids an earlier run took down, never
+    * scores against its takedown deltas, and never heals an old
+    * rebalance marker's stagings over itself. Sink-only callers pass
+    * none. */
   def resumeAwareTableMaker(spark: SparkSession,
                             checkpointLocation: Option[String],
-                            dropsWhenFresh: Seq[String] = Nil)
+                            state: Option[IndexState] = None)
       : (SparkSession, String, StructType, String, String, Int) => Unit = {
     val resuming = checkpointLocation.exists(cp =>
       graft.streaming.StreamOps.lastCommittedBatch(spark, cp).isDefined)
     if (resuming) Writer.ensurePartitionedBucketedTable _
     else {
-      dropsWhenFresh.foreach(Writer.dropTableAndLocation(spark, _))
-      (s, table, schema, partitionCol, key, buckets) => {
-        Writer.dropTableAndLocation(s, tombstonesOf(table))
-        Writer.emptyPartitionedBucketedTable(s, table, schema, partitionCol, key, buckets)
-      }
+      state.foreach(_.stale.foreach(Writer.dropTableAndLocation(spark, _)))
+      Writer.emptyPartitionedBucketedTable _
     }
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *     partition-column signature ("" = bucketed-only batch layout,
   *     "cluster_id" = IVF cell layout, "__wave" = the LM's additive
   *     wave layout, "__batch_id" = a streaming sink).
-  *   - `n_tables` — how many of the family's state tables exist right
-  *     now (main + siblings + the `_tombstones` list when takedowns
-  *     are pending); a purge that drops its tombstone list shrinks it.
+  *   - `n_tables` — how many of the family's declared state tables
+  *     exist right now (IndexState.tables: the live tables plus the
+  *     takedown state when takedowns are pending); a purge that drops
+  *     its tombstone list shrinks it.
   *   - `merge_parts` — partitions a compaction would MERGE: the
   *     partition count when the layout is wave/batch-tagged (each
   *     append/delete/micro-batch lands one), 0 for cell/bucketed
@@ -25,10 +26,11 @@ import org.apache.spark.sql.functions._
   *   - `tombstone_backlog` — distinct ids takedowns have registered
   *     that no physical purge has absorbed; every probe pays this
   *     anti-join until one does.
-  *   - `zeroed_grams` — LM only: grams whose live summed delta is 0
-  *     (all mass deleted), dead rows a compact reclaims.
+  *   - `zeroed_grams` — LM only (its declaration's `zeroedGrams`):
+  *     grams whose live summed delta is 0 (all mass deleted), dead rows
+  *     a compact reclaims.
   *   - `n_files` / `bytes` — data files and their summed on-disk bytes
-  *     across the family's state tables (main + siblings; the tables a
+  *     across the family's declared live tables (the tables a
   *     compaction rewrites), from a recursive FS listing of each
   *     table's location (VERDICT r18 #1: the when-to-compact
   *     decision's other half — 1,000 partitions of 1 MB and 10 of
@@ -77,16 +79,18 @@ object IndexOps {
       s"duplicate family names in ops registration: ${dups.mkString(", ")}")
   }
 
-  /** One index family's registration: the main table, its sibling
-    * state tables (centroids, codebooks, `_docs`, `_stats`, …),
-    * whether the main table holds LM count deltas (enables the
-    * zeroed-gram census), and the id column the family's rows carry
-    * (IvfIndex/IvfPq keep the build-time name, e.g. `vec_id`; the
-    * text families normalize to `id`) — used by [[takedownAudit]]. */
-  case class Entry(family: String, table: String,
-                   siblings: Seq[String] = Nil,
-                   gramDeltas: Boolean = false,
-                   idCol: String = "id")
+  /** One index's registration: the report row's `family` name and the
+    * family's declared state (`DedupIndex.state(table)`,
+    * `IvfIndex.state(table, "vec_id")`, … — [[IndexState]]). Every
+    * report reads its tables from the declaration: the census counts
+    * `tables` and lists `live`, the janitor shadows `tables` with their
+    * stagings, the audit and freshness scan `idTable` under `idCol`
+    * (IvfIndex/IvfPq keep the build-time id name; the LM's ids live in
+    * its `_docs` registry), and [[takedown]] runs the declared
+    * `delete`. */
+  case class Entry(family: String, state: IndexState) {
+    def table: String = state.table
+  }
 
   /** Accumulative partition tags — the layouts a compaction merges.
     * Cell (`cluster_id`) partitioning is spatial and stays. */
@@ -295,12 +299,11 @@ object IndexOps {
     * [[FullPlan.append]] action. */
   private def missingIdsOf(spark: SparkSession, e: Entry,
                            corpus: DataFrame): DataFrame = {
-    val target = if (e.gramDeltas) e.table + "_docs" else e.table
     val tomb = IndexLifecycle.tombstonesOf(e.table)
     var m = corpus
-    if (spark.catalog.tableExists(target))
-      m = m.join(spark.table(target).select(col(e.idCol).as("id"))
-        .distinct(), Seq("id"), "left_anti")
+    if (spark.catalog.tableExists(e.state.idTable))
+      m = m.join(spark.table(e.state.idTable)
+        .select(col(e.state.idCol).as("id")).distinct(), Seq("id"), "left_anti")
     if (spark.catalog.tableExists(tomb))
       m = m.join(spark.table(tomb).select(col("id")).distinct(),
         Seq("id"), "left_anti")
@@ -396,7 +399,7 @@ object IndexOps {
     * touching the marker). */
   private def healFamily(spark: SparkSession, e: Entry): Unit = {
     IndexLifecycle.recoverSwap(spark, e.table)
-    stateTables(e).foreach(PurgeSwap.recover(spark, _))
+    e.state.tables.foreach(PurgeSwap.recover(spark, _))
   }
 
   def census(spark: SparkSession, entries: Seq[Entry]): DataFrame = {
@@ -408,8 +411,7 @@ object IndexOps {
     val rows = Par.map(entries) { e =>
       healFamily(spark, e)
       val tomb = IndexLifecycle.tombstonesOf(e.table)
-      val present = ((e.table +: e.siblings) :+ tomb)
-        .count(spark.catalog.tableExists)
+      val present = e.state.tables.count(spark.catalog.tableExists)
       if (!spark.catalog.tableExists(e.table)) {
         // A dashboard row, not an exception: one dropped index must
         // not kill the whole ops report. "<absent>" is unambiguous —
@@ -440,33 +442,37 @@ object IndexOps {
       if (spark.catalog.tableExists(tomb))
         spark.table(tomb).select(col("id")).distinct().count()
       else 0L
-    val zeroed: Long =
-      if (e.gramDeltas)
-        spark.table(e.table).groupBy(col("g"))
-            .agg(sum(col("c")).as("c")).where(col("c") === 0L).count()
-      else 0L
-    val (nFiles, bytes) = filesBytes(spark, e.table +: e.siblings)
+    val zeroed = e.state.zeroedGrams(spark)
+    val (nFiles, bytes) = filesBytes(spark, e.state.live)
     val due: Long =
       if (backlog > 0L || mergeParts > 1L || zeroed > 0L) 1L else 0L
     (e.family, layout, mergeParts, present.toLong, backlog, zeroed,
       nFiles, bytes, due)
   }
 
-  /** Register a takedown across every listed family in one call —
+  /** Take the same ids down across every listed family in one call —
     * the right-to-be-forgotten entry point when the SAME ids must
     * disappear from the corpus's every derived artifact, not just the
-    * index someone remembered. Rides each family's shared tombstone
-    * contract (IndexLifecycle.registerTombstones: probes hide the ids
-    * immediately, the physical purge reclaims later — e.g. via
-    * [[sweep]]). NOT for the LM family: subtracting a doc's mass
-    * needs its TEXT (LmIndex.delete writes the negative count wave);
-    * registering its tombstone alone would hide the doc id while its
-    * grams keep counting. Callers route LM takedowns through
-    * LmIndex.delete and still audit it here. */
+    * index someone remembered. Runs each family's OWN delete (its
+    * declaration's `delete`): the tombstone registration (probes hide
+    * the ids immediately, the physical purge reclaims later — e.g. via
+    * [[sweep]]) plus whatever else the family's takedown writes
+    * (PostingsIndex's `_stats_deltas` row, so BM25's N and avgdl shed
+    * the removed docs). REFUSES the LM family up front, before any
+    * family is touched (IllegalArgumentException): subtracting a doc's
+    * mass needs its TEXT (LmIndex.delete writes the negative count
+    * wave); a tombstone alone would hide the doc id while its grams
+    * keep counting. Route LM takedowns through LmIndex.delete and
+    * still audit them here. */
   def takedown(spark: SparkSession, entries: Seq[Entry],
-               ids: DataFrame): Unit =
-    entries.foreach(e =>
-      IndexLifecycle.registerTombstones(spark, e.table, ids))
+               ids: DataFrame): Unit = {
+    val textOnly = entries.filter(_.state.delete.isEmpty).map(_.family)
+    require(textOnly.isEmpty,
+      s"takedown cannot take down ${textOnly.mkString(", ")}: an LM " +
+        "takedown subtracts the docs' counts and needs their text — " +
+        "call LmIndex.delete")
+    entries.foreach(_.state.delete.get(spark, ids))
+  }
 
   /** The cross-family takedown AUDIT — the compliance question a
     * takedown pipeline must be able to answer: for these ids, which
@@ -479,9 +485,9 @@ object IndexOps {
     * One row per family: `n_ids` (distinct audited ids), `tombstoned`
     * (ids the family's takedown list covers), `present_ids`,
     * `visible_ids`. The id set is broadcast; each family pays ONE
-    * semi-join scan of its id-bearing table (the LM's `_docs`
-    * registry when `gramDeltas` — its main table holds gram counts,
-    * not ids; everyone else's main table under `Entry.idCol`). That
+    * semi-join scan of its declared id-bearing table (`idTable` under
+    * `idCol` — the LM's `_docs` registry, whose main table holds gram
+    * counts, not ids; everyone else's main table). That
     * scan is the audit's honest price at 100 TB: takedown-sized
     * contact for the tombstone columns, one corpus-sized scan per
     * family for the physical columns — run it like an audit, not
@@ -499,7 +505,6 @@ object IndexOps {
     val idsD = broadcast(ids.select(col("id")).distinct())
     val rows = Par.map(entries) { e =>
       healFamily(spark, e)
-      val target = if (e.gramDeltas) e.table + "_docs" else e.table
       val tomb = IndexLifecycle.tombstonesOf(e.table)
       // One Spark job per family: the audited id set (takedown-sized)
       // flagged by two broadcast-semi hit sets — `__p` from the one
@@ -513,7 +518,7 @@ object IndexOps {
           .join(idsD, Seq("id"), "left_semi").distinct()
           .withColumn(flag, lit(1)))
       var flagged = idsD
-      flagged = hitFlag(target, e.idCol, "__p")
+      flagged = hitFlag(e.state.idTable, e.state.idCol, "__p")
         .fold(flagged.withColumn("__p", lit(null).cast("int")))(
           h => flagged.join(h, Seq("id"), "left"))
       flagged = hitFlag(tomb, "id", "__t")
@@ -559,14 +564,13 @@ object IndexOps {
     val c = corpusIds.select(col("id")).distinct()
     val rows = Par.map(entries) { e =>
       healFamily(spark, e)
-      val target = if (e.gramDeltas) e.table + "_docs" else e.table
       val tomb = IndexLifecycle.tombstonesOf(e.table)
       def flag(t: String, idc: String, f: String) =
         if (!spark.catalog.tableExists(t)) None
         else Some(spark.table(t).select(col(idc).as("id")).distinct()
           .withColumn(f, lit(1)))
       var flagged = c
-      flagged = flag(target, e.idCol, "__i")
+      flagged = flag(e.state.idTable, e.state.idCol, "__i")
         .fold(flagged.withColumn("__i", lit(null).cast("int")))(
           h => flagged.join(h, Seq("id"), "left"))
       flagged = flag(tomb, "id", "__t")
@@ -584,16 +588,6 @@ object IndexOps {
     rows.toDF("family", "n_corpus", "n_indexed", "n_missing", "stale")
       .orderBy(col("family"))
   }
-
-  /** The family's persisted state-table set: main + siblings + the
-    * tombstone list — everything a staging table could shadow. */
-  private def stateTables(e: Entry): Seq[String] =
-    (e.table +: e.siblings) :+ IndexLifecycle.tombstonesOf(e.table)
-
-  /** A state table's possible staging shadows: the PurgeSwap
-    * stage-and-swap staging and the streaming compactSink staging. */
-  private def stagingsOf(t: String): Seq[String] =
-    Seq(PurgeSwap.stagingOf(t), t + "_compact_stage")
 
   /** Orphaned-state census — the storage-reclamation half of the ops
     * report. The lifecycle's crash discipline deliberately leaves
@@ -658,8 +652,9 @@ object IndexOps {
     val marker = spark.catalog.tableExists(
       IndexLifecycle.rebalanceMarkerOf(e.table))
     if (marker) return (true, Nil, Nil, Nil)
-    val present = stateTables(e).flatMap { t =>
-      stagingsOf(t).filter(spark.catalog.tableExists).map(s => (t, s))
+    val present = e.state.tables.flatMap { t =>
+      IndexLifecycle.stagingsOf(t).filter(spark.catalog.tableExists)
+        .map(s => (t, s))
     }
     val (baseless, withBase) =
       present.partition { case (t, _) => !spark.catalog.tableExists(t) }

@@ -28,6 +28,12 @@ object IvfIndex {
 
   def centroidsTable(table: String): String = table + "_centroids"
 
+  /** This family's declared state ([[IndexState]]): the cell table and
+    * its centroids (the tables a build writes and a rebalance swaps,
+    * main first), the tombstone list, and the build-time id column. */
+  def state(table: String, idCol: String = "id"): IndexState =
+    IndexState.tombstoned(Seq(table, centroidsTable(table)), idCol, delete)
+
   // Rebalance marker/swap machinery lives in IndexLifecycle
   // (rebalanceMarkerOf/markSwap/finishSwap/recoverSwap): the marker's
   // rows name the tables to swap, so one recovery serves this family's
@@ -164,7 +170,7 @@ object IvfIndex {
     * contact, and the index is never lost. */
   def rebalance(spark: SparkSession, table: String, idCol: String,
                 vecCol: String, k: Int = 16, iters: Int = 2): Unit =
-    rebalanceCells(spark, cellTables(table), idCol, vecCol)(
+    rebalanceCells(spark, state(table).live, idCol, vecCol)(
       encodeAndPublish(_, idCol, vecCol, table, PurgeSwap.stagingOf, k, iters))
 
   /** Heal a crashed rebalance swap (marker present) — delegated to
@@ -177,8 +183,9 @@ object IvfIndex {
   /** Train (Lloyd, exact-decimal means — deterministic), assign, and
     * save through [[publish]]. Returns the trained centroids so a
     * caller that also wants on-the-fly queries needn't read them back.
-    * A build into a reused name starts clean ([[clearCells]]): no
-    * takedowns of the old index, no leftover rebalance marker.
+    * A build into a reused name starts clean (IndexLifecycle.clear of
+    * the declared state): no takedowns of the old index, no leftover
+    * rebalance marker or staging.
     *
     * Alongside the float vector, the saved row carries `qv` — the
     * per-vector-scaled int8 quantization (graft.ext.Quantize) stored
@@ -190,13 +197,9 @@ object IvfIndex {
     * slightly under the nominal 4×). */
   def build(corpus: DataFrame, idCol: String, vecCol: String, table: String,
             k: Int = 16, iters: Int = 2): Seq[Seq[Float]] = {
-    clearCells(corpus.sparkSession, cellTables(table))
+    IndexLifecycle.clear(corpus.sparkSession, state(table))
     encodeAndPublish(corpus, idCol, vecCol, table, identity, k, iters)
   }
-
-  /** The tables a build writes and a rebalance swaps, main first. */
-  private def cellTables(table: String): Seq[String] =
-    Seq(table, centroidsTable(table))
 
   /** This family's encoder — Lloyd centroids on `rows`, each row's
     * cell, and its int8 `qv` column — published under `name` of the
@@ -315,20 +318,6 @@ object IvfIndex {
     spark.sql(s"DROP TABLE `$t`")
     spark.catalog.refreshTable(table)
     removed
-  }
-
-  /** Build's clear step for both cell-partitioned families (`tables`
-    * = main first, then its side tables). The rebalance marker drops
-    * FIRST, then every staging table: a staging table without its
-    * marker is garbage under the PurgeSwap doctrine, so a crashed
-    * rebalance's stale marker can never later swap its stagings over
-    * the fresh build. Then the live tables and the tombstone list — a
-    * rebuilt index hides no id the old index took down. */
-  private[ext] def clearCells(spark: SparkSession, tables: Seq[String]): Unit = {
-    Writer.dropTableAndLocation(spark, IndexLifecycle.rebalanceMarkerOf(tables.head))
-    (tables.map(PurgeSwap.stagingOf) ++ tables :+
-        IndexLifecycle.tombstonesOf(tables.head))
-      .foreach(Writer.dropTableAndLocation(spark, _))
   }
 
   /** Rebalance for both cell-partitioned families: heal a crashed
@@ -574,7 +563,8 @@ object IvfIndex {
     // table is rewritten on restart because it is derived from the
     // argument, not state.
     writeCentroids(spark, centroidsTable(table), centroids)
-    PairIndex.streamIngest(spark, table, stream, queryName, checkpointLocation,
+    PairIndex.streamIngest(spark, state(table, idCol), stream, queryName,
+        checkpointLocation,
         Seq(StructField(idCol, stream.schema(idCol).dataType),
           StructField(vecCol, stream.schema(vecCol).dataType),
           StructField("cluster_id", IntegerType)),
@@ -596,7 +586,7 @@ object IvfIndex {
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,
               purge: Boolean = false, idCol: String = "id"): Int =
-    PairIndex.compact(spark, table, checkpointLocation, purge, idCol)
+    PairIndex.compact(spark, state(table, idCol), checkpointLocation, purge)
 
   def probeTopKQuantized(spark: SparkSession, table: String, idCol: String,
                          vecCol: String, query: Seq[Float], k: Int,

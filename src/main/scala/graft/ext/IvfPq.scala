@@ -54,6 +54,15 @@ object IvfPq {
 
   def codebooksTable(table: String): String = table + "_codebooks"
 
+  /** This family's declared state ([[IndexState]]): the cell table,
+    * centroids and codebooks (the tables a build writes and a
+    * rebalance swaps, main first), the tombstone list, and the
+    * build-time id column. */
+  def state(table: String, idCol: String = "id"): IndexState =
+    IndexState.tombstoned(
+      Seq(table, IvfIndex.centroidsTable(table), codebooksTable(table)),
+      idCol, delete)
+
   /** Batch size up to which the float re-rank fan-out
     * ([[BatchProbe.rerankFloat]]) uses one flat codegen'd struct per
     * query (tightest plan; ~25–30 expression nodes per query, well
@@ -88,20 +97,16 @@ object IvfPq {
     * `_codebooks` side tables, so probes need only the table name.
     * `pq_code` packs the RESIDUAL codes; the codebooks table stores
     * the residual codebooks. A build into a reused name starts clean
-    * ([[IvfIndex.clearCells]]). Returns (centroids, codebooks) for
-    * callers that probe immediately. */
+    * (IndexLifecycle.clear of the declared state). Returns
+    * (centroids, codebooks) for callers that probe immediately. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, table: String,
             kCells: Int = 16, ivfIters: Int = 2, m: Int = 8,
             kPq: Int = 128, pqIters: Int = 3)
       : (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    IvfIndex.clearCells(corpus.sparkSession, cellTables(table))
+    IndexLifecycle.clear(corpus.sparkSession, state(table))
     encodeAndPublish(corpus, idCol, vecCol, table, identity,
       kCells, ivfIters, m, kPq, pqIters)
   }
-
-  /** The tables a build writes and a rebalance swaps, main first. */
-  private def cellTables(table: String): Seq[String] =
-    Seq(table, IvfIndex.centroidsTable(table), codebooksTable(table))
 
   /** This family's encoder — Lloyd cells, residual codebooks trained
     * on the cell residuals, and the packed codes ([[encodeWith]]) —
@@ -196,8 +201,8 @@ object IvfPq {
     IvfIndex.writeCodebooks(spark, codebooksTable(table), books)
     // Keep prior rows only when the checkpoint has committed batches
     // (fresh checkpoint + leftover table = drop, not silent merge).
-    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)
-    mkTable(spark, table,
+    IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation,
+        Some(state(table, idCol)))(spark, table,
       StructType(Seq(
         StructField(idCol, idType),
         StructField(vecCol, vecType),
@@ -226,8 +231,8 @@ object IvfPq {
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,
               purge: Boolean = false, idCol: String = "id"): Int =
-    IndexLifecycle.compactStreaming(spark, table, checkpointLocation,
-      purge, idCol)(_ => ())
+    IndexLifecycle.compactStreaming(spark, state(table, idCol),
+      checkpointLocation, purge)(_ => ())
 
   /** Tombstone-delete vectors — the takedown pattern shared across the
     * index families (WinnowIndex's doc has the contract). Probes hide
@@ -256,7 +261,7 @@ object IvfPq {
   def rebalance(spark: SparkSession, table: String, idCol: String,
                 vecCol: String, kCells: Int = 16, ivfIters: Int = 2,
                 m: Int = 8, kPq: Int = 128, pqIters: Int = 3): Unit =
-    IvfIndex.rebalanceCells(spark, cellTables(table), idCol, vecCol)(
+    IvfIndex.rebalanceCells(spark, state(table).live, idCol, vecCol)(
       encodeAndPublish(_, idCol, vecCol, table, PurgeSwap.stagingOf,
         kCells, ivfIters, m, kPq, pqIters))
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.io.Writer
+import IndexLifecycle.{docsOf, tombstonesOf}
 
 /** Persisted incremental bigram-LM index — the SIXTH index family
   * (after MinHash bands, winnow postings, BM25 postings, IVF cells,
@@ -18,7 +19,7 @@ import graft.io.Writer
   * and lets takedowns update the LM they trained.
   *
   * COUNTS ARE ADDITIVE INTEGERS, which buys this family stronger
-  * contracts than its siblings, all value-exact:
+  * contracts than the other families, all value-exact:
   *   - probe ≡ [[TextAnalysis.surprisalStats]] bit-for-bit whenever
   *     the index holds exactly the probed corpus's census (the DuckDB
   *     oracle replays the whole thing);
@@ -49,9 +50,9 @@ import graft.io.Writer
   *   - `<t>_tombstones` (id, __wave) — ids whose counts were
   *     subtracted; blocked from re-append until [[compact]] absorbs
   *     the deltas and clears them. This is the family's whole takedown
-  *     state: the deltas themselves live in `<t>`, so a build or a
-  *     fresh stream ingest that recreates the three tables starts
-  *     clean.
+  *     state ([[state]]): the deltas themselves live in `<t>`, so a
+  *     build or a fresh stream ingest that recreates the three tables
+  *     starts clean.
   *
   * Scale shape: build/append cost one gram census of their input
   * (output vocabulary-sized); probe contact = the probed docs' touched
@@ -136,28 +137,37 @@ object LmIndex {
       StructField("w1", StringType), StructField("g", StringType),
       StructField("c", LongType), StructField("__wave", StringType)))
 
-  /** Create the family's three tables (class doc) with ONE DDL.
-    * `make` has the signature Writer.emptyPartitionedBucketedTable and
+  /** This family's declared state ([[IndexState]]): the delta table
+    * and the `_docs` registry (the id-bearing table — the delta table
+    * holds gram counts, not ids), then the tombstone list. No id-only
+    * delete: [[delete]] subtracts the docs' counts and needs their
+    * text, so IndexOps.takedown refuses this family. */
+  def state(table: String): IndexState =
+    IndexState(Seq(table, docsOf(table)), Seq(tombstonesOf(table)),
+      docsOf(table), "id", None, zeroedGrams(_, table))
+
+  /** Grams whose live summed delta is 0 (all their mass deleted) —
+    * dead rows a [[compact]] reclaims; one vocabulary-sized sum. */
+  private def zeroedGrams(spark: SparkSession, table: String): Long =
+    spark.table(table).groupBy(col("g"))
+      .agg(sum(col("c")).as("c")).where(col("c") === 0L).count()
+
+  /** Create the family's three tables (class doc) with ONE DDL each,
+    * run concurrently (disjoint tables — guide §2.6 via Par). `make`
+    * has the signature Writer.emptyPartitionedBucketedTable and
     * IndexLifecycle.resumeAwareTableMaker's maker share; `nameOf` maps
     * each layout name to the table to create — identity for build and
-    * the stream ingest, PurgeSwap.stagingOf for compact's staging set.
-    * `overlap` runs the three DDLs concurrently (disjoint tables —
-    * guide §2.6 via Par; build and compact). The stream ingest runs
-    * them in order: the resume-aware maker's fresh branch drops
-    * `<t>_tombstones` while it makes `<t>`, which must not race the
-    * tombstone table's own creation. */
+    * the stream ingest, PurgeSwap.stagingOf for compact's staging set. */
   private def createLayout(spark: SparkSession,
       make: (SparkSession, String, StructType, String, String, Int) => Unit,
       nameOf: String => String, table: String, idType: DataType,
-      nBuckets: Int, overlap: Boolean): Unit = {
+      nBuckets: Int): Unit = {
     val ids = StructType(Seq(StructField("id", idType),
       StructField("__wave", StringType)))
-    val ddls = Seq[() => Unit](
+    Par.all(
       () => make(spark, nameOf(table), deltaSchema, "__wave", "w1", nBuckets),
-      () => make(spark, nameOf(table + "_docs"), ids, "__wave", "id", nBuckets),
-      () => make(spark, nameOf(IndexLifecycle.tombstonesOf(table)), ids,
-        "__wave", "id", 1))
-    if (overlap) Par.all(ddls: _*) else ddls.foreach(_())
+      () => make(spark, nameOf(docsOf(table)), ids, "__wave", "id", nBuckets),
+      () => make(spark, nameOf(tombstonesOf(table)), ids, "__wave", "id", 1))
   }
 
   /** Heal any crashed stage-and-swap across the family's three tables
@@ -165,8 +175,7 @@ object LmIndex {
     * discipline), so a crash inside a swap's drop→rename window never
     * leaves a reader facing a missing table. */
   private def recoverAll(spark: SparkSession, table: String): Unit =
-    Seq(table, table + "_docs", IndexLifecycle.tombstonesOf(table))
-      .foreach(PurgeSwap.recover(spark, _))
+    state(table).tables.foreach(PurgeSwap.recover(spark, _))
 
   /** Census the corpus and create the three-table index. Overwrites.
     * `nBuckets` ≤ 0 (the default) sizes buckets to the doc frame's
@@ -176,9 +185,9 @@ object LmIndex {
             textCol: String, table: String, nBuckets0: Int = 0): Unit = {
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0 else Writer.scaledBuckets(docs)
-    Writer.dropTableAndLocation(spark, PurgeSwap.stagingOf(table))
+    state(table).stagings.foreach(Writer.dropTableAndLocation(spark, _))
     createLayout(spark, Writer.emptyPartitionedBucketedTable, identity,
-      table, docs.schema(idCol).dataType, nBuckets, overlap = true)
+      table, docs.schema(idCol).dataType, nBuckets)
     append(spark, table, docs, idCol, textCol, overlapWaves = true,
       insertWave(spark))
   }
@@ -205,8 +214,8 @@ object LmIndex {
                           overlapWaves: Boolean,
                           write: (String, DataFrame, String) => Unit): Unit = {
     recoverAll(spark, table)
-    val known = spark.table(table + "_docs").select(col("id"))
-      .unionByName(spark.table(IndexLifecycle.tombstonesOf(table))
+    val known = spark.table(docsOf(table)).select(col("id"))
+      .unionByName(spark.table(tombstonesOf(table))
         .select(col("id")))
     // Lazy barrier: the wave census below is the action that
     // materializes it — one job for barrier + emptiness + wave tag
@@ -232,10 +241,10 @@ object LmIndex {
     // includes the BUILD path: `overlapWaves` doc.)
     if (overlapWaves) Par.all(
       () => write(table, gramCensus(fresh, idCol, textCol), wave),
-      () => write(table + "_docs", fresh.select(col(idCol).as("id")), wave))
+      () => write(docsOf(table), fresh.select(col(idCol).as("id")), wave))
     else {
       write(table, gramCensus(fresh, idCol, textCol), wave)
-      write(table + "_docs", fresh.select(col(idCol).as("id")), wave)
+      write(docsOf(table), fresh.select(col(idCol).as("id")), wave)
     }
   }
 
@@ -260,9 +269,9 @@ object LmIndex {
     recoverAll(spark, table)
     // Lazy barrier + one-job wave census — see append.
     val fresh = docsToDelete.dropDuplicates(Seq(idCol))
-      .join(spark.table(table + "_docs").select(col("id").as(idCol)),
+      .join(spark.table(docsOf(table)).select(col("id").as(idCol)),
         Seq(idCol), "left_semi")
-      .join(spark.table(IndexLifecycle.tombstonesOf(table))
+      .join(spark.table(tombstonesOf(table))
           .select(col("id").as(idCol)),
         Seq(idCol), "left_anti")
       .pipe(Checkpoints.stageLazy)
@@ -279,7 +288,7 @@ object LmIndex {
       gramCensus(fresh, idCol, textCol)
         .select(col("w1"), col("g"), (lit(0L) - col("c")).as("c")),
       wave)
-    write(IndexLifecycle.tombstonesOf(table),
+    write(tombstonesOf(table),
       fresh.select(col(idCol).as("id")), wave)
     removed
   }
@@ -375,7 +384,7 @@ object LmIndex {
                  sinkTable: String, queryName: String,
                  checkpointLocation: Option[String] = None): Int = {
     import graft.streaming.StreamOps
-    val idType = spark.table(targetTable + "_docs").schema("id").dataType
+    val idType = spark.table(docsOf(targetTable)).schema("id").dataType
     val sinkSchema = StructType(Seq(
       StructField(idCol, idType), StructField("n_bigrams", LongType),
       StructField("n_oov_target", LongType), StructField("w_bits", LongType),
@@ -486,7 +495,7 @@ object LmIndex {
     val mergedWave = "m_" + java.security.MessageDigest.getInstance("MD5")
       .digest(waves.mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    val t = IndexLifecycle.tombstonesOf(table)
+    val t = tombstonesOf(table)
     // All three staging tables first, created concurrently (the empty
     // replacement-tombstone table is a pure DDL that reads nothing),
     // then the summed delta table and the live doc registry staged
@@ -495,27 +504,25 @@ object LmIndex {
     // same order as before.
     createLayout(spark, Writer.emptyPartitionedBucketedTable,
       PurgeSwap.stagingOf, table,
-      spark.table(table + "_docs").schema("id").dataType, nBuckets,
-      overlap = true)
+      spark.table(docsOf(table)).schema("id").dataType, nBuckets)
     Par.all(
       () => insertWave(spark)(PurgeSwap.stagingOf(table),
         spark.table(table).groupBy(col("w1"), col("g"))
           .agg(sum(col("c")).as("c")).where(col("c") =!= 0),
         mergedWave),
-      () => insertWave(spark)(PurgeSwap.stagingOf(table + "_docs"),
-        spark.table(table + "_docs").select(col("id"))
+      () => insertWave(spark)(PurgeSwap.stagingOf(docsOf(table)),
+        spark.table(docsOf(table)).select(col("id"))
           .join(spark.table(t).select(col("id")), Seq("id"), "left_anti"),
         mergedWave))
-    PurgeSwap.swap(spark, table)
-    PurgeSwap.swap(spark, table + "_docs")
-    // Tombstones clear LAST, and ATOMICALLY (swap in the empty table
-    // staged above — the PurgeSwap pattern, not drop-then-recreate): a
-    // crash before the swap leaves the ids blocked (conservative) and
-    // a compact re-run finishes the job; a crash INSIDE the swap's
+    // Swaps in declaration order: the delta table, `_docs`, then the
+    // tombstones LAST, and ATOMICALLY (swap in the empty table staged
+    // above — the PurgeSwap pattern, not drop-then-recreate): a crash
+    // before that swap leaves the ids blocked (conservative) and a
+    // compact re-run finishes the job; a crash INSIDE the swap's
     // drop→rename window is healed by the recover() every lifecycle
     // entry point runs — drop-then-recreate had a window where the
     // tombstone table was simply missing and every reader threw.
-    PurgeSwap.swap(spark, t)
+    state(table).tables.foreach(PurgeSwap.swap(spark, _))
     math.max(0, waves.size - 1)
   }
 
@@ -525,10 +532,11 @@ object LmIndex {
     * batch replaces exactly its own partitions), so the accumulated
     * counts equal a one-shot [[build]] over everything ingested in any
     * shard split, and probes serve mid-ingest. Same
-    * one-batch-per-doc-id contract as the sibling streamIngests. The
+    * one-batch-per-doc-id contract as the other streamIngests. The
     * three tables come from [[createLayout]] with
     * IndexLifecycle.resumeAwareTableMaker: kept when the checkpoint
-    * has committed batches, recreated (takedowns included) otherwise.
+    * has committed batches, recreated (takedowns included, the
+    * declared stale state dropped first) otherwise.
     *
     * TAKEDOWNS INTERLEAVE: [[delete]] waves land between batch waves
     * with no coordination needed — additive deltas commute, a
@@ -547,10 +555,10 @@ object LmIndex {
     import graft.streaming.StreamOps
     // Source-byte-derived buckets (r22, guide §6 — the streaming twin
     // of build's scaledBuckets; scaledSinkBuckets doc).
-    createLayout(spark,
-      IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation),
+    createLayout(spark, IndexLifecycle.resumeAwareTableMaker(spark,
+        checkpointLocation, Some(state(table))),
       identity, table, stream.schema(idCol).dataType,
-      StreamOps.scaledSinkBuckets(stream), overlap = false)
+      StreamOps.scaledSinkBuckets(stream))
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = StreamOps.foreachBatchSink(stream, queryName,
         checkpointLocation) { (batch, batchId) =>
@@ -565,7 +573,7 @@ object LmIndex {
       // partitions whole. No ordering can leak state across the retry.
       Par.all(
         () => insertWave(spark)(table, gramCensus(b, idCol, textCol), wave),
-        () => insertWave(spark)(table + "_docs",
+        () => insertWave(spark)(docsOf(table),
           b.select(col(idCol).as("id")), wave))
     }
     q.awaitTermination()

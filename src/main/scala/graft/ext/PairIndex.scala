@@ -50,19 +50,21 @@ private[ext] object PairIndex {
   }
 
   /** Persist `rows` (the spec's columns) bucketed+sorted on the bucket
-    * column; overwrites `table`, then drops any takedown list an
-    * earlier index under the same name left (a fresh index must not
-    * hide the ids it took down). The drop runs AFTER the write — the
-    * tombstones-last rule: a crash in between leaves the new index
-    * hiding ids it no longer needs to hide, never the old index
-    * serving its taken-down ids. `nBuckets` ≤ 0 sizes buckets to the
-    * frame's estimated bytes (Writer.scaledBuckets — r21, guide §6).
+    * column; overwrites `state`'s main table, then drops the declared
+    * takedown state an earlier index under the same name left (a fresh
+    * index must not hide the ids it took down). The drop runs AFTER
+    * the write — the tombstones-last rule: a crash in between leaves
+    * the new index hiding ids it no longer needs to hide, never the
+    * old index serving its taken-down ids. `nBuckets` ≤ 0 sizes
+    * buckets to the frame's estimated bytes (Writer.scaledBuckets —
+    * r21, guide §6).
     * Keys are per-row, so any row-subset of a larger key table is a
     * valid index for that subset of docs. */
-  def build(rows: DataFrame, table: String, spec: Spec, nBuckets: Int): Unit = {
-    Writer.bucketedTable(rows, table, spec.bucket,
+  def build(rows: DataFrame, state: IndexState, spec: Spec,
+            nBuckets: Int): Unit = {
+    Writer.bucketedTable(rows, state.table, spec.bucket,
       if (nBuckets > 0) nBuckets else Writer.scaledBuckets(rows))
-    Writer.dropTableAndLocation(rows.sparkSession, IndexLifecycle.tombstonesOf(table))
+    state.takedown.foreach(Writer.dropTableAndLocation(rows.sparkSession, _))
   }
 
   /** Append a batch's (materialized) key rows to a batch-layout index.
@@ -228,7 +230,8 @@ private[ext] object PairIndex {
     * the stream's source bytes (StreamOps.scaledSinkBuckets). With a
     * checkpoint the ingest is RESTARTABLE: prior tables are kept only
     * when the checkpoint has committed batches
-    * ([[IndexLifecycle.resumeAwareTableMaker]]); a restart MUST pass
+    * ([[IndexLifecycle.resumeAwareTableMaker]] — a fresh one drops the
+    * family's declared stale state); a restart MUST pass
     * the same keying parameters, since the kept rows were keyed by run
     * 1.
     *
@@ -244,7 +247,7 @@ private[ext] object PairIndex {
     * BEFORE the append mutates the index, so the two inserts share no
     * live table; the one-small-partition-per-batch growth is what
     * [[compact]] reclaims. */
-  def streamIngest(spark: SparkSession, table: String, stream: DataFrame,
+  def streamIngest(spark: SparkSession, state: IndexState, stream: DataFrame,
                    queryName: String, checkpointLocation: Option[String],
                    indexFields: Seq[StructField], bucket: String,
                    pairFields: Seq[StructField])(
@@ -253,7 +256,9 @@ private[ext] object PairIndex {
     def tagged(fields: Seq[StructField]) =
       StructType(fields :+ StructField(StreamOps.BatchTag, LongType))
     val idType = indexFields.head.dataType
-    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark, checkpointLocation)
+    val table = state.table
+    val mkTable = IndexLifecycle.resumeAwareTableMaker(spark,
+      checkpointLocation, Some(state))
     val nBuckets = StreamOps.scaledSinkBuckets(stream)
     mkTable(spark, table, tagged(indexFields), StreamOps.BatchTag, bucket,
       nBuckets)
@@ -282,19 +287,18 @@ private[ext] object PairIndex {
     * the ingest's `checkpointLocation` and a compact that would swallow
     * a crashed attempt's orphaned partition REFUSES instead.
     * `purge = true` is the streaming layout's physical purge:
-    * tombstoned ids (`idCol`) are anti-joined out of the merged
-    * rewrite and the tombstone list drops only AFTER it commits
-    * ([[IndexLifecycle.compactStreaming]]), so probes filter until the
-    * purge is durable and a crashed compact(purge) re-runs to the same
-    * state. The pairs sink is never purged — pair rows are results,
+    * tombstoned ids (the declaration's `idCol`) are anti-joined out of
+    * the merged rewrite and the tombstone list drops only AFTER it
+    * commits ([[IndexLifecycle.compactStreaming]]), so probes filter
+    * until the purge is durable and a crashed compact(purge) re-runs
+    * to the same state. The pairs sink is never purged — pair rows are results,
     * takedown-filtered at probe time. Returns the index's merged
     * partition count. */
-  def compact(spark: SparkSession, table: String,
-              checkpointLocation: Option[String], purge: Boolean,
-              idCol: String = "id"): Int =
-    IndexLifecycle.compactStreaming(spark, table, checkpointLocation,
-        purge, idCol) { _ =>
-      val sink = table + "_pairs"
+  def compact(spark: SparkSession, state: IndexState,
+              checkpointLocation: Option[String], purge: Boolean): Int =
+    IndexLifecycle.compactStreaming(spark, state, checkpointLocation,
+        purge) { _ =>
+      val sink = state.table + "_pairs"
       if (spark.catalog.tableExists(sink))
         StreamOps.compactSink(spark, sink,
           checkpointLocation = checkpointLocation)

@@ -62,7 +62,7 @@ object Par {
   /** Map `f` over `xs` with each element on its own pooled thread,
     * preserving order. On failure the FIRST failing element's
     * exception rethrows — but only after EVERY sibling future has
-    * completed (ADVICE r21, medium): rethrowing while siblings still
+    * completed (ADVICE r21, medium): rethrowing while the others still
     * run would return control to a caller (bench rep cleanup, fixture
     * drops) that may immediately drop/recreate tables an orphaned
     * still-running thunk is writing — LOCATION_ALREADY_EXISTS wedges

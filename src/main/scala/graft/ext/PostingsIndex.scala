@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Writer
+import IndexLifecycle.{docsOf, statsDeltasOf, statsTableOf, tombstonesOf}
 
 /** Persisted BM25 retrieval index — the index-backed twin of
   * [[TextAnalysis.bm25TopK]], completing the same
@@ -33,13 +34,11 @@ import graft.io.Writer
   *
   * Takedown state: `<table>_tombstones` (registered through
   * IndexLifecycle.registerTombstones, hiding the ids' postings) and
-  * `<table>_stats_deltas` ([[statsDeltasOf]] — the negative
-  * corpus-mass rows [[delete]] snapshots). [[build]], a fresh
+  * `<table>_stats_deltas` (the negative corpus-mass rows [[delete]]
+  * snapshots) — both declared in [[state]], so [[build]], a fresh
   * (checkpoint-less or never-committed) [[streamIngest]] and
-  * compact(purge) drop both, so a fresh index never scores against an
-  * old one's takedowns: the shared lifecycle helpers drop the
-  * tombstone list themselves and take `_stats_deltas` as the family's
-  * extra drop.
+  * compact(purge) drop both and a fresh index never scores against an
+  * old one's takedowns.
   * The streaming layout's per-batch writes go through
   * StreamOps.sinkBatches, i.e. the shared Writer.insertOverwrite
   * (layout-shaped dynamic overwrite of the batch's partition).
@@ -87,11 +86,15 @@ object PostingsIndex {
     dls.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
 
-  /** The k-row takedown stats side table [[delete]] writes. Every
-    * path that starts an index afresh drops it (class doc): a leftover
-    * `_stats_deltas` would keep subtracting an old index's takedowns
-    * from the fresh one's N and avgdl. */
-  private def statsDeltasOf(table: String): String = table + "_stats_deltas"
+  /** This family's declared state ([[IndexState]]): the three layout
+    * tables, main first, and the takedown state — the tombstone list
+    * and the k-row `_stats_deltas` side table [[delete]] writes (a
+    * leftover one would keep subtracting an old index's takedowns from
+    * a fresh one's N and avgdl). */
+  def state(table: String): IndexState =
+    IndexState(Seq(table, docsOf(table), statsTableOf(table)),
+      Seq(tombstonesOf(table), statsDeltasOf(table)), table, "id",
+      Some(delete(_, table, _)))
 
   /** Tokenize `docs` and persist the three-table index. Overwrites —
     * including any leftover takedown state (class doc) from a
@@ -103,8 +106,7 @@ object PostingsIndex {
     // DIRECTORY behind with no catalog entry (fresh in-memory
     // metastore on restart), and a later saveAsTable under the same
     // name fails with LOCATION_ALREADY_EXISTS.
-    Seq(IndexLifecycle.tombstonesOf(table), statsDeltasOf(table))
-      .foreach(Writer.dropTableAndLocation(spark, _))
+    state(table).takedown.foreach(Writer.dropTableAndLocation(spark, _))
     val dls = docLengths(docs, idCol, textCol).pipe(Checkpoints.stage)
     // nBuckets ≤ 0 sizes each table's buckets to its own estimated
     // bytes (Writer.scaledBuckets — r21, guide §6).
@@ -117,9 +119,9 @@ object PostingsIndex {
     val post = postings(docs, idCol, textCol)
     Par.all(
       () => Writer.bucketedTable(post, table, "term", bCount(post)),
-      () => Writer.bucketedTable(dls, table + "_docs", "id", bCount(dls)),
+      () => Writer.bucketedTable(dls, docsOf(table), "id", bCount(dls)),
       // 1-row scalar table; the single bucket is just the uniform writer.
-      () => Writer.bucketedTable(statsOf(dls), table + "_stats", "n_docs", 1))
+      () => Writer.bucketedTable(statsOf(dls), statsTableOf(table), "n_docs", 1))
   }
 
   /** Append a new batch. IDEMPOTENT at doc granularity: ids already in
@@ -133,7 +135,7 @@ object PostingsIndex {
   def append(spark: SparkSession, table: String, newDocs: DataFrame,
              idCol: String, textCol: String): Unit = {
     val dls = docLengths(newDocs, idCol, textCol).pipe(Checkpoints.stage)
-    val indexed = spark.table(table + "_docs")
+    val indexed = spark.table(docsOf(table))
       .join(dls.select(col("id")), Seq("id"), "left_semi")
       .select(col("id"))
     val fresh = dls.join(indexed, Seq("id"), "left_anti")
@@ -141,12 +143,11 @@ object PostingsIndex {
     val freshDocs = newDocs.join(fresh.select(col("id").as(idCol)),
       Seq(idCol), "left_semi")
     postings(freshDocs, idCol, textCol).write.mode("append").insertInto(table)
-    fresh.write.mode("append").insertInto(table + "_docs")
-    statsOf(fresh).write.mode("append").insertInto(table + "_stats")
+    fresh.write.mode("append").insertInto(docsOf(table))
+    statsOf(fresh).write.mode("append").insertInto(statsTableOf(table))
     // insertInto refreshes the WRITING session's relation cache only;
     // keep the reading session honest (same hazard as DedupIndex).
-    Seq(table, table + "_docs", table + "_stats")
-      .foreach(spark.catalog.refreshTable)
+    state(table).live.foreach(spark.catalog.refreshTable)
   }
 
   /** Tombstone-delete documents from the index — the WinnowIndex
@@ -187,7 +188,7 @@ object PostingsIndex {
     // The wave's corpus mass off the `_docs` table (never tombstone-
     // filtered): docs never in `_docs` (unknown ids) contribute
     // nothing; docs of an earlier wave were filtered by the anti-join.
-    val delta = spark.table(table + "_docs")
+    val delta = spark.table(docsOf(table))
       .select(col("id"), col("dl"))
       .join(broadcast(fresh), Seq("id"), "left_semi")
       .agg((lit(0L) - count(lit(1))).as("n_docs"),
@@ -205,7 +206,7 @@ object PostingsIndex {
     * never a `_docs` contact, so probe cost stays independent of
     * corpus size after any number of takedown waves. */
   private def liveStats(spark: SparkSession, table: String): DataFrame = {
-    val total = spark.table(table + "_stats")
+    val total = spark.table(statsTableOf(table))
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("__n_docs"),
         coalesce(sum(col("sum_dl")), lit(0L)).as("__sum_dl"))
     val dt = statsDeltasOf(table)
@@ -234,9 +235,9 @@ object PostingsIndex {
     * Answer-stable by construction; returns postings removed. */
   def purgeTombstones(spark: SparkSession, table: String,
                       nBuckets: Int = 0): Long = {
-    val parts = Seq(table, table + "_docs", table + "_stats")
-    parts.foreach(PurgeSwap.recover(spark, _))
-    val t = IndexLifecycle.tombstonesOf(table)
+    val live @ Seq(_, docs, stats) = state(table).live
+    live.foreach(PurgeSwap.recover(spark, _))
+    val t = tombstonesOf(table)
     if (!spark.catalog.tableExists(t)) return 0L
     IndexLifecycle.requireBatchLayout(spark, table, Seq.empty, "purgeTombstones")
     val stones = broadcast(spark.table(t))
@@ -254,14 +255,13 @@ object PostingsIndex {
         .join(stones, Seq("id"), "left_anti"),
       PurgeSwap.stagingOf(table), "term", bCount(table))
     Writer.bucketedTable(
-      spark.table(table + "_docs").select(col("id"), col("dl"))
+      spark.table(docs).select(col("id"), col("dl"))
         .join(stones, Seq("id"), "left_anti"),
-      PurgeSwap.stagingOf(table + "_docs"), "id", bCount(table + "_docs"))
-    Writer.bucketedTable(
-      statsOf(spark.table(PurgeSwap.stagingOf(table + "_docs"))),
-      PurgeSwap.stagingOf(table + "_stats"), "n_docs", 1)
+      PurgeSwap.stagingOf(docs), "id", bCount(docs))
+    Writer.bucketedTable(statsOf(spark.table(PurgeSwap.stagingOf(docs))),
+      PurgeSwap.stagingOf(stats), "n_docs", 1)
     PurgeSwap.swap(spark, table)
-    PurgeSwap.swap(spark, table + "_docs")
+    PurgeSwap.swap(spark, docs)
     // The recomputed stats row IS the live corpus, so the delta table
     // must go WITH the stats swap — and it goes FIRST: a crash between
     // the two leaves old-stats-without-deltas (scores drift by the
@@ -270,7 +270,7 @@ object PostingsIndex {
     // new-stats-plus-deltas would double-count the removal.
     val dt = statsDeltasOf(table)
     if (spark.catalog.tableExists(dt)) spark.sql(s"DROP TABLE `$dt`")
-    PurgeSwap.swap(spark, table + "_stats")
+    PurgeSwap.swap(spark, stats)
     spark.sql(s"DROP TABLE `$t`")
     removed
   }
@@ -400,7 +400,7 @@ object PostingsIndex {
     val nBuckets =
       if (nBuckets0 > 0) nBuckets0 else StreamOps.scaledSinkBuckets(stream)
     val mkTable = IndexLifecycle.resumeAwareTableMaker(spark,
-      checkpointLocation, dropsWhenFresh = Seq(statsDeltasOf(table)))
+      checkpointLocation, Some(state(table)))
     mkTable(spark, table,
       StructType(Seq(
         StructField("term", StringType),
@@ -409,26 +409,26 @@ object PostingsIndex {
         StructField("dl", LongType),
         StructField(StreamOps.BatchTag, LongType))),
       StreamOps.BatchTag, "term", nBuckets)
-    mkTable(spark, table + "_docs",
+    mkTable(spark, docsOf(table),
       StructType(Seq(
         StructField("id", idType),
         StructField("dl", LongType),
         StructField(StreamOps.BatchTag, LongType))),
       StreamOps.BatchTag, "id", nBuckets)
-    mkTable(spark, table + "_stats",
+    mkTable(spark, statsTableOf(table),
       StructType(Seq(
         StructField("n_docs", LongType),
         StructField("sum_dl", LongType),
         StructField(StreamOps.BatchTag, LongType))),
       StreamOps.BatchTag, "n_docs", 1)
-    StreamOps.sinkBatches(spark, stream, queryName, table + "_stats",
+    StreamOps.sinkBatches(spark, stream, queryName, statsTableOf(table),
         checkpointLocation) { (raw, _) =>
       // Postings and doc lengths both read the batch; stage it once.
       // dls feeds both the stats and the `_docs` write.
       val b = Checkpoints.stage(raw)
       val dls = Checkpoints.stage(docLengths(b, idCol, textCol))
       val post = postings(b, idCol, textCol)
-      (statsOf(dls), Seq(table -> post, (table + "_docs") -> dls))
+      (statsOf(dls), Seq(table -> post, docsOf(table) -> dls))
     }
   }
 
@@ -456,14 +456,15 @@ object PostingsIndex {
     // delta side table and tombstone list drop last — probes score
     // the live corpus at every point in between, and a crashed
     // compact(purge) re-runs to the same state.
-    IndexLifecycle.compactStreaming(spark, table, checkpointLocation,
-      purge, extraDropsOnPurge = Seq(statsDeltasOf(table))) { stones =>
-      if (spark.catalog.tableExists(table + "_docs"))
-        graft.streaming.StreamOps.compactSink(spark, table + "_docs",
+    val Seq(_, docs, stats) = state(table).live
+    IndexLifecycle.compactStreaming(spark, state(table), checkpointLocation,
+      purge) { stones =>
+      if (spark.catalog.tableExists(docs))
+        graft.streaming.StreamOps.compactSink(spark, docs,
           checkpointLocation = checkpointLocation, purgeIds = stones)
-      if (spark.catalog.tableExists(table + "_stats")) {
+      if (spark.catalog.tableExists(stats)) {
         if (stones.isEmpty)
-          graft.streaming.StreamOps.compactSinkAdditive(spark, table + "_stats",
+          graft.streaming.StreamOps.compactSinkAdditive(spark, stats,
             _.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
               coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl")),
             checkpointLocation = checkpointLocation)
@@ -482,7 +483,7 @@ object PostingsIndex {
     * table mutates, so this never sees an unchecked orphan. */
   private def recomputeStreamStats(spark: SparkSession, table: String): Unit = {
     import graft.streaming.StreamOps
-    val st = table + "_stats"
+    val st = statsTableOf(table)
     spark.catalog.refreshTable(st)
     val tags = spark.table(st).select(col(StreamOps.BatchTag)).distinct()
       .collect().map(_.getLong(0))
@@ -491,7 +492,7 @@ object PostingsIndex {
       tags.filter(_ <= -2L).map(tg => -tg - 2).maxOption.getOrElse(-1L))
     val newTag = -(maxAbsorbed + 2)
     StreamOps.writeBatchToSink(spark, st,
-      statsOf(spark.table(table + "_docs").select(col("id"), col("dl"))),
+      statsOf(spark.table(docsOf(table)).select(col("id"), col("dl"))),
       newTag)
     tags.filter(_ != newTag).foreach(id =>
       spark.sql(s"ALTER TABLE `$st` DROP PARTITION (`${StreamOps.BatchTag}`=$id)"))

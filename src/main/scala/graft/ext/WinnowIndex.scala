@@ -37,6 +37,11 @@ object WinnowIndex {
 
   private val spec = PairIndex.Spec(Seq(StructField("fp", LongType)), "fp")
 
+  /** This family's declared state ([[IndexState]]): the posting table and its
+    * tombstone list, taken down through [[delete]]. */
+  def state(table: String): IndexState =
+    IndexState.tombstoned(Seq(table), "id", delete)
+
   /** Fingerprint the corpus and persist its postings as a
     * bucketed+sorted table keyed on `fp`. Overwrites `table`.
     * `nBuckets` ≤ 0 (the default) sizes buckets to the posting
@@ -49,7 +54,7 @@ object WinnowIndex {
     * per-row, so any row-subset of a larger posting table is a valid
     * index for that subset of docs. */
   def buildFromPostings(p: DataFrame, table: String, nBuckets: Int = 0): Unit =
-    PairIndex.build(p, table, spec, nBuckets)
+    PairIndex.build(p, state(table), spec, nBuckets)
 
   /** (id, fp) exploded posting list of `docs` — one row per distinct
     * fingerprint per doc (winnow sets are distinct by construction). */
@@ -123,8 +128,9 @@ object WinnowIndex {
                    maxPostings: Int = 1000,
                    queryName: String = "graft_stream_winnow",
                    checkpointLocation: Option[String] = None): (DataFrame, Int) =
-    PairIndex.streamIngest(spark, table, stream, queryName, checkpointLocation,
-        spec.fields(stream.schema(idCol).dataType), spec.bucket,
+    PairIndex.streamIngest(spark, state(table), stream, queryName,
+        checkpointLocation, spec.fields(stream.schema(idCol).dataType),
+        spec.bucket,
         Seq(StructField("n_shared", LongType)))(
       postings(_, idCol, textCol, k, w))(
       (np, batchId) => probeNewBatchFromPostings(spark, table, np, minShared,
@@ -228,5 +234,5 @@ object WinnowIndex {
   def compact(spark: SparkSession, table: String,
               checkpointLocation: Option[String] = None,
               purge: Boolean = false): Int =
-    PairIndex.compact(spark, table, checkpointLocation, purge)
+    PairIndex.compact(spark, state(table), checkpointLocation, purge)
 }

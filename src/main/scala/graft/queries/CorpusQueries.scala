@@ -5,7 +5,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, DedupIndex, Drift, HeavyHitters, IndexOps, IvfIndex, IvfPq, LmIndex, Mixing, Multimodal, Packing, PostingsIndex, Retrieval, Similarity, TextAnalysis, WinnowIndex}
+import graft.ext.{Dedup, DedupIndex, Drift, HeavyHitters, IndexLifecycle, IndexOps, IvfIndex, IvfPq, LmIndex, Mixing, Multimodal, Packing, PostingsIndex, Retrieval, Similarity, TextAnalysis, WinnowIndex}
 
 /** Document-corpus-family registry: dedup (exact / MinHash-LSH /
   * incremental / SimHash / n-gram Jaccard), text analysis and
@@ -903,7 +903,7 @@ private[graft] object CorpusQueries {
     val stream = s.readStream.schema(ids.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     val sink = "graft_stream_machinery_" + digest
-    graft.ext.IndexLifecycle.resumeAwareTableMaker(s, None)(s, sink,
+    IndexLifecycle.resumeAwareTableMaker(s, None)(s, sink,
       StructType(Seq(StructField("doc_id", LongType),
         StructField(graft.streaming.StreamOps.BatchTag, LongType))),
       graft.streaming.StreamOps.BatchTag, "doc_id", 1)
@@ -1098,8 +1098,6 @@ private[graft] object CorpusQueries {
       .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
     val idx = "graft_del_idx_" + digest
-    if (s.catalog.tableExists(idx + "_tombstones"))
-      s.sql(s"DROP TABLE ${idx}_tombstones")
     WinnowIndex.build(old, "doc_id", "text", idx)
     WinnowIndex.delete(s, idx,
       old.where(pmod(col("doc_id"), lit(5L)) === 0)
@@ -1870,8 +1868,6 @@ private[graft] object CorpusQueries {
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString
-    if (s.catalog.tableExists(table + "_tombstones"))
-      s.sql(s"DROP TABLE ${table}_tombstones")
     graft.ext.PostingsIndex.build(s, docs, "doc_id", "text", table)
     graft.ext.PostingsIndex.delete(s, table,
       docs.where(pmod(col("doc_id"), lit(5L)) === 0)
@@ -2319,7 +2315,8 @@ private[graft] object CorpusQueries {
         lit(if (merged >= 3) 1L else 0L).as("batches_merged_ok"),
         (col("__m") === 0 && col("__e") === 0).cast("long")
           .as("equals_rebuild_ok"),
-        lit(if (!s.catalog.tableExists(idx + "_tombstones")) 1L else 0L)
+        lit(if (!s.catalog.tableExists(IndexLifecycle.tombstonesOf(idx))) 1L
+          else 0L)
           .as("tombstones_cleared_ok"))
   }
 
@@ -2383,7 +2380,7 @@ private[graft] object CorpusQueries {
     // instead of a separate isEmpty driver action (VERDICT r21 #5):
     // same value, one fewer job, and the count still reads the
     // POST-compact table because the plan executes after compact.
-    val tombstonesCleared = s.table(t + "_tombstones")
+    val tombstonesCleared = s.table(IndexLifecycle.tombstonesOf(t))
       .agg((count(lit(1)) === 0).cast("long").as("tombstones_cleared_ok"))
     LmIndex.probe(s, t, live, "doc_id", "text",
         prepared = Some(graft.ext.Par.await(pairsF)))
@@ -2464,18 +2461,12 @@ private[graft] object CorpusQueries {
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_census_${n}_$digest"
     val entries = Seq(
-      IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("bm25", t("bm25"),
-        Seq(t("bm25") + "_docs", t("bm25") + "_stats",
-          t("bm25") + "_stats_deltas")),
-      IndexOps.Entry("ivf", t("ivf"),
-        Seq(IvfIndex.centroidsTable(t("ivf")))),
-      IndexOps.Entry("ivfadc", t("ivfadc"),
-        Seq(IvfIndex.centroidsTable(t("ivfadc")),
-          IvfPq.codebooksTable(t("ivfadc")))),
-      IndexOps.Entry("lm", t("lm"), Seq(t("lm") + "_docs"),
-        gramDeltas = true),
-      IndexOps.Entry("winnow", t("winnow")))
+      IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("bm25", PostingsIndex.state(t("bm25"))),
+      IndexOps.Entry("ivf", IvfIndex.state(t("ivf"), "vec_id")),
+      IndexOps.Entry("ivfadc", IvfPq.state(t("ivfadc"), "vec_id")),
+      IndexOps.Entry("lm", LmIndex.state(t("lm"))),
+      IndexOps.Entry("winnow", WinnowIndex.state(t("winnow"))))
     censusMemo.synchronized {
       val perSession = {
         val m = censusMemo.get(s)
@@ -2560,19 +2551,16 @@ private[graft] object CorpusQueries {
     val dels = docs.where(col("doc_id") % 20 === 3)
     val delIds = dels.select(col("doc_id").as("id"))
     val plans = Seq(
-      IndexOps.Plan(IndexOps.Entry("bands", t("bands")),
+      IndexOps.Plan(IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
         x => DedupIndex.purgeTombstones(x, t("bands"))),
-      IndexOps.Plan(IndexOps.Entry("winnow", t("winnow")),
+      IndexOps.Plan(IndexOps.Entry("winnow", WinnowIndex.state(t("winnow"))),
         x => WinnowIndex.purgeTombstones(x, t("winnow"))))
     // Per-rep rebuild: the sweep MUTATES its fixture (that is the
     // point), so each rep starts from a dropped slate — a memoized
     // fixture would make rep 2 observe rep 1's collapsed state.
-    // Location-dropping (not DROP IF EXISTS) so a killed rep's
+    // Location-dropping (IndexLifecycle.clear) so a killed rep's
     // orphaned warehouse directory can't fail the next rep's build.
-    graft.ext.Par.map(plans.map(_.entry).flatMap(e =>
-        (e.table +: e.siblings) :+
-        graft.ext.IndexLifecycle.tombstonesOf(e.table)))(
-      graft.io.Writer.dropTableAndLocation(s, _))
+    graft.ext.Par.map(plans)(p => IndexLifecycle.clear(s, p.entry.state))
     // The two family fixtures touch disjoint tables — build them
     // concurrently (guide §2.6 via Par).
     graft.ext.Par.all(
@@ -2624,14 +2612,11 @@ private[graft] object CorpusQueries {
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_sweepall_${n}_$digest"
     val bandsT = t("bands"); val winT = t("win"); val ivfT = t("ivf")
+    val states = Seq(DedupIndex.state(bandsT), WinnowIndex.state(winT),
+      IvfIndex.state(ivfT, "vec_id"))
     // Per-rep slate drop (location-dropping — a killed rep must not
     // wedge the next on LOCATION_ALREADY_EXISTS).
-    graft.ext.Par.map(
-      Seq(bandsT, winT, ivfT, IvfIndex.centroidsTable(ivfT)).flatMap(x =>
-          Seq(x, graft.ext.PurgeSwap.stagingOf(x), x + "_compact_stage",
-            graft.ext.IndexLifecycle.tombstonesOf(x),
-            graft.ext.IndexLifecycle.rebalanceMarkerOf(x)))
-        .distinct)(graft.io.Writer.dropTableAndLocation(s, _))
+    graft.ext.Par.map(states)(IndexLifecycle.clear(s, _))
     val docs = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
       .where(col("doc_id") < 60 && col("text").isNotNull))
     val delIds = docs.where(col("doc_id") % 20 === 3)
@@ -2666,9 +2651,9 @@ private[graft] object CorpusQueries {
           k = 4, iters = 0)
       })
     val plans = Seq(
-      IndexOps.FullPlan(IndexOps.Entry("bands", bandsT),
+      IndexOps.FullPlan(IndexOps.Entry("bands", states(0)),
         x => DedupIndex.purgeTombstones(x, bandsT)),
-      IndexOps.FullPlan(IndexOps.Entry("winnow", winT),
+      IndexOps.FullPlan(IndexOps.Entry("winnow", states(1)),
         x => WinnowIndex.purgeTombstones(x, winT),
         append = Some((x, missing) => {
           val newDocs = docs.join(missing.select(col("id").as("doc_id")),
@@ -2677,8 +2662,7 @@ private[graft] object CorpusQueries {
           WinnowIndex.append(x, winT, newDocs, "doc_id", "text")
           n
         })),
-      IndexOps.FullPlan(IndexOps.Entry("ivf", ivfT,
-          Seq(IvfIndex.centroidsTable(ivfT)), idCol = "vec_id"),
+      IndexOps.FullPlan(IndexOps.Entry("ivf", states(2)),
         x => IvfIndex.purgeTombstones(x, ivfT, "vec_id"),
         rebalanceDue = Some(x =>
           IvfIndex.cellSkew(x, ivfT, "vec_id", dueMilli = 2000L)
@@ -2720,10 +2704,9 @@ private[graft] object CorpusQueries {
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_dash_${n}_$digest"
     val entries = Seq(
-      IndexOps.Entry("bands_a", t("a")),
-      IndexOps.Entry("bands_b", t("b")),
-      IndexOps.Entry("ivf", t("ivf"),
-        Seq(IvfIndex.centroidsTable(t("ivf"))), idCol = "vec_id"))
+      IndexOps.Entry("bands_a", DedupIndex.state(t("a"))),
+      IndexOps.Entry("bands_b", DedupIndex.state(t("b"))),
+      IndexOps.Entry("ivf", IvfIndex.state(t("ivf"), "vec_id")))
     dashboardMemo.synchronized {
       val perSession = {
         val m = dashboardMemo.get(s)
@@ -2732,14 +2715,7 @@ private[graft] object CorpusQueries {
           dashboardMemo.put(s, m2); m2 }
       }
       if (!perSession.contains(dir)) {
-        entries.flatMap(e => Seq(e.table,
-            graft.ext.PurgeSwap.stagingOf(e.table),
-            e.table + "_compact_stage",
-            graft.ext.IndexLifecycle.tombstonesOf(e.table),
-            graft.ext.IndexLifecycle.rebalanceMarkerOf(e.table)))
-          .foreach(graft.io.Writer.dropTableAndLocation(s, _))
-        graft.io.Writer.dropTableAndLocation(s,
-          IvfIndex.centroidsTable(t("ivf")))
+        entries.foreach(e => IndexLifecycle.clear(s, e.state))
         val docs = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
           .where(col("doc_id") < 90 && col("text").isNotNull))
         // Staged: two index builds read the bands.
@@ -2833,26 +2809,23 @@ private[graft] object CorpusQueries {
       .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_janitor_${n}_$digest"
-    val entries = Seq(
-      IndexOps.Entry("clean", t("clean")),
-      IndexOps.Entry("crashed_stage", t("cs")),
-      IndexOps.Entry("crashed_swap", t("sw")),
-      IndexOps.Entry("inflight", t("mk")),
+    // Plain one-column tables under the tombstoned-family declaration
+    // (main + takedown list — what the janitor shadows).
+    def e(family: String, n: String) =
+      IndexOps.Entry(family, DedupIndex.state(t(n)))
+    val entries = Seq(e("clean", "clean"), e("crashed_stage", "cs"),
+      e("crashed_swap", "sw"), e("inflight", "mk"),
       // The fifth state (ADVICE r19): a compact-stage whose BASE is
       // missing — impossible under compactSink's crash discipline, so
       // possibly the only surviving index copy. SUSPECT: censused
       // distinctly, never dropped, persists across vacuums.
-      IndexOps.Entry("suspect", t("sus")))
-    // dropTableAndLocation, not DROP TABLE IF EXISTS: a killed rep can
-    // leave the warehouse location while the catalog entry is gone,
-    // and the next rep's saveAsTable then fails LOCATION_ALREADY_EXISTS
-    // — the janitor fixture must not trip over its own orphan class.
-    graft.ext.Par.map(entries.flatMap(e =>
-        Seq(e.table, graft.ext.PurgeSwap.stagingOf(e.table),
-          e.table + "_compact_stage",
-          graft.ext.IndexLifecycle.tombstonesOf(e.table),
-          graft.ext.IndexLifecycle.rebalanceMarkerOf(e.table))))(
-      graft.io.Writer.dropTableAndLocation(s, _))
+      e("suspect", "sus"))
+    // Location-dropping (IndexLifecycle.clear), not DROP TABLE IF
+    // EXISTS: a killed rep can leave the warehouse location while the
+    // catalog entry is gone, and the next rep's saveAsTable then fails
+    // LOCATION_ALREADY_EXISTS — the janitor fixture must not trip over
+    // its own orphan class.
+    graft.ext.Par.map(entries)(x => IndexLifecycle.clear(s, x.state))
     // Staged once: the slice feeds SEVEN table writes — without the
     // barrier each write re-scans the corpus table. The nine planted
     // writes land in DISJOINT tables off that one barrier — overlap
@@ -2867,16 +2840,18 @@ private[graft] object CorpusQueries {
       () => d60.write.format("parquet").saveAsTable(t("cs")),
       () => d30.write.format("parquet")
         .saveAsTable(graft.ext.PurgeSwap.stagingOf(t("cs"))),
-      () => d30.write.format("parquet").saveAsTable(t("cs") + "_compact_stage"),
+      () => d30.write.format("parquet")
+        .saveAsTable(graft.streaming.StreamOps.compactStagingOf(t("cs"))),
       () => d60.write.format("parquet")
         .saveAsTable(graft.ext.PurgeSwap.stagingOf(t("sw"))),
       () => {
         d60.write.format("parquet").saveAsTable(t("mk"))
         d30.write.format("parquet")
           .saveAsTable(graft.ext.PurgeSwap.stagingOf(t("mk")))
-        graft.ext.IndexLifecycle.markSwap(s, t("mk"), Seq(t("mk")))
+        IndexLifecycle.markSwap(s, t("mk"), Seq(t("mk")))
       },
-      () => d30.write.format("parquet").saveAsTable(t("sus") + "_compact_stage"))
+      () => d30.write.format("parquet")
+        .saveAsTable(graft.streaming.StreamOps.compactStagingOf(t("sus"))))
     // orphanCensus/vacuum act at CALL time (rows are built driver-
     // side), so cen is the pre-vacuum view and live counts are read
     // after the reclaim — explicit sequencing, no lazy-eval trap.
@@ -2928,11 +2903,9 @@ private[graft] object CorpusQueries {
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_audit_${n}_$digest"
     val entries = Seq(
-      IndexOps.Entry("bands_a", t("a")),
-      IndexOps.Entry("bands_b", t("b")))
-    entries.flatMap(e => Seq(e.table,
-        graft.ext.IndexLifecycle.tombstonesOf(e.table)))
-      .foreach(graft.io.Writer.dropTableAndLocation(s, _))
+      IndexOps.Entry("bands_a", DedupIndex.state(t("a"))),
+      IndexOps.Entry("bands_b", DedupIndex.state(t("b"))))
+    entries.foreach(e => IndexLifecycle.clear(s, e.state))
     val docs = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
       .where(col("doc_id") < 90 && col("text").isNotNull))
     // ONE banding pass over the union slice, row-subset per family —
@@ -2982,11 +2955,9 @@ private[graft] object CorpusQueries {
       .map("%02x".format(_)).mkString
     def t(n: String) = s"graft_fresh_${n}_$digest"
     val entries = Seq(
-      IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("winnow", t("winnow")))
-    entries.flatMap(e => Seq(e.table,
-        graft.ext.IndexLifecycle.tombstonesOf(e.table)))
-      .foreach(graft.io.Writer.dropTableAndLocation(s, _))
+      IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("winnow", WinnowIndex.state(t("winnow"))))
+    entries.foreach(e => IndexLifecycle.clear(s, e.state))
     val docs = graft.ext.Checkpoints.stage(Tables.documents(s, dir)
       .where(col("doc_id") < 60 && col("text").isNotNull))
     // The two family fixture chains touch disjoint tables — overlap

@@ -1084,7 +1084,7 @@ private[graft] object VectorQueries {
       .where(col("vec_id") >= 9000L || col("vec_id") % 50 =!= 3)
     val probeDead = probe.join(liveIds, Seq("vec_id"), "left_anti")
       .agg(count(lit(1)).as("__dead"))
-    val cleared = !s.catalog.tableExists(t + "_tombstones")
+    val cleared = !s.catalog.tableExists(graft.ext.IndexLifecycle.tombstonesOf(t))
     liveIds.agg(count(lit(1)).as("n_live"))
       .crossJoin(IvfIndex.cellCensus(s, t, "vec_id")
         .agg(coalesce(sum(col("n_live")), lit(0L)).as("census_n_live")))

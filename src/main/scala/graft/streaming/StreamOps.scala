@@ -520,6 +520,10 @@ object StreamOps {
     Await.result(Future.sequence(jobs), Duration.Inf)
   }
 
+  /** The staging table a [[compactSink]] of `table` writes — the one
+    * owner of the name (the IndexOps janitor censuses it). */
+  def compactStagingOf(table: String): String = table + "_compact_stage"
+
   /** Compact a batch-id-partitioned sink/index table: merge every
     * per-batch partition into ONE compacted partition ([[BatchTag]] =
     * `mergedId`, a negative id no stream batch can collide with),
@@ -597,7 +601,7 @@ object StreamOps {
       // merged overwrite and the partition drops leaves duplicates the
       // next compact's distinct() heals (the contract above); leftover
       // staging is dropped and replaced on the next run.
-      val staging = table + "_compact_stage"
+      val staging = compactStagingOf(table)
       graft.io.Writer.dropTableAndLocation(spark, staging)
       purgeIds.foldLeft(spark.table(table).drop(BatchTag).distinct()) {
         (rows, p) => rows.join(

@@ -23,9 +23,13 @@ class IndexOpsSpec extends AnyFunSuite {
       Cen(r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8))).toMap
 
+  /** Drop everything each entry's family can leave behind. */
+  private def clear(entries: Seq[IndexOps.Entry]): Unit =
+    entries.foreach(e => IndexLifecycle.clear(spark, e.state))
+
   test("an absent index yields a dashboard row, not an exception") {
     val got = IndexOps.census(spark,
-      Seq(IndexOps.Entry("ghost", "census_spec_no_such_table")))
+      Seq(IndexOps.Entry("ghost", DedupIndex.state("census_spec_no_such_table"))))
       .collect().head
     assert(got.getString(1) == "<absent>" && got.getLong(3) == 0L &&
       got.getLong(6) == 0L && got.getLong(7) == 0L &&
@@ -75,14 +79,10 @@ class IndexOpsSpec extends AnyFunSuite {
       .select(col("vec_id").as("id"))
     def t(n: String) = "census_spec_" + n
     val entries = Seq(
-      IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("bm25", t("bm25"),
-        Seq(t("bm25") + "_docs", t("bm25") + "_stats",
-          t("bm25") + "_stats_deltas")),
-      IndexOps.Entry("ivf", t("ivf"),
-        Seq(IvfIndex.centroidsTable(t("ivf")))),
-      IndexOps.Entry("lm", t("lm"), Seq(t("lm") + "_docs"),
-        gramDeltas = true))
+      IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("bm25", PostingsIndex.state(t("bm25"))),
+      IndexOps.Entry("ivf", IvfIndex.state(t("ivf"), "vec_id")),
+      IndexOps.Entry("lm", LmIndex.state(t("lm"))))
     try {
       DedupIndex.build(docs, "doc_id", "text", t("bands"))
       DedupIndex.delete(spark, t("bands"), delIds)
@@ -151,11 +151,7 @@ class IndexOpsSpec extends AnyFunSuite {
       assert(post("lm").nFiles < mid("lm").nFiles,
         s"lm wave compaction must shrink files: mid=${mid("lm")} " +
           s"post=${post("lm")}")
-    } finally {
-      entries.flatMap(e => (e.table +: e.siblings) :+
-          IndexLifecycle.tombstonesOf(e.table))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clear(entries)
   }
 
   test("sweep acts exactly where compact_due says, skips byte-identically, and is idempotent") {
@@ -165,16 +161,13 @@ class IndexOpsSpec extends AnyFunSuite {
     val delIds = dels.select(col("doc_id").as("id"))
     def t(n: String) = "sweep_spec_" + n
     val plans = Seq(
-      IndexOps.Plan(IndexOps.Entry("bands", t("bands")),
+      IndexOps.Plan(IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
         s => DedupIndex.purgeTombstones(s, t("bands"))),
-      IndexOps.Plan(IndexOps.Entry("bm25", t("bm25"),
-          Seq(t("bm25") + "_docs", t("bm25") + "_stats",
-            t("bm25") + "_stats_deltas")),
+      IndexOps.Plan(IndexOps.Entry("bm25", PostingsIndex.state(t("bm25"))),
         s => PostingsIndex.purgeTombstones(s, t("bm25"))),
-      IndexOps.Plan(IndexOps.Entry("lm", t("lm"), Seq(t("lm") + "_docs"),
-          gramDeltas = true),
+      IndexOps.Plan(IndexOps.Entry("lm", LmIndex.state(t("lm"))),
         s => LmIndex.compact(s, t("lm")).toLong),
-      IndexOps.Plan(IndexOps.Entry("winnow", t("winnow")),
+      IndexOps.Plan(IndexOps.Entry("winnow", WinnowIndex.state(t("winnow"))),
         s => WinnowIndex.purgeTombstones(s, t("winnow"))))
     try {
       DedupIndex.build(docs, "doc_id", "text", t("bands"))
@@ -229,11 +222,7 @@ class IndexOpsSpec extends AnyFunSuite {
           r.getAs[Long]("fs_discipline_ok") == 1L,
           s"second sweep must be a no-op: $r")
       }
-    } finally {
-      plans.map(_.entry).flatMap(e => (e.table +: e.siblings) :+
-          IndexLifecycle.tombstonesOf(e.table))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clear(plans.map(_.entry))
   }
 
   test("orphan census + vacuum: drop crashed-STAGE garbage, adopt crashed swaps, heal markers, touch nothing else") {
@@ -241,16 +230,14 @@ class IndexOpsSpec extends AnyFunSuite {
     def mk(t: String, n: Int): Unit =
       (1 to n).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .write.format("parquet").saveAsTable(t)
-    val entries = Seq(
-      IndexOps.Entry("clean", "janitor_spec_clean"),
-      IndexOps.Entry("crashed_stage", "janitor_spec_stage"),
-      IndexOps.Entry("crashed_swap", "janitor_spec_swap"),
-      IndexOps.Entry("inflight", "janitor_spec_marked"),
-      IndexOps.Entry("suspect", "janitor_spec_sus"))
-    val all = entries.flatMap(e => Seq(e.table,
-      PurgeSwap.stagingOf(e.table), e.table + "_compact_stage",
-      IndexLifecycle.tombstonesOf(e.table),
-      IndexLifecycle.rebalanceMarkerOf(e.table)))
+    // Plain tables under the tombstoned-family declaration (main +
+    // takedown list — what the janitor shadows).
+    def e(family: String, t: String) =
+      IndexOps.Entry(family, DedupIndex.state(t))
+    val entries = Seq(e("clean", "janitor_spec_clean"),
+      e("crashed_stage", "janitor_spec_stage"),
+      e("crashed_swap", "janitor_spec_swap"),
+      e("inflight", "janitor_spec_marked"), e("suspect", "janitor_spec_sus"))
     try {
       mk("janitor_spec_clean", 5)
       // Crashed STAGE: live intact, both staging shadows left behind.
@@ -341,7 +328,7 @@ class IndexOpsSpec extends AnyFunSuite {
       assert(spark.table("janitor_spec_sus_compact_stage").count() == 6L)
       // Duplicate family names would silently collapse the one-row-
       // per-family maps — refused loudly at entry (ADVICE r19).
-      val dup = entries :+ IndexOps.Entry("clean", "janitor_spec_other")
+      val dup = entries :+ e("clean", "janitor_spec_other")
       intercept[IllegalArgumentException](IndexOps.orphanCensus(spark, dup))
       intercept[IllegalArgumentException](IndexOps.vacuum(spark, dup))
       intercept[IllegalArgumentException](IndexOps.census(spark, dup))
@@ -349,7 +336,7 @@ class IndexOpsSpec extends AnyFunSuite {
         IndexOps.freshness(spark, dup, spark.range(1).toDF("id")))
       intercept[IllegalArgumentException](
         IndexOps.takedownAudit(spark, dup, spark.range(1).toDF("id")))
-    } finally all.foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    } finally clear(entries)
   }
 
   test("takedown audit: visible ids expose the missed family; purge zeroes physical presence") {
@@ -361,11 +348,9 @@ class IndexOpsSpec extends AnyFunSuite {
       .where(col("vec_id") < 60).select(col("vec_id"), col("embedding"))
     def t(n: String) = "audit_spec_" + n
     val entries = Seq(
-      IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("ivf", t("ivf"),
-        Seq(IvfIndex.centroidsTable(t("ivf"))), idCol = "vec_id"),
-      IndexOps.Entry("lm", t("lm"), Seq(t("lm") + "_docs"),
-        gramDeltas = true))
+      IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("ivf", IvfIndex.state(t("ivf"), "vec_id")),
+      IndexOps.Entry("lm", LmIndex.state(t("lm"))))
     try {
       DedupIndex.build(docs, "doc_id", "text", t("bands"))
       IvfIndex.build(em, "vec_id", "embedding", t("ivf"), k = 4, iters = 1)
@@ -408,16 +393,13 @@ class IndexOpsSpec extends AnyFunSuite {
 
       // An absent family is a dashboard row, not an exception.
       val ghost = IndexOps.takedownAudit(spark,
-        Seq(IndexOps.Entry("ghost", "audit_spec_no_such")), ids)
+        Seq(IndexOps.Entry("ghost", DedupIndex.state("audit_spec_no_such"))),
+        ids)
         .collect().head
       assert(ghost.getAs[Long]("present_ids") == 0L &&
         ghost.getAs[Long]("visible_ids") == 0L &&
         ghost.getAs[Long]("tombstoned") == 0L)
-    } finally {
-      entries.flatMap(e => (e.table +: e.siblings) :+
-          IndexLifecycle.tombstonesOf(e.table))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clear(entries)
   }
 
   test("freshness census: append debt per family, tombstoned ids are deliberate absence, not lag") {
@@ -425,8 +407,8 @@ class IndexOpsSpec extends AnyFunSuite {
       .where(col("doc_id") < 60 && col("text").isNotNull)
     def t(n: String) = "fresh_spec_" + n
     val entries = Seq(
-      IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("winnow", t("winnow")))
+      IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("winnow", WinnowIndex.state(t("winnow"))))
     try {
       // bands indexes only the first 40 ids; a takedown is registered
       // for the NEVER-INDEXED id 43 (a takedown arriving before the
@@ -464,19 +446,13 @@ class IndexOpsSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> r).toMap
       assert(after("bands").getAs[Long]("n_missing") == 0L &&
         after("bands").getAs[Long]("stale") == 0L, after("bands").toString)
-    } finally {
-      entries.flatMap(e => (e.table +: e.siblings) :+
-          IndexLifecycle.tombstonesOf(e.table))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clear(entries)
   }
 
   test("index-facing reports heal a crashed swap at entry; the janitor census still sees it") {
     import spark.implicits._
     val t = "heal_spec_idx"
-    val entry = IndexOps.Entry("fam", t)
-    val all = Seq(t, PurgeSwap.stagingOf(t), IndexLifecycle.tombstonesOf(t),
-      IndexLifecycle.rebalanceMarkerOf(t))
+    val entry = IndexOps.Entry("fam", DedupIndex.state(t))
     try {
       // Crashed drop→rename window: staging holds the index, live gone.
       (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -491,7 +467,7 @@ class IndexOpsSpec extends AnyFunSuite {
       assert(row.getString(1) != "<absent>", row.toString)
       assert(spark.catalog.tableExists(t) &&
         spark.table(t).count() == 5L)
-    } finally all.foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    } finally clear(Seq(entry))
   }
 
   test("sweepAll: act-iff-due across all four decision bits, afters collapse, fully idempotent") {
@@ -514,13 +490,14 @@ class IndexOpsSpec extends AnyFunSuite {
     // Lloyd dynamics (IvfRebalanceSpec owns those; the registered
     // x_sweep_full runs the real IvfIndex.rebalance wiring).
     val flagT = t("skew_flag")
-    val entries = Seq(IndexOps.Entry("bands", t("bands")),
-      IndexOps.Entry("winnow", t("win")))
-    val all = entries.flatMap(e => Seq(e.table,
-      PurgeSwap.stagingOf(e.table), e.table + "_compact_stage",
-      IndexLifecycle.tombstonesOf(e.table))) :+ flagT
+    val entries = Seq(IndexOps.Entry("bands", DedupIndex.state(t("bands"))),
+      IndexOps.Entry("winnow", WinnowIndex.state(t("win"))))
+    def clearAll(): Unit = {
+      clear(entries)
+      graft.io.Writer.dropTableAndLocation(spark, flagT)
+    }
     try {
-      all.foreach(graft.io.Writer.dropTableAndLocation(spark, _))
+      clearAll()
       DedupIndex.build(docs, "doc_id", "text", t("bands"))
       DedupIndex.delete(spark, t("bands"), delIds)
       spark.table(t("bands")).write.format("parquet")
@@ -531,9 +508,9 @@ class IndexOpsSpec extends AnyFunSuite {
         .saveAsTable(flagT)
       var rebalanceRuns = 0
       val plans = Seq(
-        IndexOps.FullPlan(IndexOps.Entry("bands", t("bands")),
+        IndexOps.FullPlan(entries(0),
           x => DedupIndex.purgeTombstones(x, t("bands"))),
-        IndexOps.FullPlan(IndexOps.Entry("winnow", t("win")),
+        IndexOps.FullPlan(entries(1),
           x => WinnowIndex.purgeTombstones(x, t("win")),
           append = Some((x, missing) => {
             val nd = docs.join(missing.select(col("id").as("doc_id")),
@@ -589,7 +566,7 @@ class IndexOpsSpec extends AnyFunSuite {
           r.getAs[Long]("rebalance_due") == 0L, r.toString)
       }
       assert(rebalanceRuns == 1, "second sweep must not re-rebalance")
-    } finally all.foreach(graft.io.Writer.dropTableAndLocation(spark, _))
+    } finally clearAll()
   }
 
   test("dashboard: one row per family composing janitor + census + freshness + fleet audit + skew") {
@@ -601,13 +578,10 @@ class IndexOpsSpec extends AnyFunSuite {
     val delIds = docs.where(col("doc_id") % 20 === 3)
       .select(col("doc_id").as("id"))
     val nDel = delIds.count()
-    val entries = Seq(IndexOps.Entry("a", t("a")),
-      IndexOps.Entry("b", t("b")))
-    val all = entries.flatMap(e => Seq(e.table,
-      PurgeSwap.stagingOf(e.table), e.table + "_compact_stage",
-      IndexLifecycle.tombstonesOf(e.table)))
+    val entries = Seq(IndexOps.Entry("a", DedupIndex.state(t("a"))),
+      IndexOps.Entry("b", DedupIndex.state(t("b"))))
     try {
-      all.foreach(graft.io.Writer.dropTableAndLocation(spark, _))
+      clear(entries)
       DedupIndex.build(docs, "doc_id", "text", t("a"))
       DedupIndex.delete(spark, t("a"), delIds) // a: tombstoned
       DedupIndex.build(docs.where(col("doc_id") < 40), "doc_id",
@@ -648,6 +622,61 @@ class IndexOpsSpec extends AnyFunSuite {
       assert(again.map(_.toString).toSeq ==
         dash.values.toSeq.sortBy(_.getString(0)).map(_.toString),
         "a second read must see identical state")
-    } finally all.foreach(graft.io.Writer.dropTableAndLocation(spark, _))
+    } finally clear(entries)
+  }
+
+  test("takedown runs each family's own delete: a bm25 takedown sheds the removed docs from N and avgdl") {
+    import spark.implicits._
+    // PostingsIndexSpec's 8-doc corpus with controlled term overlap.
+    val corpus = Seq(
+      (1L, "dup data alpha bravo"),
+      (2L, "data data charlie delta data"),
+      (3L, "alpha bravo charlie"),
+      (4L, "dup dup data echo"),
+      (5L, ""),
+      (6L, "echo fox golf hotel india julia kilo lima"),
+      (7L, "data alpha"),
+      (8L, "dup zulu")).toDF("doc_id", "text")
+    val terms = Seq("dup", "data")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))).toSeq
+    val entries = Seq(
+      IndexOps.Entry("deleted", PostingsIndex.state("takedown_spec_bm25_del")),
+      IndexOps.Entry("taken_down", PostingsIndex.state("takedown_spec_bm25_td")))
+    try {
+      clear(entries)
+      entries.foreach(e =>
+        PostingsIndex.build(spark, corpus, "doc_id", "text", e.table))
+      val gone = Seq(4L).toDF("id")
+      PostingsIndex.delete(spark, entries(0).table, gone)
+      IndexOps.takedown(spark, entries.filter(_.family == "taken_down"), gone)
+      val live = rows(TextAnalysis.bm25TopK(corpus.where(col("doc_id") =!= 4L),
+        "doc_id", "text", terms, 10))
+      entries.foreach(e =>
+        assert(rows(PostingsIndex.probe(spark, e.table, terms, 10)) == live,
+          s"${e.family}: the probe must equal bm25TopK on the live docs"))
+    } finally clear(entries)
+  }
+
+  test("takedown refuses an LM entry up front, naming LmIndex.delete") {
+    import spark.implicits._
+    val entries = Seq(
+      IndexOps.Entry("bands", DedupIndex.state("takedown_spec_lm_bands")),
+      IndexOps.Entry("lm", LmIndex.state("takedown_spec_lm")))
+    try {
+      val docs = Seq((1L, "alpha bravo charlie"), (2L, "delta echo fox"))
+        .toDF("doc_id", "text")
+      DedupIndex.build(docs, "doc_id", "text", entries(0).table)
+      LmIndex.build(spark, docs, "doc_id", "text", entries(1).table)
+      val e = intercept[IllegalArgumentException](
+        IndexOps.takedown(spark, entries, Seq(1L).toDF("id")))
+      assert(e.getMessage.contains("LmIndex.delete"), e.getMessage)
+      // Refused before any family is touched: no tombstone anywhere.
+      entries.foreach(x => assert(
+        !spark.catalog.tableExists(IndexLifecycle.tombstonesOf(x.table)) ||
+          spark.table(IndexLifecycle.tombstonesOf(x.table)).count() == 0L,
+        s"${x.family} took a tombstone from a refused takedown"))
+    } finally clear(entries)
   }
 }

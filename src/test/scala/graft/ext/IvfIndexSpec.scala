@@ -147,8 +147,8 @@ class IvfIndexSpec extends AnyFunSuite {
       assert(afterPairs == streamed, "compact changed the pair sink contents")
       assert(served() == direct, "compact changed probeTopK results")
     } finally {
-      Seq(t, t + "_pairs", IvfIndex.centroidsTable(t))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+      IndexLifecycle.clear(spark, IvfIndex.state(t))
+      graft.io.Writer.dropTableAndLocation(spark, t + "_pairs")
     }
   }
 
@@ -203,9 +203,10 @@ class IvfIndexSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
     val (tDel, tLive) = ("graft_ivf_takedown_spec", "graft_ivf_takedown_live_spec")
-    def dropAll(): Unit = Seq(tDel, tLive)
-      .flatMap(t => Seq(t, t + "_pairs", t + "_tombstones", IvfIndex.centroidsTable(t)))
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    def dropAll(): Unit = Seq(tDel, tLive).foreach { t =>
+      IndexLifecycle.clear(spark, IvfIndex.state(t, "vec_id"))
+      graft.io.Writer.dropTableAndLocation(spark, t + "_pairs")
+    }
     dropAll()
     try {
       val deleted = ingest(tDel, Seq(shard(0), shard(1)),
@@ -323,10 +324,7 @@ class IvfIndexSpec extends AnyFunSuite {
       assert(noneF.count() == 0 && noneQ.count() == 0)
       assert(noneF.columns.toSeq == Seq("query_id", "vec_id", "cos_sim"))
       assert(noneQ.columns.toSeq == Seq("query_id", "vec_id", "cos_sim"))
-    } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally IndexLifecycle.clear(spark, IvfIndex.state(t))
   }
 
   test("probeBatch degenerate vectors: null-score member rows survive the kernel fan-out nulls-last, bit-identical to the single probes") {
@@ -388,10 +386,7 @@ class IvfIndexSpec extends AnyFunSuite {
         assert(bq.exists(r => r._1 == qid && r._2 == 9000L),
           s"zero vector missing from quantized batch for query $qid")
       }
-    } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally IndexLifecycle.clear(spark, IvfIndex.state(t))
   }
 
   test("delete: tombstoned vectors vanish from float AND quantized probes; purge answer-stable") {
@@ -401,8 +396,6 @@ class IvfIndexSpec extends AnyFunSuite {
       .select(col("embedding")).first().getSeq[Float](0)
     val corpus = e.where(col("vec_id") =!= 0)
     val t = "ivf_del_spec"
-    if (spark.catalog.tableExists(t + "_tombstones"))
-      spark.sql(s"DROP TABLE ${t}_tombstones")
     IvfIndex.build(corpus, "vec_id", "embedding", t, k = 8, iters = 1)
     def top(k: Int) = IvfIndex.probeTopK(spark, t, "vec_id", "embedding", q, k, nProbe = 8)
       .collect().map(_.getLong(0)).toSeq
@@ -440,10 +433,7 @@ class IvfIndexSpec extends AnyFunSuite {
       IvfIndex.build(corpus, "vec_id", "embedding", t, k = 4, iters = 1)
       assert(top().head == hit,
         "a rebuilt index must not inherit the old index's takedowns")
-    } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally IndexLifecycle.clear(spark, IvfIndex.state(t))
   }
 
   test("probeTopKQuantized refuses a shortlist below k, like the other shortlist paths") {

@@ -94,9 +94,12 @@ class IvfRebalanceSpec extends AnyFunSuite {
     IndexLifecycle.markSwap(spark, t, t +: sides(t))
   }
 
-  private def ivfSides(x: String) = Seq(IvfIndex.centroidsTable(x))
-  private def ivfPqSides(x: String) =
-    Seq(IvfIndex.centroidsTable(x), IvfPq.codebooksTable(x))
+  private def ivfSides(x: String) = IvfIndex.state(x).live.tail
+  private def ivfPqSides(x: String) = IvfPq.state(x).live.tail
+  private def clearIvf(xs: String*): Unit =
+    xs.foreach(x => IndexLifecycle.clear(spark, IvfIndex.state(x)))
+  private def clearIvfPq(xs: String*): Unit =
+    xs.foreach(x => IndexLifecycle.clear(spark, IvfPq.state(x)))
 
   test("rebalance equals a fresh build on the live corpus; census reports drift before and conserves after") {
     val e = Tables.embeddings(spark, TestSpark.sf0001)
@@ -135,13 +138,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       // Census conserves: per-cell live counts sum to the live corpus.
       val census = IvfIndex.cellCensus(spark, t, "vec_id").collect()
       assert(census.map(_.getLong(1)).sum == 260L, census.mkString(","))
-    } finally {
-      Seq(t, t2).flatMap(x => Seq(x, IvfIndex.centroidsTable(x),
-          x + "_tombstones", PurgeSwap.stagingOf(x),
-          PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
-          x + "_rebalance_inflight"))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t, t2)
   }
 
   test("IVFADC rebalance equals a fresh IvfPq build on the live corpus; tombstones purge") {
@@ -152,11 +149,6 @@ class IvfRebalanceSpec extends AnyFunSuite {
     val live = corpus.where(!col("vec_id").isin(dels: _*))
     val t = "ivfpq_rebalance_spec"
     val t2 = "ivfpq_rebalance_spec_fresh"
-    def tablesOf(x: String) = Seq(x, IvfIndex.centroidsTable(x),
-      IvfPq.codebooksTable(x), x + "_tombstones", PurgeSwap.stagingOf(x),
-      PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
-      PurgeSwap.stagingOf(IvfPq.codebooksTable(x)),
-      IndexLifecycle.rebalanceMarkerOf(x))
     try {
       IvfPq.build(corpus, "vec_id", "embedding", t,
         kCells = 4, ivfIters = 1, m = 8, kPq = 8, pqIters = 1)
@@ -179,10 +171,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
         assert(rows(t) == rows(t2),
           s"IVFADC probe diverges from fresh build for query $q")
       }
-    } finally {
-      (tablesOf(t) ++ tablesOf(t2))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvfPq(t, t2)
   }
 
   test("a crashed THREE-table IVFADC swap heals at the next probe (marker lists the tables)") {
@@ -192,11 +181,6 @@ class IvfRebalanceSpec extends AnyFunSuite {
     val live = corpus.where(col("vec_id") % 10 =!= 7)
     val t = "ivfpq_rebalance_crash_spec"
     val ref = "ivfpq_rebalance_crash_ref"
-    def tablesOf(x: String) = Seq(x, IvfIndex.centroidsTable(x),
-      IvfPq.codebooksTable(x), x + "_tombstones", PurgeSwap.stagingOf(x),
-      PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
-      PurgeSwap.stagingOf(IvfPq.codebooksTable(x)),
-      IndexLifecycle.rebalanceMarkerOf(x))
     val q = e.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0).toSeq
     try {
@@ -232,10 +216,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       assert(!spark.catalog.tableExists(IndexLifecycle.rebalanceMarkerOf(t)) &&
         !spark.catalog.tableExists(t + "_tombstones"),
         "heal must clear marker and tombstones")
-    } finally {
-      (tablesOf(t) ++ tablesOf(ref))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvfPq(t, ref)
   }
 
   test("both crash windows of the two-table swap heal at the next probe") {
@@ -281,13 +262,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       assert(f2 == expF && z2 == expZ, "window-2 heal serves the new layout")
       assert(!spark.catalog.tableExists(t + "_rebalance_inflight"),
         "window-2 heal must clear the marker")
-    } finally {
-      Seq(t, ref).flatMap(x => Seq(x, IvfIndex.centroidsTable(x),
-          x + "_tombstones", PurgeSwap.stagingOf(x),
-          PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
-          x + "_rebalance_inflight"))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t, ref)
   }
 
   test("a fresh build discards a crashed two-table rebalance: stale marker and stagings dropped") {
@@ -315,12 +290,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       assert((t +: ivfSides(t)).forall(x =>
           !spark.catalog.tableExists(PurgeSwap.stagingOf(x))),
         "the rebuild must drop the stale stagings")
-    } finally {
-      Seq(t, ref, fresh).flatMap(x => (x +: ivfSides(x)).flatMap(y =>
-          Seq(y, PurgeSwap.stagingOf(y))) ++ Seq(x + "_tombstones",
-          IndexLifecycle.rebalanceMarkerOf(x)))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t, ref, fresh)
   }
 
   test("a fresh IvfPq build discards a crashed three-table rebalance: stale marker and stagings dropped") {
@@ -354,12 +324,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       assert((t +: ivfPqSides(t)).forall(x =>
           !spark.catalog.tableExists(PurgeSwap.stagingOf(x))),
         "the rebuild must drop the stale stagings")
-    } finally {
-      Seq(t, ref, fresh).flatMap(x => (x +: ivfPqSides(x)).flatMap(y =>
-          Seq(y, PurgeSwap.stagingOf(y))) ++ Seq(x + "_tombstones",
-          IndexLifecycle.rebalanceMarkerOf(x)))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvfPq(t, ref, fresh)
   }
 
   test("cellDrift localizes a planted blob: positive drift_score in the blob's cell") {
@@ -387,10 +352,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
         s"blob cell $blobCell must carry positive drift_score: $drift")
       assert(drift.values.map(_._3).sum > 0L,
         s"the census scalar must go positive under the blob: $drift")
-    } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones")
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t)
   }
 
   test("cellCensus heals the post-marker crash window instead of throwing") {
@@ -423,13 +385,7 @@ class IvfRebalanceSpec extends AnyFunSuite {
       assert(got == expected, "census must heal the swap, then count")
       assert(!spark.catalog.tableExists(t + "_rebalance_inflight"),
         "census contact must clear the marker")
-    } finally {
-      Seq(t, ref).flatMap(x => Seq(x, IvfIndex.centroidsTable(x),
-          x + "_tombstones", PurgeSwap.stagingOf(x),
-          PurgeSwap.stagingOf(IvfIndex.centroidsTable(x)),
-          x + "_rebalance_inflight"))
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t, ref)
   }
 
   test("a corrupt marker refuses the heal instead of half-swapping") {
@@ -467,10 +423,6 @@ class IvfRebalanceSpec extends AnyFunSuite {
       val after = IvfIndex.cellCensus(spark, t, "vec_id").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSeq
       assert(after == before, "the live index must be untouched")
-    } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones",
-          PurgeSwap.stagingOf(t), m)
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    } finally clearIvf(t)
   }
 }

@@ -325,10 +325,7 @@ class LmIndexSpec extends AnyFunSuite {
     assert(dsirRows(LmIndex.dsirProbe(spark, raw, tgt, live, "doc_id", "text")) ==
       liveTruth,
       "post-delete dsirProbe must equal the scan-time contrast on the live corpus")
-    Seq(raw, tgt).foreach { t =>
-      Seq(t, t + "_docs", t + "_tombstones")
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
-    }
+    Seq(raw, tgt).foreach(t => IndexLifecycle.clear(spark, LmIndex.state(t)))
   }
 
   test("a crash inside the tombstone swap window heals at the next lifecycle entry") {
@@ -420,8 +417,9 @@ class LmIndexSpec extends AnyFunSuite {
       }.toSet
       assert(got == expect,
         s"restarted series diverged: extra=${got -- expect} missing=${expect -- got}")
-    } finally Seq(raw, raw + "_docs", raw + "_tombstones",
-      tgt, tgt + "_docs", tgt + "_tombstones", sink)
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+    } finally {
+      Seq(raw, tgt).foreach(t => IndexLifecycle.clear(spark, LmIndex.state(t)))
+      graft.io.Writer.dropTableAndLocation(spark, sink)
+    }
   }
 }

@@ -24,8 +24,7 @@ class PurgeSwapSpec extends AnyFunSuite {
       (3L, "an unrelated document with none of that text anywhere")).toDF("doc_id", "text")
     val probeDocs = Seq(
       (10L, s"late arrival also containing $shared in its middle part")).toDF("doc_id", "text")
-    Seq(idx, idx + "_tombstones", PurgeSwap.stagingOf(idx))
-      .foreach(t => graft.io.Writer.dropTableAndLocation(spark, t))
+    IndexLifecycle.clear(spark, WinnowIndex.state(idx))
     WinnowIndex.build(old, "doc_id", "text", idx)
     (probeDocs, () => WinnowIndex
       .probeNewBatch(spark, idx, probeDocs, "doc_id", "text")
@@ -98,8 +97,7 @@ class PurgeSwapSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.sf0001)
     val corpus = e.where(col("vec_id") =!= 0)
     val t = "purge_touched_cells_idx"
-    Seq(t, t + "_tombstones", PurgeSwap.stagingOf(t))
-      .foreach(tb => graft.io.Writer.dropTableAndLocation(spark, tb))
+    IndexLifecycle.clear(spark, IvfIndex.state(t, "vec_id"))
     IvfIndex.build(corpus, "vec_id", "embedding", t, k = 8, iters = 1)
     val q = e.where(col("vec_id") === 0)
       .select(col("embedding")).first().getSeq[Float](0)
@@ -165,8 +163,8 @@ class PurgeSwapSpec extends AnyFunSuite {
       (2L, s"$shared trailing content that matches nothing else at all"),
       (4L, "yet another fully unrelated body of prose entirely")).toDF("doc_id", "text")
     val idx = "stream_purge_winnow_idx"
-    Seq(idx, idx + "_tombstones", idx + "_rebuild")
-      .foreach(t => graft.io.Writer.dropTableAndLocation(spark, t))
+    IndexLifecycle.clear(spark, WinnowIndex.state(idx))
+    graft.io.Writer.dropTableAndLocation(spark, idx + "_rebuild")
     graft.io.Writer.emptyPartitionedBucketedTable(spark, idx,
       StructType(Seq(StructField("id", LongType), StructField("fp", LongType),
         StructField(StreamOps.BatchTag, LongType))),
@@ -214,9 +212,7 @@ class PurgeSwapSpec extends AnyFunSuite {
       (4L, "dedup dedup and more dedup"),
       (5L, "short data note")).toDF("doc_id", "text")
     val table = "stream_purge_bm25_idx"
-    Seq(table, table + "_docs", table + "_stats", table + "_tombstones",
-      table + "_stats_deltas")
-      .foreach(t => graft.io.Writer.dropTableAndLocation(spark, t))
+    IndexLifecycle.clear(spark, PostingsIndex.state(table))
     val idT = LongType
     graft.io.Writer.emptyPartitionedBucketedTable(spark, table,
       StructType(Seq(StructField("term", StringType), StructField("id", idT),
@@ -288,8 +284,7 @@ class PurgeSwapSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.sf0001)
     val corpus = e.where(col("vec_id") =!= 0)
     val t = "purge_empty_cell_idx"
-    Seq(t, t + "_tombstones", PurgeSwap.stagingOf(t))
-      .foreach(tb => graft.io.Writer.dropTableAndLocation(spark, tb))
+    IndexLifecycle.clear(spark, IvfIndex.state(t, "vec_id"))
     IvfIndex.build(corpus, "vec_id", "embedding", t, k = 8, iters = 1)
     // Tombstone EVERY id of the smallest cell.
     val victimCell = spark.table(t).select(col("cluster_id"))

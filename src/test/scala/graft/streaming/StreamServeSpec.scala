@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
-import graft.ext.IvfIndex
+import graft.ext.{IndexLifecycle, IvfIndex}
 
 /** The streaming serving loop (StreamOps.streamServe): accumulated
   * per-micro-batch chunked probeBatch results must equal ONE one-shot
@@ -78,8 +78,8 @@ class StreamServeSpec extends AnyFunSuite {
           s"accumulated results diverge from one-shot at shards=$nShards cap=$cap")
       }
     } finally {
-      (Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones") ++ sinks)
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+      IndexLifecycle.clear(spark, IvfIndex.state(t))
+      sinks.foreach(graft.io.Writer.dropTableAndLocation(spark, _))
     }
   }
 
@@ -153,8 +153,8 @@ class StreamServeSpec extends AnyFunSuite {
       assert(got == oneShot,
         "restarted + redelivered accumulation must equal the one-shot probe")
     } finally {
-      Seq(t, IvfIndex.centroidsTable(t), t + "_tombstones", sink)
-        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS `$x`"))
+      IndexLifecycle.clear(spark, IvfIndex.state(t))
+      graft.io.Writer.dropTableAndLocation(spark, sink)
     }
   }
 }

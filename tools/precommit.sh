@@ -24,16 +24,26 @@ if direct=$(grep -rn --include='*.scala' 'localCheckpoint(' src/main/scala/graft
   echo "$direct" >&2
   exit 1
 fi
-# Tombstone-table naming: IndexLifecycle.tombstonesOf owns the
-# `<table>_tombstones` name, so a family can never drop or read a
-# differently spelled takedown list. A "_tombstones" literal anywhere
-# else in the package fails the gate.
-if literal=$(grep -rn --include='*.scala' '"_tombstones"' src/main/scala/graft/ext \
-    | grep -v '^src/main/scala/graft/ext/IndexLifecycle\.scala:'); then
-  echo "precommit: \"_tombstones\" literal in graft.ext — use IndexLifecycle.tombstonesOf:" >&2
-  echo "$literal" >&2
-  exit 1
-fi
+# State-table naming: one owner spells each shared state-table suffix,
+# so a family can never drop or read a differently spelled table.
+# IndexLifecycle owns the takedown list and the PostingsIndex/LmIndex
+# side tables (tombstonesOf, docsOf, statsTableOf, statsDeltasOf);
+# StreamOps owns the compactSink staging (compactStagingOf). Any of
+# these literals in graft.ext or graft.queries outside its owner fails
+# the gate.
+for suffix in _tombstones _docs _stats _stats_deltas _compact_stage; do
+  case "$suffix" in
+    _compact_stage) owner=src/main/scala/graft/streaming/StreamOps.scala ;;
+    *) owner=src/main/scala/graft/ext/IndexLifecycle.scala ;;
+  esac
+  if literal=$(grep -rn --include='*.scala' "\"$suffix\"" \
+      src/main/scala/graft/ext src/main/scala/graft/queries \
+      | grep -v "^$owner:"); then
+    echo "precommit: \"$suffix\" literal outside $owner — use its name helper:" >&2
+    echo "$literal" >&2
+    exit 1
+  fi
+done
 if [[ "${1:-}" == "test" ]]; then
   sbt -batch test
 else
